@@ -1,62 +1,50 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.sstable.Storage
 import Params._
+import DerivedStore.{deletedCell, textCell}
 
-/** Persisted corpus statistics — the document-frequency (IDF) store, the
-  * third member of the precompute-once-read-many family (persisted ANN
-  * index, incremental signature store, now corpus-level term stats).
-  * `CALL update_doc_freqs(table, source_dir[, where])` signs only the
-  * documents absent from the store and appends their PARTIAL per-term
-  * document-frequency counts as one epoch; serving reads total df and
-  * n_docs from the store instead of re-aggregating the vocabulary over
-  * the whole corpus. At 100 TB this is how a pipeline scores a batch of
-  * NEW documents against corpus-level statistics (TF-IDF, IDF-weighted
-  * curation) without rescanning the corpus: tf is per-document and
-  * narrow; df/N come from a vocabulary-sized table.
+/** Persisted corpus statistics — the document-frequency (IDF) store.
+  * `CALL update_doc_freqs(table, source_dir[, where])` counts only the
+  * documents absent from the store and appends their PARTIAL per-unit
+  * document frequencies as one epoch; serving reads total df and n_docs
+  * from this vocabulary-sized table instead of re-aggregating the
+  * corpus. Layout, keys and the maintainer order are [[DerivedStore]]'s;
+  * this store adds additive partials, the unit pin and the additivity
+  * sentinel.
   *
   * Additivity is the design key. Novel-doc sets are DISJOINT across
-  * epochs (the `d:` key probe guarantees it), so per-epoch partial df
+  * epochs (the `d:` key probe guarantees it), so per-epoch partial
   * counts SUM to the exact corpus df — and each epoch's counts live in
   * cells named `df:<epoch>`, so the LWW column-union merge of
-  * compaction (auto or CALL compact) folds generations WITHOUT losing a
-  * partial: distinct cell names never reconcile against each other.
-  * That makes the store compaction-safe where a same-named counter cell
-  * would be silently LWW'd down to one epoch's count (SSTable cells are
-  * last-write-wins, not additive — so the epoch lives in the NAME).
+  * compaction folds generations WITHOUT losing a partial: distinct cell
+  * names never reconcile against each other (a same-named counter cell
+  * would be LWW'd down to one epoch's count).
   *
-  * The counted UNIT generalizes (`unit` parameter): `term` counts
-  * lowercase-alpha tokens (the TF-IDF/IDF store), `para` counts
-  * [[Params.ParaWords]]-word paragraph md5 digests — the
-  * boilerplate-removal statistic (a paragraph seen in ≥ N distinct
-  * docs is boilerplate), maintained incrementally instead of
-  * re-aggregated from the whole corpus every run. Both reduce to the
-  * same additive partial: distinct docs per unit within an epoch.
+  * The counted UNIT is `term` (lowercase-alpha tokens, the TF-IDF/IDF
+  * store) or `para` ([[Params.ParaWords]]-word paragraph md5 digests,
+  * the boilerplate-removal statistic). Both reduce to the same additive
+  * partial: distinct docs per unit within an epoch.
   *
-  * Row layout (binary keys; scalar values UTF-8 decimal):
-  *  - `_meta`            — `source` + `unit` pin the corpus directory
-  *    and counted unit; serving and later updates refuse a retargeted
-  *    or re-unit'd store loudly.
-  *  - `_n`               — one cell `n:<epoch%06d>` per epoch holding
-  *    that epoch's novel-doc count; n_docs = the sum.
-  *  - `d:<doc_id%012d>`  — membership marker (cell `e` = epoch). The
-  *    key-only Index.db probe for "already counted" doc_ids.
-  *  - `t:<term>`         — per epoch that saw the term, a
-  *    `df:<epoch%06d>` cell (docs containing it) and a
-  *    `cf:<epoch%06d>` cell (total occurrences — the collection
-  *    frequency, additive by the same disjoint-epoch argument);
-  *    df(term)/cf(term) = the sums across cells.
+  * Rows beyond the shared layout:
+  *  - `_meta` — `source` + `unit` pin the corpus directory and counted
+  *    unit; serving and later updates refuse a retargeted store.
+  *  - `_n` — one cell `n:<tag>` per epoch holding that epoch's novel-doc
+  *    count; n_docs = the sum.
+  *  - `d:<doc_id>` — membership marker: `e` (epoch) and `h` (md5 of the
+  *    counted text, so a retraction can verify it subtracts what was
+  *    counted), stamped with the epoch.
+  *  - `t:<term>` — per epoch that saw the term, `df:<tag>` (docs
+  *    containing it) and `cf:<tag>` (total occurrences); the totals are
+  *    the sums across cells.
   *
-  * Cell timestamps are fixed (each cell NAME is written at most once —
-  * epochs are disjoint by construction), so identical update sequences
-  * produce hash-identical stores. Same single-maintainer contract as
-  * update_signatures / update_ann_index: the CALL is the store's only
-  * writer, one at a time; probe-then-append is check-then-act between
-  * concurrent callers. */
+  * Partial cells are written once per name, with a fixed timestamp, so
+  * identical update sequences produce hash-identical stores. */
 object DfStore {
 
-  private val MetaKey = "_meta"
+  private val MetaKey = DerivedStore.MetaKey
   private val NKey = "_n"
 
   /** Default `autoconsolidate` bound for a NEW batch-maintained store —
@@ -64,80 +52,26 @@ object DfStore {
     * [[graft.streaming.StreamingDfUpdate.DefaultConsolidateAbove]]. */
   val DefaultAutoConsolidate = 64
 
-  /** `d:` marker keys zero-pad doc_id to exactly 12 decimal digits and
-    * the read side parses them back by POSITION
-    * (`substring(k, 3, 12).cast(bigint)`), so an id outside [0, 1e12)
-    * would round-trip wrongly, be re-counted as novel every epoch, and
-    * permanently fail the additivity sentinel with a message blaming a
-    * race (ADVICE r14). Both maintainers refuse such ids BEFORE any
-    * marker is written. */
-  private[graft] val MaxMarkerDocId = 1000000000000L
+  private def markerKey(docId: Column) = DerivedStore.idKey("d:", docId)
 
-  private[graft] def requireDocIdRange(lo: Long, hi: Long, what: String): Unit =
-    require(lo >= 0L && hi < MaxMarkerDocId,
-      s"$what holds doc_id outside the marker-key range [0, 1e12): " +
-        s"min=$lo max=$hi — d: markers zero-pad doc_id to 12 digits and " +
-        "the read side parses them back by position, so an out-of-range " +
-        "id would round-trip wrongly, be re-counted every epoch, and " +
-        "permanently poison the additivity sentinel. Refusing before any " +
-        "marker is written")
+  private def requireDocIdRange(lo: Long, hi: Long, what: String): Unit =
+    DerivedStore.requireKeyRange(lo, hi, what, "doc_id")
 
-  private def strCell(name: org.apache.spark.sql.Column,
-                      value: org.apache.spark.sql.Column,
-                      ts: Long = 1L) =
-    struct(name.cast("binary").as("name"), lit("NORMAL").as("state"),
-      value.cast("string").cast("binary").as("value"),
-      lit(ts).as("timestamp"), lit(0L).as("ttlSecs"),
-      lit(0L).as("expiresMillis"))
+  private def hasRetractions(storeDir: String, storage: Storage): Boolean =
+    DerivedStore.hasFlag(storeDir, storage, "retracted")
 
-  private def delCell(name: String, ts: Long) =
-    struct(lit(name).cast("binary").as("name"), lit("DELETED").as("state"),
-      lit(null).cast("binary").as("value"), lit(ts).as("timestamp"),
-      lit(0L).as("ttlSecs"), lit(0L).as("expiresMillis"))
-
-  private val noTombstone = lit(null)
-    .cast("struct<localDeletionTime: int, markedForDeleteAt: bigint>")
-    .as("rowTombstone")
-
-  private def epochTag(epoch: Int): String = f"$epoch%06d"
-
-  /** One driver-side live read of the `_meta` row's cells (O(generations)
-    * seeks via the prober — no job). Empty when the row (or the store)
-    * does not exist yet. */
-  private[graft] def metaCellsOf(storeDir: String,
-                                 storage: graft.sources.sstable.Storage)
-      : Map[String, String] =
-    graft.sources.sstable.SSTableReader.liveCellMap(storeDir, storage, MetaKey)
-
-  /** Whether any [[retract]] epoch ever landed on this store — the flag
-    * rides the SAME atomic append as the retraction itself (a `retracted`
-    * cell on `_meta`), so it can never be observed separately from the
-    * tombstones it announces. It switches the membership probe and the
-    * sentinel from the append-only fast paths to the delete-aware ones. */
-  private[graft] def hasRetractions(storeDir: String,
-                                    storage: graft.sources.sstable.Storage)
-      : Boolean =
-    metaCellsOf(storeDir, storage).contains("retracted")
-
-  /** doc_ids currently counted. Append-only stores (the common case) use
-    * a key-only raw scan of the `d:` markers (Index.db sidecars only —
-    * same argument as [[SignatureStore.storedIds]]). Once a [[retract]]
-    * epoch exists, membership must be DELETE-AWARE: a retracted marker's
-    * cells are all tombstone-shadowed, the reconciled live view drops the
-    * row, and the doc becomes novel again (re-admittable) — so the probe
-    * switches to the reconciled scan. The switch is per-store and
-    * one-way, priced only by stores that actually retract. */
+  /** doc_ids currently counted: a key-only raw scan of the `d:` markers,
+    * switched to the reconciled scan once a [[retract]] flag exists so
+    * retracted docs read as novel (re-admittable). */
   def storedDocIds(s: SparkSession, storeDir: String): DataFrame = {
-    val storage = graft.sources.sstable.Storage.forPath(storeDir,
-      s.sessionState.newHadoopConf())
+    val storage = DerivedStore.storageOf(s, storeDir)
     val markers = s.read.format("sstable").load(storeDir)
       .filter(col("key").cast("string").startsWith("d:"))
     // marker rows only enter the reconcile — the vocabulary (t:) rows,
     // the store's bulk, never pay the delete-aware path
     val rows = if (hasRetractions(storeDir, storage))
       SSTableOps.suppressTombstones(markers) else markers
-    rows.select(substring(col("key").cast("string"), 3, 12)
-      .cast("bigint").as("doc_id"))
+    rows.select(DerivedStore.idOfKey(col("key")).as("doc_id"))
   }
 
   /** Additivity audit — the df store's corruption sentinel. Unlike the
@@ -151,14 +85,12 @@ object DfStore {
     * updates over the same delta, or an update whose novelty probe read
     * a mid-DROP residue before an undrop restored the full marker set.
     * One key-only scan verifies it; [[update]] runs it after every
-    * append so a violation is LOUD on the very call that caused it. */
-  /** Returns the live membership-marker count it verified (the CALL
+    * append so a violation is LOUD on the very call that caused it.
+    * Returns the live membership-marker count it verified (the CALL
     * audit's receipt); throws the loud diagnosis on inconsistency. */
   def auditAdditivity(s: SparkSession, storeDir: String,
                       nTotal: Long, context: String): Long = {
-    val storage = graft.sources.sstable.Storage.forPath(storeDir,
-      s.sessionState.newHadoopConf())
-    if (hasRetractions(storeDir, storage)) {
+    if (hasRetractions(storeDir, DerivedStore.storageOf(s, storeDir))) {
       // a retracted (or re-admitted) marker legitimately carries several
       // row versions, so the raw duplicate-version check below would
       // false-alarm forever — the delete-aware invariant is `Σ n-partials
@@ -302,7 +234,7 @@ object DfStore {
     foldAwareSum(partialCellsOf(rows, "n:").filter(col("k") === NKey), "n:", "n")
       .collect().headOption.map(_.getLong(1)).getOrElse(0L)
 
-  // ── Point-read serving (VERDICT r14 missing #1) ─────────────────────
+  // ── Point-read serving ──────────────────────────────────────────────
   //
   // A batch being scored has a BOUNDED set of distinct terms; the
   // store's vocabulary at web scale is billions of rows (hapax legomena
@@ -355,8 +287,7 @@ object DfStore {
     * refreshing statistics every micro-batch must not re-scan the store
     * to learn one number. */
   def nDocsProbe(storeDir: String,
-                 storage: graft.sources.sstable.Storage =
-                   graft.sources.sstable.LocalStorage): Long = {
+                 storage: Storage = graft.sources.sstable.LocalStorage): Long = {
     val prober = new graft.sources.sstable.SSTableReader.DirectoryProber(
       storeDir, storage)
     prober.get(NKey.getBytes(java.nio.charset.StandardCharsets.UTF_8),
@@ -388,11 +319,10 @@ object DfStore {
         "second statistic)")
   }
 
-  /** (doc_id, unit-value, n) occurrences of one document slice — `n`
-    * occurrences of the unit in the doc. Both additive statistics
-    * derive from this: df = count of docs (one per distinct pair), cf =
-    * sum of n (total occurrences). */
-  private def unitsOf(docs: DataFrame, unit: String): DataFrame = unit match {
+  /** (doc_id, term, n) occurrences of one document slice — `n`
+    * occurrences of the unit in the doc; the one unit extraction both
+    * maintainers (batch and streaming) count with. */
+  private[graft] def unitsOf(docs: DataFrame, unit: String): DataFrame = unit match {
     case "term" =>
       docs.select(col("doc_id"), explode(toks(col("text"))).as("term"))
         .groupBy("doc_id", "term").agg(count(lit(1)).as("n"))
@@ -411,14 +341,47 @@ object DfStore {
       s"unit must be 'term' or 'para', got '$other'")
   }
 
+  /** (term, df, cf) over a document slice: docs containing the unit, and
+    * its total occurrences. */
+  private[graft] def unitTotals(docs: DataFrame, unit: String): DataFrame =
+    unitsOf(docs, unit)
+      .groupBy("term").agg(count(lit(1)).as("df"), sum(col("n")).as("cf"))
+
+  /** One ingest epoch's rows: the `cf:`/`df:` partials of `totals`
+    * ([[unitTotals]] of `novel`) and the `_n` partial, all named by
+    * `tag` and stamped `partialTs`, plus a `d:` marker per novel doc
+    * (`e` = `marker`, `h` = md5 of its text) stamped `markerTs`. */
+  private[graft] def epochRows(novel: DataFrame, totals: DataFrame,
+                               novelCount: Long, tag: String,
+                               marker: Column, markerTs: Long,
+                               partialTs: Long): DataFrame = {
+    val ts = lit(partialTs)
+    DerivedStore.rows(totals, concat(lit("t:"), col("term")),
+        textCell(lit(s"cf:$tag"), col("cf"), ts),
+        textCell(lit(s"df:$tag"), col("df"), ts))
+      .unionAll(DerivedStore.rows(novel, markerKey(col("doc_id")),
+        textCell(lit("e"), marker, lit(markerTs)),
+        textCell(lit("h"), md5(col("text")), lit(markerTs))))
+      .unionAll(DerivedStore.row(novel.sparkSession, NKey,
+        textCell(lit(s"n:$tag"), lit(novelCount), ts)))
+  }
+
+  /** (docsSeen, distinct doc_ids, min doc_id, max doc_id) of a slice in
+    * one pass. */
+  private def sliceStats(slice: DataFrame): (Long, Long, Long, Long) = {
+    val r = slice.agg(count(lit(1)), count_distinct(col("doc_id")),
+      min(col("doc_id")), max(col("doc_id"))).head()
+    (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2),
+      if (r.isNullAt(3)) 0L else r.getLong(3))
+  }
+
   /** One incremental update: create the store if absent, probe the `d:`
     * markers, count per-unit df over ONLY the novel documents, append
-    * everything as one generation. Epoch atomicity: the epoch's term
-    * rows, `d:` markers, and `_n` partial ride ONE INSERT (one staged
-    * commit) — a crashed update leaves the whole epoch or nothing,
-    * never markers without counts (which would silently under-count
-    * those docs' units forever). Returns (docsSeen, novel,
-    * alreadyStored, epoch, termsTouched). */
+    * everything as one generation. The epoch's term rows, `d:` markers
+    * and `_n` partial ride ONE INSERT (one staged commit): a crashed
+    * update leaves the whole epoch or nothing, never markers without
+    * counts. Returns (docsSeen, novel, alreadyStored, epoch,
+    * termsTouched). */
   def update(s: SparkSession, qualifiedTable: String, storeDir: () => String,
              sourceDir: String, whereSql: String,
              autocompact: Int,
@@ -429,32 +392,23 @@ object DfStore {
       s"unit must be 'term' or 'para', got '$unit'")
     require(autoconsolidate == 0 || autoconsolidate >= 2,
       s"autoconsolidate must be 0 (off) or >= 2, got $autoconsolidate")
-    val fresh = !tableExists(s, qualifiedTable)
+    val fresh = !s.catalog.tableExists(qualifiedTable)
     if (fresh) {
       val consProp = if (autoconsolidate >= 2)
         s", 'autoconsolidate'='$autoconsolidate'" else ""
       s.sql(s"CREATE TABLE $qualifiedTable " +
         s"TBLPROPERTIES('autocompact'='$autocompact'$consProp)")
-      val mv = s"graft_df_meta_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      s.range(1).select(lit(MetaKey).cast("binary").as("key"),
-        array(strCell(lit("source"), lit(sourceDir)),
-          strCell(lit("unit"), lit(unit))).as("columns"),
-        noTombstone).createOrReplaceTempView(mv)
-      try s.sql(s"INSERT INTO $qualifiedTable SELECT * FROM $mv")
-      finally s.catalog.dropTempView(mv)
+      DerivedStore.append(s, qualifiedTable, DerivedStore.row(s, MetaKey,
+        textCell(lit("source"), lit(sourceDir), lit(1L)),
+        textCell(lit("unit"), lit(unit), lit(1L))))
     } else {
       requireEpochMeta(s, qualifiedTable, sourceDir, unit)
-      // loud pin (ADVICE r16): the autoconsolidate bound is a table
-      // property pinned at creation — on an existing store a different
-      // value passed here would be SILENTLY ignored (the property wins),
-      // the exact quiet-divergence the unit/source pins refuse. The
-      // default value is indistinguishable from "not passed" at this
-      // layer, so only an explicit non-default mismatch refuses.
+      // the bound is a table property pinned at creation: an explicit
+      // different value here would be silently ignored, so it refuses
+      // (the default is indistinguishable from "not passed")
       if (autoconsolidate != DefaultAutoConsolidate) {
-        val storage = graft.sources.sstable.Storage.forPath(
-          storeDir(), s.sessionState.newHadoopConf())
         val pinned = graft.sources.sstable.spark.GraftCatalog
-          .tableProps(storage, storeDir())
+          .tableProps(DerivedStore.storageOf(s, storeDir()), storeDir())
           .get(graft.sources.sstable.spark.SSTableSource.AutoConsolidateOption)
           .map(_.toInt).getOrElse(0)
         require(pinned == autoconsolidate,
@@ -466,123 +420,55 @@ object DfStore {
     }
     val corpus = graft.Tables.documents(s, sourceDir)
       .filter(expr(whereSql)).select(col("doc_id"), col("text"))
-    // one pass over the slice yields the receipt count AND both input
-    // guards (ADVICE r14): duplicate doc_id rows would write duplicate
-    // d: markers and overcount the _n partial — the sentinel would then
-    // abort a LEGITIMATE later call blaming a race and prescribing a
-    // rebuild, so refuse up front naming the real cause (input
-    // duplication). Unlike the streaming maintainer (at-least-once
-    // sources make in-batch duplicates normal, so it dedupes), a batch
-    // corpus slice with duplicate ids is a malformed input: silently
-    // picking one row's text would be a nondeterministic data choice.
-    val stats = corpus.agg(count(lit(1)), count_distinct(col("doc_id")),
-      min(col("doc_id")), max(col("doc_id"))).head()
-    val seen = stats.getLong(0)
-    require(seen == stats.getLong(1),
+    // duplicate doc_id rows would write duplicate markers and overcount
+    // the _n partial, and the sentinel would then blame a race on a later
+    // call; a batch slice with duplicates is malformed input, so refuse
+    // it naming the cause
+    val (seen, distinct, lo, hi) = sliceStats(corpus)
+    require(seen == distinct,
       s"the ingest slice for $qualifiedTable contains " +
-        s"${seen - stats.getLong(1)} duplicate doc_id row(s) — refusing: " +
+        s"${seen - distinct} duplicate doc_id row(s) — refusing: " +
         "duplicates would be counted twice and poison the store's " +
         "additive partials (this is INPUT duplication, not a concurrent " +
         "update; dedupe the slice or fix the where clause)")
     if (seen > 0)
-      requireDocIdRange(stats.getLong(2), stats.getLong(3),
-        s"the ingest slice for $qualifiedTable")
+      requireDocIdRange(lo, hi, s"the ingest slice for $qualifiedTable")
     val dir = storeDir()
-    // epoch-pick → probe → append runs under the store's maintenance
-    // lease (round 15, VERDICT r14 #3): every step of it is
-    // check-then-act — two concurrent CALLs would pick the same epoch
-    // number and both count the same delta, which the additivity
-    // sentinel only catches AFTER the partials are already corrupt. A
-    // concurrent updater now refuses loudly up front instead (the
-    // write-triggered autocompact inside the INSERT sees the held
-    // lease and simply skips; the next write folds).
-    val receipt = graft.sources.sstable.MaintenanceLease.withLease(dir,
-      graft.sources.sstable.Storage.forPath(dir, s.sessionState.newHadoopConf()),
-      "update_doc_freqs") { _ =>
-    // takedown-ledger consult (round 17, VERDICT r16 #1): an ingest
-    // slice still containing taken-down ids refuses — without this, a
-    // rebuild from an uncleaned corpus silently re-admits removed
-    // documents under a success receipt. UNDER the store's lease
-    // (review find): a consult before the acquire is check-then-act —
-    // a takedown (whose ledger record precedes its df leg, and whose
-    // df leg needs this same lease) completing between the consult and
-    // our append would be silently undone by the very ingest the
-    // ledger exists to refuse. Zero jobs when no ledger exists.
-    TakedownLedger.consult(s, ledgerDir, corpus.select(col("doc_id")),
-      "update_doc_freqs", qualifiedTable, corpus = Some(sourceDir))
-    val epoch = epochsOf(s, qualifiedTable).lastOption.getOrElse(0) + 1
-    // empty-store fast path — also the honest backfill path (same
-    // shape as SignatureStore.update); the fetch join's broadcast is
-    // size-gated there (VERDICT r14 #4 — merge-scale deltas shuffle)
-    val hasDocs = !fresh && storedDocIds(s, dir).limit(1).count() > 0
-    val (novelSrc, releaseIds) = if (hasDocs)
-      SignatureStore.gatedNovelJoin(corpus, storedDocIds(s, dir), "doc_id")
-    else (corpus, () => ())
-    val novel = novelSrc.persist()
-    try {
-      val novelCount = novel.count()
-      var terms = 0L
-      if (novelCount > 0) {
-        val tag = epochTag(epoch)
-        // df + cf over the delta: per-doc unit counts, then ONE
-        // vocabulary-sized aggregation — delta-scan only, never the
-        // corpus. cf (total occurrences) is additive by the same
-        // disjoint-epoch argument as df
-        val termDf = unitsOf(novel, unit)
-          .groupBy("term").agg(count(lit(1)).as("df"), sum(col("n")).as("cf"))
-          .persist()
-        try {
-          terms = termDf.count()
-          val termRows = termDf.select(
-            concat(lit("t:"), col("term")).cast("binary").as("key"),
-            array(strCell(lit(s"cf:$tag"), col("cf")),
-              strCell(lit(s"df:$tag"), col("df"))).as("columns"),
-            noTombstone)
-          // markers carry the doc's content hash (`h`) so a later
-          // retraction can verify the corpus text is STILL what this
-          // epoch counted before subtracting its unit counts — and they
-          // ride ts=epoch (not the fixed 1) so a retraction's DELETED
-          // cells shadow them and a re-admission's fresh cells shadow
-          // the deletion, in epoch order. Both deterministic: identical
-          // update sequences still produce hash-identical stores.
-          val docRows = novel.select(
-            concat(lit("d:"), lpad(col("doc_id").cast("string"), 12, "0"))
-              .cast("binary").as("key"),
-            array(strCell(lit("e"), lit(epoch), epoch),
-              strCell(lit("h"), md5(col("text")), epoch)).as("columns"),
-            noTombstone)
-          val nRow = s.range(1).select(lit(NKey).cast("binary").as("key"),
-            array(strCell(lit(s"n:$tag"), lit(novelCount))).as("columns"),
-            noTombstone)
-          val view = s"graft_df_upd_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-          termRows.unionAll(docRows).unionAll(nRow).createOrReplaceTempView(view)
-          try s.sql(s"INSERT INTO $qualifiedTable SELECT * FROM $view")
-          finally s.catalog.dropTempView(view)
-        } finally termDf.unpersist()
-        // the additivity sentinel: a duplicating interleave must be
-        // loud on the call that caused it, never a silent wrong total
-        auditAdditivity(s, storeDir(), nDocs(s, qualifiedTable),
-          s"epoch $epoch")
+    DerivedStore.maintain(s, dir, "update_doc_freqs",
+      consult = () => TakedownLedger.consult(s, ledgerDir,
+        corpus.select(col("doc_id")), "update_doc_freqs", qualifiedTable,
+        corpus = Some(sourceDir)),
+      epoch = _ => epochsOf(s, qualifiedTable).lastOption.getOrElse(0) + 1,
+      afterRelease = () => {
+        // consolidation first: its fold rides one appended generation,
+        // which the compaction pass can then reclaim in the same call
+        runTableAutoConsolidate(s, dir)
+        DerivedStore.runTableAutocompact(s, dir)
+      }) { (_, epoch) =>
+      // an empty store skips the probe and joins: everything is novel
+      val hasDocs = !fresh && storedDocIds(s, dir).limit(1).count() > 0
+      val (novelSrc, releaseIds) = if (hasDocs)
+        SignatureStore.gatedNovelJoin(corpus, storedDocIds(s, dir), "doc_id")
+      else (corpus, () => ())
+      DerivedStore.withDelta(novelSrc, releaseIds) { (novel, novelCount) =>
+        val terms = if (novelCount == 0) 0L else {
+          val n = DerivedStore.withDelta(unitTotals(novel, unit), () => ()) {
+            (totals, n) =>
+              DerivedStore.append(s, qualifiedTable,
+                epochRows(novel, totals, novelCount, DerivedStore.epochTag(epoch),
+                  marker = lit(epoch), markerTs = epoch, partialTs = 1L))
+              n
+          }
+          auditAdditivity(s, dir, nDocs(s, qualifiedTable), s"epoch $epoch")
+          n
+        }
+        (seen, novelCount, seen - novelCount, epoch, terms)
       }
-      (seen, novelCount, seen - novelCount, epoch, terms)
-    } finally { novel.unpersist(); releaseIds() }
-    }
-    // the held lease made the INSERT's write-triggered autocompact
-    // yield — the updater runs the identical pass itself after release
-    // (see SignatureStore.runTableAutocompact). Write-triggered
-    // consolidation (VERDICT r15 missing #4) runs FIRST: its fold rides
-    // one appended generation, and running it before the compaction
-    // pass lets the same call's fold physically reclaim the
-    // marker-shadowed constituent cells instead of waiting a commit.
-    if (receipt._2 > 0) {
-      runTableAutoConsolidate(s, dir)
-      SignatureStore.runTableAutocompact(s, qualifiedTable, dir)
-    }
-    receipt
+    }(_._2 > 0)
   }
 
   /** The batch twin of the streaming maintainer's `consolidateAboveEpochs`
-    * gate (VERDICT r15 missing #4): when the store's `autoconsolidate`
+    * gate: when the store's `autoconsolidate`
     * table property is set and more epoch partials than it allows have
     * accumulated since the last fold, the COMMITTING maintainer runs
     * [[consolidate]] on the store's behalf — row width stays bounded by
@@ -594,8 +480,7 @@ object DfStore {
     * concurrent retraction or CALL consolidate mid-flight) makes this
     * pass yield to the next update rather than fail the commit. */
   private[graft] def runTableAutoConsolidate(s: SparkSession, dir: String): Unit = {
-    val storage = graft.sources.sstable.Storage.forPath(
-      dir, s.sessionState.newHadoopConf())
+    val storage = DerivedStore.storageOf(s, dir)
     graft.sources.sstable.spark.GraftCatalog.tableProps(storage, dir)
       .get(graft.sources.sstable.spark.SSTableSource.AutoConsolidateOption)
       .map(_.toInt).filter(_ >= 2)
@@ -611,7 +496,7 @@ object DfStore {
     * streaming maintainer's `consolidateAboveEpochs`), from ONE
     * reconciled driver-side point read of the `_n` row. */
   private[graft] def epochPartialsSinceFold(storeDir: String,
-                                            storage: graft.sources.sstable.Storage): Int = {
+                                            storage: Storage): Int = {
     val prober = new graft.sources.sstable.SSTableReader.DirectoryProber(
       storeDir, storage)
     prober.get(NKey.getBytes(java.nio.charset.StandardCharsets.UTF_8),
@@ -623,10 +508,6 @@ object DfStore {
     }.getOrElse(0)
   }
 
-  private def tableExists(s: SparkSession, qualifiedTable: String): Boolean =
-    try { s.table(qualifiedTable); true }
-    catch { case _: org.apache.spark.sql.AnalysisException => false }
-
   /** Fold cells carry a fixed timestamp far above every data cell's
     * (batch epochs write ts=1, streaming epochs ts=epochId), and the
     * DELETED markers sit one above the fold cells — so a marker always
@@ -637,7 +518,7 @@ object DfStore {
   private[graft] val FoldCellTs = 1L << 40
   private[graft] val FoldMarkerTs = (1L << 40) + 1
 
-  /** Epoch-range consolidation (VERDICT r14 missing #2): every epoch
+  /** Epoch-range consolidation: every epoch
     * that sees a term appends one `df:<tag>`/`cf:<tag>` cell to its
     * `t:` row, so after 100k streaming micro-batches a stopword's row
     * carries 200k cells and every serving read explodes and sums all
@@ -659,13 +540,12 @@ object DfStore {
     * Rows with fewer than two live partial cells per prefix are left
     * alone (rewriting them would be pure churn). Returns (rowsFolded,
     * partialsFolded, coveredTag). Safe in the streaming maintainer's
-    * pre-append slot by the same argument as its compaction (NOTES
-    * r14): every epoch present at batch start has its checkpoint
-    * committed, so a fold can never absorb a still-replayable epoch's
-    * cells — and the fold itself is replay-safe anyway (same names,
-    * same values, LWW-idempotent). */
+    * pre-append slot by the same argument as its compaction: every epoch
+    * present at batch start has its checkpoint committed, so a fold can
+    * never absorb a still-replayable epoch's cells — and the fold itself is
+    * replay-safe anyway (same names, same values, LWW-idempotent). */
   def consolidate(s: SparkSession, storeDir: String,
-                  storage: graft.sources.sstable.Storage =
+                  storage: Storage =
                     graft.sources.sstable.LocalStorage): (Long, Long, String) =
     graft.sources.sstable.MaintenanceLease.withLease(storeDir, storage,
       "consolidate_doc_freqs") { _ =>
@@ -685,9 +565,7 @@ object DfStore {
           .maxOption(Ordering.String)
         val maxFold = nTags.filter(_.startsWith("F")).map(_.stripPrefix("F"))
           .maxOption(Ordering.String)
-        // both nothing-to-fold exits report the same coveredTag — the
-        // newest existing fold's (review find: the two branches used to
-        // disagree, "" vs the fold tag, for the same logical state)
+        // both nothing-to-fold exits report the newest existing fold's tag
         if (maxEpoch.isEmpty) (0L, 0L, maxFold.getOrElse(""))
         else {
           val tag = maxEpoch.get
@@ -711,31 +589,20 @@ object DfStore {
             val (rows, cells) = (stats.getLong(0), stats.getLong(1))
             if (rows == 0) (0L, 0L, maxFold.getOrElse(""))
             else {
-              def cellStruct(name: org.apache.spark.sql.Column, state: String,
-                             value: org.apache.spark.sql.Column, ts: Long) =
-                struct(name.cast("binary").as("name"), lit(state).as("state"),
-                  value.as("value"), lit(ts).as("timestamp"),
-                  lit(0L).as("ttlSecs"), lit(0L).as("expiresMillis"))
               val foldRows = grouped.select(col("key"), concat(
-                  array(cellStruct(concat(col("p"), lit(s"F$tag")), "NORMAL",
-                    col("total").cast("string").cast("binary"), FoldCellTs)),
-                  transform(col("names"), nm => cellStruct(nm, "DELETED",
-                    lit(null).cast("binary"), FoldMarkerTs))).as("columns"))
+                  array(textCell(concat(col("p"), lit(s"F$tag")), col("total"),
+                    lit(FoldCellTs))),
+                  transform(col("names"), nm => deletedCell(nm,
+                    lit(FoldMarkerTs)))).as("columns"))
                 .groupBy("key")
                 // cell order inside the array is free: the writer sorts
                 // cells by name, so the written generation is
                 // deterministic either way
                 .agg(flatten(collect_list(col("columns"))).as("columns"))
-              val before = storage.listDataFiles(storeDir)
-              foldRows.write.format("sstable")
-                .option(graft.sources.sstable.spark.SSTableSource.JobTagOption,
-                  s"dfold$tag")
-                .mode("append").save(storeDir)
-              graft.sources.sstable.History.record(storage, storeDir,
-                "consolidate_doc_freqs",
-                added = storage.listDataFiles(storeDir).diff(before),
-                removed = Nil,
-                detail = s"rows=$rows partials=$cells covered<=$tag")
+              DerivedStore.recorded(storage, storeDir, "consolidate_doc_freqs",
+                  s"rows=$rows partials=$cells covered<=$tag") {
+                DerivedStore.appendTagged(foldRows, storeDir, s"dfold$tag")
+              }
               // the sentinel, re-checked over the folded state: a fold
               // that lost or duplicated a partial must refuse HERE
               auditAdditivity(s, storeDir,
@@ -748,99 +615,59 @@ object DfStore {
       } finally live.unpersist()
     }
 
-  /** Document RETRACTION (round 15) — remove documents from the store's
-    * statistics without rescanning the corpus: the takedown / GDPR /
-    * contamination-removal operation a 100 TB pipeline needs, priced by
-    * the retraction slice, never the corpus. One retraction epoch
-    * appends, atomically:
+  /** Document RETRACTION — remove documents from the store's statistics
+    * without rescanning the corpus (the takedown / GDPR /
+    * contamination-removal operation), priced by the retraction slice.
+    * One retraction epoch appends, atomically:
     *  - NEGATIVE `df:`/`cf:` partials for the retracted docs' units
-    *    (additivity runs both ways — a negative epoch subtracts exactly
-    *    like a positive one adds, through folds and compaction alike);
-    *  - DELETED cells shadowing the docs' `d:` markers (the reconciled
-    *    live view drops them — membership probes see the doc as novel
-    *    again, so a later ingest RE-ADMITS it correctly);
+    *    (additivity runs both ways, through folds and compaction alike);
+    *  - DELETED cells shadowing the docs' `d:` markers, so membership
+    *    probes see the doc as novel again and a later ingest re-admits it;
     *  - a negative `_n` partial;
-    *  - a `retracted` flag on `_meta`, riding the SAME append, which
-    *    switches the membership probe and the additivity sentinel to
-    *    their delete-aware forms.
+    *  - the `retracted` flag on `_meta`, riding the SAME append.
     *
     * `sourceDir` is where the retracted docs' (doc_id, text) rows are
     * read from — usually the pinned corpus, but deliberately NOT
     * required to be: in a real takedown the document is often already
     * deleted from the corpus, so any directory holding the removed
     * docs' rows works (e.g. the takedown request's own payload). The
-    * content-hash guard below is strictly stronger than a source pin.
+    * content-hash guard is strictly stronger than a source pin.
     *
-    * Loud-beats-silent guards, in probe order (all delta-sized):
-    *  - the store must pin this UNIT (subtracting paragraph counts from
-    *    a term store would corrupt silently);
+    * Guards, all delta-sized and all refusing before anything lands:
+    *  - the store must pin this UNIT;
     *  - a STREAM-maintained store refuses: its `s…` epoch tags sort
     *    after batch tags, so a batch-numbered retraction epoch would be
     *    silently excluded by the fold rule after the stream's next
     *    consolidation;
-    *  - every retracted doc's `h` content hash (written at ingest) must
-    *    match md5 of the corpus text NOW — if the source mutated since
-    *    ingest, subtracting the CURRENT text's counts would corrupt the
-    *    statistics silently, so drift refuses naming the docs;
-    *  - the store's df/cf for every touched term (a point-read probe of
-    *    exactly those `t:` rows) must cover the subtraction — totals can
-    *    never go negative; a shortfall means membership corruption and
-    *    refuses before anything lands.
+    *  - every retracted doc's `h` content hash must match md5 of the
+    *    text NOW — subtracting changed text would corrupt silently;
+    *  - the store's df/cf for every touched term must cover the
+    *    subtraction, so totals never go negative.
     *
     * Docs in the slice that were never counted (or already retracted)
     * are reported `notStored` and contribute nothing — a re-run of the
-    * same retraction is a receipt-visible no-op. Runs under the store's
-    * maintenance lease. Returns (docsInSlice, retracted, notStored,
-    * epoch, termsTouched); epoch 0 when nothing matched (no write). */
+    * same retraction is a receipt-visible no-op. Returns (docsInSlice,
+    * retracted, notStored, epoch, termsTouched); epoch 0 when nothing
+    * matched (no write). */
   def retract(s: SparkSession, qualifiedTable: String, storeDir: () => String,
               sourceDir: String, whereSql: String,
               unit: String = "term"): (Long, Long, Long, Int, Long) = {
     require(Set("term", "para").contains(unit),
       s"unit must be 'term' or 'para', got '$unit'")
-    require(tableExists(s, qualifiedTable),
+    require(s.catalog.tableExists(qualifiedTable),
       s"df store $qualifiedTable does not exist — nothing to retract from")
-    // the UNIT must match the store's pin (counts of the wrong unit
-    // would subtract garbage) — but the SOURCE deliberately need not:
-    // in a real takedown the document is often already DELETED from the
-    // corpus, so `source_dir` may be any directory holding the removed
-    // docs' (doc_id, text) rows — e.g. the takedown request itself. The
-    // per-doc content-hash verification below is STRICTLY STRONGER than
-    // a directory pin: an md5 match proves the text IS what this store
-    // counted, wherever it is read from now; a mismatch refuses. (The
-    // ingest-side source pin stays — counting from a second corpus into
-    // one store is the error it exists to refuse.)
-    // the reconciled live _meta read (ADVICE r15: the raw catalog
-    // collect's .toMap kept an ARBITRARY version of multi-version cells
-    // like 'retracted' — benign while only the write-once 'unit' is
-    // consulted, but the reconciled reader exists precisely so decode
-    // rules never drift between callers)
-    val meta = metaCellsOf(storeDir(), graft.sources.sstable.Storage
-      .forPath(storeDir(), s.sessionState.newHadoopConf()))
+    val dir = storeDir()
+    val meta = DerivedStore.metaCells(dir, DerivedStore.storageOf(s, dir))
     require(meta.get("unit").contains(unit),
       s"df store $qualifiedTable counts unit " +
         s"'${meta.getOrElse("unit", "(absent)")}' — refusing a '$unit' " +
         "retraction (subtracting the wrong unit's counts would corrupt " +
         "the statistics)")
-    val slice = graft.Tables.documents(s, sourceDir)
-      .filter(expr(whereSql)).select(col("doc_id"), col("text"))
-    val stats = slice.agg(count(lit(1)), count_distinct(col("doc_id")),
-      min(col("doc_id")), max(col("doc_id"))).head()
-    val seen = stats.getLong(0)
-    require(seen == stats.getLong(1),
-      s"the retraction slice for $qualifiedTable contains " +
-        s"${seen - stats.getLong(1)} duplicate doc_id row(s) — refusing " +
-        "(duplicates would subtract twice; dedupe the slice or fix the " +
-        "where clause)")
+    val (slice, seen) = retractionSlice(s, sourceDir, whereSql, qualifiedTable)
     if (seen == 0) return (0L, 0L, 0L, 0, 0L)
-    requireDocIdRange(stats.getLong(2), stats.getLong(3),
-      s"the retraction slice for $qualifiedTable")
-    val dir = storeDir()
-    val storage = graft.sources.sstable.Storage.forPath(dir,
-      s.sessionState.newHadoopConf())
-    val receipt = graft.sources.sstable.MaintenanceLease.withLease(dir,
-      storage, "retract_doc_freqs") { _ =>
-      // epoch pick with a TOLERANT tag parse (epochsOf would throw on a
-      // stream's `s…` tags; the refusal must be ours and must explain)
+    // the epoch pick parses tags tolerantly: a stream store's `s…` tags
+    // must refuse with an explanation, not a number-format error
+    def batchEpoch(storage: Storage): Int = {
       val plain = liveNTags(dir, storage).map(_.stripPrefix("F"))
       plain.find(t => t.isEmpty || !t.forall(_.isDigit)).foreach { bad =>
         throw new IllegalArgumentException(
@@ -852,21 +679,40 @@ object DfStore {
             "allocates the retraction epoch in the stream's own tag " +
             "domain")
       }
-      val epoch = plain.map(_.toInt).maxOption.getOrElse(0) + 1
+      plain.map(_.toInt).maxOption.getOrElse(0) + 1
+    }
+    DerivedStore.maintain(s, dir, "retract_doc_freqs", consult = () => (),
+      epoch = batchEpoch,
+      afterRelease = () => {
+        // a retraction epoch widens the partial rows exactly like an
+        // ingest epoch, so the same volunteer consolidation bounds it
+        runTableAutoConsolidate(s, dir)
+        DerivedStore.runTableAutocompact(s, dir)
+      }) { (storage, epoch) =>
       val (matched, terms) = retractCore(s, dir, storage, slice, unit,
-        tag = epochTag(epoch), cellTs = epoch.toLong,
+        tag = DerivedStore.epochTag(epoch), cellTs = epoch.toLong,
         opLabel = "retract_doc_freqs", what = s"df store $qualifiedTable",
         detail = s"epoch=$epoch")
       if (matched == 0) (seen, 0L, seen, 0, 0L)
       else (seen, matched, seen - matched, epoch, terms)
-    }
-    if (receipt._2 > 0) {
-      // a retraction epoch widens the partial rows exactly like an
-      // ingest epoch — the same volunteer consolidation bounds it
-      runTableAutoConsolidate(s, dir)
-      SignatureStore.runTableAutocompact(s, qualifiedTable, dir)
-    }
-    receipt
+    }(_._2 > 0)
+  }
+
+  /** The (doc_id, text) rows a retraction subtracts and their count,
+    * refusing duplicate ids and ids outside the marker-key range. */
+  private def retractionSlice(s: SparkSession, sourceDir: String,
+                              whereSql: String, target: String): (DataFrame, Long) = {
+    val slice = graft.Tables.documents(s, sourceDir)
+      .filter(expr(whereSql)).select(col("doc_id"), col("text"))
+    val (seen, distinct, lo, hi) = sliceStats(slice)
+    require(seen == distinct,
+      s"the retraction slice for $target contains " +
+        s"${seen - distinct} duplicate doc_id row(s) — refusing " +
+        "(duplicates would subtract twice; dedupe the slice or fix the " +
+        "where clause)")
+    if (seen > 0)
+      requireDocIdRange(lo, hi, s"the retraction slice for $target")
+    (slice, seen)
   }
 
   /** The bases (`s%09d` stream-epoch parts) of stream-domain retraction
@@ -877,8 +723,7 @@ object DfStore {
     * the replay's tag-unpublish would remove the positives from under
     * them. One driver-side point read. */
   private[graft] def streamRetractionBases(dir: String,
-                                           storage: graft.sources.sstable.Storage)
-      : Seq[String] = {
+                                           storage: Storage): Seq[String] = {
     val RTag = "^s(\\d{9})r\\d{6}$".r
     liveNTags(dir, storage).map(_.stripPrefix("F")).collect {
       case RTag(b) => b
@@ -887,8 +732,7 @@ object DfStore {
 
   /** The `_n` row's live partial tags — one reconciled driver-side point
     * read (O(generations) seeks, no job). */
-  private def liveNTags(dir: String,
-                        storage: graft.sources.sstable.Storage): Seq[String] = {
+  private def liveNTags(dir: String, storage: Storage): Seq[String] = {
     val prober = new graft.sources.sstable.SSTableReader.DirectoryProber(
       dir, storage)
     prober.get(NKey.getBytes(java.nio.charset.StandardCharsets.UTF_8),
@@ -896,8 +740,8 @@ object DfStore {
       .map(row => partialsOfRow(row, "n:").map(_._1)).getOrElse(Seq.empty)
   }
 
-  /** Document RETRACTION from a STREAM-maintained store (round 16,
-    * VERDICT r15 missing #2) — the takedown-on-a-live-stream case. The
+  /** Document RETRACTION from a STREAM-maintained store — the
+    * takedown-on-a-live-stream case. The
     * batch [[retract]] refuses stream stores because a batch-numbered
     * epoch (`%06d`) sorts BEFORE every `s…` tag and the fold rule would
     * silently exclude its negative partials after the stream's next
@@ -928,15 +772,14 @@ object DfStore {
     * termsTouched); tag "" when nothing matched (no write). */
   def retractStream(s: SparkSession, storeDir: String, sourceDir: String,
                     whereSql: String, unit: String = "term",
-                    storage: graft.sources.sstable.Storage =
-                      graft.sources.sstable.LocalStorage)
+                    storage: Storage = graft.sources.sstable.LocalStorage)
       : (Long, Long, Long, String, Long) = {
     require(Set("term", "para").contains(unit),
       s"unit must be 'term' or 'para', got '$unit'")
     require(storage.exists(storeDir) &&
       storage.listDataFiles(storeDir).nonEmpty,
       s"no df store at $storeDir — nothing to retract from")
-    val meta = metaCellsOf(storeDir, storage)
+    val meta = DerivedStore.metaCells(storeDir, storage)
     require(meta.contains("unit"),
       s"the df store at $storeDir carries no unit pin — it predates " +
         "streaming retraction support (the stream maintainer pins the " +
@@ -945,19 +788,8 @@ object DfStore {
       s"the df store at $storeDir counts unit '${meta("unit")}' — " +
         s"refusing a '$unit' retraction (subtracting the wrong unit's " +
         "counts would corrupt the statistics)")
-    val slice = graft.Tables.documents(s, sourceDir)
-      .filter(expr(whereSql)).select(col("doc_id"), col("text"))
-    val stats = slice.agg(count(lit(1)), count_distinct(col("doc_id")),
-      min(col("doc_id")), max(col("doc_id"))).head()
-    val seen = stats.getLong(0)
-    require(seen == stats.getLong(1),
-      s"the retraction slice for $storeDir contains " +
-        s"${seen - stats.getLong(1)} duplicate doc_id row(s) — refusing " +
-        "(duplicates would subtract twice; dedupe the slice or fix the " +
-        "where clause)")
+    val (slice, seen) = retractionSlice(s, sourceDir, whereSql, storeDir)
     if (seen == 0) return (0L, 0L, 0L, "", 0L)
-    requireDocIdRange(stats.getLong(2), stats.getLong(3),
-      s"the retraction slice for $storeDir")
     graft.sources.sstable.MaintenanceLease.withLease(storeDir, storage,
       "retract_doc_freqs_stream") { _ =>
       val plain = liveNTags(storeDir, storage).map(_.stripPrefix("F"))
@@ -998,7 +830,7 @@ object DfStore {
     * epochs vs the stream's `s…r…` domain). Returns (matched, terms);
     * (0, 0) when nothing matched (nothing written). */
   private def retractCore(s: SparkSession, dir: String,
-                          storage: graft.sources.sstable.Storage,
+                          storage: Storage,
                           slice: DataFrame, unit: String,
                           tag: String, cellTs: Long,
                           opLabel: String, what: String,
@@ -1007,11 +839,8 @@ object DfStore {
     // counts): point reads of their d: markers, live view — already-
     // retracted markers reconcile to nothing and land in notStored
     val probed = SSTableOps.lookupJoin(
-        slice.select(concat(lit("d:"),
-          lpad(col("doc_id").cast("string"), 12, "0"))
-          .cast("binary").as("key")), dir)
-      .select(substring(col("key").cast("string"), 3, 12)
-        .cast("bigint").as("doc_id"), col("columns"))
+        slice.select(markerKey(col("doc_id")).as("key")), dir)
+      .select(DerivedStore.idOfKey(col("key")).as("doc_id"), col("columns"))
       .persist()
     try {
       val markerH = probed
@@ -1036,17 +865,13 @@ object DfStore {
           "subtracting the CURRENT text's unit counts would corrupt " +
           "the statistics silently. The store counted different " +
           "content; restore the source or DROP and rebuild")
-      val toRetract = slice.join(probed.select("doc_id"), Seq("doc_id"))
-        .persist()
-      try {
-        val matched = toRetract.count()
+      DerivedStore.withDelta(slice.join(probed.select("doc_id"), Seq("doc_id")),
+          () => ()) { (toRetract, matched) =>
         if (matched == 0) (0L, 0L)
         else {
-          val units = unitsOf(toRetract, unit).groupBy("term")
-            .agg(count(lit(1)).as("rdf"), sum(col("n")).as("rcf"))
-            .persist()
-          try {
-            val terms = units.count()
+          DerivedStore.withDelta(unitTotals(toRetract, unit)
+              .select(col("term"), col("df").as("rdf"), col("cf").as("rcf")),
+              () => ()) { (units, terms) =>
             // sufficiency guard: the store's CURRENT totals for exactly
             // the touched terms (point reads — delta-vocabulary-sized)
             // must cover the subtraction; a shortfall is membership
@@ -1067,37 +892,20 @@ object DfStore {
                   "subtraction — the store cannot have counted these " +
                   "documents' units (membership corruption). Refusing " +
                   "to write totals below zero; DROP and rebuild")
-              val tRows = units.select(
-                concat(lit("t:"), col("term")).cast("binary").as("key"),
-                array(strCell(lit(s"cf:$tag"), -col("rcf"), cellTs),
-                  strCell(lit(s"df:$tag"), -col("rdf"), cellTs)).as("columns"),
-                noTombstone)
-              val dRows = toRetract.select(
-                concat(lit("d:"), lpad(col("doc_id").cast("string"), 12, "0"))
-                  .cast("binary").as("key"),
-                array(delCell("e", cellTs), delCell("h", cellTs)).as("columns"),
-                noTombstone)
-              val nRow = s.range(1).select(
-                lit(NKey).cast("binary").as("key"),
-                array(strCell(lit(s"n:$tag"), lit(-matched), cellTs))
-                  .as("columns"),
-                noTombstone)
-              val metaRow = s.range(1).select(
-                lit(MetaKey).cast("binary").as("key"),
-                array(strCell(lit("retracted"), lit(tag), cellTs))
-                  .as("columns"),
-                noTombstone)
-              val before = storage.listDataFiles(dir)
-              tRows.unionAll(dRows).unionAll(nRow).unionAll(metaRow)
-                .write.format("sstable")
-                .option(graft.sources.sstable.spark.SSTableSource
-                  .JobTagOption, s"dfr$tag")
-                .mode("append").save(dir)
-              graft.sources.sstable.History.record(storage, dir,
-                opLabel,
-                added = storage.listDataFiles(dir).diff(before),
-                removed = Nil,
-                detail = s"docs=$matched terms=$terms $detail")
+              val ts = lit(cellTs)
+              val rows = DerivedStore.rows(units, concat(lit("t:"), col("term")),
+                  textCell(lit(s"cf:$tag"), -col("rcf"), ts),
+                  textCell(lit(s"df:$tag"), -col("rdf"), ts))
+                .unionAll(DerivedStore.rows(toRetract, markerKey(col("doc_id")),
+                  deletedCell(lit("e"), ts), deletedCell(lit("h"), ts)))
+                .unionAll(DerivedStore.row(s, NKey,
+                  textCell(lit(s"n:$tag"), lit(-matched), ts)))
+                .unionAll(DerivedStore.row(s, MetaKey,
+                  textCell(lit("retracted"), lit(tag), ts)))
+              DerivedStore.recorded(storage, dir, opLabel,
+                  s"docs=$matched terms=$terms $detail") {
+                DerivedStore.appendTagged(rows, dir, s"dfr$tag")
+              }
               // the sentinel, in its delete-aware form from this very
               // append on (the flag rode it): live markers must equal
               // the signed partial sum
@@ -1106,9 +914,9 @@ object DfStore {
                 s"retraction $detail")
               (matched, terms)
             } finally storedRows.unpersist()
-          } finally units.unpersist()
+          }
         }
-      } finally toRetract.unpersist()
+      }
     } finally probed.unpersist()
   }
 }

@@ -60,12 +60,14 @@ object GraphOps {
     * hash-partitioned ONCE on the join key `v` and cached, so each
     * pass's edges⋈labels equi-join never re-shuffles the edge list; the
     * neighbor labels then union the vertices' own labels into a single
-    * min hash-agg — ONE narrow (id, component, own) exchange per pass —
-    * where the own label doubles as the `old` column for convergence
-    * counting (the r18 shape paid three exchanges per pass: edge
-    * re-shuffle, neighbor-min agg, and a second labels join to merge).
-    * Once stalled, one additional labels⋈labels self-join (O(V),
-    * smaller side). No driver-side per-row state. Each pass
+    * min hash-agg — ONE narrow (id, component, own) exchange per plain
+    * pass — where the own label doubles as the `old` column for
+    * convergence counting (the r18 shape paid three exchanges per pass:
+    * edge re-shuffle, neighbor-min agg, and a second labels join to
+    * merge). Once stalled, each pass adds a self-join of the step
+    * result on its component (O(V)); that step is not persisted, so a
+    * jumping pass computes it twice (see the loop). No driver-side
+    * per-row state. Each pass
     * materializes exactly ONE relation: the 3-column
     * `(id, old, component)` step result is `localCheckpoint`ed (eager,
     * cached, flat lineage — the k-medians pattern) and both the
@@ -118,9 +120,15 @@ object GraphOps {
       // vertex's own label union into a single min-aggregation, with the
       // own label carried through as `old` for convergence counting —
       // every id appears exactly once with own=true, so max(when(own))
-      // reconstructs it. Exchanges per pass: ONE (the union agg on id) —
-      // sym is cache-partitioned on v and labels arrives checkpointed
-      // with its agg's id-partitioning.
+      // reconstructs it. Exchanges on a plain pass: ONE (the union agg on
+      // id) — sym is cache-partitioned on v and labels arrives
+      // checkpointed with its agg's id-partitioning. A pointer-jumping
+      // pass plans more: `stepped` is not persisted, so the self-join
+      // below computes it twice, and the second copy (column-pruned to
+      // id, component) is a different aggregate whose exchange is not
+      // reused — a second union agg exchange on id — and the join itself
+      // shuffles the stepped side on `component` unless AQE broadcasts
+      // the byId side.
       val stepped = sym
         .join(labels, sym("v") === labels("id"))
         .select(col("u").as("id"), col("component"), lit(false).as("own"))

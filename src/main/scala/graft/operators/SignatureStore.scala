@@ -3,48 +3,34 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Params._
+import DerivedStore.{MetaKey, textCell}
 
-/** Catalog-grain incremental dedup (VERDICT r12 Next #2): the batch twin
-  * of [[graft.streaming.StreamingIncrementalDedup]]. The MinHash
-  * signature store is an SSTable CATALOG table keyed by doc_id; `CALL
-  * update_signatures(table, source_dir[, where])` computes signatures
-  * ONLY for documents absent from the store and appends them as one
-  * generation — a corpus that grows by INSERT pays signature computation
-  * for ΔT, not for T∪ΔT re-paid every run.
+/** The MinHash signature store: an SSTable catalog table keyed by doc_id
+  * (the batch twin of [[graft.streaming.StreamingIncrementalDedup]]).
+  * `CALL update_signatures(table, source_dir[, where])` computes
+  * signatures ONLY for documents absent from the store and appends them
+  * as one generation, so a growing corpus pays for ΔT, not T∪ΔT. Layout,
+  * epochs and the maintainer order are [[DerivedStore]]'s; this store
+  * adds the `sig` cell and the `_meta` MinHash parameter pin.
   *
-  * The 100 TB shape, in order:
-  *  1. the store probe is a KEY-ONLY catalog scan (doc_id lives in the
-  *     key, so the DSv2 source plans it from Index.db sidecars — no
-  *     Data.db IO);
-  *  2. novelty is an anti-join of the corpus's doc_id COLUMN against
-  *     those keys — narrow on both sides, document text never enters
-  *     this join;
-  *  3. text is fetched by a broadcast join of the (delta-sized by
-  *     definition) novel-id set against the corpus — text is read once
-  *     and never shuffled (PlanQualitySpec pins all three);
-  *  4. signatures append as ONE sorted generation (the Cassandra flush
-  *     model — never a read-modify-write of the store), and the store
-  *     self-maintains via the table's own write-triggered `autocompact`.
+  * The store probe is a KEY-ONLY catalog scan (doc_id lives in the key,
+  * so it plans from Index.db sidecars), novelty is an anti-join on the
+  * doc_id column alone, and text is fetched by a broadcast join of the
+  * delta-sized novel ids (PlanQualitySpec pins all three).
   *
   * Short documents (fewer than [[Params.ShingleN]] tokens) persist with
-  * an EMPTY signature — remembered, so they are not re-probed as novel
-  * forever — and are filtered by readers, matching the oracle exactly
-  * (its shingle unnest yields no rows for them).
+  * an EMPTY signature, so they are remembered rather than re-probed as
+  * novel forever, and readers filter them, matching the oracle (its
+  * shingle unnest yields no rows for them).
   *
   * Signatures persist as the comma-joined decimal longs of the
-  * [[graft.functions.MinHashSignature]] output — exact for integers, and
-  * the store row is the one place a signature is materialized (readers
-  * split+cast back). The `_meta` row pins perms/bands/shingle/hash
-  * parameters; [[requireParams]] refuses a drifted store loudly (probing
-  * a store built under different permutations would silently mark
-  * everything novel-or-stale). */
+  * [[graft.functions.MinHashSignature]] output. [[requireParams]] refuses
+  * a store built under other MinHash parameters: probing it would
+  * silently misclassify novelty. */
 object SignatureStore {
 
-  /** Fixed-width decimal key: sortable, and one `lpad` round-trips it. */
   private def keyOf(docId: org.apache.spark.sql.Column) =
-    lpad(docId.cast("string"), 12, "0").cast("binary")
-
-  private val MetaKey = "_meta"
+    DerivedStore.idKey("", docId)
 
   /** (doc_id, sig) — sig is the comma-joined signature (possibly empty
     * for short docs) computed from text. NOT filtered: the store
@@ -58,69 +44,25 @@ object SignatureStore {
       concat_ws(",", transform(sig, x => x.cast("string"))).as("sig"))
   }
 
-  private def epochTag(e: Int): String = f"$e%06d"
-
-  /** The newest registered write epoch, from the `_meta` row's single
-    * LWW `emax` cell — one driver-side reconciled point read. Every
-    * writer (update AND retract) bumps it and stamps its cells
-    * ts=epoch, so deletion and re-admission shadow each other in write
-    * order (a fixed timestamp could never re-admit past a tombstone).
-    * ONE cell deliberately, not one per epoch: the max is all any
-    * reader needs, and a per-epoch cell would grow the `_meta` row by
-    * one cell per write forever — the same unbounded-row-width defect
-    * the df store's consolidation exists to fix (its `_n` row truly
-    * needs per-epoch ADDITIVE partials; this store does not). A store
-    * with no `emax` — fresh, or pre-epoch-era with fixed ts=1 cells —
-    * reads as epoch 1, exactly like [[AnnIndex.maxEpochOfIdx]] (ADVICE
-    * r15: the old getOrElse(0) made a legacy store's first retraction
-    * register epoch 1, whose tombstone deleted the legacy ts=1 cells
-    * only via the ties-favor-deletion rule; now it registers epoch 2
-    * and shadows them strictly). */
-  private def maxEpochOf(storeDir: String,
-                         storage: graft.sources.sstable.Storage): Int =
-    graft.sources.sstable.SSTableReader.liveCellMap(storeDir, storage, MetaKey)
-      .get("emax").map(_.toInt).getOrElse(1)
-
-  /** Whether any [[retract]] epoch ever landed — the flag rides the
-    * same atomic append as the tombstones it announces and switches the
-    * membership probe to its delete-aware form. */
-  private[graft] def hasRetractions(storeDir: String,
-                                    storage: graft.sources.sstable.Storage)
-      : Boolean =
-    graft.sources.sstable.SSTableReader.liveCellMap(storeDir, storage, MetaKey)
-      .contains("retracted")
-
-  /** doc_ids currently in the store. Append-only stores (the common
-    * case) use a KEY-ONLY raw scan — the DSv2 source plans it
-    * `indexOnly` (Index.db sidecars, no Data.db IO at any store size).
-    * Once a [[retract]] epoch exists the probe must be DELETE-AWARE — a
-    * retracted row's `sig` cell is tombstone-shadowed, the reconciled
-    * live view drops it, and the doc becomes novel (re-admittable) —
-    * so the probe switches to the reconciled scan. Per-store, one-way,
-    * priced only by stores that actually retract. */
+  /** doc_ids currently in the store: a key-only raw scan (planned
+    * `indexOnly`), switched to the reconciled scan once a [[retract]]
+    * flag exists so retracted docs read as novel (re-admittable). */
   def storedIds(s: SparkSession, storeDir: String): DataFrame = {
-    val storage = graft.sources.sstable.Storage.forPath(storeDir,
-      s.sessionState.newHadoopConf())
     val raw = s.read.format("sstable").load(storeDir)
       .filter(col("key") =!= lit(MetaKey.getBytes))
-    (if (hasRetractions(storeDir, storage))
-      SSTableOps.suppressTombstones(raw) else raw)
+    (if (DerivedStore.hasFlag(storeDir, DerivedStore.storageOf(s, storeDir),
+        "retracted")) SSTableOps.suppressTombstones(raw) else raw)
       .select(col("key").cast("string").cast("bigint").as("doc_id"))
   }
 
-  /** ΔT: corpus docs whose key is absent from the store — the shared
-    * novelty fetch of all three incremental maintainers (signatures,
-    * df store, ANN index). The anti-join sees only id columns; the
-    * fetch join's broadcast hint is SIZE-GATED (VERDICT r14 #4): novel
-    * ids are delta-sized by the operation's nature, but a second ingest
-    * that MERGES another large corpus into an existing store would
-    * otherwise force-broadcast an id set proportional to that whole
-    * corpus — above [[Params.BroadcastIdMaxRows]] the fetch falls back
-    * to a plain shuffle join. The gate's count materializes the
-    * persisted id set once (the join reuses the cached partitions);
-    * call the returned cleanup after the novel relation is consumed.
-    * (A backfill-scale FIRST ingest takes the empty-store path in the
-    * maintainers and skips these joins entirely.) */
+  /** ΔT: corpus rows whose `key` column is absent from `stored` — the
+    * novelty fetch of all three incremental maintainers. The anti-join
+    * sees only id columns; the fetch join broadcasts the novel ids only
+    * up to `broadcastMaxRows` (a merge-scale delta falls back to a
+    * shuffle join instead of broadcasting an id set as large as a second
+    * corpus). The count behind that gate materializes the persisted id
+    * set once; call the returned cleanup after the novel relation is
+    * consumed. */
   private[graft] def gatedNovelJoin(corpus: DataFrame, stored: DataFrame,
                                     key: String,
                                     broadcastMaxRows: Long =
@@ -132,56 +74,23 @@ object SignatureStore {
     (corpus.join(fetch, Seq(key)), () => { novelIds.unpersist(); () })
   }
 
-  /** [[gatedNovelJoin]] on doc_id — kept as the signature store's named
-    * entry point (specs pin its plan shape). Caller owns the cleanup. */
+  /** [[gatedNovelJoin]] on doc_id. Caller owns the cleanup. */
   def novelDocs(corpus: DataFrame, stored: DataFrame): (DataFrame, () => Unit) =
     gatedNovelJoin(corpus, stored, "doc_id")
 
-  /** The signature rows of one update, as SSTable rows ready to INSERT.
-    * Cell timestamp is the write EPOCH (deterministic — a wall clock
-    * would make otherwise-identical stores hash-diverge): a doc_id is
-    * written at most once per membership stint (the anti-join
-    * guarantees it), and the epoch stamp is what lets a RE-ADMISSION
-    * shadow an earlier retraction's tombstone in write order. */
+  /** The signature rows of one update, stamped with the write epoch. */
   def signatureRows(sigs: DataFrame, epoch: Int = 1): DataFrame =
-    sigs.select(keyOf(col("doc_id")).as("key"),
-      array(struct(lit("sig").cast("binary").as("name"), lit("NORMAL").as("state"),
-        col("sig").cast("binary").as("value"), lit(epoch.toLong).as("timestamp"),
-        lit(0L).as("ttlSecs"), lit(0L).as("expiresMillis"))).as("columns"),
-      lit(null).cast("struct<localDeletionTime: int, markedForDeleteAt: bigint>")
-        .as("rowTombstone"))
+    DerivedStore.rows(sigs, keyOf(col("doc_id")),
+      textCell(lit("sig"), col("sig"), lit(epoch.toLong)))
 
-  /** The `_meta` epoch-registration row riding a writer's own append:
-    * the single LWW `emax` cell (ts=epoch, so later writers win) plus
-    * any extra flag cells. */
-  private def epochMetaRow(s: SparkSession, epoch: Int,
-                           extra: Seq[(String, String)] = Nil): DataFrame = {
-    def cell(name: String, v: String) =
-      struct(lit(name).cast("binary").as("name"), lit("NORMAL").as("state"),
-        lit(v).cast("binary").as("value"), lit(epoch.toLong).as("timestamp"),
-        lit(0L).as("ttlSecs"), lit(0L).as("expiresMillis"))
-    s.range(1).select(lit(MetaKey).cast("binary").as("key"),
-      array((Seq("emax" -> epoch.toString) ++ extra)
-        .map { case (n, v) => cell(n, v) }: _*).as("columns"),
-      lit(null).cast("struct<localDeletionTime: int, markedForDeleteAt: bigint>")
-        .as("rowTombstone"))
-  }
-
-  private def metaRow(s: SparkSession, sourceDir: String): DataFrame = {
-    def cell(name: String, v: String) =
-      struct(lit(name).cast("binary").as("name"), lit("NORMAL").as("state"),
-        lit(v).cast("binary").as("value"), lit(1L).as("timestamp"),
-        lit(0L).as("ttlSecs"), lit(0L).as("expiresMillis"))
-    s.range(1).select(lit(MetaKey).cast("binary").as("key"),
-      array(
-        cell("bands", MinHashBands.toString),
-        cell("hash_p", Params.MinHashP.toString),
-        cell("perms", MinHashPerms.toString),
-        cell("shingle_n", ShingleN.toString),
-        cell("source", sourceDir)).as("columns"),
-      lit(null).cast("struct<localDeletionTime: int, markedForDeleteAt: bigint>")
-        .as("rowTombstone"))
-  }
+  private def metaRow(s: SparkSession, sourceDir: String): DataFrame =
+    DerivedStore.row(s, MetaKey, Seq(
+      "bands" -> MinHashBands.toString,
+      "hash_p" -> Params.MinHashP.toString,
+      "perms" -> MinHashPerms.toString,
+      "shingle_n" -> ShingleN.toString,
+      "source" -> sourceDir).map { case (n, v) =>
+        textCell(lit(n), lit(v), lit(1L)) }: _*)
 
   /** Loud refusal when the store was built under different MinHash
     * parameters — probing it would silently misclassify novelty. */
@@ -204,164 +113,62 @@ object SignatureStore {
         "CALL update_signatures) before probing it")
   }
 
-  /** One incremental update: create the store if absent (write-triggered
-    * `autocompact` keeps probe cost flat as generations accumulate),
-    * probe, sign ΔT only, append as one generation. Returns
-    * (docsSeen, novel, alreadyStored). */
+  /** One incremental update: create the store if absent, probe, sign ΔT
+    * only, append as one generation. Returns (docsSeen, novel,
+    * alreadyStored). */
   def update(s: SparkSession, qualifiedTable: String, storeDir: () => String,
              sourceDir: String, whereSql: String,
              autocompact: Int,
              ledgerDir: Option[String] = None): (Long, Long, Long) = {
-    val fresh = !tableExists(s, qualifiedTable)
+    val fresh = !s.catalog.tableExists(qualifiedTable)
     if (fresh) {
       s.sql(s"CREATE TABLE $qualifiedTable " +
         s"TBLPROPERTIES('autocompact'='$autocompact')")
-      val mv = s"graft_sig_meta_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      metaRow(s, sourceDir).createOrReplaceTempView(mv)
-      try s.sql(s"INSERT INTO $qualifiedTable SELECT * FROM $mv")
-      finally s.catalog.dropTempView(mv)
+      DerivedStore.append(s, qualifiedTable, metaRow(s, sourceDir))
     } else requireParams(s, qualifiedTable)
     val corpus = graft.Tables.documents(s, sourceDir)
       .filter(expr(whereSql)).select(col("doc_id"), col("text"))
     val seen = corpus.count()
-    // empty-store fast path: everything is novel — no probe, no joins
-    // (this is also the honest backfill path when ΔT is corpus-sized)
     val dir = storeDir()
-    // the probe-then-append section runs under the store's maintenance
-    // lease (round 15, VERDICT r14 #3): single-maintainer was a
-    // documented convention — two concurrent CALLs over the same delta
-    // would both sign it — and the catalog already owns the fencing
-    // primitive, so a concurrent updater now refuses LOUDLY up front
-    // instead of relying on detect-after (the write-triggered
-    // autocompact inside the INSERT sees the held lease and simply
-    // skips; the next write folds)
-    val storage = graft.sources.sstable.Storage.forPath(dir,
-      s.sessionState.newHadoopConf())
-    val receipt = graft.sources.sstable.MaintenanceLease.withLease(dir,
-      storage, "update_signatures") { _ =>
-      // takedown-ledger consult (round 17, VERDICT r16 #1), UNDER the
-      // store's lease (review find): a pre-acquire consult is
-      // check-then-act against a takedown whose signature leg needs
-      // this same lease — re-signing taken-down ids would silently
-      // re-admit removed documents.
-      TakedownLedger.consult(s, ledgerDir, corpus.select(col("doc_id")),
-        "update_signatures", qualifiedTable, corpus = Some(sourceDir))
-      val epoch = maxEpochOf(dir, storage) + 1
-      val hasRows = !fresh && storedIds(s, dir).limit(1).count() > 0
-      val (novelSrc, releaseIds) = if (hasRows)
-        novelDocs(corpus, storedIds(s, dir)) else (corpus, () => ())
-      val novel = novelSrc.persist()
-      try {
-        val novelCount = novel.count()
-        if (novelCount > 0) {
-          val view = s"graft_sig_upd_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-          signatureRows(signatures(novel), epoch)
-            .unionAll(epochMetaRow(s, epoch))
-            .createOrReplaceTempView(view)
-          try s.sql(s"INSERT INTO $qualifiedTable SELECT * FROM $view")
-          finally s.catalog.dropTempView(view)
+    DerivedStore.maintain(s, dir, "update_signatures",
+      consult = () => TakedownLedger.consult(s, ledgerDir,
+        corpus.select(col("doc_id")), "update_signatures", qualifiedTable,
+        corpus = Some(sourceDir)),
+      epoch = DerivedStore.nextEpoch(dir),
+      afterRelease = () => DerivedStore.runTableAutocompact(s, dir)) {
+      (_, epoch) =>
+        // an empty store skips the probe and joins: everything is novel
+        val hasRows = !fresh && storedIds(s, dir).limit(1).count() > 0
+        val (novelSrc, releaseIds) = if (hasRows)
+          novelDocs(corpus, storedIds(s, dir)) else (corpus, () => ())
+        DerivedStore.withDelta(novelSrc, releaseIds) { (novel, novelCount) =>
+          if (novelCount > 0)
+            DerivedStore.append(s, qualifiedTable,
+              signatureRows(signatures(novel), epoch)
+                .unionAll(DerivedStore.epochMetaRow(s, epoch)))
+          (seen, novelCount, seen - novelCount)
         }
-        (seen, novelCount, seen - novelCount)
-      } finally { novel.unpersist(); releaseIds() }
-    }
-    // the held lease made the INSERT's own write-triggered autocompact
-    // yield (maintenance a committing write merely volunteers for must
-    // never fight a real maintainer) — so the updater, which IS the
-    // store's maintainer, runs the identical pass itself after release
-    if (receipt._2 > 0) runTableAutocompact(s, qualifiedTable, dir)
-    receipt
+    }(_._2 > 0)
   }
 
-  /** Signature RETRACTION (round 15) — forget documents' fingerprints
-    * without touching the corpus: a ROW-TOMBSTONE generation marks the
-    * chosen docs deleted at the retraction's registered epoch — the
-    * catalog's own merge-on-read DELETE shape (a DELETE-ONLY generation
-    * is hoisted into the scan's [[graft.sources.sstable.spark
-    * .DeleteShadow]]), so every reader (catalog scan, reconciled raw
-    * scan, point probes) shadows the docs' cells identically. Because
-    * every cell in this store is stamped with its REGISTERED write
-    * epoch, a mark at the next epoch shadows exactly the docs' history,
-    * and a later RE-ADMISSION (whose cells carry a later epoch) rises
-    * above the mark — membership can flip indefinitely, in write order.
-    *
-    * Two appends, deliberately flag-first: (1) the `_meta` epoch
-    * registration + `retracted` flag (switches [[storedIds]] to its
-    * delete-aware form), then (2) the tombstone-only generation. A
-    * crash between them leaves a flagged store with no deletions —
-    * merely the slower probe, never a wrong answer; the tombstone
-    * generation must stay PURE (mixing the meta row in would break its
-    * delete-only Statistics proof and the DeleteShadow hoist).
-    *
-    * Unlike the df store there is nothing to subtract (LWW rows, no
-    * additive statistics) and nothing to verify against source text —
-    * so `where` selects over the STORE's own id relation (`doc_id`),
-    * which also makes the takedown case trivial: the doc needs no
-    * surviving copy anywhere. A re-run matches nothing (the ids are no
-    * longer members) — idempotent by construction. Runs under the
-    * maintenance lease. Returns (retracted, epoch); epoch 0 = nothing
-    * matched, nothing written. */
+  /** Forget documents' signatures without touching the corpus, by the
+    * [[DerivedStore.retract]] template (flag, then a row-tombstone
+    * generation). `where` selects over the STORE's own ids (`doc_id`),
+    * so a doc with no surviving copy anywhere retracts fine, and a
+    * re-run matches nothing. Returns (retracted, epoch); epoch 0 =
+    * nothing matched, nothing written. */
   def retract(s: SparkSession, qualifiedTable: String,
               storeDir: () => String, whereSql: String): (Long, Int) = {
-    require(tableExists(s, qualifiedTable),
+    require(s.catalog.tableExists(qualifiedTable),
       s"signature store $qualifiedTable does not exist — nothing to " +
         "retract from")
     val dir = storeDir()
-    val storage = graft.sources.sstable.Storage.forPath(dir,
-      s.sessionState.newHadoopConf())
-    val receipt = graft.sources.sstable.MaintenanceLease.withLease(dir,
-      storage, "retract_signatures") { _ =>
-      val epoch = maxEpochOf(dir, storage) + 1
-      val victims = storedIds(s, dir).filter(expr(whereSql)).persist()
-      try {
-        val matched = victims.count()
-        if (matched == 0) (0L, 0)
-        else {
-          val before = storage.listDataFiles(dir)
-          epochMetaRow(s, epoch,
-              Seq("retracted" -> epoch.toString))
-            .write.format("sstable")
-            .option(graft.sources.sstable.spark.SSTableSource.JobTagOption,
-              s"sigrm${epochTag(epoch)}")
-            .mode("append").save(dir)
-          victims.select(keyOf(col("doc_id")).as("key"),
-              array().cast("array<struct<name: binary, state: string, " +
-                "value: binary, timestamp: bigint, ttlSecs: bigint, " +
-                "expiresMillis: bigint>>").as("columns"),
-              struct(lit(epoch).as("localDeletionTime"),
-                lit(epoch.toLong).as("markedForDeleteAt")).as("rowTombstone"))
-            .write.format("sstable")
-            .option(graft.sources.sstable.spark.SSTableSource.JobTagOption,
-              s"sigr${epochTag(epoch)}")
-            .mode("append").save(dir)
-          graft.sources.sstable.History.record(storage, dir,
-            "retract_signatures",
-            added = storage.listDataFiles(dir).diff(before),
-            removed = Nil,
-            detail = s"docs=$matched epoch=$epoch")
-          (matched, epoch)
-        }
-      } finally victims.unpersist()
-    }
-    if (receipt._1 > 0) runTableAutocompact(s, qualifiedTable, dir)
-    receipt
-  }
-
-  private def tableExists(s: SparkSession, qualifiedTable: String): Boolean =
-    try { s.table(qualifiedTable); true }
-    catch { case _: org.apache.spark.sql.AnalysisException => false }
-
-  /** The table's own write-triggered maintenance, run on the
-    * maintainer's behalf after its lease is released (shared by all
-    * three incremental updaters — see the comment at the call sites). */
-  private[graft] def runTableAutocompact(s: SparkSession,
-                                         qualifiedTable: String,
-                                         dir: String): Unit = {
-    val storage = graft.sources.sstable.Storage.forPath(
-      dir, s.sessionState.newHadoopConf())
-    graft.sources.sstable.spark.GraftCatalog.tableProps(storage, dir)
-      .get(graft.sources.sstable.spark.SSTableSource.AutoCompactOption)
-      .map(_.toInt).filter(_ >= 2)
-      .foreach(t => SSTableOps.autoCompact(s, dir, t, buckets = None))
+    DerivedStore.retract(s, dir, "retract_signatures", "retracted", "sig",
+      ids = () => storedIds(s, dir).filter(expr(whereSql)),
+      tombstones = (ids, epoch) =>
+        DerivedStore.rowTombstones(ids, keyOf(col("doc_id")), epoch),
+      detail = (n, epoch) => s"docs=$n epoch=$epoch",
+      afterRelease = () => DerivedStore.runTableAutocompact(s, dir))
   }
 
   /** The store read back for consumers (and the hash gate): (doc_id,

@@ -1318,7 +1318,7 @@ object GraftCatalog {
   /** Live table properties for maintainers OUTSIDE this package (the
     * incremental-store updaters run the table's write-triggered
     * maintenance themselves after releasing their lease — see
-    * SignatureStore.runTableAutocompact). Empty when the pointer is
+    * DerivedStore.runTableAutocompact). Empty when the pointer is
     * absent or propless. */
   def tableProps(storage: Storage, dir: String): Map[String, String] =
     readTablePropsIfExists(storage, dir).getOrElse(Map.empty)

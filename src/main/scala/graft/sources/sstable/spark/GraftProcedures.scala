@@ -268,6 +268,17 @@ private[spark] object GraftProcedures {
       (catalogName +: tableName.split('.').toSeq)
         .map(part => s"`$part`").mkString(".")
     def row(values: Any*): InternalRow = new GenericInternalRow(values.toArray)
+    /** Data generations of the table named by argument 0 — the store
+      * CALLs' receipt column (the autocompact observable). */
+    def generations(spark: SparkSession, in: InternalRow): Int = {
+      val dir = dirOf(in)
+      graft.operators.DerivedStore.storageOf(spark, dir).listDataFiles(dir).length
+    }
+    /** Register the store named by argument 0 as derived from `corpus`. */
+    def registerStore(spark: SparkSession, in: InternalRow, corpus: String,
+                      kind: String): Unit =
+      graft.operators.DerivedRegistry.register(spark, registryDir, corpus,
+        kind, in.getUTF8String(0).toString, dirOf(in))
     val tableParam =
       p("table", StringType, comment = "catalog-relative table name, e.g. 'ns.t'")
 
@@ -592,9 +603,8 @@ private[spark] object GraftProcedures {
             storeVectors = !in.isNullAt(9) && in.getBoolean(9),
             ledgerDir = Some(ledgerDir),
             driftWarn = longArg(in, 10, 0L))
-          graft.operators.DerivedRegistry.register(spark, registryDir,
-            sourceDir, graft.operators.DerivedRegistry.AnnVectors,
-            tableName, dirOf(in))
+          registerStore(spark, in, sourceDir,
+            graft.operators.DerivedRegistry.AnnVectors)
           Seq(row(utf8(kind), cents, codebook, vecs, dim))
         }),
 
@@ -627,9 +637,8 @@ private[spark] object GraftProcedures {
             graft.operators.AnnIndex.update(
               spark, qualified(tableName), dirOf(in),
               in.getUTF8String(1).toString, ledgerDir = Some(ledgerDir))
-          graft.operators.DerivedRegistry.register(spark, registryDir,
-            in.getUTF8String(1).toString,
-            graft.operators.DerivedRegistry.AnnVectors, tableName, dirOf(in))
+          registerStore(spark, in, in.getUTF8String(1).toString,
+            graft.operators.DerivedRegistry.AnnVectors)
           Seq(row(seen, encoded, skipped, utf8(health)))
         }),
 
@@ -661,9 +670,8 @@ private[spark] object GraftProcedures {
           val (covered, already) = graft.operators.AnnIndex.cover(
             spark, qualified(tableName), dirOf(in),
             in.getUTF8String(1).toString)
-          graft.operators.DerivedRegistry.register(spark, registryDir,
-            in.getUTF8String(1).toString,
-            graft.operators.DerivedRegistry.AnnVectors, tableName, dirOf(in))
+          registerStore(spark, in, in.getUTF8String(1).toString,
+            graft.operators.DerivedRegistry.AnnVectors)
           Seq(row(covered, already))
         }),
 
@@ -755,10 +763,8 @@ private[spark] object GraftProcedures {
           val whereSql = if (in.isNullAt(1)) "true" else in.getUTF8String(1).toString
           val (retracted, epoch) = graft.operators.AnnIndex.retractVectors(
             spark, qualified(tableName), dirOf(in), whereSql)
-          val gens = graft.sources.sstable.Storage
-            .forPath(dirOf(in), spark.sessionState.newHadoopConf())
-            .listDataFiles(dirOf(in)).length
-          Seq(row(retracted, epoch, gens))
+          Seq(row(retracted, epoch,
+            generations(spark, in)))
         }),
 
       "update_signatures" -> new Proc(
@@ -805,26 +811,21 @@ private[spark] object GraftProcedures {
           val (seen, novel, skipped) = graft.operators.SignatureStore.update(
             spark, qualified(tableName), () => dirOf(in), sourceDir, whereSql,
             intArg(in, 3, 8), ledgerDir = Some(ledgerDir))
-          graft.operators.DerivedRegistry.register(spark, registryDir,
-            sourceDir, graft.operators.DerivedRegistry.Signatures,
-            tableName, dirOf(in))
-          // the table exists now — dirOf resolves it for the receipt's
-          // generation count (the autocompact observable)
-          val gens = graft.sources.sstable.Storage
-            .forPath(dirOf(in), spark.sessionState.newHadoopConf())
-            .listDataFiles(dirOf(in)).length
-          Seq(row(seen, novel, skipped, gens))
+          registerStore(spark, in, sourceDir,
+            graft.operators.DerivedRegistry.Signatures)
+          Seq(row(seen, novel, skipped,
+            generations(spark, in)))
         }),
 
       "retract_signatures" -> new Proc(
         "retract_signatures",
-        "forget documents' fingerprints: one epoch appends a DELETED sig " +
-          "cell per chosen doc (timestamped with the retraction's " +
-          "registered epoch, so it shadows every earlier write and a " +
+        "forget documents' fingerprints in two appends: first the " +
+          "retraction's _meta epoch registration with a 'retracted' flag, " +
+          "which switches the membership probe to its delete-aware form, " +
+          "then a pure row-tombstone generation marking each chosen doc " +
+          "deleted at that epoch (so it shadows every earlier write and a " +
           "later re-ingest shadows IT — membership can flip indefinitely " +
-          "in write order) plus a 'retracted' _meta flag riding the same " +
-          "append, which switches the membership probe to its " +
-          "delete-aware form: the docs read as NOVEL again and the next " +
+          "in write order). The docs read as NOVEL again and the next " +
           "update_signatures re-signs them. `where` selects over the " +
           "STORE's own ids (column doc_id) — no corpus read, so a doc " +
           "with no surviving copy anywhere (the takedown case) retracts " +
@@ -846,10 +847,8 @@ private[spark] object GraftProcedures {
           val whereSql = if (in.isNullAt(1)) "true" else in.getUTF8String(1).toString
           val (retracted, epoch) = graft.operators.SignatureStore.retract(
             spark, qualified(tableName), () => dirOf(in), whereSql)
-          val gens = graft.sources.sstable.Storage
-            .forPath(dirOf(in), spark.sessionState.newHadoopConf())
-            .listDataFiles(dirOf(in)).length
-          Seq(row(retracted, epoch, gens))
+          Seq(row(retracted, epoch,
+            generations(spark, in)))
         }),
 
       "update_doc_freqs" -> new Proc(
@@ -908,13 +907,10 @@ private[spark] object GraftProcedures {
               () => dirOf(in), sourceDir, whereSql, intArg(in, 3, 8), unit,
               intArg(in, 5, graft.operators.DfStore.DefaultAutoConsolidate),
               ledgerDir = Some(ledgerDir))
-          graft.operators.DerivedRegistry.register(spark, registryDir,
-            sourceDir, graft.operators.DerivedRegistry.DocFreqs,
-            tableName, dirOf(in))
-          val gens = graft.sources.sstable.Storage
-            .forPath(dirOf(in), spark.sessionState.newHadoopConf())
-            .listDataFiles(dirOf(in)).length
-          Seq(row(seen, novel, skipped, epoch, terms, gens))
+          registerStore(spark, in, sourceDir,
+            graft.operators.DerivedRegistry.DocFreqs)
+          Seq(row(seen, novel, skipped, epoch, terms,
+            generations(spark, in)))
         }),
 
       "consolidate_doc_freqs" -> new Proc(
@@ -1029,10 +1025,8 @@ private[spark] object GraftProcedures {
           val (seen, retracted, notStored, epoch, terms) =
             graft.operators.DfStore.retract(spark, qualified(tableName),
               () => dirOf(in), sourceDir, whereSql, unit)
-          val gens = graft.sources.sstable.Storage
-            .forPath(dirOf(in), spark.sessionState.newHadoopConf())
-            .listDataFiles(dirOf(in)).length
-          Seq(row(seen, retracted, notStored, epoch, terms, gens))
+          Seq(row(seen, retracted, notStored, epoch, terms,
+            generations(spark, in)))
         }),
 
       "retract_doc_freqs_stream" -> new Proc(

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.operators.{DerivedRegistry, Params, SSTableOps, TakedownLedger}
+import graft.operators.{DerivedRegistry, DerivedStore, DfStore, SSTableOps, TakedownLedger}
 import graft.sources.sstable.{LocalStorage, SSTableFiles, Storage}
 
 /** Streaming maintenance of a document-frequency store — the streaming
@@ -40,9 +40,9 @@ object StreamingDfUpdate {
   /** Above this many epoch partials since the last fold, the pre-append
     * maintenance slot consolidates them ([[graft.operators.DfStore
     * .consolidate]]) — without it a long-running stream grows every
-    * hot term's row by one cell per micro-batch, unboundedly (VERDICT
-    * r14 missing #2). The gate is one driver-side point read of the
-    * `_n` row (O(generations) seeks, no job). */
+    * hot term's row by one cell per micro-batch, unboundedly. The gate
+    * is one driver-side point read of the `_n` row (O(generations)
+    * seeks, no job). */
   val DefaultConsolidateAbove = 64
 
   def start(docs: DataFrame, storeDir: String, checkpointDir: String,
@@ -60,44 +60,6 @@ object StreamingDfUpdate {
       }
       .start()
 
-  /** Epoch partials accumulated since the last fold — the consolidation
-    * gate's input (shared with the batch maintainer's write-triggered
-    * `autoconsolidate` gate, round 16). */
-  private def epochPartialsSinceFold(storeDir: String,
-                                     storage: Storage): Int =
-    graft.operators.DfStore.epochPartialsSinceFold(storeDir, storage)
-
-  private def keyOfDoc(docId: org.apache.spark.sql.Column) =
-    concat(lit("d:"), lpad(docId.cast("string"), 12, "0")).cast("binary")
-
-  private def strCell(name: org.apache.spark.sql.Column,
-                      value: org.apache.spark.sql.Column,
-                      ts: Long) =
-    struct(name.cast("binary").as("name"), lit("NORMAL").as("state"),
-      value.cast("string").cast("binary").as("value"),
-      lit(ts).as("timestamp"), lit(0L).as("ttlSecs"),
-      lit(0L).as("expiresMillis"))
-
-  /** (doc_id, term, n) unit occurrences of one batch — the same
-    * extraction rules as the batch CALL's (df = one per distinct pair,
-    * cf = sum of n). */
-  private def unitsOf(docs: DataFrame, unit: String): DataFrame = unit match {
-    case "term" =>
-      docs.select(col("doc_id"), explode(Params.toks(col("text"))).as("term"))
-        .groupBy("doc_id", "term").agg(count(lit(1)).as("n"))
-    case "para" =>
-      docs.select(col("doc_id"),
-          posexplode(split(col("text"), " ")).as(Seq("pos", "word")))
-        .groupBy(col("doc_id"), floor(col("pos") / Params.ParaWords).as("chunk"))
-        .agg(array_join(transform(
-          array_sort(collect_list(struct(col("pos"), col("word")))),
-          x => x.getField("word")), " ").as("para"))
-        .select(col("doc_id"), md5(col("para")).as("term"))
-        .groupBy("doc_id", "term").agg(count(lit(1)).as("n"))
-    case other => throw new IllegalArgumentException(
-      s"unit must be 'term' or 'para', got '$other'")
-  }
-
   /** One epoch — public so tests and backfills can drive it with batch
     * DataFrames directly. `batch` needs (doc_id, text). */
   def processBatch(batch: DataFrame, storeDir: String, epochId: Long,
@@ -110,7 +72,7 @@ object StreamingDfUpdate {
     val jobTag = f"dfs$epochId%09d"
     val tag = f"s$epochId%09d"
 
-    // catalog-managed auto-wiring (round 18, VERDICT r17 #3): a store
+    // catalog-managed auto-wiring: a store
     // under a warehouse discovers the warehouse's takedown ledger with
     // no argument (the compliance surface the operator used to have to
     // remember), and REGISTERS ITSELF in the warehouse's derived-store
@@ -129,7 +91,7 @@ object StreamingDfUpdate {
 
     // replay cleanup: a retried epoch removes its failed attempt's
     // output before deciding novelty — reproducible decisions. GUARDED
-    // (round 16): if a stream-domain retraction registered a tag whose
+    //: if a stream-domain retraction registered a tag whose
     // base is >= this epoch's, that retraction's marker probe COUNTED
     // this epoch's (published, uncommitted) docs and its negative
     // partials stand on them — unpublishing the positives now would
@@ -138,18 +100,17 @@ object StreamingDfUpdate {
     // epoch (retractStream's contract is a quiesced-or-committed
     // stream) and the store needs a rebuild.
     //
-    // Guard + unpublish hold the store's maintenance lease (review
-    // find, round 16): unserialized, the guard is check-then-act — a
-    // retractStream could land BETWEEN the tag read and the unpublish,
-    // count the doomed attempt's docs, and the unpublish would then
-    // remove the positives from under its negatives (the exact
-    // corruption the guard refuses). This region stays SEPARATE from
-    // the probe→append lease below: the volunteer maintenance between
-    // them takes the lease itself, and the fold-safety argument needs
-    // the doomed files gone BEFORE any fold can absorb them. A
-    // retraction sneaking between the two regions is benign — the
-    // attempt's files are already unpublished, so it cannot have
-    // counted this epoch's docs (its base stays below this epoch's).
+    // Guard + unpublish hold the store's maintenance lease: unserialized,
+    // the guard is check-then-act — a retractStream could land BETWEEN the
+    // tag read and the unpublish, count the doomed attempt's docs, and the
+    // unpublish would then remove the positives from under its negatives
+    // (the exact corruption the guard refuses). This region stays SEPARATE
+    // from the probe→append lease below: the volunteer maintenance between
+    // them takes the lease itself, and the fold-safety argument needs the
+    // doomed files gone BEFORE any fold can absorb them. A retraction
+    // sneaking between the two regions is benign — the attempt's files are
+    // already unpublished, so it cannot have counted this epoch's docs (its
+    // base stays below this epoch's).
     if (storage.exists(storeDir) && storage.listDataFiles(storeDir)
         .exists(_.endsWith(s"-$jobTag${SSTableFiles.DataSuffix}")))
       graft.sources.sstable.MaintenanceLease.withLeaseAwait(storeDir,
@@ -170,17 +131,17 @@ object StreamingDfUpdate {
         doomed.foreach(SSTableFiles.unpublish(storage, _))
       }
 
-    // self-maintenance runs BEFORE the append, never after (r14 review
-    // find): folding at the END of the batch could absorb SOME of the
-    // current epoch's own tagged filesets (STCS buckets split an epoch's
-    // partitions); a crash before the checkpoint commit then replays the
-    // epoch, whose tag-unpublish removes only the UNFOLDED remainder —
-    // the epoch splits, and the replay's re-counted df:s<epoch> cells
-    // COLLIDE with the folded survivors' under the same name with
-    // different values, which LWW resolves to one of them: a silent
-    // under-count. With the fold up front, a replayable epoch's tag is
-    // never inside a fold (the next epoch folds it only after this
-    // epoch's checkpoint committed, which ends its replayability).
+    // self-maintenance runs BEFORE the append, never after: folding at the
+    // END of the batch could absorb SOME of the current epoch's own tagged
+    // filesets (STCS buckets split an epoch's partitions); a crash before
+    // the checkpoint commit then replays the epoch, whose tag-unpublish
+    // removes only the UNFOLDED remainder — the epoch splits, and the
+    // replay's re-counted df:s<epoch> cells COLLIDE with the folded
+    // survivors' under the same name with different values, which LWW
+    // resolves to one of them: a silent under-count. With the fold up
+    // front, a replayable epoch's tag is never inside a fold (the next
+    // epoch folds it only after this epoch's checkpoint committed, which
+    // ends its replayability).
     // StreamingIncrementalDedup keeps the end-of-batch fold: its cells
     // are idempotent under LWW, so the same interleave is harmless.
     // Both self-maintenance passes are VOLUNTEER slots (same semantics
@@ -200,7 +161,7 @@ object StreamingDfUpdate {
     // anywhere around it replays into an identical, LWW-idempotent fold.
     if (consolidateAboveEpochs > 0 && storage.exists(storeDir) &&
         storage.listDataFiles(storeDir).nonEmpty &&
-        epochPartialsSinceFold(storeDir, storage) > consolidateAboveEpochs)
+        DfStore.epochPartialsSinceFold(storeDir, storage) > consolidateAboveEpochs)
       graft.sources.sstable.MaintenanceLease.volunteer(
         graft.operators.DfStore.consolidate(spark, storeDir, storage))
 
@@ -209,7 +170,7 @@ object StreamingDfUpdate {
       .dropDuplicates("doc_id")
 
     // probe → append → audit runs UNDER the store's maintenance lease
-    // (round 16): [[graft.operators.DfStore.retractStream]] holds this
+    //: [[graft.operators.DfStore.retractStream]] holds this
     // lease while it subtracts — unserialized, a racing micro-batch
     // could re-admit a doc between the retraction's marker probe and
     // its negative append (double-subtract class), or the retraction's
@@ -221,8 +182,8 @@ object StreamingDfUpdate {
     graft.sources.sstable.MaintenanceLease.withLeaseAwait(storeDir, storage,
       "streaming_df_update") { _ =>
 
-    // takedown-ledger consult (round 17, VERDICT r16 #1, opt-in for
-    // streams), UNDER the store's lease (review find: a pre-acquire
+    // takedown-ledger consult (opt-in for
+    // streams), UNDER the store's lease (a pre-acquire
     // consult is check-then-act against a takedown whose df leg needs
     // this same lease): a batch carrying taken-down ids fails the
     // micro-batch LOUDLY — silently dropping the rows would hide a
@@ -240,59 +201,43 @@ object StreamingDfUpdate {
     // historical probe: point reads of the d: markers, never a scan
     val novel = (if (!fresh) {
       val hits = SSTableOps.lookupJoin(
-          docs.select(keyOfDoc(col("doc_id")).as("key")), storeDir)
-        .select(substring(col("key").cast("string"), 3, 12)
-          .cast("bigint").as("doc_id"))
+          docs.select(DerivedStore.idKey("d:", col("doc_id")).as("key")), storeDir)
+        .select(DerivedStore.idOfKey(col("key")).as("doc_id"))
       docs.join(hits, Seq("doc_id"), "left_anti")
     } else docs).persist()
 
     try {
-      // the count action also carries the marker-key range guard
-      // (ADVICE r14 — see DfStore.requireDocIdRange): an id outside
-      // [0, 1e12) mis-probes (no hit), would write a malformed marker,
-      // and then permanently fails the sentinel — refuse BEFORE the
-      // write, with the batch unprocessed (the checkpoint does not
+      // the count action also carries the marker-key range guard: an id
+      // outside [0, 1e12) mis-probes (no hit), would write a malformed
+      // marker, and then permanently fails the sentinel — refuse BEFORE
+      // the write, with the batch unprocessed (the checkpoint does not
       // advance past a refused epoch)
       val novelStats = novel.agg(count(lit(1)),
         min(col("doc_id")), max(col("doc_id"))).head()
       val novelCount = novelStats.getLong(0)
       if (novelCount > 0) {
-        graft.operators.DfStore.requireDocIdRange(
+        DerivedStore.requireKeyRange(
           novelStats.getLong(1), novelStats.getLong(2),
-          s"streaming epoch $epochId's novel slice")
-        // the cell timestamp is the epoch id: fixed per cell name (each
-        // name is written by exactly one epoch), deterministic on replay
-        val termRows = unitsOf(novel, unit)
-          .groupBy("term").agg(count(lit(1)).as("df"), sum(col("n")).as("cf"))
-          .select(concat(lit("t:"), col("term")).cast("binary").as("key"),
-            array(strCell(lit(s"cf:$tag"), col("cf"), epochId),
-              strCell(lit(s"df:$tag"), col("df"), epochId)).as("columns"))
-        // markers carry the doc's content hash (`h`) — same contract as
-        // the batch CALL's ingest (round 16): a later retractStream
-        // verifies the text it is about to subtract is STILL what this
-        // epoch counted. Deterministic on replay (md5 of the same text,
-        // ts = the epoch id).
-        val docRows = novel.select(keyOfDoc(col("doc_id")).as("key"),
-          array(strCell(lit("e"), lit(tag), epochId),
-            strCell(lit("h"), md5(col("text")), epochId)).as("columns"))
-        val nRow = spark.range(1).select(lit("_n").cast("binary").as("key"),
-          array(strCell(lit(s"n:$tag"), lit(novelCount), epochId)).as("columns"))
+          s"streaming epoch $epochId's novel slice", "doc_id")
+        // every cell is stamped with the epoch id: fixed per cell name
+        // (each name is written by exactly one epoch), deterministic on
+        // replay
+        val rows = DfStore.epochRows(novel, DfStore.unitTotals(novel, unit),
+          novelCount, tag, marker = lit(tag), markerTs = epochId,
+          partialTs = epochId)
         // a CREATING epoch pins the counted unit on _meta (rides the
         // same tagged generation, so a replayed first epoch re-pins
         // identically): retractStream refuses a wrong-unit subtraction
         // against it, exactly like the batch store's pin
-        val metaRows = if (fresh)
-          Some(spark.range(1).select(lit("_meta").cast("binary").as("key"),
-            array(strCell(lit("unit"), lit(unit), epochId)).as("columns")))
-        else None
-        metaRows.foldLeft(termRows.unionAll(docRows).unionAll(nRow))(_ unionAll _)
-          .write.format("sstable")
-          .option(graft.sources.sstable.spark.SSTableSource.JobTagOption, jobTag)
-          .mode("append").save(storeDir)
+        DerivedStore.appendTagged(
+          if (!fresh) rows
+          else rows.unionAll(DerivedStore.row(spark, DerivedStore.MetaKey,
+            DerivedStore.textCell(lit("unit"), lit(unit), lit(epochId)))),
+          storeDir, jobTag)
         // the additivity sentinel (see DfStore.auditAdditivity): a
         // duplicating interleave corrupts additive partials silently —
         // refuse on the epoch that caused it
-        graft.operators.DfStore.auditAdditivity(spark, storeDir,
+        DfStore.auditAdditivity(spark, storeDir,
           nDocs(spark, storeDir), s"streaming epoch $epochId")
       }
     } finally novel.unpersist()
