@@ -759,8 +759,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
               != newProps.get(GraftCatalog.BucketsProp))
             GraftCatalog.requireNoPinsForRelayout(storage, d)
           val id = PointerCommit.newId()
-          val trashName = s"_dropped-${ident.name}-$id"
-          val trash = s"$nsD/$trashName"
+          val trash = s"$nsD/${PointerCommit.trashName(ident.name, id)}"
           val copied = PointerCommit.copyTree(storage, d, trash)
           // stamp: the copy's content mtimes are the table's last writes,
           // possibly already past the sweep horizon — the undrop window
@@ -903,7 +902,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
         // reader can observe the half-moved tree the old rename-based
         // swap exposed on object stores. Lease litter and commit markers
         // never ride along, so undrop can't resurrect a stale lease.
-        val trashName = s"_dropped-${ident.name}-$id"
+        val trashName = PointerCommit.trashName(ident.name, id)
         val trash = s"${nsDir(ident.namespace)}/$trashName"
         try {
           val copied = PointerCommit.copyTree(storage, d, trash)
@@ -1128,8 +1127,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
         "(DROP TABLE removes it)")
     refuseActiveMaintenance(d, namespace.mkString("."))
     val parent = d.substring(0, d.lastIndexOf('/'))
-    val trash = s"$parent/_dropped-${namespace.last}-" +
-      java.util.UUID.randomUUID().toString.take(8)
+    val trash = s"$parent/${PointerCommit.trashName(namespace.last)}"
     // the namespace-grain visibility window, closed by COMPOSITION
     // (r12): every LIVE table in the tree first goes through the
     // pointer-committed table drop into its OWN `_dropped-` entry

@@ -4,12 +4,13 @@ import java.util
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.Identifier
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
 import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import graft.operators.SSTableOps
+import graft.operators.{AnnIndex, DerivedRegistry, DerivedStore, DfStore, Params, SSTableOps, ServingCaches, SignatureStore, Takedown, TakedownLedger}
+import graft.sources.sstable.{History, MaintenanceLease, Storage}
 
 /** SQL `CALL` surface for the maintenance family (Iceberg's
   * `CALL catalog.system.<proc>` convention): everything an operator of
@@ -35,39 +36,114 @@ import graft.operators.SSTableOps
   * single-maintainer contract of the underlying [[SSTableOps]] ops —
   * run them from the one process that owns the directory's layout.
   *
+  * Each procedure is a parameter table plus a short body: a [[Param]]
+  * declares name, type, typed default and comment once, and the body
+  * reads its arguments by name through [[Args]].
+  *
   * The `table` argument is a catalog-relative name (`ns.t`, nested
   * namespaces allowed); resolution reuses the catalog's own directory
   * mapping, so CALL reaches exactly the tables SELECT can see. */
 private[spark] object GraftProcedures {
 
-  /** One IN parameter, optionally with a SQL-literal default (a
-    * defaulted parameter is optional at the call site — Spark fills it
-    * from the literal during binding). */
-  private def p(name: String, dt: DataType, default: Option[String] = None,
-                comment: String = ""): ProcedureParameter = {
-    var b = ProcedureParameter.in(name, dt)
-    default.foreach(d => b = b.defaultValue(d))
-    if (comment.nonEmpty) b = b.comment(comment)
-    b.build()
+  /** One IN parameter, declared once. `default` None = required (Spark
+    * rejects a required parameter after an optional one, so required
+    * ones lead; every call site binds by name); `Some(null)` = a SQL
+    * NULL default. A defaulted parameter is optional at the call site:
+    * Spark binds an omitted argument from the SQL literal rendered
+    * here from the typed default. */
+  private final case class Param(name: String, dt: DataType,
+                                 default: Option[Any], comment: String) {
+    def toSpark: ProcedureParameter = {
+      var b = ProcedureParameter.in(name, dt)
+      default.foreach(d => b = b.defaultValue(d match {
+        case null => "NULL"
+        case s: String => "'" + s.replace("'", "\\'") + "'"
+        case v => v.toString
+      }))
+      if (comment.nonEmpty) b = b.comment(comment)
+      b.build()
+    }
   }
 
-  private def utf8(s: String): UTF8String = UTF8String.fromString(s)
+  private def req(name: String, dt: DataType, comment: String = ""): Param =
+    Param(name, dt, None, comment)
 
-  /** Optional-argument accessors. Spark fills a parameter's declared
-    * default only when the argument is OMITTED — an explicit NULL
-    * reaches the body, where a raw `getLong`/`getInt` silently unboxes
-    * it to 0 (review r11: `vacuum_trash(older_than_ms => NULL)` would
-    * have destroyed every undrop window in the namespace, and
-    * `maintenance_status(horizon_ms => NULL)` reported every live
-    * holder stale). Contract everywhere: explicit NULL means "the
-    * default", same as the lookup procedure's gc_tombstones. Each call
-    * site passes the same constant its parameter declares. */
-  private def longArg(in: InternalRow, i: Int, default: Long): Long =
-    if (in.isNullAt(i)) default else in.getLong(i)
-  private def intArg(in: InternalRow, i: Int, default: Int): Int =
-    if (in.isNullAt(i)) default else in.getInt(i)
-  private def boolArg(in: InternalRow, i: Int, default: Boolean): Boolean =
-    if (in.isNullAt(i)) default else in.getBoolean(i)
+  /** An optional parameter; its type follows from the typed default. */
+  private def opt(name: String, default: Any, comment: String = ""): Param =
+    Param(name, default match {
+      case _: Int => IntegerType
+      case _: Long => LongType
+      case _: Double => DoubleType
+      case _: Boolean => BooleanType
+      case _: String => StringType
+    }, Some(default), comment)
+
+  /** An optional parameter whose default is SQL NULL. */
+  private def optNull(name: String, dt: DataType, comment: String = ""): Param =
+    Param(name, dt, Some(null), comment)
+
+  /** One call's arguments, read by name. Explicit NULL means the
+    * declared default, enforced here and only here: Spark fills a
+    * default only when the argument is OMITTED, so an explicit NULL
+    * reaches the body, where a raw positional getter would silently
+    * unbox it to 0 (`vacuum_trash(older_than_ms => NULL)` would destroy
+    * every undrop window in the namespace). A NULL required argument,
+    * or a NULL-defaulted one read through a non-optional accessor,
+    * fails with `argument 'x' is required`. */
+  private final class Args(params: Seq[Param], in: InternalRow,
+                           resolveTable: String => String) {
+    private def raw(name: String): Any = {
+      val i = params.indexWhere(_.name == name)
+      require(i >= 0, s"no parameter '$name'")
+      if (in.isNullAt(i)) params(i).default.getOrElse(null)
+      else in.get(i, params(i).dt)
+    }
+    private def value(name: String): Any = {
+      val v = raw(name)
+      require(v != null, s"argument '$name' is required")
+      v
+    }
+    def str(name: String): String = value(name).toString
+    def strOpt(name: String): Option[String] = Option(raw(name)).map(_.toString)
+    def int(name: String): Int = value(name).asInstanceOf[Int]
+    def long(name: String): Long = value(name).asInstanceOf[Long]
+    def double(name: String): Double = value(name).asInstanceOf[Double]
+    def bool(name: String): Boolean = value(name).asInstanceOf[Boolean]
+    /** A string-array argument (`name => array('a','b')`); NULL = empty. */
+    def strs(name: String): Seq[String] = Option(raw(name)) match {
+      case Some(a: ArrayData) => (0 until a.numElements()).map { j =>
+        require(!a.isNullAt(j), "array arguments must not contain NULLs")
+        a.getUTF8String(j).toString
+      }
+      case _ => Seq.empty
+    }
+    /** A binary-array argument; NULL elements are skipped. */
+    def binaries(name: String): Seq[Array[Byte]] = {
+      val a = value(name).asInstanceOf[ArrayData]
+      (0 until a.numElements()).filterNot(a.isNullAt).map(a.getBinary)
+    }
+    /** The directory of the table named by the `table` argument. */
+    def dir: String = resolveTable(str("table"))
+  }
+
+  /** A receipt schema from `name -> type` columns. Columns are
+    * non-nullable; a name ending in `?` marks a nullable one (the
+    * marker is not part of the name). */
+  private def receipt(cols: (String, DataType)*): StructType =
+    StructType(cols.map { case (n, t) =>
+      StructField(n.stripSuffix("?"), t, nullable = n.endsWith("?"))
+    })
+
+  /** One receipt row: Scala values boxed, strings as UTF8String, an
+    * Option as its value or NULL. */
+  private def row(values: Any*): InternalRow = {
+    def cell(v: Any): Any = v match {
+      case s: String => UTF8String.fromString(s)
+      case o: Option[_] => o.map(cell).getOrElse(null)
+      case x => x
+    }
+    new GenericInternalRow(values.map(cell).toArray)
+  }
 
   /** A procedure: fixed parameters, fixed result schema, an eager body.
     * `bind` is identity — the parameter list is static, Spark coerces
@@ -76,17 +152,20 @@ private[spark] object GraftProcedures {
   private final class Proc(
       procName: String,
       procDescription: String,
-      params: Array[ProcedureParameter],
+      params: Seq[Param],
       resultSchema: StructType,
-      body: (SparkSession, InternalRow) => Seq[InternalRow])
+      resolveTable: String => String,
+      body: (SparkSession, Args) => Seq[InternalRow])
       extends UnboundProcedure with BoundProcedure {
+    private val sparkParams = params.map(_.toSpark).toArray
     override def name(): String = procName
     override def description(): String = procDescription
     override def bind(inputType: StructType): BoundProcedure = this
-    override def parameters(): Array[ProcedureParameter] = params
+    override def parameters(): Array[ProcedureParameter] = sparkParams
     override def isDeterministic: Boolean = false
     override def call(input: InternalRow): util.Iterator[Scan] = {
-      val resultRows = body(SparkSession.active, input).toArray
+      val resultRows =
+        body(SparkSession.active, new Args(params, input, resolveTable)).toArray
       util.List.of[Scan](new LocalScan {
         override def rows(): Array[InternalRow] = resultRows
         override def readSchema(): StructType = resultSchema
@@ -103,7 +182,7 @@ private[spark] object GraftProcedures {
     * sweep: a candidate vanishing between the listing and its stat is
     * excluded rather than thrown (Hadoop-backed `mtime` throws on
     * missing paths — the acquire-race class, VERDICT r9 #1). */
-  private def newestCandidate(storage: graft.sources.sstable.Storage,
+  private def newestCandidate(storage: Storage,
                               candidates: Seq[String],
                               what: String, name: String): (String, Long) = {
     val stamped = candidates.flatMap { p =>
@@ -127,7 +206,7 @@ private[spark] object GraftProcedures {
     * pointer-committed copy below does not apply; the namespace-grain
     * restore keeps the rename's weaker object-store visibility window —
     * the documented remaining gap.) */
-  private def restoreFromTrash(storage: graft.sources.sstable.Storage,
+  private def restoreFromTrash(storage: Storage,
                                live: String, candidates: Seq[String],
                                what: String, name: String): (String, Long) = {
     val (newest, at) = newestCandidate(storage, candidates, what, name)
@@ -144,7 +223,7 @@ private[spark] object GraftProcedures {
     * authority, and ONE atomic props replace flips the table Live. A
     * crash at any step leaves a refusing residue plus intact trash:
     * re-running the undrop (or vacuum) reaches a consistent state. */
-  private def restoreTableFromTrash(storage: graft.sources.sstable.Storage,
+  private def restoreTableFromTrash(storage: Storage,
                                     live: String, candidates: Seq[String],
                                     name: String): (String, Long) = {
     val (newest, at) = newestCandidate(storage, candidates, "table", name)
@@ -163,6 +242,24 @@ private[spark] object GraftProcedures {
     (trashName, at)
   }
 
+  /** `(original name, path)` of each complete, `_nsdrop`-marked trash
+    * entry directly under `nsPath`. */
+  private def nsDropEntries(storage: Storage,
+                            nsPath: String): Seq[(String, String)] =
+    storage.listSubdirs(nsPath, PointerCommit.TrashPrefix).flatMap { p =>
+      PointerCommit.trashedName(p.substring(p.lastIndexOf('/') + 1))
+        .filter(_ => storage.exists(s"$p/${PointerCommit.NsDropMarkFile}") &&
+          storage.exists(s"$p/${PointerCommit.TrashOkFile}"))
+        .map(_ -> p)
+    }
+
+  /** The trash entries under `dir` left by dropping `name`. */
+  private def trashOf(storage: Storage, dir: String,
+                      name: String): Seq[String] =
+    storage.listSubdirs(dir, s"${PointerCommit.TrashPrefix}$name-").filter(p =>
+      PointerCommit.trashedName(p.substring(p.lastIndexOf('/') + 1))
+        .contains(name))
+
   /** Restore every `_nsdrop`-marked complete trash entry under
     * `nsPath` (nested namespaces recursed) — the tables that were LIVE
     * when the namespace drop's per-table phase tombstoned them. Entries
@@ -170,21 +267,11 @@ private[spark] object GraftProcedures {
     * Idempotent: residue from a crashed per-table restore is cleared
     * (when its liveness rules allow), an already-live name is skipped
     * with its entry left for manual undrop_table. Returns the count. */
-  private def restoreNsDropTables(storage: graft.sources.sstable.Storage,
+  private def restoreNsDropTables(storage: Storage,
                                   nsPath: String): Int = {
     var n = 0
-    val marked = storage.listSubdirs(nsPath, "_dropped-").flatMap { p =>
-      val entry = p.substring(p.lastIndexOf('/') + 1)
-      val body = entry.drop("_dropped-".length)
-      val suffix = body.takeRight(9)
-      val shapeOk = body.length > 9 && suffix.head == '-' &&
-        suffix.tail.forall(c => c.isDigit || (c >= 'a' && c <= 'f'))
-      if (shapeOk &&
-          storage.exists(s"$p/${PointerCommit.NsDropMarkFile}") &&
-          storage.exists(s"$p/${PointerCommit.TrashOkFile}") &&
-          !storage.exists(s"$p/${GraftCatalog.NamespaceMarker}"))
-        Some(body.dropRight(9) -> p)
-      else None
+    val marked = nsDropEntries(storage, nsPath).filter { case (_, p) =>
+      !storage.exists(s"$p/${GraftCatalog.NamespaceMarker}")
     }
     // one restore per NAME, newest entry wins (a cascade that crashed
     // pre-flip and re-ran can leave a stale complete duplicate; so can
@@ -199,32 +286,25 @@ private[spark] object GraftProcedures {
       if (!storage.exists(live)) {
         val (restoredFrom, _) = restoreTableFromTrash(storage, live,
           entries.map(_._2), tname)
-        graft.sources.sstable.History.record(storage, live, "undrop_table",
+        History.record(storage, live, "undrop_table",
           detail = s"from=$restoredFrom (undrop_namespace)")
         n += 1
       }
     }
-    storage.listSubdirs(nsPath, "")
-      .map(x => x.substring(x.lastIndexOf('/') + 1))
-      .filterNot(_.startsWith("_"))
-      .foreach { child =>
-        if (storage.exists(s"$nsPath/$child/${GraftCatalog.NamespaceMarker}"))
-          n += restoreNsDropTables(storage, s"$nsPath/$child")
-      }
+    childNamespaces(storage, nsPath).foreach(c => n += restoreNsDropTables(storage, c))
     n
   }
 
-  private def hasNsDropEntries(storage: graft.sources.sstable.Storage,
-                               nsPath: String): Boolean =
-    storage.listSubdirs(nsPath, "_dropped-").exists(p =>
-      storage.exists(s"$p/${PointerCommit.NsDropMarkFile}") &&
-        storage.exists(s"$p/${PointerCommit.TrashOkFile}")) ||
-      storage.listSubdirs(nsPath, "")
-        .map(x => x.substring(x.lastIndexOf('/') + 1))
-        .filterNot(_.startsWith("_"))
-        .exists(child =>
-          storage.exists(s"$nsPath/$child/${GraftCatalog.NamespaceMarker}") &&
-            hasNsDropEntries(storage, s"$nsPath/$child"))
+  private def hasNsDropEntries(storage: Storage, nsPath: String): Boolean =
+    nsDropEntries(storage, nsPath).nonEmpty ||
+      childNamespaces(storage, nsPath).exists(hasNsDropEntries(storage, _))
+
+  /** Paths of the nested namespaces directly under `nsPath`. */
+  private def childNamespaces(storage: Storage, nsPath: String): Seq[String] =
+    storage.listSubdirs(nsPath, "")
+      .map(x => s"$nsPath/${x.substring(x.lastIndexOf('/') + 1)}")
+      .filter(x => !x.substring(nsPath.length + 1).startsWith("_") &&
+        storage.exists(s"$x/${GraftCatalog.NamespaceMarker}"))
 
   /** Build the registry against `resolveTable` — the catalog's own
     * `table-name → directory` mapping (loud on unknown names) — and the
@@ -236,233 +316,246 @@ private[spark] object GraftProcedures {
                catalogName: => String,
                resolveParent: String => (String, String),
                warehouseDir: () => String): Map[String, UnboundProcedure] = {
-    def dirOf(input: InternalRow): String = {
-      require(!input.isNullAt(0), "argument 'table' is required")
-      resolveTable(input.getUTF8String(0).toString)
-    }
-    /** The catalog's takedown-ledger directory (round 17): a reserved
+    def proc(name: String, description: String, params: Param*)(
+        resultSchema: StructType)(
+        body: (SparkSession, Args) => Seq[InternalRow]): Proc =
+      new Proc(name, description, params, resultSchema, resolveTable, body)
+    /** The catalog's takedown-ledger directory: a reserved
       * underscore-prefixed path under the warehouse root — out of reach
       * of table DDL, consulted by every ingest maintainer below. */
-    def ledgerDir: String =
-      graft.operators.TakedownLedger.dirUnder(warehouseDir())
-    /** The catalog's derived-store registry (round 18): maintainers
-      * self-register what they build/update so a list-free takedown or
-      * audit can span EVERYTHING derived from a corpus with no table
-      * list to forget. Same reserved-path pattern as the ledger. */
-    def registryDir: String =
-      graft.operators.DerivedRegistry.dirUnder(warehouseDir())
-    /** Optional string-array argument: `name => array('a','b')` on the
-      * CALL site; absent or explicit NULL = empty. */
-    def strArrayArg(in: InternalRow, i: Int): Seq[String] =
-      if (in.isNullAt(i)) Seq.empty
-      else {
-        val a = in.getArray(i)
-        (0 until a.numElements()).map { j =>
-          require(!a.isNullAt(j), "array arguments must not contain NULLs")
-          a.getUTF8String(j).toString
-        }
-      }
+    def ledgerDir: String = TakedownLedger.dirUnder(warehouseDir())
+    /** The catalog's derived-store registry: maintainers self-register
+      * what they build/update so a list-free takedown or audit can span
+      * EVERYTHING derived from a corpus with no table list to forget.
+      * Same reserved-path pattern as the ledger. */
+    def registryDir: String = DerivedRegistry.dirUnder(warehouseDir())
     /** Back-quoted fully-qualified SQL name (validated by resolveTable
-      * first — call dirOf before this). */
+      * first — resolve the directory before this). */
     def qualified(tableName: String): String =
       (catalogName +: tableName.split('.').toSeq)
         .map(part => s"`$part`").mkString(".")
-    def row(values: Any*): InternalRow = new GenericInternalRow(values.toArray)
-    /** Data generations of the table named by argument 0 — the store
-      * CALLs' receipt column (the autocompact observable). */
-    def generations(spark: SparkSession, in: InternalRow): Int = {
-      val dir = dirOf(in)
-      graft.operators.DerivedStore.storageOf(spark, dir).listDataFiles(dir).length
+    /** The store named by the `table` argument as a qualified SQL name;
+      * loud on a missing namespace, while the table itself may not
+      * exist yet (the store CALLs create it). */
+    def storeName(a: Args): String = {
+      val tableName = a.str("table")
+      resolveParent(tableName)
+      qualified(tableName)
     }
-    /** Register the store named by argument 0 as derived from `corpus`. */
-    def registerStore(spark: SparkSession, in: InternalRow, corpus: String,
+    /** The directory of a catalog-relative namespace ('' = the
+      * warehouse root): resolveParent validates segments and namespace
+      * existence; the synthetic leaf makes it resolve the namespace
+      * ITSELF. */
+    def nsDirOf(ns: String): String =
+      resolveParent(if (ns.isEmpty) "x" else s"$ns.x")._1
+    /** Data generations of the `table` argument — the store CALLs'
+      * receipt column (the autocompact observable). */
+    def generations(spark: SparkSession, a: Args): Int = {
+      val dir = a.dir
+      DerivedStore.storageOf(spark, dir).listDataFiles(dir).length
+    }
+    /** Register the `table` argument's store as derived from `corpus`. */
+    def registerStore(spark: SparkSession, a: Args, corpus: String,
                       kind: String): Unit =
-      graft.operators.DerivedRegistry.register(spark, registryDir, corpus,
-        kind, in.getUTF8String(0).toString, dirOf(in))
-    val tableParam =
-      p("table", StringType, comment = "catalog-relative table name, e.g. 'ns.t'")
+      DerivedRegistry.register(spark, registryDir, corpus, kind,
+        a.str("table"), a.dir)
 
-    Map(
-      "compact" -> new Proc(
-        "compact",
+    /** Where a registered store lives now: its receipt label and
+      * directory, or None once its table was DROPPED or its stream
+      * directory is gone. */
+    def locate(spark: SparkSession,
+               e: DerivedRegistry.Entry): Option[(String, String)] =
+      if (e.mode == "stream")
+        Some((e.dir, e.dir)).filter(_ =>
+          DerivedStore.storageOf(spark, e.dir).exists(e.dir))
+      else try Some((qualified(e.table), resolveTable(e.table)))
+        catch { case _: Exception => None }
+
+    /** One store leg of a takedown or its audit: receipt label,
+      * directory, and whether the store is stream-maintained
+      * (path-addressed, not a catalog table). */
+    final case class StoreLeg(label: String, dir: String, stream: Boolean)
+    final case class StoreLegs(df: Seq[StoreLeg], sig: Seq[StoreLeg],
+                               ann: Seq[StoreLeg],
+                               missing: Seq[DerivedRegistry.Entry])
+    def pairs(legs: Seq[StoreLeg]): Seq[(String, String)] =
+      legs.map(l => (l.label, l.dir))
+
+    /** The store arguments `takedown` and `takedown_status` share: per
+      * kind the scalar `x_table` plus the `x_tables` list, at most one of
+      * `df_table` / `df_stream_dir`, at least one leg per kind. With NO
+      * store argument at all, the legs are every store `registered`
+      * lists (LIST-FREE mode: the registry is the system's memory — a
+      * forgotten store is a registry row, not a silent re-admission
+      * vector), and a registered store that is gone comes back in
+      * `missing` instead of failing the whole call. `hint` names the
+      * list-free mode in the refusals. */
+    def storeLegs(spark: SparkSession, a: Args, hint: String)(
+        registered: => Seq[DerivedRegistry.Entry]): StoreLegs = {
+      def named(kind: String) =
+        a.strOpt(s"${kind}_table").toSeq ++ a.strs(s"${kind}_tables")
+      val (sigNames, annNames, dfNames) = (named("sig"), named("ann"), named("df"))
+      val streamDir = a.strOpt("df_stream_dir")
+      if (sigNames.nonEmpty || annNames.nonEmpty || dfNames.nonEmpty ||
+          streamDir.nonEmpty) {
+        require(sigNames.nonEmpty, "at least one of sig_table / " +
+          s"sig_tables is required (or pass NO store args $hint)")
+        require(annNames.nonEmpty, "at least one of ann_table / " +
+          s"ann_tables is required (or pass NO store args $hint)")
+        require(a.strOpt("df_table").isEmpty || streamDir.isEmpty,
+          "df_table and df_stream_dir are mutually exclusive (a " +
+            "catalog-managed batch store vs a stream-maintained " +
+            "store directory); df_tables adds more batch stores " +
+            "and composes with either")
+        require(dfNames.nonEmpty || streamDir.nonEmpty,
+          "at least one df leg is required: df_table, df_tables, " +
+            s"or df_stream_dir (or pass NO store args $hint)")
+        def table(n: String) = StoreLeg(qualified(n), resolveTable(n), stream = false)
+        StoreLegs(dfNames.map(table) ++ streamDir.map(d => StoreLeg(d, d, stream = true)),
+          sigNames.map(table), annNames.map(table), Nil)
+      } else {
+        val located = registered.map(e => e -> locate(spark, e))
+        def of(kind: String) = located.collect {
+          case (e, Some((label, dir))) if e.kind == kind =>
+            StoreLeg(label, dir, e.mode == "stream")
+        }
+        StoreLegs(of(DerivedRegistry.DocFreqs), of(DerivedRegistry.Signatures),
+          of(DerivedRegistry.AnnVectors), located.collect { case (e, None) => e })
+      }
+    }
+
+    val table =
+      req("table", StringType, "catalog-relative table name, e.g. 'ns.t'")
+    val folds = receipt("folds" -> IntegerType)
+
+    Seq(
+      proc("compact",
         "size-tiered (STCS) compaction: fold every planned bucket in place; " +
           "returns the number of buckets folded",
-        Array(tableParam,
-          p("min_threshold", IntegerType, Some("4")),
-          p("max_threshold", IntegerType, Some("32")),
-          p("min_size", LongType, Some((50L * 1024 * 1024).toString))),
-        StructType(Seq(StructField("folds", IntegerType, nullable = false))),
-        (spark, in) => Seq(row(SSTableOps.compactInPlace(
-          spark, dirOf(in), intArg(in, 1, 4), intArg(in, 2, 32),
-          longArg(in, 3, 50L * 1024 * 1024)): Integer))),
+        table, opt("min_threshold", 4), opt("max_threshold", 32),
+        opt("min_size", 50L * 1024 * 1024))(folds) { (spark, a) =>
+        Seq(row(SSTableOps.compactInPlace(spark, a.dir, a.int("min_threshold"),
+          a.int("max_threshold"), a.long("min_size"))))
+      },
 
-      "compact_leveled" -> new Proc(
-        "compact_leveled",
+      proc("compact_leveled",
         "leveled (LCS) compaction: fold adjacent sorted runs until at most " +
           "max_runs remain; returns the number of folds performed",
-        Array(tableParam,
-          p("max_runs", IntegerType, Some("4")),
-          p("max_threshold", IntegerType, Some("32"))),
-        StructType(Seq(StructField("folds", IntegerType, nullable = false))),
-        (spark, in) => Seq(row(SSTableOps.compactLeveledInPlace(
-          spark, dirOf(in), intArg(in, 1, 4), intArg(in, 2, 32)): Integer))),
+        table, opt("max_runs", 4), opt("max_threshold", 32))(folds) { (spark, a) =>
+        Seq(row(SSTableOps.compactLeveledInPlace(spark, a.dir,
+          a.int("max_runs"), a.int("max_threshold"))))
+      },
 
-      "compact_bucketed" -> new Proc(
-        "compact_bucketed",
+      proc("compact_bucketed",
         "layout-preserving compaction for bucketed (writeBucketed) " +
           "directories: fold each hash bucket's generation chain into one " +
           "generation under the same bucket-NNNNN stem (tombstone GC is " +
           "structural within a bucket); returns the number of buckets folded",
-        Array(tableParam,
-          p("min_threshold", IntegerType, Some("2")),
-          p("parallelism", IntegerType, Some("0"))),
-        StructType(Seq(StructField("folds", IntegerType, nullable = false))),
-        (spark, in) => Seq(row(SSTableOps.compactBucketedInPlace(
-          spark, dirOf(in), intArg(in, 1, 2), intArg(in, 2, 0)): Integer))),
+        table, opt("min_threshold", 2), opt("parallelism", 0))(folds) { (spark, a) =>
+        Seq(row(SSTableOps.compactBucketedInPlace(spark, a.dir,
+          a.int("min_threshold"), a.int("parallelism"))))
+      },
 
-      "compact_tombstones" -> new Proc(
-        "compact_tombstones",
+      proc("compact_tombstones",
         "single-generation tombstone compaction: fold isolated generations " +
           "whose sidecar tombstone ratio reaches the threshold (drops the " +
           "delete-shadow debt); returns the number of generations folded",
-        Array(tableParam,
-          p("ratio_threshold", DoubleType, Some("0.2"))),
-        StructType(Seq(StructField("folds", IntegerType, nullable = false))),
-        (spark, in) => Seq(row(SSTableOps.compactTombstonesInPlace(
-          spark, dirOf(in), in.getDouble(1)): Integer))),
+        table, opt("ratio_threshold", 0.2))(folds) { (spark, a) =>
+        Seq(row(SSTableOps.compactTombstonesInPlace(spark, a.dir,
+          a.double("ratio_threshold"))))
+      },
 
-      "snapshot" -> new Proc(
-        "snapshot",
+      proc("snapshot",
         "pin the table's current published state as a named snapshot " +
           "(hardlinks; readable via VERSION AS OF / option(snapshot, tag))",
-        Array(tableParam, p("tag", StringType)),
-        StructType(Seq(StructField("path", StringType, nullable = false))),
-        (spark, in) => {
-          require(!in.isNullAt(1), "argument 'tag' is required")
-          val d = dirOf(in)
-          Seq(row(utf8(SSTableOps.snapshot(d, in.getUTF8String(1).toString,
-            graft.sources.sstable.Storage.forPath(
-              d, spark.sessionState.newHadoopConf())))))
-        }),
+        table, req("tag", StringType))(
+        receipt("path" -> StringType)) { (spark, a) =>
+        val tag = a.str("tag")
+        val d = a.dir
+        Seq(row(SSTableOps.snapshot(d, tag, DerivedStore.storageOf(spark, d))))
+      },
 
-      "drop_snapshot" -> new Proc(
-        "drop_snapshot",
+      proc("drop_snapshot",
         "drop a snapshot pin (bytes survive under live names / younger pins)",
-        Array(tableParam, p("tag", StringType)),
-        StructType(Seq(StructField("dropped", BooleanType, nullable = false))),
-        (spark, in) => {
-          require(!in.isNullAt(1), "argument 'tag' is required")
-          val d = dirOf(in)
-          val tag = in.getUTF8String(1).toString
-          val storage = graft.sources.sstable.Storage.forPath(
-            d, spark.sessionState.newHadoopConf())
-          val existed = storage.exists(SSTableOps.snapshotPath(d, tag))
-          if (existed) SSTableOps.dropSnapshot(d, tag, storage)
-          Seq(row(existed: java.lang.Boolean))
-        }),
+        table, req("tag", StringType))(
+        receipt("dropped" -> BooleanType)) { (spark, a) =>
+        val tag = a.str("tag")
+        val d = a.dir
+        val storage = DerivedStore.storageOf(spark, d)
+        val existed = storage.exists(SSTableOps.snapshotPath(d, tag))
+        if (existed) SSTableOps.dropSnapshot(d, tag, storage)
+        Seq(row(existed))
+      },
 
-      "rollback" -> new Proc(
-        "rollback",
+      proc("rollback",
         "restore the table's live state to a snapshot pin (the write-side " +
           "dual of VERSION AS OF): pin filesets relink, post-pin filesets " +
           "unpublish; idempotent, quiesce writers first",
-        Array(tableParam, p("tag", StringType)),
-        StructType(Seq(
-          StructField("restored", IntegerType, nullable = false),
-          StructField("removed", IntegerType, nullable = false))),
-        (spark, in) => {
-          require(!in.isNullAt(1), "argument 'tag' is required")
-          val d = dirOf(in)
-          val (restored, removed) = SSTableOps.rollbackToSnapshot(
-            d, in.getUTF8String(1).toString,
-            graft.sources.sstable.Storage.forPath(
-              d, spark.sessionState.newHadoopConf()))
-          Seq(row(restored: Integer, removed: Integer))
-        }),
+        table, req("tag", StringType))(
+        receipt("restored" -> IntegerType, "removed" -> IntegerType)) { (spark, a) =>
+        val tag = a.str("tag")
+        val d = a.dir
+        val (restored, removed) = SSTableOps.rollbackToSnapshot(d, tag,
+          DerivedStore.storageOf(spark, d))
+        Seq(row(restored, removed))
+      },
 
-      "expire_snapshots" -> new Proc(
-        "expire_snapshots",
+      proc("expire_snapshots",
         "retention for snapshot pins: drop every pin older than the horizon " +
           "(pin mtime = capture time); one row per pin with its outcome. " +
           "tag_prefix scopes it (e.g. 'auto-' retires only autosnapshot's " +
           "wipe-undo pins, never user pins)",
-        Array(tableParam,
-          p("older_than_ms", LongType, Some((7L * 24 * 3600 * 1000).toString)),
-          p("tag_prefix", StringType, Some("''"))),
-        StructType(Seq(
-          StructField("tag", StringType, nullable = false),
-          StructField("status", StringType, nullable = false))),
-        (spark, in) => {
-          val d = dirOf(in)
-          val (dropped, kept) = SSTableOps.expireSnapshots(
-            d, longArg(in, 1, 7L * 24 * 3600 * 1000),
-            storage = graft.sources.sstable.Storage.forPath(
-              d, spark.sessionState.newHadoopConf()),
-            tagPrefix =
-              if (in.isNullAt(2)) "" else in.getUTF8String(2).toString)
-          dropped.sorted.map(t => row(utf8(t), utf8("dropped"))) ++
-            kept.sorted.map(t => row(utf8(t), utf8("kept")))
-        }),
+        table, opt("older_than_ms", 7L * 24 * 3600 * 1000),
+        opt("tag_prefix", ""))(
+        receipt("tag" -> StringType, "status" -> StringType)) { (spark, a) =>
+        val d = a.dir
+        val (dropped, kept) = SSTableOps.expireSnapshots(
+          d, a.long("older_than_ms"), storage = DerivedStore.storageOf(spark, d),
+          tagPrefix = a.str("tag_prefix"))
+        dropped.sorted.map(row(_, "dropped")) ++ kept.sorted.map(row(_, "kept"))
+      },
 
-      "vacuum" -> new Proc(
-        "vacuum",
+      proc("vacuum",
         "remove stale staging directories abandoned by dead writers " +
           "(mtime older than the horizon); one row per staging dir",
-        Array(tableParam,
-          p("older_than_ms", LongType, Some((24L * 3600 * 1000).toString))),
-        StructType(Seq(
-          StructField("path", StringType, nullable = false),
-          StructField("status", StringType, nullable = false))),
-        (spark, in) => {
-          val d = dirOf(in)
-          val (stale, live) = SSTableOps.vacuumStaging(
-            d, longArg(in, 1, 24L * 3600 * 1000),
-            storage = graft.sources.sstable.Storage.forPath(
-              d, spark.sessionState.newHadoopConf()))
-          stale.sorted.map(s => row(utf8(s), utf8("removed"))) ++
-            live.sorted.map(s => row(utf8(s), utf8("live")))
-        }),
+        table, opt("older_than_ms", 24L * 3600 * 1000))(
+        receipt("path" -> StringType, "status" -> StringType)) { (spark, a) =>
+        val d = a.dir
+        val (stale, live) = SSTableOps.vacuumStaging(d, a.long("older_than_ms"),
+          storage = DerivedStore.storageOf(spark, d))
+        stale.sorted.map(row(_, "removed")) ++ live.sorted.map(row(_, "live"))
+      },
 
-      "expire_history" -> new Proc(
-        "expire_history",
+      proc("expire_history",
         "retention for the _history operation log: remove events older " +
           "than the horizon (name-parse only, no file reads); the log is " +
           "an audit trail, so expiry changes nothing about the data. " +
           "Pass 'namespace' instead of 'table' to expire a NAMESPACE's " +
           "log (where create/drop/undrop_namespace events land; '' = " +
           "the warehouse root)",
-        Array(p("table", StringType, Some("NULL"),
-          comment = "catalog-relative table name, e.g. 'ns.t'"),
-          p("older_than_ms", LongType, Some((90L * 24 * 3600 * 1000).toString)),
-          p("namespace", StringType, Some("NULL"),
-            comment = "namespace whose log to expire instead; '' = root")),
-        StructType(Seq(
-          StructField("removed", IntegerType, nullable = false),
-          StructField("kept", IntegerType, nullable = false))),
-        (spark, in) => {
-          val nsArg =
-            if (in.isNullAt(2)) None else Some(in.getUTF8String(2).toString)
-          val d = nsArg match {
-            case Some(ns) =>
-              require(in.isNullAt(0),
-                "pass either 'table' or 'namespace', not both")
-              resolveParent(if (ns.isEmpty) "x" else s"$ns.x")._1
-            case None => dirOf(in)
-          }
-          val storage = graft.sources.sstable.Storage.forPath(
-            d, spark.sessionState.newHadoopConf())
-          // leased: rebucket exports/imports the log around its swap,
-          // and retention deleting events mid-carry would abort it
-          val (removed, kept) = graft.sources.sstable.MaintenanceLease
-            .withLease(d, storage, "expire_history") { _ =>
-              graft.sources.sstable.History.expire(storage, d,
-                longArg(in, 1, 90L * 24 * 3600 * 1000))
-            }
-          Seq(row(removed: Integer, kept: Integer))
-        }),
+        optNull("table", StringType, "catalog-relative table name, e.g. 'ns.t'"),
+        opt("older_than_ms", 90L * 24 * 3600 * 1000),
+        optNull("namespace", StringType,
+          "namespace whose log to expire instead; '' = root"))(
+        receipt("removed" -> IntegerType, "kept" -> IntegerType)) { (spark, a) =>
+        val d = a.strOpt("namespace") match {
+          case Some(ns) =>
+            require(a.strOpt("table").isEmpty,
+              "pass either 'table' or 'namespace', not both")
+            nsDirOf(ns)
+          case None => a.dir
+        }
+        val storage = DerivedStore.storageOf(spark, d)
+        // leased: rebucket exports/imports the log around its swap,
+        // and retention deleting events mid-carry would abort it
+        val (removed, kept) = MaintenanceLease.withLease(d, storage,
+          "expire_history") { _ =>
+          History.expire(storage, d, a.long("older_than_ms"))
+        }
+        Seq(row(removed, kept))
+      },
 
-      "rebucket" -> new Proc(
-        "rebucket",
+      proc("rebucket",
         "atomically re-layout a table to a new bucket count (new_buckets " +
           "=> 0 drops the bucketed layout) via the self-referential " +
           "CREATE OR REPLACE ... AS SELECT escape hatch — the stage " +
@@ -472,67 +565,59 @@ private[spark] object GraftProcedures {
           "delete-aware, so the rewrite also folds pending deletes. " +
           "Quiesce writers first: a write racing the swap lands in the " +
           "replaced directory and is dropped with it",
-        Array(tableParam,
-          p("new_buckets", IntegerType,
-            comment = "target bucket count; 0 = plain (un-bucketed) layout")),
-        StructType(Seq(
-          StructField("previousBuckets", IntegerType, nullable = true),
-          StructField("buckets", IntegerType, nullable = true),
-          StructField("rows", LongType, nullable = false))),
-        (spark, in) => {
-          require(!in.isNullAt(1), "argument 'new_buckets' is required")
-          val tableName = in.getUTF8String(0).toString
-          val d = dirOf(in)
-          val n = in.getInt(1)
-          require(n >= 0, s"new_buckets must be >= 0: $n")
-          if (n > 0) SSTableSource.bucketsOf(Some(n.toString)) // CREATE's validation
-          val storage = graft.sources.sstable.Storage.forPath(
-            d, spark.sessionState.newHadoopConf())
-          // guards + audit-log capture run under a SHORT lease; the swap
-          // itself is left to the REPLACE's commitStaged, which takes
-          // the table lease for its pointer-committed copy+flip+migrate
-          // (holding ours across it would self-refuse). The gap between
-          // our release and its acquire admits one racing maintainer,
-          // whose fold then either finishes (riding into trash with the
-          // old state — REPLACE discards it by contract) or makes the
-          // REPLACE refuse loudly at its own acquire.
-          val (prev, savedLog, propsClause) = graft.sources.sstable
-            .MaintenanceLease.withLease(d, storage, "rebucket") { _ =>
-              // the ONE audited home of the relayout×time-travel guard
-              // (NOTES r8 #38-2) — shared with ALTER 'buckets'
-              GraftCatalog.requireNoPinsForRelayout(storage, d)
-              // the swap sends the old directory's _history to trash —
-              // capture the audit trail now and restore it after the
-              // swap, so the append-only contract holds across the one
-              // action that replaces the directory
-              val savedLog = graft.sources.sstable.History.exportLog(storage, d)
-              val current = GraftCatalog.readTableProps(storage, d)
-              val prev = current.get(GraftCatalog.BucketsProp).map(_.toInt)
-              require(prev != Some(n) && !(prev.isEmpty && n == 0),
-                s"table already has ${prev.map(b => s"buckets=$b")
-                  .getOrElse("the plain layout")} — nothing to re-layout")
-              val next = (
-                if (n == 0) current - GraftCatalog.BucketsProp
-                else current + (GraftCatalog.BucketsProp -> n.toString)
-              ) - TableState.Key
-              val propsClause =
-                if (next.isEmpty) ""
-                else " TBLPROPERTIES (" + next.toSeq.sorted
-                  .map { case (k, v) => s"'$k'='$v'" }.mkString(", ") + ")"
-              (prev, savedLog, propsClause)
-            }
-          val q = qualified(tableName)
-          spark.sql(s"CREATE OR REPLACE TABLE $q$propsClause AS SELECT * FROM $q")
-          graft.sources.sstable.History.importLog(storage, d, savedLog)
-          val rows = spark.sql(s"SELECT count(*) FROM $q").head().getLong(0)
-          graft.sources.sstable.History.record(storage, d, "rebucket",
-            detail = s"buckets=${prev.getOrElse(0)}->$n")
-          Seq(row(prev.map(Int.box).orNull,
-            if (n == 0) null else Int.box(n), rows: java.lang.Long))
-        }),
+        table, req("new_buckets", IntegerType,
+          "target bucket count; 0 = plain (un-bucketed) layout"))(
+        receipt("previousBuckets?" -> IntegerType, "buckets?" -> IntegerType,
+          "rows" -> LongType)) { (spark, a) =>
+        val n = a.int("new_buckets")
+        val tableName = a.str("table")
+        val d = a.dir
+        require(n >= 0, s"new_buckets must be >= 0: $n")
+        if (n > 0) SSTableSource.bucketsOf(Some(n.toString)) // CREATE's validation
+        val storage = DerivedStore.storageOf(spark, d)
+        // guards + audit-log capture run under a SHORT lease; the swap
+        // itself is left to the REPLACE's commitStaged, which takes
+        // the table lease for its pointer-committed copy+flip+migrate
+        // (holding ours across it would self-refuse). The gap between
+        // our release and its acquire admits one racing maintainer,
+        // whose fold then either finishes (riding into trash with the
+        // old state — REPLACE discards it by contract) or makes the
+        // REPLACE refuse loudly at its own acquire.
+        val (prev, savedLog, propsClause) =
+          MaintenanceLease.withLease(d, storage, "rebucket") { _ =>
+            // the ONE audited home of the relayout×time-travel guard
+            // (NOTES r8 #38-2) — shared with ALTER 'buckets'
+            GraftCatalog.requireNoPinsForRelayout(storage, d)
+            // the swap sends the old directory's _history to trash —
+            // capture the audit trail now and restore it after the
+            // swap, so the append-only contract holds across the one
+            // action that replaces the directory
+            val savedLog = History.exportLog(storage, d)
+            val current = GraftCatalog.readTableProps(storage, d)
+            val prev = current.get(GraftCatalog.BucketsProp).map(_.toInt)
+            require(prev != Some(n) && !(prev.isEmpty && n == 0),
+              s"table already has ${prev.map(b => s"buckets=$b")
+                .getOrElse("the plain layout")} — nothing to re-layout")
+            val next = (
+              if (n == 0) current - GraftCatalog.BucketsProp
+              else current + (GraftCatalog.BucketsProp -> n.toString)
+            ) - TableState.Key
+            val propsClause =
+              if (next.isEmpty) ""
+              else " TBLPROPERTIES (" + next.toSeq.sorted
+                .map { case (k, v) => s"'$k'='$v'" }.mkString(", ") + ")"
+            (prev, savedLog, propsClause)
+          }
+        val q = qualified(tableName)
+        spark.sql(s"CREATE OR REPLACE TABLE $q$propsClause AS SELECT * FROM $q")
+        History.importLog(storage, d, savedLog)
+        val rows = spark.sql(s"SELECT count(*) FROM $q").head().getLong(0)
+        History.record(storage, d, "rebucket",
+          detail = s"buckets=${prev.getOrElse(0)}->$n")
+        Seq(row(prev, Some(n).filter(_ != 0), rows))
+      },
 
-      "build_ann_index" -> new Proc(
-        "build_ann_index",
+      proc("build_ann_index",
         "train an ANN index over an embeddings corpus (any Spark-readable " +
           "directory whose embeddings table has vec_id BIGINT + embedding " +
           "ARRAY<FLOAT>) and persist it as THIS catalog table via one " +
@@ -545,71 +630,46 @@ private[spark] object GraftProcedures {
           "in-query — while paying a tiny broadcast instead of Lloyd " +
           "iterations per job (the precompute-once-read-many pattern of " +
           "the reference's split planning, GenerateSSTableDataSplits)",
-        Array(tableParam,
-          p("source_dir", StringType,
-            comment = "corpus directory holding embeddings.parquet"),
-          p("kind", StringType, Some("'ivfpq'"),
-            comment = "'ivf' (coarse only), 'pq' (codebooks only), 'ivfpq'"),
-          p("k", IntegerType, Some(graft.operators.Params.KMedK.toString),
-            comment = "coarse cells"),
-          p("iters", IntegerType, Some(graft.operators.Params.KMedIters.toString),
-            comment = "coarse Lloyd iterations"),
-          p("m", IntegerType, Some(graft.operators.Params.PqM.toString),
-            comment = "PQ subspaces"),
-          p("pq_k", IntegerType, Some(graft.operators.Params.PqK.toString),
-            comment = "codes per subspace"),
-          p("pq_iters", IntegerType, Some(graft.operators.Params.PqIters.toString),
-            comment = "codebook Lloyd iterations"),
-          p("where", StringType, Some("'true'"),
-            comment = "SQL predicate selecting the training slice — the " +
-              "real pattern at scale: train quantizers on a sample, then " +
-              "CALL update_ann_index to encode the rest against them"),
-          p("store_vectors", BooleanType, Some("false"),
-            comment = "covering-index mode: persist each raw vector in " +
-              "its v: row so exact-rerank serving can point-read a PQ " +
-              "shortlist's true vectors (the FAISS-IVFPQR/DiskANN " +
-              "reorder step) instead of scanning the embedding table; " +
-              "update_ann_index and streaming ingest follow the pinned " +
-              "flag automatically"),
-          p("drift_warn", LongType, Some("0"),
-            comment = "drift-warning threshold in e4 units (e.g. 15000 " +
-              "= ratio 1.5): a covering index's maintainers append a " +
-              "_health drift sample at every ingest epoch; above this " +
-              "threshold the ingest receipt carries a LOUD warning. 0 " +
-              "(default) = samples only, no warning")),
-        StructType(Seq(
-          StructField("kind", StringType, nullable = false),
-          StructField("centroids", LongType, nullable = false),
-          StructField("codebookEntries", LongType, nullable = false),
-          StructField("vectors", LongType, nullable = false),
-          StructField("dim", IntegerType, nullable = false))),
-        (spark, in) => {
-          require(!in.isNullAt(0), "argument 'table' is required")
-          require(!in.isNullAt(1), "argument 'source_dir' is required")
-          val tableName = in.getUTF8String(0).toString
-          resolveParent(tableName) // loud on a missing namespace
-          val sourceDir = in.getUTF8String(1).toString
-          val kind = if (in.isNullAt(2)) "ivfpq"
-            else in.getUTF8String(2).toString.toLowerCase(java.util.Locale.ROOT)
-          val whereSql = if (in.isNullAt(8)) "true" else in.getUTF8String(8).toString
-          val (cents, codebook, vecs, dim, _) = graft.operators.AnnIndex.build(
-            spark, sourceDir, qualified(tableName), kind,
-            intArg(in, 3, graft.operators.Params.KMedK),
-            intArg(in, 4, graft.operators.Params.KMedIters),
-            intArg(in, 5, graft.operators.Params.PqM),
-            intArg(in, 6, graft.operators.Params.PqK),
-            intArg(in, 7, graft.operators.Params.PqIters),
-            whereSql,
-            storeVectors = !in.isNullAt(9) && in.getBoolean(9),
-            ledgerDir = Some(ledgerDir),
-            driftWarn = longArg(in, 10, 0L))
-          registerStore(spark, in, sourceDir,
-            graft.operators.DerivedRegistry.AnnVectors)
-          Seq(row(utf8(kind), cents, codebook, vecs, dim))
-        }),
+        table,
+        req("source_dir", StringType, "corpus directory holding embeddings.parquet"),
+        opt("kind", "ivfpq", "'ivf' (coarse only), 'pq' (codebooks only), 'ivfpq'"),
+        opt("k", Params.KMedK, "coarse cells"),
+        opt("iters", Params.KMedIters, "coarse Lloyd iterations"),
+        opt("m", Params.PqM, "PQ subspaces"),
+        opt("pq_k", Params.PqK, "codes per subspace"),
+        opt("pq_iters", Params.PqIters, "codebook Lloyd iterations"),
+        opt("where", "true",
+          "SQL predicate selecting the training slice — the " +
+            "real pattern at scale: train quantizers on a sample, then " +
+            "CALL update_ann_index to encode the rest against them"),
+        opt("store_vectors", false,
+          "covering-index mode: persist each raw vector in " +
+            "its v: row so exact-rerank serving can point-read a PQ " +
+            "shortlist's true vectors (the FAISS-IVFPQR/DiskANN " +
+            "reorder step) instead of scanning the embedding table; " +
+            "update_ann_index and streaming ingest follow the pinned " +
+            "flag automatically"),
+        opt("drift_warn", 0L,
+          "drift-warning threshold in e4 units (e.g. 15000 " +
+            "= ratio 1.5): a covering index's maintainers append a " +
+            "_health drift sample at every ingest epoch; above this " +
+            "threshold the ingest receipt carries a LOUD warning. 0 " +
+            "(default) = samples only, no warning"))(
+        receipt("kind" -> StringType, "centroids" -> LongType,
+          "codebookEntries" -> LongType, "vectors" -> LongType,
+          "dim" -> IntegerType)) { (spark, a) =>
+        val sourceDir = a.str("source_dir")
+        val kind = a.str("kind").toLowerCase(java.util.Locale.ROOT)
+        val (cents, codebook, vecs, dim, _) = AnnIndex.build(
+          spark, sourceDir, storeName(a), kind, a.int("k"), a.int("iters"),
+          a.int("m"), a.int("pq_k"), a.int("pq_iters"), a.str("where"),
+          storeVectors = a.bool("store_vectors"), ledgerDir = Some(ledgerDir),
+          driftWarn = a.long("drift_warn"))
+        registerStore(spark, a, sourceDir, DerivedRegistry.AnnVectors)
+        Seq(row(kind, cents, codebook, vecs, dim))
+      },
 
-      "update_ann_index" -> new Proc(
-        "update_ann_index",
+      proc("update_ann_index",
         "incrementally ingest NEW corpus vectors into a persisted ANN " +
           "index: probe the index's v: keys (key-only Index.db scan) for " +
           "vec_ids already encoded, assign ONLY the absent vectors under " +
@@ -621,29 +681,19 @@ private[spark] object GraftProcedures {
           "never Lloyd training again. Refuses an index built over a " +
           "different corpus or with missing _meta. Same single-maintainer " +
           "contract as every maintenance CALL (probe-then-append)",
-        Array(tableParam,
-          p("source_dir", StringType,
-            comment = "the SAME corpus directory the index was built over")),
-        StructType(Seq(
-          StructField("docsSeen", LongType, nullable = false),
-          StructField("encoded", LongType, nullable = false),
-          StructField("alreadyIndexed", LongType, nullable = false),
-          StructField("health", StringType, nullable = false))),
-        (spark, in) => {
-          require(!in.isNullAt(0), "argument 'table' is required")
-          require(!in.isNullAt(1), "argument 'source_dir' is required")
-          val tableName = in.getUTF8String(0).toString
-          val (seen, encoded, skipped, health) =
-            graft.operators.AnnIndex.update(
-              spark, qualified(tableName), dirOf(in),
-              in.getUTF8String(1).toString, ledgerDir = Some(ledgerDir))
-          registerStore(spark, in, in.getUTF8String(1).toString,
-            graft.operators.DerivedRegistry.AnnVectors)
-          Seq(row(seen, encoded, skipped, utf8(health)))
-        }),
+        table,
+        req("source_dir", StringType,
+          "the SAME corpus directory the index was built over"))(
+        receipt("docsSeen" -> LongType, "encoded" -> LongType,
+          "alreadyIndexed" -> LongType, "health" -> StringType)) { (spark, a) =>
+        val sourceDir = a.str("source_dir")
+        val (seen, encoded, skipped, health) = AnnIndex.update(spark,
+          qualified(a.str("table")), a.dir, sourceDir, ledgerDir = Some(ledgerDir))
+        registerStore(spark, a, sourceDir, DerivedRegistry.AnnVectors)
+        Seq(row(seen, encoded, skipped, health))
+      },
 
-      "cover_ann_index" -> new Proc(
-        "cover_ann_index",
+      proc("cover_ann_index",
         "upgrade an EXISTING non-covering ANN index to covering: " +
           "backfill raw-vector (vec) cells for every live v: row from " +
           "the pinned corpus in ONE pass — no retraining (centroids and " +
@@ -657,26 +707,18 @@ private[spark] object GraftProcedures {
           "hash); ids missing from the corpus refuse (retract them " +
           "first, or rebuild). Idempotent: an already-covering index " +
           "no-ops. Runs under the maintenance lease",
-        Array(tableParam,
-          p("source_dir", StringType,
-            comment = "the SAME corpus directory the index was built over")),
-        StructType(Seq(
-          StructField("covered", LongType, nullable = false),
-          StructField("alreadyCovering", BooleanType, nullable = false))),
-        (spark, in) => {
-          require(!in.isNullAt(0), "argument 'table' is required")
-          require(!in.isNullAt(1), "argument 'source_dir' is required")
-          val tableName = in.getUTF8String(0).toString
-          val (covered, already) = graft.operators.AnnIndex.cover(
-            spark, qualified(tableName), dirOf(in),
-            in.getUTF8String(1).toString)
-          registerStore(spark, in, in.getUTF8String(1).toString,
-            graft.operators.DerivedRegistry.AnnVectors)
-          Seq(row(covered, already))
-        }),
+        table,
+        req("source_dir", StringType,
+          "the SAME corpus directory the index was built over"))(
+        receipt("covered" -> LongType, "alreadyCovering" -> BooleanType)) { (spark, a) =>
+        val sourceDir = a.str("source_dir")
+        val (covered, already) = AnnIndex.cover(spark,
+          qualified(a.str("table")), a.dir, sourceDir)
+        registerStore(spark, a, sourceDir, DerivedRegistry.AnnVectors)
+        Seq(row(covered, already))
+      },
 
-      "ann_drift" -> new Proc(
-        "ann_drift",
+      proc("ann_drift",
         "quantizer drift statistic: compare how well POST-BUILD epochs' " +
           "vectors assign under the index's persisted quantizers vs the " +
           "BUILD epoch's (best-assignment cosine; coarse centroids for " +
@@ -696,41 +738,29 @@ private[spark] object GraftProcedures {
           "index's assignment cells, vectors from the corpus — one " +
           "corpus scan), breaking the cover<->drift circularity (cover " +
           "refuses on drift; drift used to require cover)",
-        Array(tableParam,
-          p("source_dir", StringType, Some("NULL"),
-            comment = "corpus-IO fallback for a NON-covering index: " +
-              "must equal the index's pinned source; ignored when the " +
-              "index stores raw vectors"),
-          p("tolerate_missing", BooleanType, Some("false"),
-            comment = "fallback mode during LIVE corpus churn (round " +
-              "18): index vectors the corpus no longer holds are " +
-              "dropped from the statistic and counted in the receipt's " +
-              "'missing' column, instead of refusing the measurement. " +
-              "Default keeps the refusal (a silent drop would bias " +
-              "the means invisibly)")),
-        StructType(Seq(
-          StructField("nBuild", LongType, nullable = false),
-          StructField("nPost", LongType, nullable = false),
-          StructField("buildMeanSim_e4", LongType, nullable = false),
-          StructField("postMeanSim_e4", LongType, nullable = false),
-          StructField("buildP05Sim_e4", LongType, nullable = false),
-          StructField("postP05Sim_e4", LongType, nullable = false),
-          StructField("driftRatio_e4", LongType, nullable = false),
-          StructField("missing", LongType, nullable = false))),
-        (spark, in) => {
-          require(!in.isNullAt(0), "argument 'table' is required")
-          val tableName = in.getUTF8String(0).toString
-          val (nb, np, mb, mp, pb, pp, ratio, missing) =
-            graft.operators.AnnIndex.drift(spark, qualified(tableName),
-              dirOf(in),
-              if (in.isNullAt(1)) None
-              else Some(in.getUTF8String(1).toString),
-              tolerateMissing = !in.isNullAt(2) && in.getBoolean(2))
-          Seq(row(nb, np, mb, mp, pb, pp, ratio, missing))
-        }),
+        table,
+        optNull("source_dir", StringType,
+          "corpus-IO fallback for a NON-covering index: " +
+            "must equal the index's pinned source; ignored when the " +
+            "index stores raw vectors"),
+        opt("tolerate_missing", false,
+          "fallback mode during LIVE corpus churn (round " +
+            "18): index vectors the corpus no longer holds are " +
+            "dropped from the statistic and counted in the receipt's " +
+            "'missing' column, instead of refusing the measurement. " +
+            "Default keeps the refusal (a silent drop would bias " +
+            "the means invisibly)"))(
+        receipt("nBuild" -> LongType, "nPost" -> LongType,
+          "buildMeanSim_e4" -> LongType, "postMeanSim_e4" -> LongType,
+          "buildP05Sim_e4" -> LongType, "postP05Sim_e4" -> LongType,
+          "driftRatio_e4" -> LongType, "missing" -> LongType)) { (spark, a) =>
+        val (nb, np, mb, mp, pb, pp, ratio, missing) = AnnIndex.drift(spark,
+          qualified(a.str("table")), a.dir, a.strOpt("source_dir"),
+          tolerateMissing = a.bool("tolerate_missing"))
+        Seq(row(nb, np, mb, mp, pb, pp, ratio, missing))
+      },
 
-      "retract_ann_vectors" -> new Proc(
-        "retract_ann_vectors",
+      proc("retract_ann_vectors",
         "remove vectors from a persisted ANN index without retraining: " +
           "one epoch appends a row-tombstone generation marking the " +
           "chosen v: rows deleted (the catalog's merge-on-read DELETE " +
@@ -748,27 +778,18 @@ private[spark] object GraftProcedures {
           "not member data; rebuild to retrain). Idempotent re-runs " +
           "match nothing. Runs under the maintenance lease; epoch 0 in " +
           "the receipt means nothing matched (no write)",
-        Array(tableParam,
-          p("where", StringType, Some("'true'"),
-            comment = "SQL predicate over vec_id selecting the vectors " +
-              "to remove, e.g. 'vec_id % 5 = 2'")),
-        StructType(Seq(
-          StructField("retracted", LongType, nullable = false),
-          StructField("epoch", IntegerType, nullable = false),
-          StructField("generations", IntegerType, nullable = false))),
-        (spark, in) => {
-          require(!in.isNullAt(0), "argument 'table' is required")
-          val tableName = in.getUTF8String(0).toString
-          resolveParent(tableName) // loud on a missing namespace
-          val whereSql = if (in.isNullAt(1)) "true" else in.getUTF8String(1).toString
-          val (retracted, epoch) = graft.operators.AnnIndex.retractVectors(
-            spark, qualified(tableName), dirOf(in), whereSql)
-          Seq(row(retracted, epoch,
-            generations(spark, in)))
-        }),
+        table,
+        opt("where", "true",
+          "SQL predicate over vec_id selecting the vectors " +
+            "to remove, e.g. 'vec_id % 5 = 2'"))(
+        receipt("retracted" -> LongType, "epoch" -> IntegerType,
+          "generations" -> IntegerType)) { (spark, a) =>
+        val (retracted, epoch) = AnnIndex.retractVectors(spark, storeName(a),
+          a.dir, a.str("where"))
+        Seq(row(retracted, epoch, generations(spark, a)))
+      },
 
-      "update_signatures" -> new Proc(
-        "update_signatures",
+      proc("update_signatures",
         "incrementally maintain a MinHash signature store over a growing " +
           "corpus (the batch twin of the streaming incremental dedup): " +
           "probe THIS catalog table's keys (a key-only Index.db scan) for " +
@@ -788,37 +809,25 @@ private[spark] object GraftProcedures {
           "lease). The index-only probe skips delete-awareness until the " +
           "first retract_signatures epoch flips the store to the " +
           "delete-aware probe; ad-hoc DELETE FROM remains unsupported",
-        Array(tableParam,
-          p("source_dir", StringType,
-            comment = "corpus directory holding documents.parquet"),
-          p("where", StringType, Some("'true'"),
-            comment = "SQL predicate selecting the ingest slice, e.g. " +
-              "'doc_id % 3 < 2'"),
-          p("autocompact", IntegerType, Some("8"),
-            comment = "write-triggered fold threshold for a NEW store")),
-        StructType(Seq(
-          StructField("docsSeen", LongType, nullable = false),
-          StructField("novel", LongType, nullable = false),
-          StructField("alreadyStored", LongType, nullable = false),
-          StructField("generations", IntegerType, nullable = false))),
-        (spark, in) => {
-          require(!in.isNullAt(0), "argument 'table' is required")
-          require(!in.isNullAt(1), "argument 'source_dir' is required")
-          val tableName = in.getUTF8String(0).toString
-          resolveParent(tableName) // loud on a missing namespace
-          val sourceDir = in.getUTF8String(1).toString
-          val whereSql = if (in.isNullAt(2)) "true" else in.getUTF8String(2).toString
-          val (seen, novel, skipped) = graft.operators.SignatureStore.update(
-            spark, qualified(tableName), () => dirOf(in), sourceDir, whereSql,
-            intArg(in, 3, 8), ledgerDir = Some(ledgerDir))
-          registerStore(spark, in, sourceDir,
-            graft.operators.DerivedRegistry.Signatures)
-          Seq(row(seen, novel, skipped,
-            generations(spark, in)))
-        }),
+        table,
+        req("source_dir", StringType,
+          "corpus directory holding documents.parquet"),
+        opt("where", "true",
+          "SQL predicate selecting the ingest slice, e.g. " +
+            "'doc_id % 3 < 2'"),
+        opt("autocompact", 8,
+          "write-triggered fold threshold for a NEW store"))(
+        receipt("docsSeen" -> LongType, "novel" -> LongType,
+          "alreadyStored" -> LongType, "generations" -> IntegerType)) { (spark, a) =>
+        val sourceDir = a.str("source_dir")
+        val (seen, novel, skipped) = SignatureStore.update(spark, storeName(a),
+          () => a.dir, sourceDir, a.str("where"), a.int("autocompact"),
+          ledgerDir = Some(ledgerDir))
+        registerStore(spark, a, sourceDir, DerivedRegistry.Signatures)
+        Seq(row(seen, novel, skipped, generations(spark, a)))
+      },
 
-      "retract_signatures" -> new Proc(
-        "retract_signatures",
+      proc("retract_signatures",
         "forget documents' fingerprints in two appends: first the " +
           "retraction's _meta epoch registration with a 'retracted' flag, " +
           "which switches the membership probe to its delete-aware form, " +
@@ -832,27 +841,18 @@ private[spark] object GraftProcedures {
           "fine. A re-run matches nothing (idempotent by construction). " +
           "Runs under the maintenance lease; epoch 0 in the receipt " +
           "means nothing matched (no write)",
-        Array(tableParam,
-          p("where", StringType, Some("'true'"),
-            comment = "SQL predicate over doc_id selecting the docs to " +
-              "forget, e.g. 'doc_id % 5 = 2'")),
-        StructType(Seq(
-          StructField("retracted", LongType, nullable = false),
-          StructField("epoch", IntegerType, nullable = false),
-          StructField("generations", IntegerType, nullable = false))),
-        (spark, in) => {
-          require(!in.isNullAt(0), "argument 'table' is required")
-          val tableName = in.getUTF8String(0).toString
-          resolveParent(tableName) // loud on a missing namespace
-          val whereSql = if (in.isNullAt(1)) "true" else in.getUTF8String(1).toString
-          val (retracted, epoch) = graft.operators.SignatureStore.retract(
-            spark, qualified(tableName), () => dirOf(in), whereSql)
-          Seq(row(retracted, epoch,
-            generations(spark, in)))
-        }),
+        table,
+        opt("where", "true",
+          "SQL predicate over doc_id selecting the docs to " +
+            "forget, e.g. 'doc_id % 5 = 2'"))(
+        receipt("retracted" -> LongType, "epoch" -> IntegerType,
+          "generations" -> IntegerType)) { (spark, a) =>
+        val (retracted, epoch) = SignatureStore.retract(spark, storeName(a),
+          () => a.dir, a.str("where"))
+        Seq(row(retracted, epoch, generations(spark, a)))
+      },
 
-      "update_doc_freqs" -> new Proc(
-        "update_doc_freqs",
+      proc("update_doc_freqs",
         "incrementally maintain a document-frequency (IDF) store over a " +
           "growing corpus: probe THIS table's d: marker keys (key-only " +
           "Index.db scan) for doc_ids already counted, compute per-term " +
@@ -868,53 +868,37 @@ private[spark] object GraftProcedures {
           "corpus. Creates the store on first call with a _meta row " +
           "pinning the source; a retargeted store refuses loudly. Same " +
           "single-maintainer, append-only contract as update_signatures",
-        Array(tableParam,
-          p("source_dir", StringType,
-            comment = "corpus directory holding documents.parquet"),
-          p("where", StringType, Some("'true'"),
-            comment = "SQL predicate selecting the ingest slice"),
-          p("autocompact", IntegerType, Some("8"),
-            comment = "write-triggered fold threshold for a NEW store"),
-          p("unit", StringType, Some("'term'"),
-            comment = "counted unit: 'term' (alpha tokens — the " +
-              "TF-IDF/IDF statistic) or 'para' (paragraph digests — the " +
-              "boilerplate-removal statistic); pinned in _meta"),
-          p("autoconsolidate", IntegerType,
-            Some(graft.operators.DfStore.DefaultAutoConsolidate.toString),
-            comment = "write-triggered consolidation bound for a NEW " +
-              "store (table property): when more than this many epoch " +
-              "partials have accumulated since the last fold, the " +
-              "committing CALL consolidates on the store's behalf — row " +
-              "width stays bounded without CALL consolidate_doc_freqs; " +
-              "0 disables")),
-        StructType(Seq(
-          StructField("docsSeen", LongType, nullable = false),
-          StructField("novel", LongType, nullable = false),
-          StructField("alreadyStored", LongType, nullable = false),
-          StructField("epoch", IntegerType, nullable = false),
-          StructField("terms", LongType, nullable = false),
-          StructField("generations", IntegerType, nullable = false))),
-        (spark, in) => {
-          require(!in.isNullAt(0), "argument 'table' is required")
-          require(!in.isNullAt(1), "argument 'source_dir' is required")
-          val tableName = in.getUTF8String(0).toString
-          resolveParent(tableName) // loud on a missing namespace
-          val sourceDir = in.getUTF8String(1).toString
-          val whereSql = if (in.isNullAt(2)) "true" else in.getUTF8String(2).toString
-          val unit = if (in.isNullAt(4)) "term" else in.getUTF8String(4).toString
-          val (seen, novel, skipped, epoch, terms) =
-            graft.operators.DfStore.update(spark, qualified(tableName),
-              () => dirOf(in), sourceDir, whereSql, intArg(in, 3, 8), unit,
-              intArg(in, 5, graft.operators.DfStore.DefaultAutoConsolidate),
-              ledgerDir = Some(ledgerDir))
-          registerStore(spark, in, sourceDir,
-            graft.operators.DerivedRegistry.DocFreqs)
-          Seq(row(seen, novel, skipped, epoch, terms,
-            generations(spark, in)))
-        }),
+        table,
+        req("source_dir", StringType,
+          "corpus directory holding documents.parquet"),
+        opt("where", "true",
+          "SQL predicate selecting the ingest slice"),
+        opt("autocompact", 8,
+          "write-triggered fold threshold for a NEW store"),
+        opt("unit", "term",
+          "counted unit: 'term' (alpha tokens — the " +
+            "TF-IDF/IDF statistic) or 'para' (paragraph digests — the " +
+            "boilerplate-removal statistic); pinned in _meta"),
+        opt("autoconsolidate", DfStore.DefaultAutoConsolidate,
+          "write-triggered consolidation bound for a NEW " +
+            "store (table property): when more than this many epoch " +
+            "partials have accumulated since the last fold, the " +
+            "committing CALL consolidates on the store's behalf — row " +
+            "width stays bounded without CALL consolidate_doc_freqs; " +
+            "0 disables"))(
+        receipt("docsSeen" -> LongType, "novel" -> LongType,
+          "alreadyStored" -> LongType, "epoch" -> IntegerType,
+          "terms" -> LongType, "generations" -> IntegerType)) { (spark, a) =>
+        val sourceDir = a.str("source_dir")
+        val (seen, novel, skipped, epoch, terms) = DfStore.update(spark,
+          storeName(a), () => a.dir, sourceDir, a.str("where"),
+          a.int("autocompact"), a.str("unit"), a.int("autoconsolidate"),
+          ledgerDir = Some(ledgerDir))
+        registerStore(spark, a, sourceDir, DerivedRegistry.DocFreqs)
+        Seq(row(seen, novel, skipped, epoch, terms, generations(spark, a)))
+      },
 
-      "consolidate_doc_freqs" -> new Proc(
-        "consolidate_doc_freqs",
+      proc("consolidate_doc_freqs",
         "epoch-range consolidation of a df store: rewrite each t:/_n " +
           "row's accumulated per-epoch partial cells into ONE fold cell " +
           "(their exact sum, tagged with the newest covered epoch) plus " +
@@ -929,24 +913,16 @@ private[spark] object GraftProcedures {
           "maintenance lease; d: markers and _meta are never touched; " +
           "the additivity sentinel is re-checked before returning. " +
           "Idempotent: a re-run with no new epochs folds nothing",
-        Array(tableParam),
-        StructType(Seq(
-          StructField("rowsFolded", LongType, nullable = false),
-          StructField("partialsFolded", LongType, nullable = false),
-          StructField("coveredEpochTag", StringType, nullable = false),
-          StructField("generations", IntegerType, nullable = false))),
-        (spark, in) => {
-          val dir = dirOf(in)
-          val storage = graft.sources.sstable.Storage
-            .forPath(dir, spark.sessionState.newHadoopConf())
-          val (rows, cells, tag) =
-            graft.operators.DfStore.consolidate(spark, dir, storage)
-          Seq(row(rows, cells, utf8(tag),
-            storage.listDataFiles(dir).length))
-        }),
+        table)(
+        receipt("rowsFolded" -> LongType, "partialsFolded" -> LongType,
+          "coveredEpochTag" -> StringType, "generations" -> IntegerType)) { (spark, a) =>
+        val dir = a.dir
+        val storage = DerivedStore.storageOf(spark, dir)
+        val (rows, cells, tag) = DfStore.consolidate(spark, dir, storage)
+        Seq(row(rows, cells, tag, storage.listDataFiles(dir).length))
+      },
 
-      "audit_doc_freqs" -> new Proc(
-        "audit_doc_freqs",
+      proc("audit_doc_freqs",
         "run the df store's additivity sentinel ON DEMAND: verify that " +
           "the signed sum of the _n epoch partials equals the live " +
           "membership-marker count (with no duplicate marker versions " +
@@ -957,23 +933,15 @@ private[spark] object GraftProcedures {
           "operational checks (post-undrop, post-restore, periodic " +
           "fleet audits). Returns the verified counts; an inconsistent " +
           "store throws the same loud diagnosis the maintainers raise",
-        Array(tableParam),
-        StructType(Seq(
-          StructField("nDocs", LongType, nullable = false),
-          StructField("liveMarkers", LongType, nullable = false),
-          StructField("consistent", BooleanType, nullable = false))),
-        (spark, in) => {
-          require(!in.isNullAt(0), "argument 'table' is required")
-          val tableName = in.getUTF8String(0).toString
-          resolveParent(tableName) // loud on a missing namespace
-          val n = graft.operators.DfStore.nDocs(spark, qualified(tableName))
-          val live = graft.operators.DfStore.auditAdditivity(
-            spark, dirOf(in), n, "CALL audit_doc_freqs")
-          Seq(row(n, live, true))
-        }),
+        table)(
+        receipt("nDocs" -> LongType, "liveMarkers" -> LongType,
+          "consistent" -> BooleanType)) { (spark, a) =>
+        val n = DfStore.nDocs(spark, storeName(a))
+        val live = DfStore.auditAdditivity(spark, a.dir, n, "CALL audit_doc_freqs")
+        Seq(row(n, live, true))
+      },
 
-      "retract_doc_freqs" -> new Proc(
-        "retract_doc_freqs",
+      proc("retract_doc_freqs",
         "retract documents from a df store WITHOUT rescanning the " +
           "corpus — the takedown/GDPR/contamination-removal operation, " +
           "priced by the retraction slice: one epoch atomically appends " +
@@ -999,38 +967,24 @@ private[spark] object GraftProcedures {
           "never counted (or already retracted) report as notStored — a " +
           "re-run is a receipt-visible no-op. Runs under the maintenance " +
           "lease; epoch 0 in the receipt means nothing matched (no write)",
-        Array(tableParam,
-          p("source_dir", StringType,
-            comment = "corpus directory holding documents.parquet"),
-          p("where", StringType, Some("'true'"),
-            comment = "SQL predicate selecting the docs to retract, " +
-              "e.g. 'doc_id % 5 = 2'"),
-          p("unit", StringType, Some("'term'"),
-            comment = "must match the store's pinned unit")),
-        StructType(Seq(
-          StructField("docsInSlice", LongType, nullable = false),
-          StructField("retracted", LongType, nullable = false),
-          StructField("notStored", LongType, nullable = false),
-          StructField("epoch", IntegerType, nullable = false),
-          StructField("terms", LongType, nullable = false),
-          StructField("generations", IntegerType, nullable = false))),
-        (spark, in) => {
-          require(!in.isNullAt(0), "argument 'table' is required")
-          require(!in.isNullAt(1), "argument 'source_dir' is required")
-          val tableName = in.getUTF8String(0).toString
-          resolveParent(tableName) // loud on a missing namespace
-          val sourceDir = in.getUTF8String(1).toString
-          val whereSql = if (in.isNullAt(2)) "true" else in.getUTF8String(2).toString
-          val unit = if (in.isNullAt(3)) "term" else in.getUTF8String(3).toString
-          val (seen, retracted, notStored, epoch, terms) =
-            graft.operators.DfStore.retract(spark, qualified(tableName),
-              () => dirOf(in), sourceDir, whereSql, unit)
-          Seq(row(seen, retracted, notStored, epoch, terms,
-            generations(spark, in)))
-        }),
+        table,
+        req("source_dir", StringType,
+          "corpus directory holding documents.parquet"),
+        opt("where", "true",
+          "SQL predicate selecting the docs to retract, " +
+            "e.g. 'doc_id % 5 = 2'"),
+        opt("unit", "term",
+          "must match the store's pinned unit"))(
+        receipt("docsInSlice" -> LongType, "retracted" -> LongType,
+          "notStored" -> LongType, "epoch" -> IntegerType,
+          "terms" -> LongType, "generations" -> IntegerType)) { (spark, a) =>
+        val sourceDir = a.str("source_dir")
+        val (seen, retracted, notStored, epoch, terms) = DfStore.retract(spark,
+          storeName(a), () => a.dir, sourceDir, a.str("where"), a.str("unit"))
+        Seq(row(seen, retracted, notStored, epoch, terms, generations(spark, a)))
+      },
 
-      "retract_doc_freqs_stream" -> new Proc(
-        "retract_doc_freqs_stream",
+      proc("retract_doc_freqs_stream",
         "retract documents from a STREAM-maintained df store (the " +
           "directory a StreamingDfUpdate maintainer writes — stream " +
           "stores are path-addressed, not catalog tables, hence " +
@@ -1047,41 +1001,28 @@ private[spark] object GraftProcedures {
           "epoch committed (a retraction over an uncommitted attempt " +
           "makes that epoch's replay refuse). Empty tag in the receipt " +
           "means nothing matched (no write)",
-        Array(
-          p("store_dir", StringType,
-            comment = "the stream-maintained df store's directory"),
-          p("source_dir", StringType,
-            comment = "directory holding the removed docs' (doc_id, " +
-              "text) rows — corpus or takedown payload"),
-          p("where", StringType, Some("'true'"),
-            comment = "SQL predicate selecting the docs to retract"),
-          p("unit", StringType, Some("'term'"),
-            comment = "must match the store's pinned unit")),
-        StructType(Seq(
-          StructField("docsInSlice", LongType, nullable = false),
-          StructField("retracted", LongType, nullable = false),
-          StructField("notStored", LongType, nullable = false),
-          StructField("retractionTag", StringType, nullable = false),
-          StructField("terms", LongType, nullable = false),
-          StructField("generations", IntegerType, nullable = false))),
-        (spark, in) => {
-          require(!in.isNullAt(0), "argument 'store_dir' is required")
-          require(!in.isNullAt(1), "argument 'source_dir' is required")
-          val storeDir = in.getUTF8String(0).toString
-          val sourceDir = in.getUTF8String(1).toString
-          val whereSql = if (in.isNullAt(2)) "true" else in.getUTF8String(2).toString
-          val unit = if (in.isNullAt(3)) "term" else in.getUTF8String(3).toString
-          val storage = graft.sources.sstable.Storage.forPath(
-            storeDir, spark.sessionState.newHadoopConf())
-          val (seen, retracted, notStored, rtag, terms) =
-            graft.operators.DfStore.retractStream(spark, storeDir,
-              sourceDir, whereSql, unit, storage)
-          Seq(row(seen, retracted, notStored, utf8(rtag), terms,
-            storage.listDataFiles(storeDir).length))
-        }),
+        req("store_dir", StringType,
+          "the stream-maintained df store's directory"),
+        req("source_dir", StringType,
+          "directory holding the removed docs' (doc_id, " +
+            "text) rows — corpus or takedown payload"),
+        opt("where", "true",
+          "SQL predicate selecting the docs to retract"),
+        opt("unit", "term",
+          "must match the store's pinned unit"))(
+        receipt("docsInSlice" -> LongType, "retracted" -> LongType,
+          "notStored" -> LongType, "retractionTag" -> StringType,
+          "terms" -> LongType, "generations" -> IntegerType)) { (spark, a) =>
+        val storeDir = a.str("store_dir")
+        val sourceDir = a.str("source_dir")
+        val storage = DerivedStore.storageOf(spark, storeDir)
+        val (seen, retracted, notStored, rtag, terms) = DfStore.retractStream(
+          spark, storeDir, sourceDir, a.str("where"), a.str("unit"), storage)
+        Seq(row(seen, retracted, notStored, rtag, terms,
+          storage.listDataFiles(storeDir).length))
+      },
 
-      "takedown" -> new Proc(
-        "takedown",
+      proc("takedown",
         "cross-store takedown orchestration: record the removal in the " +
           "persistent takedown ledger, then drive retract_doc_freqs + " +
           "retract_signatures + retract_ann_vectors for one id predicate " +
@@ -1114,182 +1055,99 @@ private[spark] object GraftProcedures {
           "update_doc_freqs/update_signatures/build_ann_index/" +
           "update_ann_index refuse an ingest slice still containing " +
           "ledgered ids; CALL readmit is the explicit override",
-        Array(
-          // required parameters lead (Spark rejects a required param
-          // after an optional one); every call site binds by name
-          p("source_dir", StringType,
-            comment = "directory holding the removed docs' (doc_id, " +
-              "text) rows — corpus or takedown payload"),
-          p("where", StringType,
-            comment = "SQL predicate over doc_id selecting the docs to " +
-              "remove, e.g. 'doc_id % 5 = 2'"),
-          p("sig_table", StringType, Some("NULL"),
-            comment = "catalog-relative signature store name; at least " +
-              "one of sig_table / sig_tables is required — unless NO " +
-              "store args are passed at all (the list-free " +
-              "registry-spanning mode)"),
-          p("ann_table", StringType, Some("NULL"),
-            comment = "catalog-relative ANN index name; at least one " +
-              "of ann_table / ann_tables is required — unless list-free"),
-          p("df_table", StringType, Some("NULL"),
-            comment = "catalog-relative df store name, e.g. 'ns.df' — " +
-              "at most one of df_table / df_stream_dir; at least one " +
-              "df leg overall (df_tables adds more batch stores and " +
-              "composes with either)"),
-          p("df_stream_dir", StringType, Some("NULL"),
-            comment = "a STREAM-maintained df store's directory — the " +
-              "df leg then retracts in the stream's own epoch-tag " +
-              "domain (retract_doc_freqs_stream), so one takedown " +
-              "spans live-stream pipelines too"),
-          p("unit", StringType, Some("'term'"),
-            comment = "must match the df stores' pinned unit"),
-          p("corpus_table", StringType, Some("NULL"),
-            comment = "OPTIONAL final leg: a catalog-relative corpus " +
-              "table whose matching rows are DELETEd — run LAST (the df " +
-              "legs read the removed docs' text from source_dir, often " +
-              "the corpus itself). Absent = corpora are deleted by " +
-              "their own owners' mechanics"),
-          p("corpus_where", StringType, Some("NULL"),
-            comment = "DELETE predicate in the corpus table's own " +
-              "column terms; defaults to `where` (works when the table " +
-              "exposes doc_id)"),
-          p("df_tables", ArrayType(StringType), Some("NULL"),
-            comment = "MORE batch df stores, e.g. array('ns.df2', " +
-              "'ns.df3') — one leg and one receipt row each"),
-          p("sig_tables", ArrayType(StringType), Some("NULL"),
-            comment = "more signature stores"),
-          p("ann_tables", ArrayType(StringType), Some("NULL"),
-            comment = "more ANN indexes (per modality / embedding " +
-              "version)"),
-          p("corpus", StringType, Some("NULL"),
-            comment = "SCOPE the ledger entries to one corpus's id " +
-              "domain (round 18, for multi-corpus warehouses): " +
-              "maintainers consult with their own ingest corpus, so " +
-              "an UNRELATED corpus sharing id values is not refused, " +
-              "and readmit scoped to it cannot clear this record. " +
-              "Absent (or '*') = warehouse-global entries that refuse " +
-              "the ids under every corpus — the single-corpus default; " +
-              "deliberately NOT inferred from source_dir (the payload " +
-              "is often detached from the corpus)")),
-        StructType(Seq(
-          StructField("store", StringType, nullable = false),
-          StructField("matched", LongType, nullable = false),
-          StructField("epoch", StringType, nullable = false),
-          StructField("status", StringType, nullable = false),
-          StructField("table", StringType, nullable = false))),
-        (spark, in) => {
-          (0 to 1).foreach(i => require(!in.isNullAt(i),
-            "arguments source_dir and where are required"))
-          val sigNames = (if (in.isNullAt(2)) Seq.empty
-            else Seq(in.getUTF8String(2).toString)) ++ strArrayArg(in, 10)
-          val annNames = (if (in.isNullAt(3)) Seq.empty
-            else Seq(in.getUTF8String(3).toString)) ++ strArrayArg(in, 11)
-          val dfNames = (if (in.isNullAt(4)) Seq.empty
-            else Seq(in.getUTF8String(4).toString)) ++ strArrayArg(in, 9)
-          val unit = if (in.isNullAt(6)) "term" else in.getUTF8String(6).toString
-          val corpusTable =
-            if (in.isNullAt(7)) None else Some(in.getUTF8String(7).toString)
-          val corpusWhere =
-            if (in.isNullAt(8)) None else Some(in.getUTF8String(8).toString)
-          val corpusArg =
-            if (in.isNullAt(12)) None else Some(in.getUTF8String(12).toString)
-          val listFree = sigNames.isEmpty && annNames.isEmpty &&
-            dfNames.isEmpty && in.isNullAt(5)
-          val (dfStores, sigTables, annTables, missingLegs) =
-            if (!listFree) {
-              require(sigNames.nonEmpty, "at least one of sig_table / " +
-                "sig_tables is required (or pass NO store args for the " +
-                "list-free registry-spanning takedown)")
-              require(annNames.nonEmpty, "at least one of ann_table / " +
-                "ann_tables is required (or pass NO store args for the " +
-                "list-free registry-spanning takedown)")
-              require(in.isNullAt(4) || in.isNullAt(5),
-                "df_table and df_stream_dir are mutually exclusive (a " +
-                  "catalog-managed batch store vs a stream-maintained " +
-                  "store directory); df_tables adds more batch stores " +
-                  "and composes with either")
-              require(dfNames.nonEmpty || !in.isNullAt(5),
-                "at least one df leg is required: df_table, df_tables, " +
-                  "or df_stream_dir (or pass NO store args for the " +
-                  "list-free registry-spanning takedown)")
-              (dfNames.map(n => Left((qualified(n), resolveTable(n))):
-                  Either[(String, String), String]) ++
-                 (if (in.isNullAt(5)) Seq.empty
-                  else Seq(Right(in.getUTF8String(5).toString):
-                    Either[(String, String), String])),
-               sigNames.map(n => (qualified(n), resolveTable(n))),
-               annNames.map(n => (qualified(n), resolveTable(n))),
-               Seq.empty[graft.operators.Takedown.Leg])
-            } else {
-              // LIST-FREE (round 18, VERDICT r17 missing #1): no table
-              // args = span EVERY store the maintainers registered for
-              // this corpus. The registry is the system's memory — a
-              // forgotten ANN index is a registry row, not a silent
-              // re-admission vector. corpus => narrows/overrides the
-              // anchor ('*' spans every registered store); default
-              // anchor is source_dir (the corpus itself in the common
-              // case).
-              val anchor = corpusArg.getOrElse(in.getUTF8String(0).toString)
-              val scope = if (anchor ==
-                graft.operators.DerivedRegistry.AnyCorpus) None
-                else Some(anchor)
-              val entries = graft.operators.DerivedRegistry.list(
-                spark, registryDir, scope)
-              require(entries.nonEmpty,
-                s"list-free takedown: no derived stores are registered " +
-                  s"for corpus '${scope.getOrElse("<any>")}' in this " +
-                  "warehouse's registry — the maintainer CALLs " +
-                  "(update_doc_freqs / update_signatures / " +
-                  "build_ann_index / update_ann_index) self-register on " +
-                  "every run; pass explicit table args for stores " +
-                  "maintained outside this catalog, or corpus => the " +
-                  "directory the stores were built from")
-              // a registered store whose table has since been DROPPED
-              // (or whose stream dir is gone) has nothing to retract —
-              // surface it as a 'missing' receipt row instead of
-              // failing the whole takedown (the ledger record still
-              // refuses any rebuild of it)
-              val resolved: Seq[(graft.operators.DerivedRegistry.Entry,
-                  Option[(String, String)])] = entries.map { e =>
-                if (e.mode == "stream") {
-                  val storage = graft.sources.sstable.Storage.forPath(
-                    e.dir, spark.sessionState.newHadoopConf())
-                  (e, if (storage.exists(e.dir)) Some((e.dir, e.dir))
-                    else None)
-                } else (e,
-                  try Some((qualified(e.table), resolveTable(e.table)))
-                  catch { case _: Exception => None })
-              }
-              val missing = resolved.collect { case (e, None) =>
-                graft.operators.Takedown.Leg(e.kind, 0, "", "missing",
-                  e.table)
-              }
-              def pairs(kind: String) = resolved.collect {
-                case (e, Some(p)) if e.kind == kind && e.mode != "stream" => p
-              }
-              val dfLegs: Seq[Either[(String, String), String]] =
-                resolved.collect {
-                  case (e, Some(p))
-                      if e.kind == graft.operators.DerivedRegistry.DocFreqs =>
-                    if (e.mode == "stream") Right(p._2) else Left(p)
-                }
-              (dfLegs,
-                pairs(graft.operators.DerivedRegistry.Signatures),
-                pairs(graft.operators.DerivedRegistry.AnnVectors),
-                missing)
-            }
-          (graft.operators.Takedown.takedown(spark,
-            dfStores, sigTables, annTables,
-            in.getUTF8String(0).toString, in.getUTF8String(1).toString,
-            unit, corpusTable.map(qualified), corpusWhere,
-            ledgerDir = Some(ledgerDir),
-            ledgerScope = corpusArg) ++ missingLegs)
-            .map(l => row(utf8(l.store), l.matched, utf8(l.epochTag),
-              utf8(l.status), utf8(l.table)))
-        }),
+        req("source_dir", StringType,
+          "directory holding the removed docs' (doc_id, " +
+            "text) rows — corpus or takedown payload"),
+        req("where", StringType,
+          "SQL predicate over doc_id selecting the docs to " +
+            "remove, e.g. 'doc_id % 5 = 2'"),
+        optNull("sig_table", StringType,
+          "catalog-relative signature store name; at least " +
+            "one of sig_table / sig_tables is required — unless NO " +
+            "store args are passed at all (the list-free " +
+            "registry-spanning mode)"),
+        optNull("ann_table", StringType,
+          "catalog-relative ANN index name; at least one " +
+            "of ann_table / ann_tables is required — unless list-free"),
+        optNull("df_table", StringType,
+          "catalog-relative df store name, e.g. 'ns.df' — " +
+            "at most one of df_table / df_stream_dir; at least one " +
+            "df leg overall (df_tables adds more batch stores and " +
+            "composes with either)"),
+        optNull("df_stream_dir", StringType,
+          "a STREAM-maintained df store's directory — the " +
+            "df leg then retracts in the stream's own epoch-tag " +
+            "domain (retract_doc_freqs_stream), so one takedown " +
+            "spans live-stream pipelines too"),
+        opt("unit", "term",
+          "must match the df stores' pinned unit"),
+        optNull("corpus_table", StringType,
+          "OPTIONAL final leg: a catalog-relative corpus " +
+            "table whose matching rows are DELETEd — run LAST (the df " +
+            "legs read the removed docs' text from source_dir, often " +
+            "the corpus itself). Absent = corpora are deleted by " +
+            "their own owners' mechanics"),
+        optNull("corpus_where", StringType,
+          "DELETE predicate in the corpus table's own " +
+            "column terms; defaults to `where` (works when the table " +
+            "exposes doc_id)"),
+        optNull("df_tables", ArrayType(StringType),
+          "MORE batch df stores, e.g. array('ns.df2', " +
+            "'ns.df3') — one leg and one receipt row each"),
+        optNull("sig_tables", ArrayType(StringType),
+          "more signature stores"),
+        optNull("ann_tables", ArrayType(StringType),
+          "more ANN indexes (per modality / embedding " +
+            "version)"),
+        optNull("corpus", StringType,
+          "SCOPE the ledger entries to one corpus's id " +
+            "domain (round 18, for multi-corpus warehouses): " +
+            "maintainers consult with their own ingest corpus, so " +
+            "an UNRELATED corpus sharing id values is not refused, " +
+            "and readmit scoped to it cannot clear this record. " +
+            "Absent (or '*') = warehouse-global entries that refuse " +
+            "the ids under every corpus — the single-corpus default; " +
+            "deliberately NOT inferred from source_dir (the payload " +
+            "is often detached from the corpus)"))(
+        receipt("store" -> StringType, "matched" -> LongType,
+          "epoch" -> StringType, "status" -> StringType,
+          "table" -> StringType)) { (spark, a) =>
+        val (sourceDir, where) = (a.str("source_dir"), a.str("where"))
+        val corpus = a.strOpt("corpus")
+        val legs = storeLegs(spark, a,
+          "for the list-free registry-spanning takedown") {
+          // corpus => narrows/overrides the anchor ('*' spans every
+          // registered store); the default anchor is source_dir (the
+          // corpus itself in the common case)
+          val anchor = corpus.getOrElse(sourceDir)
+          val scope = if (anchor == DerivedRegistry.AnyCorpus) None
+            else Some(anchor)
+          val entries = DerivedRegistry.list(spark, registryDir, scope)
+          require(entries.nonEmpty,
+            s"list-free takedown: no derived stores are registered " +
+              s"for corpus '${scope.getOrElse("<any>")}' in this " +
+              "warehouse's registry — the maintainer CALLs " +
+              "(update_doc_freqs / update_signatures / " +
+              "build_ann_index / update_ann_index) self-register on " +
+              "every run; pass explicit table args for stores " +
+              "maintained outside this catalog, or corpus => the " +
+              "directory the stores were built from")
+          entries
+        }
+        // a registered store that is gone has nothing to retract: a
+        // 'missing' receipt row (its ledger record still refuses any
+        // rebuild of it)
+        (Takedown.takedown(spark,
+          legs.df.map(l => if (l.stream) Right(l.dir) else Left((l.label, l.dir))),
+          pairs(legs.sig.filterNot(_.stream)), pairs(legs.ann.filterNot(_.stream)),
+          sourceDir, where, a.str("unit"), a.strOpt("corpus_table").map(qualified),
+          a.strOpt("corpus_where"), ledgerDir = Some(ledgerDir),
+          ledgerScope = corpus) ++
+          legs.missing.map(e => Takedown.Leg(e.kind, 0, "", "missing", e.table)))
+          .map(l => row(l.store, l.matched, l.epochTag, l.status, l.table))
+      },
 
-      "takedown_status" -> new Proc(
-        "takedown_status",
+      proc("takedown_status",
         "the spanning membership audit for a takedown: for one id " +
           "predicate, report how many LIVE members each audited store " +
           "(df, signatures, ANN, and optionally the corpus table) " +
@@ -1300,127 +1158,62 @@ private[spark] object GraftProcedures {
           "(round 18): with NO store args, audits EVERY store in the " +
           "warehouse's derived-store registry — no list to forget; a " +
           "dropped store reports sample='missing'. Read-only",
-        Array(
-          // the required param leads (Spark's required-before-optional
-          // rule); every call site binds by name
-          p("where", StringType,
-            comment = "the takedown's id predicate, over doc_id"),
-          p("sig_table", StringType, Some("NULL"),
-            comment = "at least one of sig_table / sig_tables is required"),
-          p("ann_table", StringType, Some("NULL"),
-            comment = "at least one of ann_table / ann_tables is required"),
-          p("df_table", StringType, Some("NULL"),
-            comment = "catalog-relative df store — at most one of " +
-              "df_table / df_stream_dir; at least one df leg overall " +
-              "(df_tables adds more)"),
-          p("df_stream_dir", StringType, Some("NULL"),
-            comment = "a STREAM-maintained df store's directory " +
-              "(membership reads are dir-based and identical)"),
-          p("corpus_table", StringType, Some("NULL"),
-            comment = "OPTIONAL extra row: a catalog-relative corpus " +
-              "table audited with corpus_where — mirrors takedown's " +
-              "opt-in corpus leg"),
-          p("corpus_where", StringType, Some("NULL"),
-            comment = "audit predicate in the corpus table's own " +
-              "column terms; defaults to `where`"),
-          p("df_tables", ArrayType(StringType), Some("NULL"),
-            comment = "more batch df stores — one audit row each"),
-          p("sig_tables", ArrayType(StringType), Some("NULL"),
-            comment = "more signature stores"),
-          p("ann_tables", ArrayType(StringType), Some("NULL"),
-            comment = "more ANN indexes")),
-        StructType(Seq(
-          StructField("store", StringType, nullable = false),
-          StructField("members", LongType, nullable = false),
-          StructField("sample", StringType, nullable = false),
-          StructField("table", StringType, nullable = false))),
-        (spark, in) => {
-          require(!in.isNullAt(0), "argument 'where' is required")
-          val sigNames = (if (in.isNullAt(1)) Seq.empty
-            else Seq(in.getUTF8String(1).toString)) ++ strArrayArg(in, 8)
-          val annNames = (if (in.isNullAt(2)) Seq.empty
-            else Seq(in.getUTF8String(2).toString)) ++ strArrayArg(in, 9)
-          val dfNames = (if (in.isNullAt(3)) Seq.empty
-            else Seq(in.getUTF8String(3).toString)) ++ strArrayArg(in, 7)
-          val listFree = sigNames.isEmpty && annNames.isEmpty &&
-            dfNames.isEmpty && in.isNullAt(4)
-          val (dfDirs, sigDirs, annDirs, missingRows) =
-            if (!listFree) {
-              require(sigNames.nonEmpty,
-                "at least one of sig_table / sig_tables is required " +
-                  "(or pass NO store args to audit every registered " +
-                  "store — the list-free mode)")
-              require(annNames.nonEmpty,
-                "at least one of ann_table / ann_tables is required " +
-                  "(or pass NO store args for the list-free mode)")
-              require(in.isNullAt(3) || in.isNullAt(4),
-                "df_table and df_stream_dir are mutually exclusive; " +
-                  "df_tables composes with either")
-              require(dfNames.nonEmpty || !in.isNullAt(4),
-                "at least one df leg is required: df_table, df_tables, " +
-                  "or df_stream_dir (or pass NO store args for the " +
-                  "list-free mode)")
-              (dfNames.map(n => (qualified(n), resolveTable(n))) ++
-                 (if (in.isNullAt(4)) Seq.empty
-                  else { val d = in.getUTF8String(4).toString; Seq((d, d)) }),
-               sigNames.map(n => (qualified(n), resolveTable(n))),
-               annNames.map(n => (qualified(n), resolveTable(n))),
-               Seq.empty[InternalRow])
-            } else {
-              // LIST-FREE (round 18): audit every registered store —
-              // the spanning audit with no list to forget. A dropped
-              // store reports sample='missing' (nothing to count; its
-              // ledger record still guards any rebuild).
-              val entries = graft.operators.DerivedRegistry.list(
-                spark, registryDir, None)
-              require(entries.nonEmpty,
-                "list-free takedown_status: no derived stores are " +
-                  s"registered in this warehouse's registry — the " +
-                  "maintainer CALLs self-register on every run; pass " +
-                  "explicit table args for stores maintained outside " +
-                  "this catalog")
-              val resolved = entries.map { e =>
-                if (e.mode == "stream") {
-                  val storage = graft.sources.sstable.Storage.forPath(
-                    e.dir, spark.sessionState.newHadoopConf())
-                  (e, if (storage.exists(e.dir)) Some((e.dir, e.dir))
-                    else None)
-                } else (e,
-                  try Some((qualified(e.table), resolveTable(e.table)))
-                  catch { case _: Exception => None })
-              }
-              def pairs(kind: String) = resolved.collect {
-                case (e, Some(p)) if e.kind == kind => p
-              }
-              (pairs(graft.operators.DerivedRegistry.DocFreqs),
-                pairs(graft.operators.DerivedRegistry.Signatures),
-                pairs(graft.operators.DerivedRegistry.AnnVectors),
-                resolved.collect { case (e, None) =>
-                  row(utf8(e.kind), 0L, utf8("missing"), utf8(e.table))
-                })
-            }
-          val stores = graft.operators.Takedown.status(spark,
-            dfDirs, sigDirs, annDirs,
-            in.getUTF8String(0).toString)
-            .map { case (store, label, n, sample) =>
-              row(utf8(store), n, utf8(sample.mkString(",")), utf8(label))
-            } ++ missingRows
-          // the corpus row (round 16, mirroring takedown's opt-in leg):
-          // a crash BEFORE the corpus DELETE leaves rows the audit must
-          // surface; no generic id column exists, so the sample is empty
-          val corpus = if (in.isNullAt(5)) Seq.empty else {
-            val t = qualified(in.getUTF8String(5).toString)
-            val pred = if (in.isNullAt(6)) in.getUTF8String(0).toString
-              else in.getUTF8String(6).toString
-            Seq(row(utf8("corpus"), spark.table(t)
-              .filter(org.apache.spark.sql.functions.expr(pred)).count(),
-              utf8(""), utf8(t)))
+        req("where", StringType,
+          "the takedown's id predicate, over doc_id"),
+        optNull("sig_table", StringType,
+          "at least one of sig_table / sig_tables is required"),
+        optNull("ann_table", StringType,
+          "at least one of ann_table / ann_tables is required"),
+        optNull("df_table", StringType,
+          "catalog-relative df store — at most one of " +
+            "df_table / df_stream_dir; at least one df leg overall " +
+            "(df_tables adds more)"),
+        optNull("df_stream_dir", StringType,
+          "a STREAM-maintained df store's directory " +
+            "(membership reads are dir-based and identical)"),
+        optNull("corpus_table", StringType,
+          "OPTIONAL extra row: a catalog-relative corpus " +
+            "table audited with corpus_where — mirrors takedown's " +
+            "opt-in corpus leg"),
+        optNull("corpus_where", StringType,
+          "audit predicate in the corpus table's own " +
+            "column terms; defaults to `where`"),
+        optNull("df_tables", ArrayType(StringType),
+          "more batch df stores — one audit row each"),
+        optNull("sig_tables", ArrayType(StringType),
+          "more signature stores"),
+        optNull("ann_tables", ArrayType(StringType),
+          "more ANN indexes"))(
+        receipt("store" -> StringType, "members" -> LongType,
+          "sample" -> StringType, "table" -> StringType)) { (spark, a) =>
+        val where = a.str("where")
+        val legs = storeLegs(spark, a, "for the list-free mode") {
+          val entries = DerivedRegistry.list(spark, registryDir, None)
+          require(entries.nonEmpty,
+            "list-free takedown_status: no derived stores are " +
+              s"registered in this warehouse's registry — the " +
+              "maintainer CALLs self-register on every run; pass " +
+              "explicit table args for stores maintained outside " +
+              "this catalog")
+          entries
+        }
+        val stores = Takedown.status(spark, pairs(legs.df), pairs(legs.sig),
+          pairs(legs.ann), where).map { case (store, label, n, sample) =>
+            row(store, n, sample.mkString(","), label)
           }
-          stores ++ corpus
-        }),
+        // a dropped store reports sample='missing' (nothing to count)
+        val missing = legs.missing.map(e => row(e.kind, 0L, "missing", e.table))
+        // the corpus row (mirroring takedown's opt-in leg): a crash
+        // BEFORE the corpus DELETE leaves rows the audit must surface;
+        // no generic id column exists, so the sample is empty
+        val corpus = a.strOpt("corpus_table").map(qualified).map { t =>
+          row("corpus", spark.table(t).filter(org.apache.spark.sql.functions
+            .expr(a.strOpt("corpus_where").getOrElse(where))).count(), "", t)
+        }
+        stores ++ missing ++ corpus
+      },
 
-      "readmit" -> new Proc(
-        "readmit",
+      proc("readmit",
         "the explicit takedown override (round 17): row-tombstone the " +
           "takedown-ledger entries matching the id predicate, re-opening " +
           "those ids to the ingest maintainers (update_doc_freqs / " +
@@ -1430,70 +1223,51 @@ private[spark] object GraftProcedures {
           "Idempotent — already-readmitted ids match nothing. This " +
           "clears only the LEDGER (the refusal); it does not re-ingest " +
           "anything — run the maintainers to actually re-admit",
-        Array(
-          p("where", StringType,
-            comment = "SQL predicate over doc_id selecting ledger " +
-              "entries to clear, e.g. 'doc_id % 5 = 2'"),
-          p("source_dir", StringType, Some("NULL"),
-            comment = "SCOPE the readmission to one corpus's entries " +
-              "(round 18): only entries recorded under this corpus " +
-              "are cleared — another corpus's record of the same ids, " +
-              "and global entries, stay live. Absent = the global " +
-              "mode: clear every scope's matching entries")),
-        StructType(Seq(
-          StructField("readmitted", LongType, nullable = false),
-          StructField("epoch", IntegerType, nullable = false))),
-        (spark, in) => {
-          require(!in.isNullAt(0), "argument 'where' is required")
-          val (n, epoch) = graft.operators.TakedownLedger.readmit(
-            spark, ledgerDir, in.getUTF8String(0).toString,
-            corpus = if (in.isNullAt(1)) None
-              else Some(in.getUTF8String(1).toString))
-          Seq(row(n, epoch))
-        }),
+        req("where", StringType,
+          "SQL predicate over doc_id selecting ledger " +
+            "entries to clear, e.g. 'doc_id % 5 = 2'"),
+        optNull("source_dir", StringType,
+          "SCOPE the readmission to one corpus's entries " +
+            "(round 18): only entries recorded under this corpus " +
+            "are cleared — another corpus's record of the same ids, " +
+            "and global entries, stay live. Absent = the global " +
+            "mode: clear every scope's matching entries"))(
+        receipt("readmitted" -> LongType, "epoch" -> IntegerType)) { (spark, a) =>
+        val (n, epoch) = TakedownLedger.readmit(spark, ledgerDir, a.str("where"),
+          corpus = a.strOpt("source_dir"))
+        Seq(row(n, epoch))
+      },
 
-      "takedown_ledger" -> new Proc(
-        "takedown_ledger",
+      proc("takedown_ledger",
         "audit the persistent takedown ledger: the live (not-readmitted) " +
           "taken-down ids with the predicate, epoch, and corpus scope " +
           "each was recorded under ('*' = a global entry). Read-only; " +
           "an absent ledger returns no rows. The result is collected to " +
           "the driver (bounded by O(taken-down ids) by design) — " +
           "max_rows caps it for audits of very large ledgers",
-        Array(
-          p("where", StringType, Some("'true'"),
-            comment = "SQL predicate over doc_id filtering the entries"),
-          p("max_rows", IntegerType, Some("0"),
-            comment = "cap the returned (id-ordered) rows; 0 = all")),
-        StructType(Seq(
-          StructField("doc_id", LongType, nullable = false),
-          StructField("predicate", StringType, nullable = false),
-          StructField("epoch", IntegerType, nullable = false),
-          StructField("src", StringType, nullable = false))),
-        (spark, in) => {
-          val pred = if (in.isNullAt(0)) "true"
-            else in.getUTF8String(0).toString
-          val dir = ledgerDir
-          val storage = graft.sources.sstable.Storage.forPath(dir,
-            spark.sessionState.newHadoopConf())
-          if (!storage.exists(dir) || storage.listDataFiles(dir).isEmpty)
-            Seq.empty
-          else {
-            val filtered = graft.operators.TakedownLedger.entries(spark, dir)
-              .filter(org.apache.spark.sql.functions.expr(pred))
-              .orderBy("doc_id", "src")
-            val capped = intArg(in, 1, 0)
-            (if (capped > 0) filtered.limit(capped) else filtered)
-              .collect().toSeq
-          }
-            .map(r => row(r.getLong(0), utf8(r.getString(1)), r.getInt(2),
-              utf8(if (r.isNullAt(3))
-                graft.operators.TakedownLedger.GlobalScope
-              else r.getString(3))))
-        }),
+        opt("where", "true",
+          "SQL predicate over doc_id filtering the entries"),
+        opt("max_rows", 0,
+          "cap the returned (id-ordered) rows; 0 = all"))(
+        receipt("doc_id" -> LongType, "predicate" -> StringType,
+          "epoch" -> IntegerType, "src" -> StringType)) { (spark, a) =>
+        val pred = a.str("where")
+        val dir = ledgerDir
+        val storage = DerivedStore.storageOf(spark, dir)
+        if (!storage.exists(dir) || storage.listDataFiles(dir).isEmpty) Seq.empty
+        else {
+          val filtered = TakedownLedger.entries(spark, dir)
+            .filter(org.apache.spark.sql.functions.expr(pred))
+            .orderBy("doc_id", "src")
+          val capped = a.int("max_rows")
+          (if (capped > 0) filtered.limit(capped) else filtered)
+            .collect().toSeq
+            .map(r => row(r.getLong(0), r.getString(1), r.getInt(2),
+              Option(r.getString(3)).getOrElse(TakedownLedger.GlobalScope)))
+        }
+      },
 
-      "derived_stores" -> new Proc(
-        "derived_stores",
+      proc("derived_stores",
         "audit the warehouse's derived-store registry (round 18): every " +
           "(kind, table, dir, corpus, mode) the maintainer CALLs " +
           "self-registered — the set a list-free CALL takedown / " +
@@ -1502,24 +1276,16 @@ private[spark] object GraftProcedures {
           "store, which matches every corpus); a store REBUILT over a " +
           "different corpus re-registers (LWW). Read-only; an absent " +
           "registry returns no rows",
-        Array(
-          p("corpus", StringType, Some("NULL"),
-            comment = "restrict to stores derived from this corpus " +
-              "directory (stream stores always match); absent = all")),
-        StructType(Seq(
-          StructField("kind", StringType, nullable = false),
-          StructField("table", StringType, nullable = false),
-          StructField("dir", StringType, nullable = false),
-          StructField("corpus", StringType, nullable = false),
-          StructField("mode", StringType, nullable = false))),
-        (spark, in) => graft.operators.DerivedRegistry.list(
-            spark, registryDir,
-            if (in.isNullAt(0)) None else Some(in.getUTF8String(0).toString))
-          .map(e => row(utf8(e.kind), utf8(e.table), utf8(e.dir),
-            utf8(e.corpus), utf8(e.mode)))),
+        optNull("corpus", StringType,
+          "restrict to stores derived from this corpus " +
+            "directory (stream stores always match); absent = all"))(
+        receipt("kind" -> StringType, "table" -> StringType, "dir" -> StringType,
+          "corpus" -> StringType, "mode" -> StringType)) { (spark, a) =>
+        DerivedRegistry.list(spark, registryDir, a.strOpt("corpus"))
+          .map(e => row(e.kind, e.table, e.dir, e.corpus, e.mode))
+      },
 
-      "health" -> new Proc(
-        "health",
+      proc("health",
         "the SPANNING operational-health surface (round 18): one row " +
           "per (registered store, check), spanning the same registry a " +
           "list-free takedown does — generations vs the autocompact " +
@@ -1532,32 +1298,23 @@ private[spark] object GraftProcedures {
           "registered store reports one not-ok 'present' row. All " +
           "checks are driver-side point reads (zero Spark jobs) — " +
           "poll it from the fleet dashboard. Read-only",
-        Array(
-          p("max_generations", IntegerType, Some("0"),
-            comment = "operator-policy override for the generations " +
-              "bound (0 = use 2x each store's pinned autocompact)"),
-          p("max_unfolded", IntegerType, Some("0"),
-            comment = "override for the df unfolded-partials bound " +
-              "(0 = use 2x each store's pinned autoconsolidate)")),
-        StructType(Seq(
-          StructField("kind", StringType, nullable = false),
-          StructField("table", StringType, nullable = false),
-          StructField("check", StringType, nullable = false),
-          StructField("value", LongType, nullable = false),
-          StructField("bound", LongType, nullable = false),
-          StructField("ok", BooleanType, nullable = false),
-          StructField("detail", StringType, nullable = false))),
-        (spark, in) => graft.operators.Health.report(spark, registryDir,
-            e => if (e.mode == "stream") Some(e.dir)
-              else try Some(resolveTable(e.table))
-                catch { case _: Exception => None },
-            maxGenerations = intArg(in, 0, 0),
-            maxUnfolded = intArg(in, 1, 0))
-          .map(c => row(utf8(c.kind), utf8(c.table), utf8(c.check),
-            c.value, c.bound, c.ok, utf8(c.detail)))),
+        opt("max_generations", 0,
+          "operator-policy override for the generations " +
+            "bound (0 = use 2x each store's pinned autocompact)"),
+        opt("max_unfolded", 0,
+          "override for the df unfolded-partials bound " +
+            "(0 = use 2x each store's pinned autoconsolidate)"))(
+        receipt("kind" -> StringType, "table" -> StringType,
+          "check" -> StringType, "value" -> LongType, "bound" -> LongType,
+          "ok" -> BooleanType, "detail" -> StringType)) { (spark, a) =>
+        graft.operators.Health.report(spark, registryDir,
+          e => locate(spark, e).map(_._2),
+          maxGenerations = a.int("max_generations"),
+          maxUnfolded = a.int("max_unfolded"))
+          .map(c => row(c.kind, c.table, c.check, c.value, c.bound, c.ok, c.detail))
+      },
 
-      "lookup" -> new Proc(
-        "lookup",
+      proc("lookup",
         "point reads in pure SQL: probe each key via bloom filter -> " +
           "Summary search -> one bounded Index.db window -> one Data.db " +
           "seek per candidate generation (IO proportional to keys x " +
@@ -1572,88 +1329,61 @@ private[spark] object GraftProcedures {
           "nothing. The probe set is CALL-literal-sized, so probes run " +
           "on the driver against the (cached) 4-file metadata — no scan, " +
           "no job",
-        Array(tableParam,
-          p("keys", ArrayType(BinaryType),
-            comment = "probe keys, e.g. array(CAST('k1' AS BINARY), ...)"),
-          p("gc_tombstones", BooleanType, Some("true"))),
-        SSTableSchema.schema,
-        (spark, in) => {
-          require(!in.isNullAt(1), "argument 'keys' is required")
-          val d = dirOf(in)
-          val storage = graft.sources.sstable.Storage.forPath(
-            d, spark.sessionState.newHadoopConf())
-          val arr = in.getArray(1)
-          // explicit NULL = the default (live view), not a silent false
-          val gc = if (in.isNullAt(2)) true else in.getBoolean(2)
-          val prober = new graft.sources.sstable.SSTableReader
-            .DirectoryProber(d, storage)
-          (0 until arr.numElements()).flatMap { i =>
-            if (arr.isNullAt(i)) None
-            else prober.get(arr.getBinary(i), gcTombstones = gc)
-              .map(r => SSTableSchema.rowToInternal(r, SSTableSchema.schema))
-          }
-        }),
+        table,
+        req("keys", ArrayType(BinaryType),
+          "probe keys, e.g. array(CAST('k1' AS BINARY), ...)"),
+        opt("gc_tombstones", true))(SSTableSchema.schema) { (spark, a) =>
+        val keys = a.binaries("keys")
+        val d = a.dir
+        val prober = new graft.sources.sstable.SSTableReader
+          .DirectoryProber(d, DerivedStore.storageOf(spark, d))
+        keys.flatMap(k => prober.get(k, gcTombstones = a.bool("gc_tombstones"))
+          .map(r => SSTableSchema.rowToInternal(r, SSTableSchema.schema)))
+      },
 
-      "undrop_table" -> new Proc(
-        "undrop_table",
+      proc("undrop_table",
         "restore the most recently dropped table of this name from the " +
           "namespace's _dropped- trash (DROP TABLE renames, never deletes; " +
           "the trash survives until the staged-DDL sweep horizon, ~24h); " +
           "refuses when the live name exists",
-        Array(tableParam),
-        StructType(Seq(
-          StructField("restoredFrom", StringType, nullable = false),
-          StructField("droppedAgoMs", LongType, nullable = false))),
-        (spark, in) => {
-          require(!in.isNullAt(0), "argument 'table' is required")
-          val tableName = in.getUTF8String(0).toString
-          val (nsD, name) = resolveParent(tableName)
-          val storage = graft.sources.sstable.Storage.forPath(
-            nsD, spark.sessionState.newHadoopConf())
-          val live = s"$nsD/$name"
-          // a lease HUSK at the live name (only `_lease*` litter — the
-          // shape a contender's acquire leaves when it raced the DROP's
-          // removal) is not a table: clear it rather than refusing the
-          // restore over a ghost. Same for a crashed swap's residue
-          // (Dropped tombstone / stale Restoring pointer) — the trash
-          // holds the authority it points at.
-          if (graft.sources.sstable.MaintenanceLease.isLeaseHusk(
-              live, storage))
-            storage.deleteRecursive(live)
-          if (storage.exists(live) &&
-              TableState.isResidue(PointerCommit.stateOf(storage, live)) &&
-              PointerCommit.residueClearable(storage, live))
-            PointerCommit.clearResidue(storage, live)
-          require(!storage.exists(live),
-            s"table '$tableName' exists — nothing to restore over it " +
-              "(DROP or RENAME the live table first; a fresh mid-restore " +
-              "pointer means another undrop is running)")
-          // exact-shape match `_dropped-<name>-<8 hex>`: a prefix-only
-          // filter would let table 'foo' claim 'foo-bar's trash. A
-          // NAMESPACE's trash (same parent space, `_namespace` marker
-          // inside) is never a table-restore candidate — that is
-          // undrop_namespace's job.
-          val prefix = s"_dropped-$name-"
-          val candidates = storage.listSubdirs(nsD, prefix).filter { p =>
-            val rest = p.substring(p.lastIndexOf('/') + 1).drop(prefix.length)
-            rest.length == 8 && rest.forall(c =>
-              c.isDigit || (c >= 'a' && c <= 'f')) &&
-              !storage.exists(s"$p/${GraftCatalog.NamespaceMarker}") &&
-              // only COMPLETE copies restore: an entry without the
-              // completeness marker is a crashed half-copy whose source
-              // table never left the catalog (see list_trash's column)
-              storage.exists(s"$p/${PointerCommit.TrashOkFile}")
-          }
-          val (restoredFrom, at) = restoreTableFromTrash(storage, live,
-            candidates, name = tableName)
-          graft.sources.sstable.History.record(storage, live, "undrop_table",
-            detail = s"from=$restoredFrom")
-          Seq(row(utf8(restoredFrom),
-            (System.currentTimeMillis() - at): java.lang.Long))
-        }),
+        table)(
+        receipt("restoredFrom" -> StringType, "droppedAgoMs" -> LongType)) { (spark, a) =>
+        val tableName = a.str("table")
+        val (nsD, name) = resolveParent(tableName)
+        val storage = DerivedStore.storageOf(spark, nsD)
+        val live = s"$nsD/$name"
+        // a lease HUSK at the live name (only `_lease*` litter — the
+        // shape a contender's acquire leaves when it raced the DROP's
+        // removal) is not a table: clear it rather than refusing the
+        // restore over a ghost. Same for a crashed swap's residue
+        // (Dropped tombstone / stale Restoring pointer) — the trash
+        // holds the authority it points at.
+        if (MaintenanceLease.isLeaseHusk(live, storage))
+          storage.deleteRecursive(live)
+        if (storage.exists(live) &&
+            TableState.isResidue(PointerCommit.stateOf(storage, live)) &&
+            PointerCommit.residueClearable(storage, live))
+          PointerCommit.clearResidue(storage, live)
+        require(!storage.exists(live),
+          s"table '$tableName' exists — nothing to restore over it " +
+            "(DROP or RENAME the live table first; a fresh mid-restore " +
+            "pointer means another undrop is running)")
+        // exact-shape match: a NAMESPACE's trash (same parent space,
+        // `_namespace` marker inside) is never a table-restore candidate
+        // — that is undrop_namespace's job — and only COMPLETE copies
+        // restore: an entry without the completeness marker is a crashed
+        // half-copy whose source table never left the catalog (see
+        // list_trash's column)
+        val candidates = trashOf(storage, nsD, name).filter(p =>
+          !storage.exists(s"$p/${GraftCatalog.NamespaceMarker}") &&
+            storage.exists(s"$p/${PointerCommit.TrashOkFile}"))
+        val (restoredFrom, at) = restoreTableFromTrash(storage, live,
+          candidates, name = tableName)
+        History.record(storage, live, "undrop_table", detail = s"from=$restoredFrom")
+        Seq(row(restoredFrom, System.currentTimeMillis() - at))
+      },
 
-      "maintenance_status" -> new Proc(
-        "maintenance_status",
+      proc("maintenance_status",
         "who holds the table's maintenance lease right now, if anyone: " +
           "one row (holder, age, fresh) when a lease file exists, none " +
           "when the table is unheld. 'fresh' applies horizon_ms " +
@@ -1662,107 +1392,81 @@ private[spark] object GraftProcedures {
           "means the holder is presumed dead and the next maintainer " +
           "will steal. Read-only: never acquires, never renews, never " +
           "touches the file",
-        Array(tableParam,
-          p("horizon_ms", LongType,
-            Some(graft.sources.sstable.MaintenanceLease
-              .DefaultHorizonMs.toString),
-            comment = "steal horizon 'fresh' is judged against")),
-        StructType(Seq(
-          StructField("holder", StringType, nullable = false),
-          StructField("ageMs", LongType, nullable = false),
-          StructField("fresh", BooleanType, nullable = false))),
-        (spark, in) => {
-          val d = dirOf(in)
-          val storage = graft.sources.sstable.Storage.forPath(
-            d, spark.sessionState.newHadoopConf())
-          val leasePath =
-            s"$d/${graft.sources.sstable.MaintenanceLease.LeaseFile}"
-          if (!storage.exists(leasePath)) Nil
-          else try {
-            val holder = storage.readString(leasePath)
-            val age = System.currentTimeMillis() - storage.mtime(leasePath)
-            Seq(row(utf8(holder), age: java.lang.Long,
-              Boolean.box(age <= longArg(in, 1,
-                graft.sources.sstable.MaintenanceLease.DefaultHorizonMs))))
-          } catch {
-            // released between the exists and the reads: unheld now.
-            // ONLY the vanished-path pair — a transient IO failure
-            // (network, permissions) on a HELD lease must propagate, not
-            // report "unheld" and invite a second maintainer (ADVICE r10)
-            case _: java.io.FileNotFoundException |
-                 _: java.nio.file.NoSuchFileException => Nil
-          }
-        }),
+        table,
+        opt("horizon_ms", MaintenanceLease.DefaultHorizonMs,
+          "steal horizon 'fresh' is judged against"))(
+        receipt("holder" -> StringType, "ageMs" -> LongType,
+          "fresh" -> BooleanType)) { (spark, a) =>
+        val d = a.dir
+        val storage = DerivedStore.storageOf(spark, d)
+        val leasePath = s"$d/${MaintenanceLease.LeaseFile}"
+        if (!storage.exists(leasePath)) Nil
+        else try {
+          val holder = storage.readString(leasePath)
+          val age = System.currentTimeMillis() - storage.mtime(leasePath)
+          Seq(row(holder, age, age <= a.long("horizon_ms")))
+        } catch {
+          // released between the exists and the reads: unheld now.
+          // ONLY the vanished-path pair — a transient IO failure
+          // (network, permissions) on a HELD lease must propagate, not
+          // report "unheld" and invite a second maintainer
+          case _: java.io.FileNotFoundException |
+               _: java.nio.file.NoSuchFileException => Nil
+        }
+      },
 
-      "list_trash" -> new Proc(
-        "list_trash",
+      proc("list_trash",
         "what undrop can restore: the namespace's _dropped- trash " +
           "entries (recoverable DROPs awaiting the sweep horizon), one " +
           "row each with the original name, its kind (table/namespace) " +
           "and how long ago it was dropped. Empty namespace = the " +
           "warehouse root",
-        Array(p("namespace", StringType, Some("''"),
-          comment = "catalog-relative namespace to inspect; '' = root")),
-        StructType(Seq(
-          StructField("name", StringType, nullable = false),
-          StructField("kind", StringType, nullable = false),
-          StructField("droppedAgoMs", LongType, nullable = false),
-          StructField("sweepableInMs", LongType, nullable = false),
-          StructField("trashEntry", StringType, nullable = false),
+        opt("namespace", "",
+          "catalog-relative namespace to inspect; '' = root"))(
+        receipt("name" -> StringType, "kind" -> StringType,
+          "droppedAgoMs" -> LongType, "sweepableInMs" -> LongType,
+          "trashEntry" -> StringType,
           // false = a crashed swap's half-copy: not restorable (its
           // source table never left the catalog), ages out normally.
           // Namespace entries predate the marker design and are whole
           // by construction (one rename): reported true.
-          StructField("complete", BooleanType, nullable = false))),
-        (spark, in) => {
-          val ns = if (in.isNullAt(0)) "" else in.getUTF8String(0).toString
-          // resolveParent validates segments and namespace existence; the
-          // synthetic leaf makes it resolve the namespace ITSELF
-          val (nsD, _) = resolveParent(if (ns.isEmpty) "x" else s"$ns.x")
-          val storage = graft.sources.sstable.Storage.forPath(
-            nsD, spark.sessionState.newHadoopConf())
-          val now = System.currentTimeMillis()
-          storage.listSubdirs(nsD, "_dropped-").flatMap { p =>
-            val entry = p.substring(p.lastIndexOf('/') + 1)
-            val body = entry.drop("_dropped-".length)
-            // entries are `_dropped-<name>-<8 hex>`; anything else is
-            // foreign litter — skip. A REPLACE swap's trash uses this
-            // SAME shape and is deliberately listed (and undrop-able):
-            // mid-REPLACE it shadows no live undrop target only because
-            // undrop refuses while the live name exists, and after a
-            // CRASHED replace it is exactly the restorable prior state
-            // the trash design exists for (ADVICE r10: comment used to
-            // claim the shape filter excluded it — it never did, by
-            // design)
-            val suffix = body.takeRight(9)
-            if (body.length > 9 && suffix.head == '-' && suffix.tail.forall(c =>
-                c.isDigit || (c >= 'a' && c <= 'f'))) {
-              val kind =
-                if (storage.exists(s"$p/${GraftCatalog.NamespaceMarker}"))
-                  "namespace" else "table"
-              try {
-                val ago = now - GraftCatalog.lastAliveMs(storage, p)
-                val complete = kind == "namespace" ||
-                  storage.exists(s"$p/${PointerCommit.TrashOkFile}")
-                // when the DEFAULT-horizon sweeps (staged DDL, default
-                // vacuum_trash) would reclaim this — the undrop window
-                // remaining; <= 0 means sweepable now
-                Some((body.dropRight(9), kind, ago,
-                  GraftCatalog.StageVacuumHorizonMs - ago, entry, complete))
-              } catch {
-                case _: java.io.FileNotFoundException |
-                     _: java.nio.file.NoSuchFileException => None // swept mid-list
-              }
-            } else None
+          "complete" -> BooleanType)) { (spark, a) =>
+        val nsD = nsDirOf(a.str("namespace"))
+        val storage = DerivedStore.storageOf(spark, nsD)
+        val now = System.currentTimeMillis()
+        // anything not of the trash-entry shape is foreign litter —
+        // skip. A REPLACE swap's trash uses this SAME shape and is
+        // deliberately listed (and undrop-able): mid-REPLACE it shadows
+        // no live undrop target only because undrop refuses while the
+        // live name exists, and after a CRASHED replace it is exactly
+        // the restorable prior state the trash design exists for
+        storage.listSubdirs(nsD, PointerCommit.TrashPrefix).flatMap { p =>
+          val entry = p.substring(p.lastIndexOf('/') + 1)
+          PointerCommit.trashedName(entry).flatMap { name =>
+            val kind =
+              if (storage.exists(s"$p/${GraftCatalog.NamespaceMarker}"))
+                "namespace" else "table"
+            try {
+              val ago = now - GraftCatalog.lastAliveMs(storage, p)
+              val complete = kind == "namespace" ||
+                storage.exists(s"$p/${PointerCommit.TrashOkFile}")
+              // when the DEFAULT-horizon sweeps (staged DDL, default
+              // vacuum_trash) would reclaim this — the undrop window
+              // remaining; <= 0 means sweepable now
+              Some((name, kind, ago,
+                GraftCatalog.StageVacuumHorizonMs - ago, entry, complete))
+            } catch {
+              case _: java.io.FileNotFoundException |
+                   _: java.nio.file.NoSuchFileException => None // swept mid-list
+            }
           }
-          .sortBy(_._3)
-          .map { case (name, kind, ago, inMs, entry, complete) =>
-            row(utf8(name), utf8(kind), ago: java.lang.Long,
-              inMs: java.lang.Long, utf8(entry), Boolean.box(complete)) }
-        }),
+        }
+        .sortBy(_._3)
+        .map { case (name, kind, ago, inMs, entry, complete) =>
+          row(name, kind, ago, inMs, entry, complete) }
+      },
 
-      "vacuum_trash" -> new Proc(
-        "vacuum_trash",
+      proc("vacuum_trash",
         "reclaim the namespace's _dropped- trash older than the horizon " +
           "(default: the same 24h window staged DDL sweeps on) - the " +
           "explicit route for namespaces that never run another CTAS / " +
@@ -1773,28 +1477,21 @@ private[spark] object GraftProcedures {
           "names (DROP tombstones; undrop/publish pointers whose " +
           "restorer is dead past the 24h liveness floor). One row per " +
           "removed entry; sweeping an entry forfeits its undrop",
-        Array(p("namespace", StringType, Some("''"),
-          comment = "catalog-relative namespace to sweep; '' = root"),
-          p("older_than_ms", LongType,
-            Some(GraftCatalog.StageVacuumHorizonMs.toString))),
-        StructType(Seq(
-          StructField("removed", StringType, nullable = false))),
-        (spark, in) => {
-          val ns = if (in.isNullAt(0)) "" else in.getUTF8String(0).toString
-          val (nsD, _) = resolveParent(if (ns.isEmpty) "x" else s"$ns.x")
-          val storage = graft.sources.sstable.Storage.forPath(
-            nsD, spark.sessionState.newHadoopConf())
-          (GraftCatalog.sweepNamespace(storage, nsD,
-            longArg(in, 1, GraftCatalog.StageVacuumHorizonMs)) ++
-            // the explicit route also clears crashed-swap residue at
-            // plain names (Dropped tombstones; dead Restoring pointers)
-            GraftCatalog.sweepResidue(storage, nsD))
-            .map(e => e.substring(e.lastIndexOf('/') + 1)).sorted
-            .map(e => row(utf8(e)))
-        }),
+        opt("namespace", "",
+          "catalog-relative namespace to sweep; '' = root"),
+        opt("older_than_ms", GraftCatalog.StageVacuumHorizonMs))(
+        receipt("removed" -> StringType)) { (spark, a) =>
+        val nsD = nsDirOf(a.str("namespace"))
+        val storage = DerivedStore.storageOf(spark, nsD)
+        (GraftCatalog.sweepNamespace(storage, nsD, a.long("older_than_ms")) ++
+          // the explicit route also clears crashed-swap residue at
+          // plain names (Dropped tombstones; dead Restoring pointers)
+          GraftCatalog.sweepResidue(storage, nsD))
+          .map(e => e.substring(e.lastIndexOf('/') + 1)).sorted
+          .map(row(_))
+      },
 
-      "undrop_namespace" -> new Proc(
-        "undrop_namespace",
+      proc("undrop_namespace",
         "restore the most recently dropped NAMESPACE of this name from " +
           "its parent's _dropped- trash (DROP NAMESPACE tombstones each " +
           "table pointer-committed, then renames the shell - CASCADE " +
@@ -1803,89 +1500,63 @@ private[spark] object GraftProcedures {
           "appears whole or not at all). Refuses when the live name " +
           "exists - unless it holds unfinished restore work from a " +
           "crashed undrop_namespace, which is resumed",
-        Array(p("namespace", StringType,
-          comment = "catalog-relative namespace, e.g. 'ns' or 'a.b'")),
-        StructType(Seq(
-          StructField("restoredFrom", StringType, nullable = false),
-          StructField("droppedAgoMs", LongType, nullable = false),
-          StructField("tablesRestored", IntegerType, nullable = false))),
-        (spark, in) => {
-          require(!in.isNullAt(0), "argument 'namespace' is required")
-          val nsName = in.getUTF8String(0).toString
-          // resolveParent validates segments and the PARENT's existence —
-          // exactly what a namespace restore needs too
-          val (parentD, name) = resolveParent(nsName)
-          val storage = graft.sources.sstable.Storage.forPath(
-            parentD, spark.sessionState.newHadoopConf())
-          val live = s"$parentD/$name"
-          // resume: a prior undrop crashed between the shell rename and
-          // the per-table restores — the live shell still holds marked
-          // trash entries; finish them instead of refusing over our own
-          // half-done work
-          if (storage.exists(live) &&
-              storage.exists(s"$live/${GraftCatalog.NamespaceMarker}") &&
-              hasNsDropEntries(storage, live)) {
-            val restored = restoreNsDropTables(storage, live)
-            graft.sources.sstable.History.record(storage, parentD,
-              "undrop_namespace", detail = s"$nsName resumed tables=$restored")
-            Seq(row(utf8("(resumed in place)"), 0L: java.lang.Long,
-              restored: Integer))
-          } else {
-            require(!storage.exists(live),
-              s"namespace '$nsName' exists — nothing to restore over it")
-            val prefix = s"_dropped-$name-"
-            val candidates = storage.listSubdirs(parentD, prefix).filter { p =>
-              val rest = p.substring(p.lastIndexOf('/') + 1).drop(prefix.length)
-              rest.length == 8 && rest.forall(c =>
-                c.isDigit || (c >= 'a' && c <= 'f')) &&
-                storage.exists(s"$p/${GraftCatalog.NamespaceMarker}")
-            }
-            val (restoredFrom, at) = restoreFromTrash(storage, live, candidates,
-              what = "namespace", name = nsName)
-            val restored = restoreNsDropTables(storage, live)
-            // parent-level audit: the round-trip reads back as
-            // drop_namespace → undrop_namespace in `graft.<parent>.history`
-            graft.sources.sstable.History.record(storage, parentD,
-              "undrop_namespace", detail = s"$nsName from=$restoredFrom " +
-                s"tables=$restored")
-            Seq(row(utf8(restoredFrom),
-              (System.currentTimeMillis() - at): java.lang.Long,
-              restored: Integer))
-          }
-        }),
+        req("namespace", StringType,
+          "catalog-relative namespace, e.g. 'ns' or 'a.b'"))(
+        receipt("restoredFrom" -> StringType, "droppedAgoMs" -> LongType,
+          "tablesRestored" -> IntegerType)) { (spark, a) =>
+        val nsName = a.str("namespace")
+        // resolveParent validates segments and the PARENT's existence —
+        // exactly what a namespace restore needs too
+        val (parentD, name) = resolveParent(nsName)
+        val storage = DerivedStore.storageOf(spark, parentD)
+        val live = s"$parentD/$name"
+        // resume: a prior undrop crashed between the shell rename and
+        // the per-table restores — the live shell still holds marked
+        // trash entries; finish them instead of refusing over our own
+        // half-done work
+        if (storage.exists(live) &&
+            storage.exists(s"$live/${GraftCatalog.NamespaceMarker}") &&
+            hasNsDropEntries(storage, live)) {
+          val restored = restoreNsDropTables(storage, live)
+          History.record(storage, parentD, "undrop_namespace",
+            detail = s"$nsName resumed tables=$restored")
+          Seq(row("(resumed in place)", 0L, restored))
+        } else {
+          require(!storage.exists(live),
+            s"namespace '$nsName' exists — nothing to restore over it")
+          val candidates = trashOf(storage, parentD, name).filter(p =>
+            storage.exists(s"$p/${GraftCatalog.NamespaceMarker}"))
+          val (restoredFrom, at) = restoreFromTrash(storage, live, candidates,
+            what = "namespace", name = nsName)
+          val restored = restoreNsDropTables(storage, live)
+          // parent-level audit: the round-trip reads back as
+          // drop_namespace → undrop_namespace in `graft.<parent>.history`
+          History.record(storage, parentD, "undrop_namespace",
+            detail = s"$nsName from=$restoredFrom tables=$restored")
+          Seq(row(restoredFrom, System.currentTimeMillis() - at, restored))
+        }
+      },
 
-      "scrub" -> new Proc(
-        "scrub",
+      proc("scrub",
         "validate every generation by full decode (row order, sidecar " +
           "agreement); repair => true re-writes salvageable rows and " +
           "quarantines the corrupt originals; one row per generation",
-        Array(tableParam, p("repair", BooleanType, Some("false"))),
-        StructType(Seq(
-          StructField("file", StringType, nullable = false),
-          StructField("rows", LongType, nullable = false),
-          StructField("sorted", BooleanType, nullable = false),
-          StructField("statsMatch", BooleanType, nullable = true),
-          StructField("error", StringType, nullable = true),
-          StructField("repairedTo", StringType, nullable = true),
-          StructField("repairError", StringType, nullable = true)),
-        ),
-        (spark, in) => {
-          // the report is one row per GENERATION (metadata-sized); the
-          // scan itself ran distributed inside SSTableOps.scrub
-          SSTableOps.scrub(spark, dirOf(in), boolArg(in, 1, default = false))
-            .collect().toSeq.sortBy(_.getString(0)).map { r =>
-              def strOrNull(i: Int): AnyRef =
-                if (r.isNullAt(i)) null else utf8(r.getString(i))
-              def boolOrNull(i: Int): AnyRef =
-                if (r.isNullAt(i)) null else Boolean.box(r.getBoolean(i))
-              row(utf8(r.getString(0)), r.getLong(1): java.lang.Long,
-                r.getBoolean(2): java.lang.Boolean, boolOrNull(3),
-                strOrNull(4), strOrNull(5), strOrNull(6))
-            }
-        }),
+        table, opt("repair", false))(
+        receipt("file" -> StringType, "rows" -> LongType,
+          "sorted" -> BooleanType, "statsMatch?" -> BooleanType,
+          "error?" -> StringType, "repairedTo?" -> StringType,
+          "repairError?" -> StringType)) { (spark, a) =>
+        // the report is one row per GENERATION (metadata-sized); the
+        // scan itself ran distributed inside SSTableOps.scrub
+        SSTableOps.scrub(spark, a.dir, a.bool("repair"))
+          .collect().toSeq.sortBy(_.getString(0)).map { r =>
+            row(r.getString(0), r.getLong(1), r.getBoolean(2),
+              Option(r.get(3)), Option(r.getString(4)),
+              Option(r.getString(5)), Option(r.getString(6)))
+          }
+      },
 
-      "release_serving_caches" -> new Proc(
-        "release_serving_caches",
+      proc("release_serving_caches",
         "drop THIS session's serving-cache entries across the whole " +
           "query library and free the storage they pinned: persisted " +
           "serving intermediates (the TF-IDF probe batch, the ANN " +
@@ -1902,16 +1573,12 @@ private[spark] object GraftProcedures {
           "recompute — release when the outstanding results are done " +
           "with. Pass corpus_dir to release ONE corpus's entries and " +
           "leave every other corpus's caches live",
-        Array(
-          p("corpus_dir", StringType, Some("NULL"),
-            comment = "scope the release to this corpus directory's " +
-              "entries; absent = the whole session's")),
-        StructType(Seq(
-          StructField("entriesReleased", LongType, nullable = false))),
-        (spark, in) =>
-          Seq(row(graft.operators.ServingCaches.release(spark,
-            if (in.isNullAt(0)) None
-            else Some(in.getUTF8String(0).toString))))),
-    )
+        optNull("corpus_dir", StringType,
+          "scope the release to this corpus directory's " +
+            "entries; absent = the whole session's"))(
+        receipt("entriesReleased" -> LongType)) { (spark, a) =>
+        Seq(row(ServingCaches.release(spark, a.strOpt("corpus_dir"))))
+      },
+    ).map(p => p.name() -> p).toMap
   }
 }

@@ -119,6 +119,28 @@ private[spark] object PointerCommit {
 
   def newId(): String = java.util.UUID.randomUUID().toString.take(8)
 
+  /** Prefix of every trash entry a DROP or REPLACE leaves in the
+    * namespace directory. */
+  val TrashPrefix = "_dropped-"
+
+  /** Trash-entry name for a dropped table or namespace:
+    * `_dropped-<name>-<id>`, `id` being a [[newId]]. */
+  def trashName(name: String, id: String = newId()): String =
+    s"$TrashPrefix$name-$id"
+
+  /** The original name in a trash entry of the exact
+    * `_dropped-<name>-<8 hex>` shape; None for anything else (foreign
+    * litter). Exact, so table 'foo' never claims 'foo-bar's trash. */
+  def trashedName(entry: String): Option[String] = {
+    val body = entry.stripPrefix(TrashPrefix)
+    val suffix = body.takeRight(9)
+    if (entry.startsWith(TrashPrefix) && body.length > 9 &&
+        suffix.head == '-' &&
+        suffix.tail.forall(c => c.isDigit || (c >= 'a' && c <= 'f')))
+      Some(body.dropRight(9))
+    else None
+  }
+
   /** Test seams (deterministic race/crash injection): invoked around
     * every pointer flip ([[writeState]]) and after every copied file
     * ([[copyFile]]). A spec points a reader or a thrown "crash" at the

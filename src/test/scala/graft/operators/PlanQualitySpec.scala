@@ -34,7 +34,11 @@ class PlanQualitySpec extends AnyFunSuite {
     // InMemoryRelation into THIS query's plan — order-dependent scan
     // counts and nested plan sections that truncate naive string
     // matching. Clearing the cache first makes every pin deterministic.
+    // Serving-cache frames (e.g. the TF-IDF probe's SessionCache entry)
+    // outlive clearCache and would be reused with their persistence
+    // gone, so they are released too.
     spark.catalog.clearCache()
+    ServingCaches.release(spark, None)
     val df = SparkEntry.queries(name)(spark, sfDir)
     df.collect() // force execution so AQE finalizes stage plans
     // keep only the OUTER final-plan section (the marker at column 0):

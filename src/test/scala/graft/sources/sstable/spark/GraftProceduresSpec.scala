@@ -357,11 +357,63 @@ class GraftProceduresSpec extends AnyFunSuite {
         f.name.toLowerCase.contains("name"))
     assert(nameIdx >= 0, s"no name column in ${df.schema.fieldNames.mkString(",")}")
     val names = df.collect().map(_.getString(nameIdx)).toSeq
-    assert(Seq("compact", "compact_leveled", "compact_tombstones",
-      "drop_snapshot", "expire_snapshots", "list_trash", "lookup",
-      "maintenance_status", "scrub", "snapshot",
-      "undrop_namespace", "undrop_table", "vacuum",
-      "vacuum_trash").forall(names.contains),
+    assert(names.sorted == Seq("ann_drift", "audit_doc_freqs",
+      "build_ann_index", "compact", "compact_bucketed", "compact_leveled",
+      "compact_tombstones", "consolidate_doc_freqs", "cover_ann_index",
+      "derived_stores", "drop_snapshot", "expire_history",
+      "expire_snapshots", "health", "list_trash", "lookup",
+      "maintenance_status", "readmit", "rebucket", "release_serving_caches",
+      "retract_ann_vectors", "retract_doc_freqs", "retract_doc_freqs_stream",
+      "retract_signatures", "rollback", "scrub", "snapshot", "takedown",
+      "takedown_ledger", "takedown_status", "undrop_namespace",
+      "undrop_table", "update_ann_index", "update_doc_freqs",
+      "update_signatures", "vacuum", "vacuum_trash"),
       s"SHOW PROCEDURES returned: $names")
+  }
+
+  test("an explicit NULL argument means the declared default") {
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_sys.nl")
+    spark.sql("CREATE TABLE graft_sys.nl.t")
+    insertRows("graft_sys.nl.t", Seq(("k1", "v1", 1L)))
+    // one isolated generation with no tombstones: the default ratio
+    // threshold (0.2) folds nothing, and NULL must not read as 0.0
+    def folds(args: String): Int = spark.sql("CALL graft_sys.system." +
+      s"compact_tombstones(table => 'nl.t'$args)").head().getInt(0)
+    assert(folds(", ratio_threshold => NULL") == folds(""))
+    assert(folds("") == 0)
+    assert(generations("nl.t") == 1)
+
+    // a fresh trash entry survives the default horizon either way
+    spark.sql("CREATE TABLE graft_sys.nl.gone")
+    spark.sql("DROP TABLE graft_sys.nl.gone")
+    def swept(args: String): Seq[String] = spark.sql("CALL graft_sys.system." +
+      s"vacuum_trash(namespace => 'nl'$args)").collect().map(_.getString(0)).toSeq
+    assert(swept(", older_than_ms => NULL") == swept(""))
+    assert(spark.sql("CALL graft_sys.system.list_trash(namespace => 'nl')")
+      .count() == 1)
+
+    // a live lease reads fresh under the default horizon either way
+    val lease = graft.sources.sstable.MaintenanceLease.acquire(
+      s"$warehouse/nl/t", LocalStorage,
+      "null-probe")
+    def fresh(args: String): Boolean = spark.sql("CALL graft_sys.system." +
+      s"maintenance_status(table => 'nl.t'$args)").head().getBoolean(2)
+    assert(fresh(", horizon_ms => NULL") == fresh(""))
+    assert(fresh(""))
+    lease.release()
+
+    // NULL max_rows returns every ledger entry, as omission does
+    val corpus = Files.createTempDirectory("graft-proc-null-corpus").toString
+    val sp = spark
+    import sp.implicits._
+    Seq(1L -> "a b", 2L -> "c d", 3L -> "e f").toDF("doc_id", "text")
+      .write.parquet(s"$corpus/documents.parquet")
+    graft.operators.TakedownLedger.record(spark,
+      graft.operators.TakedownLedger.dirUnder(warehouse), corpus, "doc_id < 3")
+    def ledger(args: String): Seq[Long] = spark.sql("CALL graft_sys.system." +
+      s"takedown_ledger(where => 'true'$args)").collect().map(_.getLong(0)).toSeq
+    assert(ledger(", max_rows => NULL") == ledger(""))
+    assert(ledger("") == Seq(1L, 2L))
+    spark.sql("DROP TABLE graft_sys.nl.t")
   }
 }
