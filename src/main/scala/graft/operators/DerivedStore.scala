@@ -212,9 +212,10 @@ private[graft] object DerivedStore {
   /** Retract the rows `ids` selects (evaluated under the lease) as the
     * object doc describes: `flag` registers the epoch, then
     * `tombstones(ids, epoch)` is appended as a pure generation; job tags
-    * are `<tagPrefix>rm<epoch>` and `<tagPrefix>r<epoch>`. Returns
-    * (retracted, epoch); epoch 0 when nothing matched and nothing was
-    * written. */
+    * are `<tagPrefix>rm<epoch>` and `<tagPrefix>r<epoch>`. `ids` is read
+    * from raw row versions, so it is deduplicated first: one tombstone
+    * and one count per distinct id. Returns (retracted, epoch); epoch 0
+    * when nothing matched and nothing was written. */
   def retract(s: SparkSession, dir: String, op: String, flag: String,
               tagPrefix: String, ids: () => DataFrame,
               tombstones: (DataFrame, Int) => DataFrame,
@@ -222,7 +223,7 @@ private[graft] object DerivedStore {
               afterRelease: () => Unit): (Long, Int) =
     maintain(s, dir, op, () => (), nextEpoch(dir), afterRelease) {
       (storage, epoch) =>
-        withDelta(ids(), () => ()) { (victims, matched) =>
+        withDelta(ids().distinct(), () => ()) { (victims, matched) =>
           if (matched == 0) (0L, 0)
           else {
             recorded(storage, dir, op, detail(matched, epoch)) {

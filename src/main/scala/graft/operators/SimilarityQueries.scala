@@ -79,6 +79,9 @@ object SimilarityQueries {
 
   def kmediansCells(e: DataFrame, k: Int, iters: Int): (DataFrame, DataFrame) = {
     require(iters >= 1, s"kmediansCells needs at least one Lloyd iteration, got $iters")
+    // k <= 0 would leave an empty codebook, and the argmax fold below
+    // would then assign every vector to its Long.MaxValue seed cell
+    require(k >= 1, s"kmediansCells needs at least one cell, got k=$k")
     trainingsRun.incrementAndGet()
     // persist: every Lloyd iteration re-reads the vectors.
     // Partitioned ONCE on vec_id (r19, guide §2.4): every iteration's

@@ -95,7 +95,13 @@ final class CorruptSSTableException(msg: String, cause: Throwable = null)
   * default level). */
 private[sstable] sealed trait ChunkCodec {
   def compress(raw: Array[Byte]): Array[Byte]
-  def uncompress(comp: Array[Byte], maxRawLen: Int): Array[Byte]
+  /** Uncompress `comp[0, compLen)` (the chunk's checksum trailer may
+    * follow in the same array). */
+  def uncompress(comp: Array[Byte], compLen: Int, maxRawLen: Int): Array[Byte]
+  /** Uncompress a bare chunk (no trailer), as the benchmark's decompress
+    * calibration holds them. */
+  final def uncompress(comp: Array[Byte], maxRawLen: Int): Array[Byte] =
+    uncompress(comp, comp.length, maxRawLen)
 }
 
 private[sstable] object ChunkCodec {
@@ -107,8 +113,11 @@ private[sstable] object ChunkCodec {
 
   object SnappyCodec extends ChunkCodec {
     def compress(raw: Array[Byte]): Array[Byte] = Snappy.compress(raw)
-    def uncompress(comp: Array[Byte], maxRawLen: Int): Array[Byte] =
-      Snappy.uncompress(comp)
+    def uncompress(comp: Array[Byte], compLen: Int, maxRawLen: Int): Array[Byte] = {
+      val raw = new Array[Byte](Snappy.uncompressedLength(comp, 0, compLen))
+      Snappy.uncompress(comp, 0, compLen, raw, 0)
+      raw
+    }
   }
 
   object DeflateCodec extends ChunkCodec {
@@ -122,10 +131,10 @@ private[sstable] object ChunkCodec {
         out.toByteArray
       } finally d.end()
     }
-    def uncompress(comp: Array[Byte], maxRawLen: Int): Array[Byte] = {
+    def uncompress(comp: Array[Byte], compLen: Int, maxRawLen: Int): Array[Byte] = {
       val inf = new java.util.zip.Inflater()
       try {
-        inf.setInput(comp)
+        inf.setInput(comp, 0, compLen)
         val out = new Array[Byte](maxRawLen)
         var n = 0
         while (!inf.finished() && n < maxRawLen) {
@@ -168,10 +177,11 @@ final class CompressedChunkedInput(physical: SeekableInput, info: CompressionInf
     if (compLen <= 0 || compLen > info.chunkLength.toLong * 2 + 1024)
       throw new CorruptSSTableException(s"chunk $idx absurd compressed length $compLen")
     physical.seek(info.chunkOffsets(idx))
-    val comp = new Array[Byte](compLen.toInt)
-    physical.readFully(comp)
-    val expectedCrc = physical.asDataInput.readInt()
-    val raw = codec.uncompress(comp, info.chunkLength)
+    // one read for the chunk and its trailer
+    val frame = new Array[Byte](compLen.toInt + 4)
+    physical.readFully(frame)
+    val expectedCrc = java.nio.ByteBuffer.wrap(frame).getInt(compLen.toInt)
+    val raw = codec.uncompress(frame, compLen.toInt, info.chunkLength)
     val adler = new Adler32
     adler.update(raw)
     if (adler.getValue.toInt != expectedCrc)

@@ -110,7 +110,9 @@ trait Storage {
 }
 
 object LocalStorage extends Storage {
-  def open(path: String): SeekableInput = new FileSeekableInput(path)
+  /** Buffered like [[HadoopStorage.open]]: see [[BufferedSeekableInput]]. */
+  def open(path: String): SeekableInput =
+    new BufferedSeekableInput(new FileSeekableInput(path))
   def length(path: String): Long = new File(path).length()
   def mtime(path: String): Long = new File(path).lastModified()
   def exists(path: String): Boolean = new File(path).exists()

@@ -46,6 +46,69 @@ final class FileSeekableInput(path: String) extends SeekableInput {
   def close(): Unit = raf.close()
 }
 
+/** Read-through buffer over a seekable source — what [[LocalStorage]]
+  * hands every codec reader, so the byte-at-a-time `DataInput` decoders
+  * (Index.db entries, uncompressed Data.db rows, sidecars) cost one
+  * underlying read per [[BufferedSeekableInput.Size]] bytes instead of a
+  * syscall per field. `length` is read once at open: published filesets
+  * are immutable and metadata files are replaced by rename, so an open
+  * stream never sees its file change length. A seek inside the buffered
+  * window costs nothing; a read at least as large as the buffer bypasses
+  * it (whole compressed chunks, `Storage.link` copies), so a stream that
+  * only ever reads that way never allocates the buffer. */
+final class BufferedSeekableInput(underlying: SeekableInput) extends SeekableInput {
+  import BufferedSeekableInput.Size
+  private var buf: Array[Byte] = _ // allocated by the first buffered read
+  private var bufStart = 0L // file offset of buf(0)
+  private var bufLen = 0 // valid bytes in buf
+  private var pos = 0L
+  private var underlyingPos = underlying.position
+  val length: Long = underlying.length
+
+  def position: Long = pos
+  def seek(p: Long): Unit = pos = p
+
+  def read(b: Array[Byte], off: Int, len: Int): Int = {
+    if (len == 0) return 0
+    val inBuf = pos - bufStart
+    if (inBuf >= 0 && inBuf < bufLen) {
+      val n = math.min(len, bufLen - inBuf.toInt)
+      System.arraycopy(buf, inBuf.toInt, b, off, n)
+      pos += n
+      n
+    } else if (pos >= length) -1
+    else if (len >= Size) {
+      val n = fill(b, off, len)
+      if (n > 0) pos += n
+      n
+    } else {
+      if (buf == null) buf = new Array[Byte](Size)
+      val n = fill(buf, 0, Size)
+      if (n <= 0) return -1
+      bufStart = pos
+      bufLen = n
+      read(b, off, len)
+    }
+  }
+
+  /** One underlying read at `pos`, seeking only when the source is
+    * elsewhere. */
+  private def fill(dst: Array[Byte], off: Int, len: Int): Int = {
+    if (underlyingPos != pos) underlying.seek(pos)
+    val n = underlying.read(dst, off, len)
+    underlyingPos = pos + math.max(n, 0)
+    n
+  }
+
+  def close(): Unit = underlying.close()
+}
+
+object BufferedSeekableInput {
+  /** Covers a Summary-bounded Index.db window (~128 entries of short
+    * keys) in one read; the same size as `java.io.BufferedInputStream`'s. */
+  val Size: Int = 8 * 1024
+}
+
 final class InMemorySeekableInput(bytes: Array[Byte]) extends SeekableInput {
   private var pos = 0L
   def position: Long = pos

@@ -83,6 +83,12 @@ class AnnIndexSpec extends AnyFunSuite {
     }
   }
 
+  test("kmediansCells refuses k <= 0 instead of assigning every vector to one phantom cell") {
+    val e = SimilarityQueries.embWithNorm(spark, sfDir)
+    val err = intercept[IllegalArgumentException](SimilarityQueries.kmediansCells(e, 0, 2))
+    assert(err.getMessage.contains("k=0"), err.getMessage)
+  }
+
   test("requireEpoch refuses a stale or mis-parameterized index loudly, " +
     "naming every drifted key") {
     val idx = s"$warehouse/ann/coarse"

@@ -494,7 +494,6 @@ object DerivedStoreLayoutSpec {
     "p:1:00000|cv|NORMAL|0x40080000000000004000000000000000|1|0|0",
     "p:1:00001|cv|NORMAL|0x40080000000000004000000000000000|1|0|0",
     "v:000000000000|<row-tombstone>|4|4",
-    "v:000000000000|<row-tombstone>|4|4",
     "v:000000000000|cell|NORMAL|1|1|0|0",
     "v:000000000000|code0|NORMAL|1|1|0|0",
     "v:000000000000|code1|NORMAL|0|1|0|0",
@@ -515,7 +514,6 @@ object DerivedStoreLayoutSpec {
     "v:000000000004|code0|NORMAL|0|1|0|0",
     "v:000000000004|code1|NORMAL|0|1|0|0",
     "v:000000000004|vec|NORMAL|0x3ff00000000000003ff000000000000040140000000000004000000000000000|1|0|0",
-    "v:000000000005|<row-tombstone>|4|4",
     "v:000000000005|<row-tombstone>|4|4",
     "v:000000000005|cell|NORMAL|1|1|0|0",
     "v:000000000005|cell|NORMAL|1|5|0|0",
@@ -542,7 +540,6 @@ object DerivedStoreLayoutSpec {
     "v:000000000009|code1|NORMAL|0|1|0|0",
     "v:000000000009|vec|NORMAL|0x40000000000000003fe000000000000040140000000000004008000000000000|1|0|0",
     "v:000000000010|<row-tombstone>|4|4",
-    "v:000000000010|<row-tombstone>|4|4",
     "v:000000000010|cell|NORMAL|1|2|0|0",
     "v:000000000010|code0|NORMAL|1|2|0|0",
     "v:000000000010|code1|NORMAL|0|2|0|0",
@@ -563,7 +560,6 @@ object DerivedStoreLayoutSpec {
     "v:000000000014|code0|NORMAL|1|2|0|0",
     "v:000000000014|code1|NORMAL|0|2|0|0",
     "v:000000000014|vec|NORMAL|0x40080000000000003ff800000000000040140000000000004010000000000000|2|0|0",
-    "v:000000000015|<row-tombstone>|4|4",
     "v:000000000015|<row-tombstone>|4|4",
     "v:000000000015|cell|NORMAL|1|2|0|0",
     "v:000000000015|code0|NORMAL|1|2|0|0",
