@@ -705,9 +705,9 @@ object PerfProbe {
   }
 
   /** Serial vs parallel cross-bucket folds in compactBucketedInPlace:
-    * each fold's write is ONE task (the one-output contract), so the
-    * serial driver loop keeps ~1 core busy; parallel folds should
-    * approach min(buckets, slots)× on a multi-core box. */
+    * each fold is one single-threaded merge on the driver, so the serial
+    * loop keeps ~1 core busy; parallel folds should approach
+    * min(buckets, slots)× on a multi-core box. */
   private def bucketFoldProbe(spark: SparkSession): Unit = {
     import graft.operators.SSTableOps
     def mkDir(): String = {

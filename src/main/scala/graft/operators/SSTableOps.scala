@@ -341,40 +341,85 @@ object SSTableOps {
     * file lacks statistics. Direct callers without such a proof must
     * leave the default `gc = false`.
     *
-    * Returns the published Data.db paths of the fold output (identified
-    * by a fold-unique job tag in the file names), so in-place callers
-    * can re-validate GC safety against a fresh listing and unpublish a
-    * fold that a concurrent flush invalidated. */
+    * The fold is the codec-level streaming merge
+    * ([[graft.sources.sstable.SSTableReader.Fold]]: one reader per
+    * input, k-way by key, each key reconciled with compactRows' rules)
+    * run on the calling thread, streamed into ONE [[graft.sources
+    * .sstable.SSTableWriter]] with the directory's writer tuning (a
+    * catalog table's `_table` properties; defaults for path-API
+    * directories). ONE output generation per fold is the contract STCS
+    * convergence depends on: outputs must number FEWER than inputs, or
+    * `while (compactInPlace > 0)` never terminates. Memory is one
+    * decoded row per input plus the writer's chunk at any bucket size;
+    * the fold's bytes pass through this JVM, not an executor.
+    *
+    * The output is staged under `outDir/_staging-<tag>/` and published
+    * like a DSv2 commit: [[graft.sources.sstable.spark.CommitIntegrity]]
+    * marker around a siblings-first, Data.db-last rename. No history
+    * event — the surrounding maintenance op records ONE event with the
+    * whole before/after diff. Returns the published Data.db paths
+    * (empty when no row survives — a fully deleted bucket publishes
+    * nothing), so in-place callers can re-validate GC safety against a
+    * fresh listing and unpublish a fold that a concurrent flush
+    * invalidated. Damaged, out-of-order or counter-bearing inputs fail
+    * the fold before anything is published. */
   def compactFiles(spark: org.apache.spark.sql.SparkSession, files: Seq[String],
                    outDir: String, gc: Boolean = false): Seq[String] = {
     require(files.nonEmpty, "empty compaction bucket")
-    // each Data.db path is its own single-file scan (listDataFiles
-    // accepts a file); union of scans keeps per-file split planning
-    val merged = compactRows(
-      files.map(f => spark.read.format("sstable").load(f)).reduce(_.union(_)))
+    val conf = spark.sessionState.newHadoopConf()
+    val storage = graft.sources.sstable.Storage.forPath(outDir, conf)
+    val inputs = graft.sources.sstable.Storage.forPath(files.head, conf)
+    withFoldStaging(storage, outDir) { tag =>
+      stageFold(inputs, files, storage, outDir, tag, tag, gc).toSeq
+        .flatMap(publishFold(storage, outDir, tag, _))
+    }
+  }
+
+  /** Run `body` with a fresh fold tag; the tag's `_staging-<tag>`
+    * directory under `dir` is removed afterwards whatever happened. */
+  private def withFoldStaging[T](storage: graft.sources.sstable.Storage,
+                                 dir: String)(body: String => T): T = {
     val tag = "fold-" + java.util.UUID.randomUUID().toString.take(8)
-    (if (gc) suppressTombstones2(merged) else merged)
-      .write.format("sstable")
-      .option(graft.sources.sstable.spark.SSTableSource.JobTagOption, tag)
-      // ONE output generation per bucket — the fold contract STCS
-      // convergence depends on: outputs must number FEWER than inputs,
-      // and with the merge's shuffle sized by spark.sql.shuffle
-      // .partitions a bucket of k similar generations would otherwise
-      // fold into min(k, partitions) new similar generations and
-      // `while (compactInPlace > 0)` never terminates (observed live:
-      // 4 → 4 → … for 870+ passes). Cassandra's shape too — one
-      // compaction thread streams one output sstable per bucket;
-      // parallelism lives ACROSS buckets, and the writer is O(chunk)
-      // memory so one task per fold holds at any bucket size.
-      .option(graft.sources.sstable.spark.SSTableSource.WritePartitionsOption, "1")
-      // internal fold write: the surrounding maintenance op records ONE
-      // history event with the whole before/after diff — the fold's own
-      // sink commit must not log a phantom 'insert'
-      .option(graft.sources.sstable.spark.SSTableSource.RecordHistoryOption, "false")
-      .mode("append").save(outDir)
-    val storage = graft.sources.sstable.Storage.forPath(
-      outDir, spark.sessionState.newHadoopConf())
-    storage.listDataFiles(outDir).filter(_.endsWith(s"-$tag-Data.db"))
+    try body(tag) finally storage.deleteRecursive(s"$dir/_staging-$tag")
+  }
+
+  /** Stream the fold of `files` into `dir/_staging-<tag>/<stem>-Data.db`
+    * with `dir`'s writer tuning. None when no row survives (nothing is
+    * written). */
+  private def stageFold(inputs: graft.sources.sstable.Storage, files: Seq[String],
+                        storage: graft.sources.sstable.Storage, dir: String,
+                        tag: String, stem: String, gc: Boolean): Option[String] = {
+    import graft.sources.sstable.{SSTableFiles, SSTableReader, SSTableWriter}
+    import graft.sources.sstable.spark.{GraftCatalog, WriterTuning}
+    val t = WriterTuning.of(GraftCatalog.tableProps(storage, dir))
+    val fold = new SSTableReader.Fold(files, inputs, gc)
+    try {
+      if (!fold.hasNext) None
+      else {
+        val staged = s"$dir/_staging-$tag/$stem${SSTableFiles.DataSuffix}"
+        storage.mkdirs(s"$dir/_staging-$tag")
+        val w = new SSTableWriter(staged, t.compress, t.chunkLength,
+          t.summaryInterval, bloomBitsPerKey = t.bloomBitsPerKey,
+          algorithm = t.algorithm, storage = storage)
+        try fold.foreach(w.append) finally w.close()
+        Some(staged)
+      }
+    } finally fold.close()
+  }
+
+  /** Publish a staged fold output into `dir` the way a DSv2 commit
+    * does — integrity marker first, siblings before Data.db, marker
+    * verified last — and return its published Data.db path as `dir`'s
+    * listing spells it. */
+  private def publishFold(storage: graft.sources.sstable.Storage, dir: String,
+                          tag: String, staged: String): Seq[String] = {
+    import graft.sources.sstable.SSTableFiles
+    import graft.sources.sstable.spark.CommitIntegrity
+    val marker = CommitIntegrity.begin(storage, dir, tag)
+    SSTableFiles.publish(storage, staged, dir)
+    CommitIntegrity.verifyAndEnd(storage, dir, marker)
+    val name = staged.substring(staged.lastIndexOf('/'))
+    storage.listDataFiles(dir).filter(_.endsWith(name))
   }
 
   /** Is `bucket` key-isolated within `allFiles`? True iff every bucket
@@ -427,7 +472,7 @@ object SSTableOps {
     def fence(): Unit = if (lease != null) lease.checkHeld()
     val gc = bucketIsolated(bucket0, storage.listDataFiles(dir), storage)
     // A non-GC fold must leave DELETE-ONLY generations alone: folding one
-    // into a mixed output would keep its tombstone ROWS (compactRows
+    // into a mixed output would keep its tombstone ROWS (the merge
     // carries them) but destroy the sidecar delete-only signature that
     // delete-aware reads hoist into their shadow map — the pending
     // deletes would silently stop applying while overlapping generations
@@ -573,10 +618,10 @@ object SSTableOps {
     * and WITHDRAWS (staged output dropped, bucket skipped this pass) if
     * a concurrent flush changed it — the next pass picks the bucket up
     * again. WITHIN the one maintainer, folds run across buckets in
-    * parallel (`parallelism` threads; 0 = half the cluster's default
-    * parallelism, capped by the fold count) — each fold's write is one
-    * task by the one-output contract, so serial folds would leave the
-    * cluster idle. Returns the number of buckets folded. */
+    * parallel (`parallelism` threads; 0 = this JVM's processors, capped
+    * by the fold count) — each fold is one single-threaded merge on the
+    * driver, so serial folds would leave its cores idle. Returns the
+    * number of buckets folded. */
   def compactBucketedInPlace(spark: org.apache.spark.sql.SparkSession,
                              dir: String, minThreshold: Int = 2,
                              parallelism: Int = 0): Int = {
@@ -611,43 +656,36 @@ object SSTableOps {
       val foldable = plan()
       if (foldable.isEmpty) 0
       else recordingFolds(storage, dir, "compact_bucketed") {
-        foldBucketsPooled(spark, dir, storage, foldable, parallelism, lease)
+        foldBucketsPooled(dir, storage, foldable, parallelism, lease)
       }
     }
   }
 
   /** The pooled cross-bucket fold body shared by [[compactBucketedInPlace]]
     * and [[autoCompact]] (both already hold the directory's maintenance
-    * lease). Folds run ACROSS buckets in parallel: each fold's write is
-    * ONE task by compactFiles' one-output contract, so a serial driver
-    * loop would keep one core busy per fold — at thousands of buckets
-    * the maintenance pass would be core-count times slower than the
-    * cluster allows. Safe by construction: hash buckets are disjoint
-    * file sets, tombstone GC is structural WITHIN a bucket, and each
-    * fold's post-stage re-check filters the listing to its own bucket —
-    * sibling folds are invisible to it. (The size-tier compactors stay
-    * serial: their GC isolation proof reads the whole directory, which
-    * sibling folds mutate.) Default slots: half the cluster's
-    * parallelism, but never more driver threads than folds — and
-    * hard-capped at 64 (each slot is a DRIVER thread submitting jobs;
-    * on a large cluster defaultParallelism is the core count, and
-    * thousands of submitter threads would melt the scheduler long
-    * before the cluster is busy). */
-  private def foldBucketsPooled(spark: org.apache.spark.sql.SparkSession,
-                                dir: String,
+    * lease). Each fold runs on its pool thread (the codec-level merge of
+    * [[compactFiles]] is single-threaded), so folds run ACROSS buckets in
+    * parallel. Safe by construction: hash buckets are disjoint file sets,
+    * tombstone GC is structural WITHIN a bucket, and each fold's
+    * post-stage re-check filters the listing to its own bucket — sibling
+    * folds are invisible to it. (The size-tier compactors stay serial:
+    * their GC isolation proof reads the whole directory, which sibling
+    * folds mutate.) Default slots: this JVM's processors, never more
+    * than the folds. */
+  private def foldBucketsPooled(dir: String,
                                 storage: graft.sources.sstable.Storage,
                                 foldable: Seq[(Int, Seq[String])],
                                 parallelism: Int,
                                 lease: graft.sources.sstable.MaintenanceLease): Int = {
     val slots = if (parallelism > 0) parallelism
-      else math.max(1, math.min(64, math.min(foldable.length,
-        spark.sparkContext.defaultParallelism / 2)))
+      else math.max(1, math.min(foldable.length,
+        Runtime.getRuntime.availableProcessors()))
     val folds = new java.util.concurrent.atomic.AtomicInteger(0)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(slots)
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     try {
       foldable.foreach { case (b, chain) => pool.execute(() =>
-        try { if (foldOneBucket(spark, dir, storage, b, chain, lease)) { folds.incrementAndGet(); () } }
+        try { if (foldOneBucket(dir, storage, b, chain, lease)) { folds.incrementAndGet(); () } }
         catch { case t: Throwable => failures.add(t); () })
       }
       pool.shutdown()
@@ -753,7 +791,7 @@ object SSTableOps {
             case Some(_) =>
               val chains = chainsOver(now)
               if (chains.isEmpty) 0
-              else foldBucketsPooled(spark, dir, storage, chains,
+              else foldBucketsPooled(dir, storage, chains,
                 parallelism = 0, lease)
             case None =>
               if (now.exists(f => SSTableSource.BucketNameRe.matches(
@@ -791,49 +829,40 @@ object SSTableOps {
   }
 
   /** One bucket's layout-preserving fold (the [[compactBucketedInPlace]]
-    * unit of parallelism): merge the whole chain via [[compactFiles]],
-    * re-check the chain, publish under the bucket stem. Returns true
-    * iff the fold published (false = withdrawn for a concurrent flush). */
-  private def foldOneBucket(spark: org.apache.spark.sql.SparkSession,
-                            dir: String,
+    * unit of parallelism): the [[compactFiles]] fold of the whole chain,
+    * staged directly under the bucket stem, then re-check the chain and
+    * publish. Returns true iff the fold went through (false = withdrawn
+    * for a concurrent flush). */
+  private def foldOneBucket(dir: String,
                             storage: graft.sources.sstable.Storage,
                             b: Int, chain: Seq[String],
                             lease: graft.sources.sstable.MaintenanceLease = null): Boolean = {
     import graft.sources.sstable.SSTableFiles
     import graft.sources.sstable.spark.SSTableSource
-    // the merge/GC/one-output-generation body is compactFiles — the
-    // SAME convergence-critical fold every other compactor runs
-    // (review r8: an inline copy here could drift); only the
-    // publish differs (rename under the bucket stem)
-    val tag = "fold-" + java.util.UUID.randomUUID().toString.take(8)
-    val stagingDir = s"$dir/_staging-bucketfold-$tag"
-    val staged = compactFiles(spark, chain, stagingDir, gc = true)
-    // post-stage re-check (the foldBucketInPlace pattern): a flush
-    // that landed in this bucket mid-fold would be silently merged
-    // away by our unpublish below — withdraw instead and let the
-    // next pass fold the grown chain
-    val nowChain = storage.listDataFiles(dir).filter { f =>
-      SSTableFiles.generationStem(f) match {
-        case SSTableSource.BucketNameRe(bb) => bb.toInt == b
-        case _ => false
+    withFoldStaging(storage, dir) { tag =>
+      val staged = stageFold(storage, chain, storage, dir, tag,
+        s"${SSTableSource.bucketStem(b)}$tag", gc = true)
+      // post-stage re-check (the foldBucketInPlace pattern): a flush
+      // that landed in this bucket mid-fold would be silently merged
+      // away by our unpublish below — withdraw instead and let the
+      // next pass fold the grown chain
+      val nowChain = storage.listDataFiles(dir).filter { f =>
+        SSTableFiles.generationStem(f) match {
+          case SSTableSource.BucketNameRe(bb) => bb.toInt == b
+          case _ => false
+        }
+      }.sorted
+      if (nowChain != chain) false
+      else {
+        // fence before mutating the live layout (publish + input
+        // unpublish): a stolen lease means a successor maintainer may
+        // already be folding this bucket — abort, our staged output is
+        // private and dies with the staging dir
+        if (lease != null) lease.checkHeld()
+        staged.foreach(publishFold(storage, dir, tag, _))
+        chain.foreach(SSTableFiles.unpublish(storage, _))
+        true
       }
-    }.sorted
-    if (nowChain != chain) {
-      storage.deleteRecursive(stagingDir)
-      false
-    } else {
-      // fence before mutating the live layout (publish + input
-      // unpublish): a stolen lease means a successor maintainer may
-      // already be folding this bucket — abort, our staged output is
-      // private and dies with the staging dir
-      if (lease != null) lease.checkHeld()
-      staged.foreach { s =>
-        SSTableFiles.publishAs(storage, s,
-          s"$dir/${SSTableSource.bucketStem(b)}$tag${SSTableFiles.DataSuffix}")
-      }
-      storage.deleteRecursive(stagingDir)
-      chain.foreach(SSTableFiles.unpublish(storage, _))
-      true
     }
   }
 

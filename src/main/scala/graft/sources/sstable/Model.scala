@@ -158,19 +158,6 @@ object SSTableFiles {
       }
     }
 
-  /** [[publish]] under a NEW stem: rename the staged fileset to
-    * `targetDataPath`'s siblings (same ordering contract — siblings
-    * first, Data.db LAST). Used where the published name must carry
-    * layout metadata the staged name doesn't, e.g. a bucketed fold
-    * republishing under its `bucket-NNNNN-` stem. */
-  def publishAs(storage: Storage, stagedDataPath: String,
-                targetDataPath: String): Unit =
-    PublishOrderSuffixes.foreach { suf =>
-      val src = sibling(stagedDataPath, suf)
-      if (storage.exists(src))
-        storage.rename(src, sibling(targetDataPath, suf))
-    }
-
   /** Unsigned lexicographic byte comparison — the total order of row keys
     * (required for Summary/Index range pruning). */
   def compareKeys(a: Array[Byte], b: Array[Byte]): Int = {

@@ -446,17 +446,93 @@ object SSTableReader {
       }
       if (nHits == 0) return None
       val merged = reconcile(key, hits.result())
-      if (!gcTombstones) Some(merged)
-      else {
-        // live view drops cell AND range tombstones (suppressTombstones'
-        // GC twin) — range-shadowed cells are already gone via reconcile
-        val live = merged.columns.filter {
-          case _: Column.Deleted | _: Column.RangeTombstone => false
-          case _ => true
-        }
-        if (live.isEmpty) None else Some(SSTableRow(key, live, None))
+      if (!gcTombstones) Some(merged) else liveView(merged)
+    }
+  }
+
+  /** The tombstone-GC view of one reconciled row (`suppressTombstones`'
+    * twin): cell and range tombstones and the row tombstone dropped —
+    * range-shadowed cells are already gone via [[reconcile]] — and None
+    * when nothing live is left. The one filter behind both the point
+    * read's `gcTombstones = true` and the `gc = true` [[Fold]]. */
+  private[sstable] def liveView(merged: SSTableRow): Option[SSTableRow] = {
+    val live = merged.columns.filter {
+      case _: Column.Deleted | _: Column.RangeTombstone => false
+      case _ => true
+    }
+    if (live.isEmpty) None else Some(SSTableRow(merged.key, live, None))
+  }
+
+  /** Compaction's merge as one streaming k-way pass (Cassandra's
+    * compaction shape): one [[DataReader]] per input generation, merged
+    * in unsigned key order by a priority queue; every version of a key
+    * (a file's adjacent duplicates included) is reconciled with
+    * [[reconcile]] — the rules `compactRows` implements as DataFrame
+    * algebra — and with `gc` the row passes through [[liveView]], so
+    * keys with nothing live left are elided. Yields one row per
+    * surviving key in strictly increasing key order, ready for an
+    * [[SSTableWriter]].
+    *
+    * Memory is one decoded row per input plus the versions of the key
+    * being merged. Inputs are opened eagerly and closed by [[close]].
+    * Damage fails loudly and names the file: a [[CorruptSSTableException]]
+    * from decoding is re-raised with the input's path, and so is an
+    * input whose keys go backwards (a merge over it would emit the same
+    * key twice, out of order). */
+  final class Fold(files: Seq[String], storage: Storage, gc: Boolean)
+      extends Iterator[SSTableRow] with AutoCloseable {
+    private final class Input(val path: String, val rows: DataReader) {
+      var head: SSTableRow = _
+      /** Load the next row into `head` (null at the end). */
+      def advance(): Unit = {
+        val prev = head
+        head = named(path)(if (rows.hasNext) rows.next() else null)
+        if (head != null && prev != null && compareKeys(prev.key, head.key) > 0)
+          throw new CorruptSSTableException(s"$path: row keys go backwards " +
+            s"(${hex(prev.key)} then ${hex(head.key)}); the merge needs key-sorted inputs")
       }
     }
+    private def named[T](path: String)(body: => T): T =
+      try body catch {
+        case e: CorruptSSTableException =>
+          throw new CorruptSSTableException(s"$path: ${e.getMessage}", e)
+      }
+    private def hex(k: Array[Byte]): String = k.take(32).map(b => f"${b & 0xff}%02x").mkString
+
+    private val inputs = scala.collection.mutable.ArrayBuffer.empty[Input]
+    private val queue = new java.util.PriorityQueue[Input](math.max(1, files.length),
+      (a: Input, b: Input) => compareKeys(a.head.key, b.head.key))
+    try files.foreach { f =>
+      val in = new Input(f, named(f)(new SSTableReader(f, storage).rows()))
+      inputs += in
+      in.advance()
+      if (in.head != null) queue.add(in)
+    } catch { case t: Throwable => close(); throw t }
+
+    private var pending: SSTableRow = _
+    private def fill(): Unit = while (pending == null && !queue.isEmpty) {
+      val key = queue.peek().head.key
+      val versions = Vector.newBuilder[SSTableRow]
+      while (!queue.isEmpty && compareKeys(queue.peek().head.key, key) == 0) {
+        val in = queue.poll()
+        while (in.head != null && compareKeys(in.head.key, key) == 0) {
+          versions += in.head
+          in.advance()
+        }
+        if (in.head != null) queue.add(in)
+      }
+      val merged = reconcile(key, versions.result())
+      pending = if (gc) liveView(merged).orNull else merged
+    }
+
+    def hasNext: Boolean = { fill(); pending != null }
+    def next(): SSTableRow = {
+      if (!hasNext) throw new NoSuchElementException
+      val r = pending
+      pending = null
+      r
+    }
+    def close(): Unit = inputs.foreach(_.rows.close())
   }
 
   /** Merge one key's row versions from N generations (the Scala twin of

@@ -133,9 +133,8 @@ object SSTableSource {
   val DefaultDistributedPlanningThreshold = 1024
   /** Optional caller-supplied job tag embedded in published file names
     * (default: a random 8-char token). Lets a maintenance job identify
-    * exactly the filesets IT published — compaction uses this to
-    * re-validate GC safety against a fresh listing post-fold. Must be
-    * unique per write; path separators are rejected. */
+    * exactly the filesets IT published (the derived stores' appends use
+    * it). Must be unique per write; path separators are rejected. */
   val JobTagOption = "jobtag"
   /** Read-side view: "rows" (default — one row per SSTable row, columns
     * as an array), "cells" ([[SSTableSchema.cellsSchema]] — one row per
@@ -260,12 +259,6 @@ object SSTableSource {
     * `expire_snapshots` as part of its maintenance loop. Key-targeted
     * DELETEs never trigger it (tombstone appends destroy nothing). */
   val AutoSnapshotOption = "autosnapshot"
-
-  /** INTERNAL (`recordhistory=false`): suppress the commit's `_history`
-    * event. Set only by engine-internal writes (compaction folds) whose
-    * surrounding maintenance op records the whole diff itself — user
-    * writes always log. */
-  private[graft] val RecordHistoryOption = "recordhistory"
 
   /** INTERNAL (`commitretry=true`, set by [[GraftCatalog.loadTable]]):
     * an append commit that discovers its directory was REPLACED mid-

@@ -139,7 +139,7 @@ final case class SSTableCommit(stagedDataPaths: Seq[String]) extends WriterCommi
   * explains a missing marker — maintainers touch only generation
   * filesets, never `_` files.) Crash litter is a zero-byte `_commit-`
   * file, swept by vacuumStaging's horizon. */
-private[spark] object CommitIntegrity {
+private[graft] object CommitIntegrity {
   def begin(storage: Storage, path: String, tag: String): String = {
     // pointer-state gate (VERDICT r11 #3): a DROP/undrop now commits by
     // flipping `_table` rather than renaming the tree away, so the
@@ -336,9 +336,8 @@ final class SSTableBatchWrite(path: String, schema: StructType,
         republishAfterSwap(st, published.result(), e)
     }
     removeStaging(st)
-    if (properties.getOrElse(SSTableSource.RecordHistoryOption, "true").toBoolean)
-      History.record(st, path, if (truncate) "overwrite" else "insert",
-        added = published.result(), removed = overwritten)
+    History.record(st, path, if (truncate) "overwrite" else "insert",
+      added = published.result(), removed = overwritten)
     // write-triggered bounded maintenance (driver-side, post-publish):
     // the committing job IS the single maintainer for the fold's
     // duration — see SSTableOps.autoCompact

@@ -501,6 +501,26 @@ class SSTableOpsSpec extends AnyFunSuite {
       val expected = SSTableOps.compactRows(spark.read.format("sstable").load(dir))
         .select(col("key").cast("string"), to_json(struct(col("columns"), col("rowTombstone"))))
         .as[(String, String)].collect().toMap
+      // the compaction fold over the same generations publishes exactly
+      // compactRows (gc = false) and suppressTombstones (gc = true)
+      val inputs = graft.sources.sstable.SSTableReader.listDataFiles(dir)
+      def folded(gc: Boolean): Map[String, String] = {
+        val out = Files.createTempDirectory(s"prop-fold-$trial-$gc").toString
+        val published = SSTableOps.compactFiles(spark, inputs, out, gc)
+        assert(published.length <= 1 &&
+          published == graft.sources.sstable.SSTableReader.listDataFiles(out))
+        if (published.isEmpty) Map.empty
+        else spark.read.format("sstable").load(out)
+          .select(col("key").cast("string"), to_json(struct(col("columns"), col("rowTombstone"))))
+          .as[(String, String)].collect().toMap
+      }
+      assert(folded(gc = false) == expected, s"trial $trial: fold != compactRows")
+      val live = SSTableOps.suppressTombstones(spark.read.format("sstable").load(dir))
+        .select(col("key").cast("string"),
+          to_json(struct(col("columns"), lit(null).cast(
+            "struct<localDeletionTime:int,markedForDeleteAt:bigint>").as("rowTombstone"))))
+        .as[(String, String)].collect().toMap
+      assert(folded(gc = true) == live, s"trial $trial: gc fold != suppressTombstones")
       keyUniverse.foreach { k =>
         val got = graft.sources.sstable.SSTableReader.get(dir, k.getBytes)
         (expected.get(k), got) match {
@@ -889,11 +909,79 @@ class SSTableOpsSpec extends AnyFunSuite {
     val e3 = intercept[Exception] { SSTableOps.lookupJoin(
       Seq("k1".getBytes).toDF("key"), dir).collect() }
     assert(e3.getMessage.contains("no LWW merge semantics"), e3.getMessage)
+    val e4 = intercept[Exception] {
+      SSTableOps.compactFiles(spark, Seq(s"$dir/cnt-Data.db"), dir) }
+    assert(e4.getMessage.contains("no LWW merge semantics"), e4.getMessage)
+    assertFoldLeftNothing(dir, Seq(s"$dir/cnt-Data.db"))
 
     // the reference-era export pipeline never saw counters: dropped, and
     // the counter-only row k2 produces no phantom line
     val lines = SSTableOps.exportMsgpackBase64(df).as[String].collect()
     assert(lines.length == 1, "only k1's NORMAL cell is exportable")
+  }
+
+  /** A failed fold published nothing: the directory lists exactly its
+    * inputs and holds no staging or commit-marker leftovers. */
+  private def assertFoldLeftNothing(dir: String, inputs: Seq[String]): Unit = {
+    import graft.sources.sstable.LocalStorage
+    assert(LocalStorage.listDataFiles(dir).sorted == inputs.sorted)
+    assert(LocalStorage.listSubdirs(dir, "_staging").isEmpty)
+    assert(!LocalStorage.listFiles(dir).exists(_.contains("/_commit-")))
+  }
+
+  test("compactFiles over a Data.db with one flipped byte fails naming the file; nothing published") {
+    import graft.sources.sstable.{Column, CorruptSSTableException, SSTableRow, SSTableWriter}
+    val dir = Files.createTempDirectory("fold-corrupt").toString
+    val files = (0 until 3).map { g =>
+      val f = s"$dir/gen$g-Data.db"
+      val w = new SSTableWriter(f, chunkLength = 1024)
+      (0 until 400).foreach(i => w.append(SSTableRow(f"k$i%05d".getBytes,
+        Seq(Column.Normal("c".getBytes, s"v$g-$i".getBytes, g * 1000L + i)))))
+      w.close()
+      f
+    }
+    val damaged = files(1)
+    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(damaged))
+    bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 0x5a).toByte
+    java.nio.file.Files.write(java.nio.file.Paths.get(damaged), bytes)
+    val e = intercept[CorruptSSTableException](SSTableOps.compactFiles(spark, files, dir))
+    assert(e.getMessage.contains(damaged), e.getMessage)
+    assertFoldLeftNothing(dir, files)
+  }
+
+  test("compactFiles refuses an input whose keys go backwards, naming the file") {
+    import graft.sources.sstable.{Column, CorruptSSTableException, SSTableRow, SSTableWriter}
+    val dir = Files.createTempDirectory("fold-unsorted").toString
+    def gen(name: String, keys: Seq[String], sorted: Boolean): String = {
+      val f = s"$dir/$name-Data.db"
+      val w = new SSTableWriter(f, enforceSorted = sorted)
+      keys.foreach(k => w.append(SSTableRow(k.getBytes,
+        Seq(Column.Normal("c".getBytes, k.getBytes, 1L)))))
+      w.close()
+      f
+    }
+    val good = gen("good", Seq("a", "c", "e"), sorted = true)
+    val bad = gen("bad", Seq("b", "d", "c"), sorted = false)
+    val e = intercept[CorruptSSTableException](
+      SSTableOps.compactFiles(spark, Seq(good, bad), dir))
+    assert(e.getMessage.contains(bad) && e.getMessage.contains("backwards"), e.getMessage)
+    assertFoldLeftNothing(dir, Seq(good, bad))
+  }
+
+  test("a fold with no surviving rows publishes no generation") {
+    import graft.sources.sstable.{Column, RowTombstone, SSTableReader, SSTableRow, SSTableWriter}
+    val dir = Files.createTempDirectory("fold-empty").toString
+    // four isolated generations of one key; the newest row-tombstones it
+    (0 until 4).foreach { g =>
+      val w = new SSTableWriter(s"$dir/gen$g-Data.db")
+      w.append(if (g < 3) SSTableRow("k".getBytes,
+        Seq(Column.Normal("c".getBytes, s"v$g".getBytes, 10L + g)))
+      else SSTableRow("k".getBytes, Nil, Some(RowTombstone(1700000000, 100L))))
+      w.close()
+    }
+    assert(SSTableOps.compactInPlace(spark, dir, minThreshold = 4, minSize = 1L << 40) == 1)
+    assertFoldLeftNothing(dir, Nil)
+    assert(SSTableReader.get(dir, "k".getBytes).isEmpty)
   }
 
   test("diffDirs: compaction-preserving rewrites diff empty; real drift is localized") {

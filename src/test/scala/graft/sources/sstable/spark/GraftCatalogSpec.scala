@@ -919,6 +919,30 @@ class GraftCatalogSpec extends AnyFunSuite {
     spark.sql("DROP TABLE graft.ac.off")
   }
 
+  test("autocompact folds keep the table's writer tuning (deflate, compress=false, bucketed)") {
+    import graft.sources.sstable.{LocalStorage, SSTableReader}
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.tun")
+    def foldedGens(table: String, props: String): Seq[SSTableReader] = {
+      spark.sql(s"CREATE TABLE graft.tun.$table TBLPROPERTIES ($props, 'autocompact'='2')")
+      (1 to 4).foreach(e => insertRows(s"graft.tun.$table",
+        (0 until 3).map(i => (s"k$e$i", s"v$e", e.toLong))))
+      val files = LocalStorage.listDataFiles(s"$warehouse/tun/$table")
+      assert(files.exists(_.contains("fold-")), s"$table: no fold ran: $files")
+      assert(keysOf(spark.table(s"graft.tun.$table")) ==
+        (1 to 4).flatMap(e => (0 until 3).map(i => s"k$e$i")).sorted)
+      files.map(new SSTableReader(_, LocalStorage))
+    }
+    foldedGens("deflate", "'compressionalgorithm'='deflate'").foreach(r =>
+      assert(r.compressionInfo.exists(_.algorithm == "DeflateCompressor"),
+        s"${r.dataPath}: ${r.compressionInfo.map(_.algorithm)}"))
+    foldedGens("plain", "'compress'='false'").foreach(r =>
+      assert(r.compressionInfo.isEmpty, s"${r.dataPath} is compressed"))
+    foldedGens("bdeflate", "'buckets'='2', 'compressionalgorithm'='deflate'").foreach(r =>
+      assert(r.compressionInfo.exists(_.algorithm == "DeflateCompressor"),
+        s"${r.dataPath}: ${r.compressionInfo.map(_.algorithm)}"))
+    Seq("deflate", "plain", "bdeflate").foreach(t => spark.sql(s"DROP TABLE graft.tun.$t"))
+  }
+
   test("autocompact triggers on UPDATE/MERGE commits; delete-only gens don't starve it") {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.acd")
     spark.sql("CREATE TABLE graft.acd.t TBLPROPERTIES ('autocompact'='3')")
