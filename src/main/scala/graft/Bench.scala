@@ -44,39 +44,14 @@ object Bench {
     String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
 
   /** Frozen per-query steady-state seconds at sf0.1, local[32], quiet
-    * host (re-frozen round 9 per the r5/r7 protocol, closing VERDICT r8
-    * what's-wrong #3 — the adjudicated drift set q_para_dedup /
-    * q_dedup_ngram / q_sstable_delete / q_dedup_minhash had accumulated
-    * below the machine's warm floor, eroding the gate's signal-to-noise).
-    * Method: per-query MIN of THREE full quiet sweeps (totals
-    * 40.7/41.3/40.5 s, total_ratio vs the r7+additions map
-    * 1.064/1.080/1.058, zero errors, zero contended flags, spike sets
-    * pairwise disjoint), with the corroboration rule that the frozen
-    * value must have a second run within 1.3x; the one uncorroborated
-    * min (q_sstable_asof 0.348 vs next 0.482) froze the second-smallest.
-    * The r8 physical queries (q_sstable_sync/ctas/rollback) had been
-    * frozen from targeted COLD runs and re-freeze DOWN to their in-sweep
-    * steady state (0.231 -> 0.081, 0.401 -> 0.206, 0.385 -> 0.218) —
-    * the predicted colder-JVM correction, now corroborated three ways.
-    * Emitted as per-query `ratio` = measured/baseline so regressions —
-    * and host contention (see the `contended` flag) — are
-    * self-diagnosing in the BENCH artifact. Queries added later simply
-    * have no ratio until this map is re-frozen.
-    *
-    * Round-17 re-freeze (VERDICT r16 what's-wrong #1, the df/tfidf
-    * serving family): q_tfidf_probe 0.308 -> 0.436, q_text_stats_served
-    * 0.063 -> 0.165, q_df_retracted 0.106 -> 0.147, q_tfidf_retracted
-    * 0.357 -> 0.507. Documented cause — NOT a code regression: the
-    * prescribed r15-vs-r16 bisect (two worktrees, identical targeted
-    * harness, same window, controls at floor) read r16/r15 = 0.77-0.99x
-    * (r16 no slower), and the UNCHANGED r15 tree reproduces the same
-    * elevated absolutes against its own floors — the constant is
-    * environmental (host/testdata state drifted since the r15 freeze).
-    * New values are per-query MIN of three full quiet sweeps (totals
-    * 57.9/56.9/60.1, zero errors, controls q_setops 1.09/1.10 and
-    * q_cast_utf8 0.86-1.15 at floor), every min corroborated by a
-    * second sweep within 1.3x (1.02-1.22x). q_takedown_ledger frozen
-    * at its first two corroborated sweeps (0.108/0.126). NOTES #130. */
+    * host. Frozen by the three-sweep protocol: per-query MIN of three
+    * full quiet sweeps, and the frozen value must have a second run
+    * within 1.3x (else the second-smallest freezes). Emitted as
+    * per-query `ratio` = measured/baseline so regressions — and host
+    * contention (see the `contended` flag) — are self-diagnosing in the
+    * BENCH artifact. Queries added later simply have no ratio until
+    * this map is re-frozen. Each entry's round, sweeps and readings are
+    * in BASELINE.md. */
   val BaselineSf01: Map[String, Double] = Map(
     "q_agg_summary" -> 0.617, "q_ann_ivf" -> 0.601,
     "q_ann_ivfpq" -> 1.197, "q_ann_kmeans" -> 3.420,
@@ -107,116 +82,43 @@ object Bench {
     "q_sstable_bucketed" -> 0.219, "q_sstable_cells" -> 0.320,
     "q_sstable_compact" -> 0.401, "q_sstable_ctas" -> 0.206,
     "q_sstable_delete" -> 0.279, "q_sstable_merge" -> 0.120,
-    // r9 additions, corroborated min of two full in-sweep runs
-    // (autocompact 0.339/0.353, history 0.045/0.054) — the targeted
-    // runs used first (0.606/0.099) measured the colder JVM and were
-    // re-frozen the same session to avoid shipping slack entries
+    // r9 additions (BASELINE.md "Round-9 re-freeze")
     "q_sstable_autocompact" -> 0.339, "q_sstable_history" -> 0.045,
-    // r10 additions, per the protocol: per-query min of THREE full
-    // quiet sweeps (totals 39.2/38.0/39.1 s, total_ratio
-    // 1.010/0.979/1.005, zero errors, zero contended), both mins
-    // corroborated by a second run within 1.3x (rebucket
-    // 0.210/0.216/0.222, lookup 0.221/0.234/0.271). q_asof_forward —
-    // the r9 watch item (judge saw ~2x in cold 2-query JVMs) — read
-    // 0.504/0.520/0.535 in the same sweeps (1.04-1.10x of its frozen
-    // 0.486): the cold readings were JVM-warmth artifacts, the frozen
-    // warm floor stands, no re-freeze
+    // r10 additions (BASELINE.md "Round-10 additions")
     "q_sstable_rebucket" -> 0.210, "q_sstable_lookup" -> 0.221,
-    // late-r10 addition, same protocol (three further quiet sweeps,
-    // totals 39.8/36.2/34.8 s, total_ratio 1.018/0.927/0.891; undrop
-    // 0.283/0.246/0.246 — min corroborated exactly)
     "q_sstable_undrop" -> 0.246,
-    // r11 addition, same protocol: per-query min of THREE full quiet
-    // sf0.1 sweeps (totals 40.4/40.1/42.0 s, total_ratio
-    // 1.026/1.018/1.066, zero errors, zero contended; the >1.3x spike
-    // sets were pairwise-disjoint sub-second queries — noise band);
-    // lookup_join 0.341/0.343/0.398, min corroborated within 1.01x
+    // r11 additions (BASELINE.md, same section)
     "q_sstable_lookup_join" -> 0.341,
-    // late-r11 addition, same protocol (three further quiet sweeps,
-    // totals 38.8/38.3/42.3 s, total_ratio 0.975/0.964/1.063, zero
-    // errors, zero contended; objsim 0.339/0.336/0.400 — min
-    // corroborated within 1.01x)
     "q_sstable_objsim" -> 0.336,
-    // r13 additions, same protocol: per-query min of THREE full quiet
-    // sf0.1 sweeps (totals 38.0/51.0/47.4 s, total_ratio
-    // 1.89->0.89/1.20/1.11 — sweeps 2-3 ambient-elevated with disjoint
-    // spike sets; zero errors, zero contended). kmeans_served
-    // 0.665/0.783/0.869, ivfpq_served 1.745/2.237/2.372,
-    // dedup_incremental 0.154/0.193/0.201 — every min corroborated
-    // within 1.28x. The served queries price INDEX LOADING per run
-    // (their fixtures train + persist once per session): kmeans_served
-    // at 0.665 vs its in-query twin's 3.420 floor is the 5x serving
-    // win; ivfpq_served reads codes+codebooks where the twin reuses
-    // session-memoized trained relations, so its floor sits above the
-    // twin's — the honest price of serving from storage
+    // r13 additions (BASELINE.md "Round-13 additions"). The served
+    // queries price INDEX LOADING per run (their fixtures train and
+    // persist once per session), so ivfpq_served, which reads codes and
+    // codebooks from storage, sits above its session-memoized twin
     "q_ann_kmeans_served" -> 0.665, "q_ann_ivfpq_served" -> 1.745,
     "q_dedup_incremental" -> 0.154,
-    // late-r13 addition, same protocol (three further quiet sweeps,
-    // totals 47.1/48.1/53.1 s, total_ratio 1.083/1.109/1.218 — the
-    // third ambient-elevated with a disjoint spike set; zero errors;
-    // pq_served 1.264/1.231/1.528, min corroborated within 1.03x)
     "q_ann_pq_served" -> 1.231,
-    // r14 additions, same protocol: per-query min of THREE full sf0.1
-    // sweeps (total_ratio 1.047/1.184/0.993 — the second self-flagged
-    // contended with a broad disjoint spike set and is outvoted; zero
-    // errors). tfidf_served 0.740/0.761/0.660 (corroborated 1.12x),
-    // para_dedup_served 0.896/0.997/0.852 (1.05x), text_stats_served
-    // 0.076/0.079/0.063 (1.21x). The serving twins price the STORE
-    // reads per run (fixtures build the df store once per session):
-    // tfidf_served 0.660 vs its twin's 0.909 floor and
-    // para_dedup_served 0.852 vs 1.160 are the df-from-store wins;
-    // text_stats_served 0.063 vs q_text_stats' 0.227 is the
-    // zero-corpus-IO shape — the top-k runs on the vocabulary-sized
-    // store alone
+    // r14 additions (BASELINE.md "Round-14 to Round-17 floors"). The
+    // serving twins price the STORE reads per run (fixtures build the
+    // df store once per session)
     "q_tfidf_served" -> 0.660, "q_para_dedup_served" -> 0.852,
-    // r15-era floor 0.063 (see TighteningFloors below — ADVICE r17):
-    // the r17 environmental re-freeze raised it; a later quiet-host
-    // sweep reading at-or-under the old floor should tighten it back
+    // raised by the r17 environmental re-freeze; the r15-era floor is
+    // in TighteningFloors below
     "q_text_stats_served" -> 0.165,
-    // late-r14 addition, same protocol (three further quiet sweeps,
-    // total_ratio 0.989/0.954/0.953, zero errors, zero contended;
-    // delta 0.415/0.403/0.286 — the min uncorroborated at 1.41x, so
-    // the second-smallest froze per the r9 rule; the three earlier r14
-    // queries re-read inside their fresh floors in the same sweeps).
-    // The fixed-size ingest-batch slice costs ~0.4 s vs the full
-    // corpus twin's 0.909 — the corpus side shrank with the delta
     "q_tfidf_delta" -> 0.403,
-    // round-15 additions, frozen by the three-sweep protocol over SIX
-    // quiet sweeps (totals 54.8/52.6/47.8/51.6/43.1/40.3, ratios
-    // 1.078/1.034/0.963/1.036/0.877/0.818, zero errors): per-query MIN
-    // with the 1.3x corroboration rule (q_df_consolidated's 0.096 min
-    // was uncorroborated at 1.43x -> the second-smallest froze).
-    // q_ann_rerank froze from the three post-persist sweeps only (the
-    // un-persisted shortlist recomputed the whole ADC pipeline per
-    // branch — 2.4x the query cost, caught by the first freeze sweeps);
-    // its floor carries the brute-force recall baseline like every
-    // q_ann_* sibling
-    // r15-era floors: probe 0.308, retracted 0.357/0.106 (see
-    // TighteningFloors — the r17 re-freeze was environmental, not code)
+    // r15 additions; probe and the two retracted floors were raised by
+    // the r17 re-freeze (r15-era values in TighteningFloors)
     "q_tfidf_probe" -> 0.436, "q_df_consolidated" -> 0.137,
     "q_tfidf_retracted" -> 0.507, "q_df_retracted" -> 0.147,
     "q_ann_rerank" -> 2.146,
-    // round-16 additions, same protocol: per-query min of THREE quiet
-    // sf0.1 sweeps (totals 54.8/49.2/48.4 s, total_ratio
-    // 1.110/0.996/0.979 — the first cold-JVM-elevated; zero errors,
-    // zero contended, zero warm ratios over 1.5x). ann_drift
-    // 0.369/0.428/0.374 (min corroborated 1.01x), takedown
-    // 0.482/0.441/0.416 (1.06x). Both price their SERVING read only
-    // (fixtures build the index/stores once per session): ann_drift =
-    // one covering-index scan x broadcast centroids; takedown = the
-    // three membership relations unioned
+    // r16 additions; both price their SERVING read only (fixtures build
+    // the index and stores once per session)
     "q_ann_drift" -> 0.369, "q_takedown" -> 0.416,
     "q_takedown_ledger" -> 0.108,
-    // r19 additions (VERDICT r18 Next #6) — the r18 build-round queries,
-    // frozen by the established protocol: per-query MIN of the round's
-    // full quiet sweeps (four sweeps, total_ratio 1.011/0.864/0.880/0.831,
-    // zero errors, zero contended; both queries' code untouched in r19 so
-    // all four sweeps count), min corroborated within 1.3x
-    // (ledger_scoped 0.589/0.480/0.707/0.549 — 0.480 corroborated 1.14x;
-    // takedown_span 0.487/0.475/0.785/0.445 — 0.445 corroborated 1.07x).
-    // Their 4-13 s Verify-time readings are FIXTURE-BUILD cost (the
-    // takedown stores build once per session), not the queries
+    // r19 additions (BASELINE.md "Round-19 additions"). Their 4-13 s
+    // Verify-time readings are FIXTURE-BUILD cost (the takedown stores
+    // build once per session), not the queries
     "q_ledger_scoped" -> 0.480, "q_takedown_span" -> 0.445,
+    // the original map, continued
     "q_sstable_rollback" -> 0.218, "q_sstable_since" -> 0.238,
     "q_sstable_sync" -> 0.081, "q_sstable_topk" -> 0.044,
     "q_stratified" -> 0.191, "q_text_stats" -> 0.227,
@@ -224,17 +126,14 @@ object Bench {
     "q_tombstone_filter" -> 0.309, "q_ttl_expiry" -> 0.268,
     "q_window_topk" -> 0.401)
 
-  /** Re-tightening targets (ADVICE r17): the r17 serving-family
-    * re-freeze raised these floors on ENVIRONMENTAL evidence (the
-    * r15-vs-r16 worktree bisect exonerated the code) — each raise
-    * permanently weakens the 2x gate on exactly the family that
-    * drifted. The r15-era floors are preserved here so a later quiet
-    * host can tighten them back: a full sweep whose reading is at or
-    * under the old floor re-freezes DOWN to it (and a SECOND
-    * "environment drifted" raise on this family triggers a
-    * harness-level root-cause, never a third raise — VERDICT r17
-    * what's-wrong #3). Not consulted by the gate; adjudication
-    * reference only. */
+  /** Re-tightening targets (ADVICE r17): the r15-era floors that the
+    * r17 serving-family re-freeze raised on ENVIRONMENTAL evidence
+    * (BASELINE.md "Round-14 to Round-17 floors"). Each raise weakens the
+    * 2x gate on exactly the family that drifted, so a full sweep whose
+    * reading is at or under the old floor re-freezes DOWN to it, and a
+    * SECOND "environment drifted" raise on this family calls for a
+    * harness-level root cause, never a third raise. Not consulted by
+    * the gate; adjudication reference only. */
   private[graft] val TighteningFloors: Map[String, Double] = Map(
     "q_text_stats_served" -> 0.063, "q_tfidf_probe" -> 0.308,
     "q_tfidf_retracted" -> 0.357, "q_df_retracted" -> 0.106)

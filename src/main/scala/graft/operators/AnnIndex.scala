@@ -249,24 +249,10 @@ object AnnIndex {
         .select(substring(col("k"), 3, 5).cast("int").as("cell"),
           unpack_doubles(col("value")).as("cv"))
         .withColumn("cn", sqrt(vector_dot(col("cv"), col("cv"))))
-    def pqCodebooks: DataFrame =
-      cells.filter(col("k").startsWith("p:") && col("name") === "cv")
-        .select(element_at(split(col("k"), ":"), 2).cast("int").as("sub"),
-          element_at(split(col("k"), ":"), 3).cast("int").as("cell"),
-          unpack_doubles(col("value")).as("cv"))
-        .withColumn("cn", sqrt(vector_dot(col("cv"), col("cv"))))
     def vectorCells: DataFrame =
       cells.filter(col("k").startsWith("v:") && col("name") === "cell")
         .select(substring(col("k"), 3, 12).cast("long").as("vec_id"),
           col("value").cast("string").cast("int").as("cell"))
-    def vectorCodes(m: Int): DataFrame = {
-      val aggs = (0 until m).map(i =>
-        max(when(col("name") === s"code$i",
-          col("value").cast("string").cast("int"))).as(s"code$i"))
-      cells.filter(col("k").startsWith("v:") && col("name").startsWith("code"))
-        .groupBy(substring(col("k"), 3, 12).cast("long").as("vec_id"))
-        .agg(aggs.head, aggs.tail: _*)
-    }
     /** Free the snapshot's checkpoint blocks NOW (not at GC): the
       * handle makes this a real unpersist of the checkpointed RDD's
       * storage, closing the snapshot-accumulation leak a long-lived

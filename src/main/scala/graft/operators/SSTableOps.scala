@@ -260,22 +260,6 @@ object SSTableOps {
   def exportCompacted(df: DataFrame): DataFrame =
     exportMsgpackBase64(compactRows(df))
 
-  /** Full compaction job: read every SSTable generation under `inDir`,
-    * merge to the newest version of each cell (LWW + delete-wins ties,
-    * optional tombstone GC), and write ONE new sorted generation to
-    * `outDir`. This is the operation Cassandra runs forever and the
-    * reference could never do (read-only library, SURVEY.md §2.2) —
-    * here it's a three-line composition: DSv2 scan (splits + locality) →
-    * [[compactRows]] hash-agg → DSv2 sorted write (staged commit). The
-    * only shuffles are the merge's (key, name) hash-agg and the writer's
-    * cluster-by-key sort — both scale-shaped. */
-  def compact(spark: org.apache.spark.sql.SparkSession, inDir: String,
-              outDir: String, gcTombstones: Boolean = false): Unit = {
-    val merged = compactRows(spark.read.format("sstable").load(inDir))
-    val out = if (gcTombstones) suppressTombstones2(merged) else merged
-    out.write.format("sstable").mode("overwrite").save(outDir)
-  }
-
   /** Size-tiered compaction planning (Cassandra's STCS): bucket the
     * directory's generations by size similarity — walking files
     * smallest-first, a file joins the current bucket while its size is
@@ -326,9 +310,12 @@ object SSTableOps {
   }
 
   /** Fold ONE planned bucket of generations into a single sorted
-    * generation in `outDir` (the [[compact]] shape restricted to the
-    * bucket's files — generations outside the bucket are untouched, the
-    * STCS/LCS maintenance step).
+    * generation in `outDir`: merge to the newest version of each cell
+    * (LWW + delete-wins ties) over the bucket's files only — generations
+    * outside the bucket are untouched, the STCS/LCS maintenance step.
+    * Passing every file of a directory is a full compaction, and the
+    * whole directory is key-isolated by construction, so `gc = true` is
+    * then always safe.
     *
     * `gc = true` additionally drops tombstones from the fold output —
     * ONLY legal when the caller has PROVEN the bucket key-isolated: no
@@ -542,18 +529,28 @@ object SSTableOps {
     * model). */
   def compactInPlace(spark: org.apache.spark.sql.SparkSession, dir: String,
                      minThreshold: Int = 4, maxThreshold: Int = 32,
-                     minSize: Long = 50L * 1024 * 1024): Int = {
+                     minSize: Long = 50L * 1024 * 1024): Int =
+    foldPlannedInPlace(spark, dir, "compactInPlace", "compact")(storage =>
+      planCompaction(dir, minThreshold, maxThreshold, minSize = minSize,
+        storage = storage))
+
+  /** The in-place size-tier/run compactors' one skeleton: refuse a
+    * bucketed layout, take the maintenance lease as `holder`, plan under
+    * it, fold each planned bucket through [[foldBucketInPlace]] and
+    * record ONE `op` history event. Returns the number of buckets
+    * folded. */
+  private def foldPlannedInPlace(spark: org.apache.spark.sql.SparkSession,
+                                 dir: String, holder: String, op: String)(
+      plan: graft.sources.sstable.Storage => Seq[Seq[String]]): Int = {
     val storage = graft.sources.sstable.Storage.forPath(
       dir, spark.sessionState.newHadoopConf())
-    refuseBucketedLayout(dir, storage, "compactInPlace")
-    graft.sources.sstable.MaintenanceLease.withLease(dir, storage,
-      "compactInPlace") { lease =>
-      val buckets = planCompaction(dir, minThreshold, maxThreshold,
-        minSize = minSize, storage = storage)
+    refuseBucketedLayout(dir, storage, holder)
+    graft.sources.sstable.MaintenanceLease.withLease(dir, storage, holder) { lease =>
+      val buckets = plan(storage)
       // fresh listing per bucket inside the fold helper: earlier folds
       // changed the directory (their outputs must count as overlap
       // candidates, their deleted inputs must not be stat'd)
-      recordingFolds(storage, dir, "compact") {
+      recordingFolds(storage, dir, op) {
         buckets.count(foldBucketInPlace(spark, dir, _, storage, lease))
       }
     }
@@ -585,7 +582,6 @@ object SSTableOps {
   private def refuseBucketedLayout(dir: String,
                                    storage: graft.sources.sstable.Storage,
                                    what: String): Unit = {
-    import graft.sources.sstable.{SSTableFiles, spark => sparksrc}
     val files = storage.listDataFiles(dir)
     // ANY bucket-stemmed generation refuses (review r8): requiring ALL
     // would let a bucketed directory contaminated by one plain path-API
@@ -593,13 +589,26 @@ object SSTableOps {
     // the unrecoverable layout destruction this exists to prevent. A
     // mixed directory has NO compaction path on purpose: evict the
     // foreign generation first (only bucketed writers produce the stem).
-    require(!files.exists(f =>
-      sparksrc.SSTableSource.BucketNameRe.matches(SSTableFiles.generationStem(f))),
+    require(!files.exists(bucketOf(_).isDefined),
       s"$what on a directory holding bucket-NNNNN generations would fold " +
         s"across hash buckets and destroy the bucketed layout contract: $dir " +
         "— use compactBucketedInPlace (CALL graft.system.compact_bucketed); " +
         "if the directory is MIXED, remove the non-bucket generations first")
   }
+
+  /** The hash bucket a generation's `bucket-NNNNN-` stem names, if any. */
+  private def bucketOf(f: String): Option[Int] =
+    graft.sources.sstable.SSTableFiles.generationStem(f) match {
+      case graft.sources.sstable.spark.SSTableSource.BucketNameRe(b) => Some(b.toInt)
+      case _ => None
+    }
+
+  /** The bucket-stemmed members of `files` as per-bucket generation
+    * chains, by bucket, each chain sorted. Other files are left out. */
+  private def bucketChains(files: Seq[String]): Seq[(Int, Seq[String])] =
+    files.flatMap(f => bucketOf(f).map((_, f)))
+      .groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (b, members) => (b, members.map(_._2).sorted) }
 
   /** Layout-preserving compaction for [[writeBucketed]] directories:
     * fold each hash bucket's generation CHAIN into one generation
@@ -625,23 +634,17 @@ object SSTableOps {
   def compactBucketedInPlace(spark: org.apache.spark.sql.SparkSession,
                              dir: String, minThreshold: Int = 2,
                              parallelism: Int = 0): Int = {
-    import graft.sources.sstable.SSTableFiles
-    import graft.sources.sstable.spark.SSTableSource
     require(minThreshold >= 2, s"minThreshold must be >= 2: $minThreshold")
     val storage = graft.sources.sstable.Storage.forPath(
       dir, spark.sessionState.newHadoopConf())
     def plan(): Seq[(Int, Seq[String])] = {
-      val parsed = storage.listDataFiles(dir).map { f =>
-        SSTableFiles.generationStem(f) match {
-          case SSTableSource.BucketNameRe(b) => (b.toInt, f)
-          case _ => throw new IllegalArgumentException(
-            s"not a bucketed generation (want bucket-NNNNN-*): $f — " +
-              "compactBucketedInPlace maintains writeBucketed directories only")
-        }
+      val files = storage.listDataFiles(dir)
+      files.find(bucketOf(_).isEmpty).foreach { f =>
+        throw new IllegalArgumentException(
+          s"not a bucketed generation (want bucket-NNNNN-*): $f — " +
+            "compactBucketedInPlace maintains writeBucketed directories only")
       }
-      parsed.groupBy(_._1).toSeq.sortBy(_._1)
-        .map { case (b, members) => (b, members.map(_._2).sorted) }
-        .filter(_._2.length >= minThreshold)
+      bucketChains(files).filter(_._2.length >= minThreshold)
     }
     // cheap lease-free early-out for the nothing-to-do case only; the
     // AUTHORITATIVE plan is re-built under the lease (ADVICE r9: a
@@ -739,8 +742,7 @@ object SSTableOps {
     * Returns the number of folds run (0 = under the bound / skipped). */
   def autoCompact(spark: org.apache.spark.sql.SparkSession, dir: String,
                   threshold: Int, buckets: Option[Int]): Int = {
-    import graft.sources.sstable.{MaintenanceLease, SSTableFiles}
-    import graft.sources.sstable.spark.SSTableSource
+    import graft.sources.sstable.MaintenanceLease
     require(threshold >= 2,
       s"autocompact threshold must be >= 2 (1 would rewrite the whole " +
         s"directory every commit): $threshold")
@@ -756,14 +758,7 @@ object SSTableOps {
     // that pushed the raw count over the bound never fold here.
     // Rechecked under the lease before folding.
     def chainsOver(files: Seq[String]): Seq[(Int, Seq[String])] =
-      files.flatMap { f =>
-        SSTableFiles.generationStem(f) match {
-          case SSTableSource.BucketNameRe(b) => Some((b.toInt, f))
-          case _ => None
-        }
-      }.groupBy(_._1).toSeq.sortBy(_._1)
-        .map { case (b, members) => (b, members.map(_._2).sorted) }
-        .filter(_._2.length > threshold)
+      bucketChains(files).filter(_._2.length > threshold)
     def dataGensOf(files: Seq[String]): Seq[String] =
       files.filterNot { f =>
         // a file that vanished between the LIST and its sidecar read
@@ -794,8 +789,7 @@ object SSTableOps {
               else foldBucketsPooled(dir, storage, chains,
                 parallelism = 0, lease)
             case None =>
-              if (now.exists(f => SSTableSource.BucketNameRe.matches(
-                  SSTableFiles.generationStem(f)))) 0 // contaminated: skip, never fold across buckets
+              if (now.exists(bucketOf(_).isDefined)) 0 // contaminated: skip, never fold across buckets
               else {
                 // the bound applies to DATA generations: delete-only
                 // generations are withheld from carrying folds anyway
@@ -846,12 +840,7 @@ object SSTableOps {
       // that landed in this bucket mid-fold would be silently merged
       // away by our unpublish below — withdraw instead and let the
       // next pass fold the grown chain
-      val nowChain = storage.listDataFiles(dir).filter { f =>
-        SSTableFiles.generationStem(f) match {
-          case SSTableSource.BucketNameRe(bb) => bb.toInt == b
-          case _ => false
-        }
-      }.sorted
+      val nowChain = storage.listDataFiles(dir).filter(bucketOf(_).contains(b)).sorted
       if (nowChain != chain) false
       else {
         // fence before mutating the live layout (publish + input
@@ -895,18 +884,9 @@ object SSTableOps {
     * Same single-maintainer contract as [[compactInPlace]]. */
   def compactTombstonesInPlace(spark: org.apache.spark.sql.SparkSession,
                                dir: String,
-                               ratioThreshold: Double = 0.2): Int = {
-    val storage = graft.sources.sstable.Storage.forPath(
-      dir, spark.sessionState.newHadoopConf())
-    refuseBucketedLayout(dir, storage, "compactTombstonesInPlace")
-    graft.sources.sstable.MaintenanceLease.withLease(dir, storage,
-      "compactTombstonesInPlace") { lease =>
-      val picks = planTombstoneCompaction(dir, ratioThreshold, storage)
-      recordingFolds(storage, dir, "compact_tombstones") {
-        picks.count(foldBucketInPlace(spark, dir, _, storage, lease))
-      }
-    }
-  }
+                               ratioThreshold: Double = 0.2): Int =
+    foldPlannedInPlace(spark, dir, "compactTombstonesInPlace",
+      "compact_tombstones")(planTombstoneCompaction(dir, ratioThreshold, _))
 
   /** Manifest-free leveled-compaction view of a directory (LCS option,
     * VERDICT r4 #7): group the generations into sorted RUNS — sets of
@@ -1013,18 +993,9 @@ object SSTableOps {
     * repeatedly until 0 to reach the `maxRuns` invariant (same
     * concurrent-reader window argument as [[compactInPlace]]). */
   def compactLeveledInPlace(spark: org.apache.spark.sql.SparkSession, dir: String,
-                            maxRuns: Int = 4, maxThreshold: Int = 32): Int = {
-    val storage = graft.sources.sstable.Storage.forPath(
-      dir, spark.sessionState.newHadoopConf())
-    refuseBucketedLayout(dir, storage, "compactLeveledInPlace")
-    graft.sources.sstable.MaintenanceLease.withLease(dir, storage,
-      "compactLeveledInPlace") { lease =>
-      val buckets = planCompactionLeveled(dir, maxRuns, maxThreshold, storage)
-      recordingFolds(storage, dir, "compact_leveled") {
-        buckets.count(foldBucketInPlace(spark, dir, _, storage, lease))
-      }
-    }
-  }
+                            maxRuns: Int = 4, maxThreshold: Int = 32): Int =
+    foldPlannedInPlace(spark, dir, "compactLeveledInPlace",
+      "compact_leveled")(planCompactionLeveled(dir, maxRuns, maxThreshold, _))
 
   /** Tombstone GC over an already-compacted relation: row-shadowed columns
     * are already gone ([[compactRows]]), so drop the DELETED cell markers

@@ -99,22 +99,16 @@ object SimilarityQueries {
       col("v"), col("nrm"))
     var lastCent: DataFrame = null
     for (i <- 1 to iters) {
-      // Checkpoint the K-ROW CENTROIDS every iteration (r19 adjudication
-      // of the r18 "lazy loop" claim, VERDICT r18 #3): the r18
-      // final-only checkpoint did NOT reproduce its claimed ~0.9 s win —
-      // the driver read q_ann_kmeans flat vs its 3.420 floor, and the
-      // r19 `PerfProbe kmeans` shape probe (3 warm reps, sf0.1,
-      // local[32]) measured the lazy chain at 3.2-3.6 s vs 2.8-2.9 s
-      // with per-iteration centroid checkpoints (driver planning of the
-      // lazy chain costs only 0.2-0.4 s — the rest is execution-side
-      // cost of the `iters`-deep nested-broadcast plan). Unlike the r17
-      // shape (eager CORPUS-SIZED assignment materialization every
-      // iteration — at 100 TB, `iters` round-trips of the corpus
-      // through block storage), the relation checkpointed here is k
-      // rows: negligible at any scale, plans stay shallow for arbitrary
-      // `iters` (the ADVICE r18 analyzer-blowup guard), and the
-      // assignment chain stays lazy — it derives from cached base +
-      // broadcast centroids and materializes exactly once, at the end.
+      // Checkpoint the K-ROW CENTROIDS every iteration: a final-only
+      // checkpoint leaves an `iters`-deep nested-broadcast plan that
+      // measured slower to execute, not just to plan (NOTES.md item 142,
+      // OPTIMIZATION_r19.md). The relation checkpointed is k rows:
+      // negligible at any scale, plans stay shallow for arbitrary
+      // `iters` (no analyzer blow-up), and the assignment chain stays
+      // lazy — it derives from cached base + broadcast centroids and
+      // materializes exactly once, at the end. Checkpointing the
+      // corpus-sized assignment instead would round-trip the corpus
+      // through block storage every iteration.
       val cent = medianCentroids(assigned).localCheckpoint()
       lastCent = cent
       // Best cell as a NARROW per-row fold over the k broadcast

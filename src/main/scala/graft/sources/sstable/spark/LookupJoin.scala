@@ -60,12 +60,10 @@ object SSTableLookupJoin {
     * to probe — past the gate, the scan+join (with runtime-filter split
     * pruning) wins and built-in planning keeps it.
     *
-    * Measured (PerfProbe `probejoin`, 16 generations × 50k rows ≈ 50 MB,
-    * local[8]): ~0.7 ms/probe flat in table size vs ~0.3 s steady-state
-    * scan+join — crossover ≈ 400 probes at THAT table size, and the
-    * scan side scales linearly with the table while probes don't, so on
-    * the 100 TB design target every broadcast-admissible probe set wins
-    * by orders of magnitude. Against genuinely SMALL tables a
+    * Probe cost is flat in table size while the scan side grows
+    * linearly with it (crossover ≈ 400 probes on a 50 MB table, NOTES.md
+    * item 79), so on the 100 TB design target every
+    * broadcast-admissible probe set wins by orders of magnitude. Against genuinely SMALL tables a
     * large-but-broadcastable probe set can lose seconds to the scan
     * plan; tune this key down (or flip the kill switch) for workloads
     * that join key lists against small reference tables. */

@@ -116,8 +116,9 @@ final class SSTableWrite(path: String, schema: StructType,
 
   /** Micro-batch streaming sink: each epoch commits one SSTable
     * generation (a set of sorted filesets) into the target directory —
-    * continuous ingestion that [[graft.operators.SSTableOps.compact]]
-    * periodically folds into a single generation. Spark honors the same
+    * continuous ingestion that the in-place compactors
+    * ([[graft.operators.SSTableOps.compactInPlace]], `autocompact`)
+    * periodically fold into fewer generations. Spark honors the same
     * clustering+ordering requirement per micro-batch, so every epoch's
     * tasks stream sorted rows just like the batch path. */
   override def toStreaming: StreamingWrite =
@@ -287,10 +288,9 @@ final class SSTableBatchWrite(path: String, schema: StructType,
     }
     st.mkdirs(stagingDir)
     if (retryable) startHeartbeat(st)
-    // in-directory staging used to create the target as a side effect;
-    // outside staging must do it explicitly or the FIRST write into a
-    // fresh directory fails at the commit marker's create (caught by
-    // PerfProbe lifecycle)
+    // outside staging does not create the target as a side effect, so
+    // create it here or the FIRST write into a fresh directory fails at
+    // the commit marker's create (NOTES.md item 72)
     if (retryable) st.mkdirs(path)
     val t = WriterTuning.of(properties)
     SSTableSource.bucketsOf(properties.get(SSTableSource.WriteBucketsOption)) match {

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * key-range filter (partition pruning) and a key-only projection
   * (index-only scan), and prints the physical plans.
   *
-  * Run: `sbt "runMain graft.SSTableDemo /tmp/sstable-demo"`.
+  * Run: `sbt "Test/runMain graft.SSTableDemo /tmp/sstable-demo"`.
   */
 object SSTableDemo {
   def main(args: Array[String]): Unit = {

@@ -1,0 +1,38 @@
+package graft
+
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** `src/main` ships the product only. Its entry points are the three
+  * mains the driver contract names; demos and dev probes live in test
+  * sources (`sbt "Test/runMain graft.SSTableDemo"`, `graft.DevProbes`),
+  * so a new dev entry point in `src/main` fails here instead of
+  * shipping unnoticed. */
+class SourceLayoutSpec extends AnyFunSuite {
+
+  private val main = Paths.get("src", "main")
+
+  private def mainSources: Seq[(Path, String)] = {
+    assert(Files.isDirectory(main), s"run from the repository root: $main missing")
+    val walk = Files.walk(main)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      .map(p => p -> new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
+    finally walk.close()
+  }
+
+  test("src/main defines main only in Bench, Verify and PlanDump") {
+    val withMain = mainSources.collect {
+      case (p, text) if text.contains("def main(") => p.getFileName.toString
+    }.sorted
+    assert(withMain == Seq("Bench.scala", "PlanDump.scala", "Verify.scala"))
+  }
+
+  test("no src/main file mentions PerfProbe") {
+    val mentions = mainSources.collect {
+      case (p, text) if text.contains("PerfProbe") => p.toString
+    }
+    assert(mentions.isEmpty, s"dev probes belong in test sources: $mentions")
+  }
+}

@@ -155,7 +155,7 @@ class SSTableOpsSpec extends AnyFunSuite {
       .write.format("sstable").mode("append").save(dir)
     assert(graft.sources.sstable.SSTableReader.listDataFiles(dir).size >= 2)
 
-    SSTableOps.compact(spark, dir, out)
+    SSTableOps.compactFiles(spark, graft.sources.sstable.SSTableReader.listDataFiles(dir), out)
     val merged = spark.read.format("sstable").load(out)
       .select(col("key").cast("string").as("k"), explode(col("columns")).as("c"))
       .select(col("k"), col("c.name").cast("string"), col("c.state"),
@@ -169,7 +169,8 @@ class SSTableOpsSpec extends AnyFunSuite {
 
     // with GC: tombstones dropped, fully-deleted rows vanish
     val outGc = Files.createTempDirectory("compact-gc").toString
-    SSTableOps.compact(spark, dir, outGc, gcTombstones = true)
+    SSTableOps.compactFiles(spark, graft.sources.sstable.SSTableReader.listDataFiles(dir), outGc,
+      gc = true)
     val gc = spark.read.format("sstable").load(outGc)
       .select(explode(col("columns")).as("c")).select(col("c.state"))
       .as[String].collect()
@@ -267,7 +268,7 @@ class SSTableOpsSpec extends AnyFunSuite {
 
     // compact the two generations: "gone" persists as a pure-tombstone row
     val out = Files.createTempDirectory("tomb-compact").toString
-    SSTableOps.compact(spark, dir, out)
+    SSTableOps.compactFiles(spark, graft.sources.sstable.SSTableReader.listDataFiles(dir), out)
     val compacted = spark.read.format("sstable").load(out)
     val gone = compacted.filter(col("key") === lit("gone".getBytes))
     assert(gone.count() == 1)
@@ -283,7 +284,8 @@ class SSTableOpsSpec extends AnyFunSuite {
 
     // GC compaction drops the tombstone row entirely
     val outGc = Files.createTempDirectory("tomb-gc").toString
-    SSTableOps.compact(spark, dir, outGc, gcTombstones = true)
+    SSTableOps.compactFiles(spark, graft.sources.sstable.SSTableReader.listDataFiles(dir), outGc,
+      gc = true)
     val gcKeys = spark.read.format("sstable").load(outGc)
       .select(col("key").cast("string")).as[String].collect().toSeq
     assert(gcKeys == Seq("kept"))
@@ -998,7 +1000,7 @@ class SSTableOpsSpec extends AnyFunSuite {
     gen(in, "g2", Seq(("a", "new", 5L), ("c", "cv", 3L)))
     // compacting into a single generation must be diff-invisible
     val out = Files.createTempDirectory("diff-out").toString
-    SSTableOps.compact(spark, in, out)
+    SSTableOps.compactFiles(spark, graft.sources.sstable.SSTableReader.listDataFiles(in), out)
     assert(SSTableOps.diffDirs(spark, in, out).count() == 0,
       "compaction changed the merged state")
     // drift: a copy missing one key, one key changed, one key extra

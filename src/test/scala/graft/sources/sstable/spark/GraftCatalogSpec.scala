@@ -109,10 +109,10 @@ class GraftCatalogSpec extends AnyFunSuite {
     b4.testBetweenPublishAndVerify = swap(_ => ())
     val e4 = intercept[IllegalStateException](b4.commit(Array(m4)))
     assert(e4.getMessage.contains("REPLACED"), e4.getMessage)
-    // 5. a retryable write into a FRESH directory creates it — the
-    //    in-directory staging used to do that as a side effect, and
-    //    outside staging must not lose it (PerfProbe caught the first
-    //    write into a new dir dying at the commit marker's create)
+    // 5. a retryable write into a FRESH directory creates it: outside
+    //    staging creates no target as a side effect, and without it the
+    //    first write into a new dir dies at the commit marker's create
+    //    (NOTES.md item 72)
     val fresh = s"$warehouse/rt/freshdir"
     val (b5, m5) = stagedWrite("race5", retry = true, target = fresh)
     b5.commit(Array(m5))
