@@ -341,8 +341,8 @@ object SSTableOps {
     * the fold's bytes pass through this JVM, not an executor.
     *
     * The output is staged under `outDir/_staging-<tag>/` and published
-    * like a DSv2 commit: [[graft.sources.sstable.spark.CommitIntegrity]]
-    * marker around a siblings-first, Data.db-last rename. No history
+    * through the write path's one commit
+    * ([[graft.sources.sstable.spark.FilesetCommit]]). No history
     * event — the surrounding maintenance op records ONE event with the
     * whole before/after diff. Returns the published Data.db paths
     * (empty when no row survives — a fully deleted bucket publishes
@@ -376,7 +376,7 @@ object SSTableOps {
   private def stageFold(inputs: graft.sources.sstable.Storage, files: Seq[String],
                         storage: graft.sources.sstable.Storage, dir: String,
                         tag: String, stem: String, gc: Boolean): Option[String] = {
-    import graft.sources.sstable.{SSTableFiles, SSTableReader, SSTableWriter}
+    import graft.sources.sstable.{SSTableFiles, SSTableReader}
     import graft.sources.sstable.spark.{GraftCatalog, WriterTuning}
     val t = WriterTuning.of(GraftCatalog.tableProps(storage, dir))
     val fold = new SSTableReader.Fold(files, inputs, gc)
@@ -385,26 +385,19 @@ object SSTableOps {
       else {
         val staged = s"$dir/_staging-$tag/$stem${SSTableFiles.DataSuffix}"
         storage.mkdirs(s"$dir/_staging-$tag")
-        val w = new SSTableWriter(staged, t.compress, t.chunkLength,
-          t.summaryInterval, bloomBitsPerKey = t.bloomBitsPerKey,
-          algorithm = t.algorithm, storage = storage)
+        val w = t.open(staged, storage)
         try fold.foreach(w.append) finally w.close()
         Some(staged)
       }
     } finally fold.close()
   }
 
-  /** Publish a staged fold output into `dir` the way a DSv2 commit
-    * does — integrity marker first, siblings before Data.db, marker
-    * verified last — and return its published Data.db path as `dir`'s
-    * listing spells it. */
+  /** Publish a staged fold output into `dir` through the write path's
+    * one commit ([[graft.sources.sstable.spark.FilesetCommit]]) and
+    * return its published Data.db path as `dir`'s listing spells it. */
   private def publishFold(storage: graft.sources.sstable.Storage, dir: String,
                           tag: String, staged: String): Seq[String] = {
-    import graft.sources.sstable.SSTableFiles
-    import graft.sources.sstable.spark.CommitIntegrity
-    val marker = CommitIntegrity.begin(storage, dir, tag)
-    SSTableFiles.publish(storage, staged, dir)
-    CommitIntegrity.verifyAndEnd(storage, dir, marker)
+    graft.sources.sstable.spark.FilesetCommit(storage, dir, tag, Seq(staged))
     val name = staged.substring(staged.lastIndexOf('/'))
     storage.listDataFiles(dir).filter(_.endsWith(name))
   }
@@ -1027,20 +1020,16 @@ object SSTableOps {
     * not relational algebra Catalyst could optimize. */
   def lookupJoin(keys: DataFrame, dir: String,
                  gcTombstones: Boolean = true): DataFrame = {
-    import graft.sources.sstable.{SSTableReader, LocalStorage, Storage, HadoopStorage, SerializableHadoopConf}
+    import graft.sources.sstable.{SSTableReader, StorageHandle}
     import graft.sources.sstable.spark.SSTableSchema
     val spark = keys.sparkSession
-    val serConf: Option[SerializableHadoopConf] =
-      if (Storage.hasScheme(dir))
-        Some(new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
-      else None
+    val handle = StorageHandle(dir, spark.sessionState.newHadoopConf())
     val gc = gcTombstones
     // SQL equi-join semantics: a NULL probe key matches nothing (and the
     // probe loop would NPE on it)
     val out = keys.select(col("key")).filter(col("key").isNotNull)
       .queryExecution.toRdd.mapPartitions { it =>
-      val storage: Storage =
-        serConf.map(c => new HadoopStorage(c.value): Storage).getOrElse(LocalStorage)
+      val storage = handle.get
       // one listing + one (cached) metadata load per partition, not per key
       val prober = new SSTableReader.DirectoryProber(dir, storage)
       it.flatMap { row =>
@@ -1354,15 +1343,7 @@ object SSTableOps {
       val live = storage.listDataFiles(dir)
       val liveNames = live.map(fileName).toSet
       val restored = pinFiles.filterNot(p => liveNames.contains(fileName(p)))
-      restored.foreach { dataPath =>
-        SSTableFiles.PublishOrderSuffixes.foreach { suf =>
-          val src = SSTableFiles.sibling(dataPath, suf)
-          if (storage.exists(src)) {
-            val dst = s"$dir/${fileName(src)}"
-            if (!storage.exists(dst)) storage.link(src, dst)
-          }
-        }
-      }
+      restored.foreach(SSTableFiles.publishLinked(storage, _, dir, tolerateExisting = true))
       // removal set from the ONE pre-phase-1 listing: everything phase 1
       // added is in pinNames and would be filtered out anyway, and under
       // the maintenance lease nothing else changed — a second LIST over
@@ -1488,8 +1469,8 @@ object SSTableOps {
     * `sstablescrub`): a generation that fails decode or sort order is
     * salvaged instead of just reported — the decodable good prefix
     * (re-sorted if that's the damage) is rewritten as a fresh staged
-    * generation in the same directory, published siblings-first/
-    * Data.db-last, and only then is the corrupt fileset moved
+    * generation in the same directory, published through the write
+    * path's one commit, and only then is the corrupt fileset moved
     * Data.db-first into a `_corrupt-<tag>/` quarantine subdirectory
     * (invisible to readers, recoverable by offline tooling — the
     * original is never destroyed, even when nothing was salvageable) —
@@ -1503,18 +1484,14 @@ object SSTableOps {
     * nothing salvageable) and `repairError`. */
   def scrub(spark: org.apache.spark.sql.SparkSession, dir: String,
             repair: Boolean = false): DataFrame = {
-    import graft.sources.sstable.{HadoopStorage, LocalStorage, SSTableFiles, SSTableReader, SerializableHadoopConf, Storage}
+    import graft.sources.sstable.{SSTableFiles, SSTableReader, Storage, StorageHandle}
     import spark.implicits._
-    val serConf: Option[SerializableHadoopConf] =
-      if (Storage.hasScheme(dir))
-        Some(new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
-      else None
+    val handle = StorageHandle(dir, spark.sessionState.newHadoopConf())
     val driverStorage = Storage.forPath(dir, spark.sessionState.newHadoopConf())
     val files = driverStorage.listDataFiles(dir)
     def audit() = spark.sparkContext.parallelize(files, math.max(1, files.length))
       .map { f =>
-        val storage: Storage =
-          serConf.map(c => new HadoopStorage(c.value): Storage).getOrElse(LocalStorage)
+        val storage = handle.get
         val r = new SSTableReader(f, storage)
         var rows = 0L
         var sorted = true
@@ -1592,7 +1569,9 @@ object SSTableOps {
     * Scale shape: one `repartitionAndSortWithinPartitions` (the same
     * single shuffle the generic sorted write pays), then each task
     * streams its bucket through [[graft.sources.sstable.SSTableWriter]]
-    * via a staged-commit publish — siblings first, Data.db last. The
+    * and the job publishes through the write path's one commit
+    * ([[graft.sources.sstable.spark.FilesetCommit]]): a dropped or
+    * mid-restore catalog directory refuses, nothing published. The
     * bucket function is fixed at write time; only the LAYOUT contract
     * matters to readers (same key ⇒ same bucket id ⇒ same file stem),
     * never the function itself. Size `buckets` to the target
@@ -1603,20 +1582,15 @@ object SSTableOps {
     require(buckets <= graft.sources.sstable.spark.SSTableSource.MaxBuckets,
       s"buckets must be <= ${graft.sources.sstable.spark.SSTableSource.MaxBuckets} " +
         s"(the bucket-NNNNN generation-name format is five digits): $buckets")
-    import graft.sources.sstable.{HadoopStorage, LocalStorage, SSTableFiles, SerializableHadoopConf, Storage}
-    import graft.sources.sstable.spark.{SSTableCommit, SSTablePartitionWriter, SSTableSource}
+    import graft.sources.sstable.{SSTableFiles, Storage, StorageHandle}
+    import graft.sources.sstable.spark.{FilesetCommit, SSTableCommit, SSTablePartitionWriter, SSTableSource, WriterTuning}
     val spark = df.sparkSession
-    val serConf: Option[SerializableHadoopConf] =
-      if (Storage.hasScheme(dir))
-        Some(new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
-      else None
+    val handle = StorageHandle(dir, spark.sessionState.newHadoopConf())
     val tag = java.util.UUID.randomUUID().toString.take(8)
     val stagingDir = s"$dir/_staging-bucketed-$tag"
     val driverStorage = Storage.forPath(dir, spark.sessionState.newHadoopConf())
-    driverStorage match {
-      case LocalStorage => new java.io.File(stagingDir).mkdirs()
-      case _ => // Hadoop create() makes parents
-    }
+    driverStorage.mkdirs(stagingDir)
+    val tuning = WriterTuning.Default.copy(compress = compress)
     // one shuffle: route each row to its bucket and sort by key within it
     val withB = df.withColumn("_wb",
       pmod(xxhash64(col("key")), lit(buckets.toLong)).cast("int"))
@@ -1640,19 +1614,15 @@ object SSTableOps {
     val staged = parted.mapPartitionsWithIndex { (bucket, rows) =>
       if (!rows.hasNext) Iterator.empty // empty bucket: no generation
       else {
-        val storage: Storage =
-          serConf.map(c => new HadoopStorage(c.value): Storage).getOrElse(LocalStorage)
+        val storage = handle.get
         // attempt-unique staged stem: under speculation (or a zombie
         // first attempt) two attempts of the same bucket write disjoint
         // staging files; only the attempt whose result reaches collect()
         // is published, renamed to the canonical attempt-less stem below
         val attempt = Option(org.apache.spark.TaskContext.get())
           .map(_.taskAttemptId()).getOrElse(0L)
-        val w = new SSTablePartitionWriter(stagingDir, schema, bucket, bucket,
-          compress, graft.sources.sstable.CompressionInfo.DefaultChunkLength,
-          graft.sources.sstable.IndexFile.DefaultSummaryInterval,
-          graft.sources.sstable.FilterFile.DefaultBitsPerKey, storage,
-          fileStem = SSTableSource.bucketStem(bucket) + tag + s"-attempt-$attempt")
+        val w = new SSTablePartitionWriter(stagingDir, schema, tuning, storage,
+          SSTableSource.bucketStem(bucket) + tag + s"-attempt-$attempt")
         var ok = false
         try {
           rows.foreach { case (_, r) => w.write(r) }
@@ -1662,47 +1632,35 @@ object SSTableOps {
         } finally if (!ok) w.abort()
       }
     }.collect() // tiny: one Data.db path per non-empty bucket
-    // job "commit": publish every staged fileset siblings-first/Data-last
-    // under the canonical attempt-less name (exactly one winner per
-    // bucket — collect() carries one successful attempt's paths), then
-    // drop the staging dir with any losing attempts' leftovers
-    staged.foreach { data =>
-      SSTableFiles.PublishOrderSuffixes.foreach { suf =>
-        val src = SSTableFiles.sibling(data, suf)
-        if (driverStorage.exists(src)) {
-          val name = src.substring(src.lastIndexOf('/') + 1)
-            .replaceFirst("-attempt-\\d+", "")
-          driverStorage.rename(src, s"$dir/$name")
-        }
-      }
-    }
-    driverStorage.deleteRecursive(stagingDir)
+    // job commit: publish every staged fileset under the canonical
+    // attempt-less name (exactly one winner per bucket — collect()
+    // carries one successful attempt's paths); the staging dir goes with
+    // any losing attempts' leftovers
+    val published = FilesetCommit(driverStorage, dir, s"bucketed-$tag", staged.toSeq,
+      staging = stagingDir, stripAttempt = true)
     graft.sources.sstable.History.record(driverStorage, dir, "insert",
-      added = staged.toSeq.map(_.replaceFirst("-attempt-\\d+", "")),
-      detail = s"bucketed=$buckets")
+      added = published.added, detail = s"bucketed=$buckets")
   }
 
   /** Salvage one corrupt generation: stream its decodable rows into a
     * fresh staged fileset (sorting them first when the damage is order,
-    * not truncation), publish siblings-first/Data.db-last under a
-    * scrub-unique name, then quarantine the corrupt original under
-    * `_corrupt-<tag>/` Data.db-first. Returns the new Data.db path, or
+    * not truncation), publish it under a scrub-unique name through
+    * [[graft.sources.sstable.spark.FilesetCommit]], then quarantine the
+    * corrupt original under `_corrupt-<tag>/` Data.db-first. Returns the new Data.db path, or
     * None (original quarantined, nothing written) when no row is
     * salvageable. */
   private def repairGeneration(f: String,
                                storage: graft.sources.sstable.Storage,
                                resort: Boolean): Option[String] = {
-    import graft.sources.sstable.{LocalStorage, SSTableFiles, SSTableReader, SSTableRow, SSTableWriter}
+    import graft.sources.sstable.{SSTableFiles, SSTableReader, SSTableRow}
+    import graft.sources.sstable.spark.{FilesetCommit, WriterTuning}
     val r = new SSTableReader(f, storage)
     val dirPath = f.substring(0, f.lastIndexOf('/'))
     val baseName = f.substring(f.lastIndexOf('/') + 1)
       .dropRight(SSTableFiles.DataSuffix.length)
     val tag = java.util.UUID.randomUUID().toString.take(8)
     val stagingDir = s"$dirPath/_scrub-$tag"
-    storage match {
-      case LocalStorage => new java.io.File(stagingDir).mkdirs()
-      case _ => // Hadoop create() makes parents
-    }
+    storage.mkdirs(stagingDir)
     val stagedData = s"$stagingDir/$baseName-scrub-$tag${SSTableFiles.DataSuffix}"
 
     // decode the good prefix; the first structural failure ends the salvage
@@ -1724,23 +1682,14 @@ object SSTableOps {
 
     var wrote = false
     if (rows.hasNext) {
-      val w = new SSTableWriter(stagedData,
-        compress = r.compressionInfo.isDefined, storage = storage)
+      val w = WriterTuning.Default.copy(compress = r.compressionInfo.isDefined)
+        .open(stagedData, storage)
       try { rows.foreach(w.append); wrote = true } finally w.close()
     }
-    val published = s"$dirPath/$baseName-scrub-$tag${SSTableFiles.DataSuffix}"
-    if (wrote) {
-      SSTableFiles.PublishOrderSuffixes.foreach { suf =>
-        val src = SSTableFiles.sibling(stagedData, suf)
-        if (storage.exists(src))
-          storage.rename(src, SSTableFiles.sibling(published, suf))
-      }
-    }
-    storage match {
-      case LocalStorage => new java.io.File(stagingDir).delete()
-      case h: graft.sources.sstable.HadoopStorage => h.deleteRecursive(stagingDir)
-      case _ =>
-    }
+    val published =
+      if (wrote) FilesetCommit(storage, dirPath, s"scrub-$tag", Seq(stagedData),
+        staging = stagingDir).added.headOption
+      else { storage.deleteRecursive(stagingDir); None }
     // the good data is visible (or nothing was salvageable): now — and
     // only now — QUARANTINE the corrupt fileset, Data.db first (it
     // leaves reader listings before any sibling moves). Cassandra's
@@ -1755,6 +1704,6 @@ object SSTableOps {
       val src = SSTableFiles.sibling(f, suf)
       if (storage.exists(src)) storage.rename(src, s"$quarantineDir/$base$suf")
     }
-    if (wrote) Some(published) else None
+    published
   }
 }

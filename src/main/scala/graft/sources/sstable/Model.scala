@@ -124,15 +124,15 @@ object SSTableFiles {
     * honoring the publish ordering contract (siblings first, Data.db
     * LAST — PublishOrderSuffixes ends with it): a concurrent reader that
     * lists the Data.db always finds its complete fileset. The dual of
-    * [[unpublish]], and the single home of the rename loop the write
-    * paths (batch commit, delta commit, tombstone generation) share. */
-  def publish(storage: Storage, stagedDataPath: String, targetDir: String): Unit =
+    * [[unpublish]], and the single home of the rename loop every
+    * commit shares. `name` maps each staged file name to its published
+    * one (streaming epochs drop their attempt id). */
+  def publish(storage: Storage, stagedDataPath: String, targetDir: String,
+              name: String => String = identity): Unit =
     PublishOrderSuffixes.foreach { suf =>
       val src = sibling(stagedDataPath, suf)
-      if (storage.exists(src)) {
-        val name = src.substring(src.lastIndexOf('/') + 1)
-        storage.rename(src, s"$targetDir/$name")
-      }
+      if (storage.exists(src))
+        storage.rename(src, s"$targetDir/${name(src.substring(src.lastIndexOf('/') + 1))}")
     }
 
   /** [[publish]] via [[Storage.link]] instead of rename — the STAGED

@@ -353,10 +353,26 @@ object Storage {
     (try new java.net.URI(path).getScheme catch { case _: Exception => null }) != null
 }
 
+/** The serializable form of the [[Storage]] behind a path, built on the
+  * driver and shipped inside scans, writer factories and task closures:
+  * [[LocalStorage]] for a scheme-less path, else a [[HadoopStorage]]
+  * over the driver's Hadoop conf, which rides along only then. [[get]]
+  * builds the storage where it is used (no caching). */
+final class StorageHandle private (conf: Option[SerializableHadoopConf])
+    extends Serializable {
+  def get: Storage = conf.map(c => new HadoopStorage(c.value): Storage).getOrElse(LocalStorage)
+}
+
+object StorageHandle {
+  def apply(path: String, conf: => Configuration): StorageHandle =
+    new StorageHandle(
+      if (Storage.hasScheme(path)) Some(new SerializableHadoopConf(conf)) else None)
+}
+
 /** Java-serializable Hadoop `Configuration` carrier (the class itself is
   * `Writable` but not `Serializable`) — lets DSv2 plan-time conf ride
   * inside partition reader factories to executors. */
-final class SerializableHadoopConf(@transient private var conf: Configuration)
+private[sstable] final class SerializableHadoopConf(@transient private var conf: Configuration)
     extends Serializable {
   def value: Configuration = conf
   private def writeObject(out: java.io.ObjectOutputStream): Unit = {

@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.metric.SQLMetrics
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{BinaryType, StructType}
 
-import graft.sources.sstable.{HadoopStorage, LocalStorage, SSTableReader, SerializableHadoopConf, Storage}
+import graft.sources.sstable.{SSTableReader, Storage, StorageHandle}
 
 /** Everything the probe-join physical plan needs to reproduce one
   * [[SSTableScan]]'s per-key emission on executors: the resolved
@@ -24,10 +24,9 @@ import graft.sources.sstable.{HadoopStorage, LocalStorage, SSTableReader, Serial
   * exactly. */
 final case class LookupProbeSpec(path: String, schema: StructType,
                                  applyDeletes: Boolean, maxDeleteKeys: Int,
-                                 serConf: Option[SerializableHadoopConf],
+                                 handle: StorageHandle,
                                  catalogManaged: Boolean = false) {
-  def storage: Storage =
-    serConf.map(c => new HadoopStorage(c.value): Storage).getOrElse(LocalStorage)
+  def storage: Storage = handle.get
 }
 
 /** The SQL route to the index-nested-loop probe path for RELATION-sized

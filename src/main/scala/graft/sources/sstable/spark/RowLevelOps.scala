@@ -1,14 +1,11 @@
 package graft.sources.sstable.spark
 
-import java.util.UUID
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.sources.sstable._
 
@@ -117,39 +114,18 @@ final class SSTableDeltaBatchWrite(path: String, info: LogicalWriteInfo,
                                    properties: Map[String, String],
                                    cmd: RowLevelOperation.Command)
     extends DeltaBatchWrite {
-  private val serConf: Option[SerializableHadoopConf] =
-    if (Storage.hasScheme(path))
-      Some(new SerializableHadoopConf(
-        SparkSession.active.sessionState.newHadoopConf()))
-    else None
-  private def storage: Storage =
-    serConf.map(c => new HadoopStorage(c.value): Storage).getOrElse(LocalStorage)
+  private val storageHandle =
+    StorageHandle(path, SparkSession.active.sessionState.newHadoopConf())
+  private def storage: Storage = storageHandle.get
 
-  private val jobTag = {
-    val t = properties.getOrElse(SSTableSource.JobTagOption,
-      "rowdelta-" + UUID.randomUUID().toString.take(8))
-    require(t.nonEmpty && !t.contains('/') && !t.contains('\\'), s"illegal jobTag: '$t'")
-    t
-  }
+  private val jobTag = FilesetCommit.jobTag(properties, prefix = "rowdelta-")
   private val stagingDir = s"$path/_staging-$jobTag"
 
   /** The op's delete mark, chosen ONCE on the driver before any task
-    * runs: shadows everything currently present (same rule and same
-    * stats-required loud failure as [[SSTableTable.deleteWhere]]). */
-  private val markMicros: Long =
-    properties.get(SSTableSource.DeleteMarkMicrosOption) match {
-      case Some(v) => v.toLong
-      case None =>
-        val st = storage
-        val gens = if (st.exists(path)) st.listDataFiles(path) else Nil
-        val stats = gens.map(f => new SSTableReader(f, st).statistics)
-        require(stats.forall(_.isDefined),
-          "row-level UPDATE/MERGE/DELETE needs -Statistics.db on every " +
-            "generation to choose a shadowing write timestamp; set " +
-            s"${SSTableSource.DeleteMarkMicrosOption} explicitly for " +
-            "stats-less directories")
-        stats.flatten.map(_.maxTimestamp).foldLeft(0L)(math.max) + 1
-    }
+    * runs: shadows everything currently present (the same rule as
+    * [[SSTableTable.deleteWhere]]). */
+  private val markMicros: Long = FilesetCommit.deleteMark(properties, storage, path,
+    "row-level UPDATE/MERGE/DELETE", "write timestamp")
 
   private val maxDeleteKeys: Int =
     properties.get(SSTableSource.MaxDeleteKeysOption).map(_.toInt)
@@ -157,17 +133,17 @@ final class SSTableDeltaBatchWrite(path: String, info: LogicalWriteInfo,
 
   private val writeBuckets: Option[Int] =
     SSTableSource.bucketsOf(properties.get(SSTableSource.WriteBucketsOption))
+  private val tuning = WriterTuning.of(properties)
 
   override def createBatchWriterFactory(pinfo: PhysicalWriteInfo): DeltaWriterFactory = {
     storage.mkdirs(stagingDir)
-    val t = WriterTuning.of(properties)
     // java.util.Optional is not Serializable: resolve the id projection's
     // key position on the driver and ship the bare index
     val idKeyIdx =
       if (info.rowIdSchema().isPresent) info.rowIdSchema().get().fieldIndex("key")
       else 0
-    new SSTableDeltaWriterFactory(stagingDir, info.schema(),
-      idKeyIdx, markMicros + 1, t, serConf, jobTag, writeBuckets)
+    new SSTableTaskWriterFactory(stagingDir, info.schema(), tuning, storageHandle,
+      jobTag, writeBuckets, stampMicros = Some(markMicros + 1), deltaKeyIdx = idKeyIdx)
   }
 
   /** EVERYTHING failable happens before the first publish (self-review
@@ -204,7 +180,7 @@ final class SSTableDeltaBatchWrite(path: String, info: LogicalWriteInfo,
         // path runs, so the two statements' tombstone shape (per-bucket
         // stems, key sort, stage-all-then-publish) can never drift
         val ldtSecs = (System.currentTimeMillis() / 1000).toInt
-        TombstoneStaging.stage(st, stagingDir, s"$jobTag-tomb",
+        TombstoneStaging.stage(st, tuning, stagingDir, s"$jobTag-tomb",
           keys.toSeq, ldtSecs, markMicros, writeBuckets)
       }
     // marker planted AFTER all failable validation/staging (the r8
@@ -225,97 +201,17 @@ final class SSTableDeltaBatchWrite(path: String, info: LogicalWriteInfo,
     // correct recovery. Streaming epochs likewise: the stream's restart
     // replays the epoch against current state — retry at the right
     // layer already exists.
-    val marker = CommitIntegrity.begin(st, path, jobTag)
-    (stagedInserts ++ stagedTomb).foreach(SSTableFiles.publish(st, _, path))
-    st.deleteRecursive(stagingDir)
-    CommitIntegrity.verifyAndEnd(st, path, marker)
+    val published = FilesetCommit(st, path, jobTag, (stagedInserts ++ stagedTomb).toSeq,
+      staging = stagingDir)
     History.record(st, path,
       cmd.toString.toLowerCase(java.util.Locale.ROOT),
-      added = (stagedInserts ++ stagedTomb).toSeq,
-      detail = s"deletedKeys=${keys.length}")
+      added = published.added, detail = s"deletedKeys=${keys.length}")
     // UPDATE/MERGE-heavy tables accumulate generations like any other
-    // committer; the delta commit volunteers the same bounded fold as
-    // batch inserts and streaming epochs (data generations only — the
-    // tombstone debt this op appended is compact_tombstones' domain)
-    SSTableSource.autoCompactOf(properties.get(SSTableSource.AutoCompactOption))
-      .foreach { n =>
-        graft.operators.SSTableOps.autoCompact(SparkSession.active, path, n,
-          writeBuckets)
-        ()
-      }
+    // committer (data generations fold; the tombstone debt this op
+    // appended is compact_tombstones' domain)
+    FilesetCommit.autoCompact(properties, path, writeBuckets)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     storage.deleteRecursive(stagingDir)
-}
-
-final class SSTableDeltaWriterFactory(stagingDir: String, rowSchema: StructType,
-                                      idKeyIdx: Int,
-                                      writeTsMicros: Long,
-                                      tuning: WriterTuning,
-                                      serConf: Option[SerializableHadoopConf],
-                                      jobTag: String,
-                                      buckets: Option[Int] = None)
-    extends DeltaWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] = {
-    val storage = serConf.map(c => new HadoopStorage(c.value): Storage)
-      .getOrElse(LocalStorage)
-    new SSTableDeltaTaskWriter(stagingDir, rowSchema, idKeyIdx, partitionId,
-      taskId, writeTsMicros, tuning, storage, jobTag, buckets)
-  }
-}
-
-/** Task-side delta consumer: inserts stream (key-sorted by the required
-  * ordering) into a lazily-created staged fileset with their cells
-  * stamped at the op's write timestamp — a ROLLING per-bucket fileset
-  * when the table is bucketed (rows then arrive `(bucket, key)`-sorted);
-  * deletes collect their key for the driver's tombstone generation(s).
-  * `update` is never called (update is represented as delete+insert). */
-final class SSTableDeltaTaskWriter(stagingDir: String, rowSchema: StructType,
-                                   idKeyIdx: Int,
-                                   partitionId: Int, taskId: Long,
-                                   writeTsMicros: Long,
-                                   tuning: WriterTuning, storage: Storage,
-                                   jobTag: String,
-                                   buckets: Option[Int] = None)
-    extends DeltaWriter[InternalRow] {
-  private val deleted = ArrayBuffer.empty[Array[Byte]]
-  private var inserts: DataWriter[InternalRow] = _
-
-  override def delete(metadata: InternalRow, id: InternalRow): Unit =
-    deleted += id.getBinary(idKeyIdx)
-
-  override def update(metadata: InternalRow, id: InternalRow,
-                      row: InternalRow): Unit =
-    throw new IllegalStateException(
-      "update must arrive as delete+insert (representUpdateAsDeleteAndInsert)")
-
-  override def insert(row: InternalRow): Unit = {
-    if (inserts == null)
-      inserts = buckets match {
-        case Some(n) => new SSTableBucketedRollingWriter(stagingDir, rowSchema,
-          tuning, storage,
-          b => s"${SSTableSource.bucketStem(b)}$jobTag-$taskId", taskId, n,
-          stampMicros = Some(writeTsMicros))
-        case None => new SSTablePartitionWriter(stagingDir, rowSchema,
-          partitionId, taskId, tuning.compress, tuning.chunkLength,
-          tuning.summaryInterval, tuning.bloomBitsPerKey, storage,
-          fileStem = f"part-$partitionId%05d-$taskId-$jobTag",
-          algorithm = tuning.algorithm, stampMicros = Some(writeTsMicros))
-      }
-    inserts.write(row)
-  }
-
-  override def commit(): WriterCommitMessage = {
-    val staged =
-      if (inserts == null) Nil
-      else inserts.commit() match {
-        case SSTableCommit(paths) => paths
-        case _ => Nil
-      }
-    SSTableDeltaCommit(staged, deleted.toSeq)
-  }
-
-  override def abort(): Unit = if (inserts != null) inserts.abort()
-  override def close(): Unit = ()
 }

@@ -61,11 +61,8 @@ final class SSTableIndexScanBuilder(path: String, targetSplitBytes: Long)
   private val bounds = new KeyBounds
   private var limit: Option[Int] = None
   private var topN = false
-  private val serConf: Option[SerializableHadoopConf] =
-    if (Storage.hasScheme(path))
-      Some(new SerializableHadoopConf(
-        org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()))
-    else None
+  private val handle = StorageHandle(path,
+    org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushed = filters.filter(bounds.accept)
@@ -119,15 +116,14 @@ final class SSTableIndexScanBuilder(path: String, targetSplitBytes: Long)
     * the consistency gap: this used to loop files sequentially on the
     * driver) — Index.db block locations, same Summary/bloom pruning. */
   override def planInputPartitions(): Array[InputPartition] = {
-    val st = serConf.map(c => new HadoopStorage(c.value): Storage)
-      .getOrElse(LocalStorage)
+    val st = handle.get
     val listed = st.listDataFiles(path)
     // post-list pointer re-check — same contract as the data scan's
     // listing (a key listing of a mid-destroy residue would be a
     // silently partial key set); one-read form (r13)
     GraftCatalog.requirePostListState(st, path, listed.isEmpty,
       catalogManaged = false, at = "planning")
-    val parts = SSTableScan.planPartitions(listed, serConf,
+    val parts = SSTableScan.planPartitions(listed, handle,
       SSTableSource.DefaultDistributedPlanningThreshold, targetSplitBytes,
       bounds.lo.map(_._1), bounds.hi.map(_._1), bounds.eqKey, keys = None,
       hostsFromIndex = true)
@@ -154,17 +150,16 @@ final class SSTableIndexScanBuilder(path: String, targetSplitBytes: Long)
       }
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new IndexReaderFactory(required, serConf, limit)
+    new IndexReaderFactory(required, handle, limit)
 }
 
 final class IndexReaderFactory(required: StructType,
-                               serConf: Option[SerializableHadoopConf] = None,
+                               handle: StorageHandle,
                                rowLimit: Option[Int] = None)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[SSTablePartition]
-    val storage = serConf.map(c => new HadoopStorage(c.value): Storage)
-      .getOrElse(LocalStorage)
+    val storage = handle.get
     val inner: PartitionReader[InternalRow] = new PartitionReader[InternalRow] {
       private val in = storage.open(
         SSTableFiles.sibling(p.dataPath, SSTableFiles.IndexSuffix))

@@ -38,14 +38,13 @@ object SSTableOffset {
 final class SSTableMicroBatchStream(path: String, requiredSchema: StructType,
                                     targetSplitBytes: Long,
                                     ttlAsOfMs: Option[Long],
-                                    serConf: Option[SerializableHadoopConf],
+                                    handle: StorageHandle,
                                     maxFilesPerTrigger: Option[Int] = None,
                                     maxBytesPerTrigger: Option[Long] = None,
                                     sinceDir: Option[String] = None,
                                     catalogManaged: Boolean = false)
     extends MicroBatchStream with SupportsAdmissionControl {
-  private def storage: Storage =
-    serConf.map(c => new HadoopStorage(c.value): Storage).getOrElse(LocalStorage)
+  private def storage: Storage = handle.get
 
   /** Starting floor (`option("sincesnapshot", tag)` — the streaming twin
     * of the batch epoch-diff read, Delta's `startingVersion`): a FRESH
@@ -170,7 +169,7 @@ final class SSTableMicroBatchStream(path: String, requiredSchema: StructType,
       .map(n => org.apache.spark.sql.types.StructField(
         n, org.apache.spark.sql.types.StringType, nullable = false))
     new SSTableReaderFactory(StructType(requiredSchema.fields ++ meta),
-      ttlAsOfMs, serConf)
+      ttlAsOfMs, handle)
   }
 
   override def commit(end: Offset): Unit = () // offsets live in the checkpoint

@@ -61,14 +61,10 @@ class SSTableSource extends TableProvider with DataSourceRegister {
     // refusal catalog readers get. (Catalog loads construct SSTableTable
     // directly with the already-resolved directory, skipping this.)
     Option(properties.get(SSTableSource.PathOption)).foreach { p =>
-      // newHadoopConf() is a full-config clone — only pay it for
-      // scheme'd paths (getTable re-runs per relation resolution)
-      val storage =
-        if (graft.sources.sstable.Storage.hasScheme(p))
-          graft.sources.sstable.Storage.forPath(p,
-            org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
-        else graft.sources.sstable.LocalStorage
-      SSTableSource.requireLiveRawDir(storage, p)
+      // newHadoopConf() is a full-config clone — forPath only pays it
+      // for scheme'd paths (getTable re-runs per relation resolution)
+      SSTableSource.requireLiveRawDir(graft.sources.sstable.Storage.forPath(p,
+        org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()), p)
     }
     new SSTableTable(properties.asScala.toMap)
   }
@@ -514,16 +510,18 @@ final class SSTableTable(props: Map[String, String])
       && view == "rows", "TRUNCATE targets the live rows-view directory")
     val storage = Storage.forPath(path,
       org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
-    if (storage.exists(path)) {
-      autoSnapshotBeforeWipe(storage)
-      val marker = CommitIntegrity.begin(storage, path,
-        "truncate-" + java.util.UUID.randomUUID().toString.take(8))
-      val gone = storage.listDataFiles(path)
-      gone.foreach(SSTableFiles.unpublish(storage, _))
-      CommitIntegrity.verifyAndEnd(storage, path, marker)
-      History.record(storage, path, "truncate", removed = gone)
-    }
+    if (storage.exists(path))
+      History.record(storage, path, "truncate", removed = wipe(storage, "truncate"))
     true
+  }
+
+  /** The whole-table wipe TRUNCATE and the unconditional DELETE share:
+    * the optional auto-snapshot, then one commit that unpublishes every
+    * generation listed once its marker is down. Returns what it removed. */
+  private def wipe(storage: Storage, tagPrefix: String): Seq[String] = {
+    autoSnapshotBeforeWipe(storage)
+    FilesetCommit(storage, path, s"$tagPrefix-${java.util.UUID.randomUUID().toString.take(8)}",
+      unpublish = storage.listDataFiles(path)).removed
   }
 
   /** Cassandra's auto_snapshot, opt-in — see
@@ -553,33 +551,11 @@ final class SSTableTable(props: Map[String, String])
       org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
     deletableKeys(filters) match {
       case Some(None) => // unconditional: same action as TRUNCATE TABLE
-        if (storage.exists(path)) {
-          autoSnapshotBeforeWipe(storage) // same wipe, same safety net
-          val marker = CommitIntegrity.begin(storage, path,
-            "delete-" + java.util.UUID.randomUUID().toString.take(8))
-          val gone = storage.listDataFiles(path)
-          gone.foreach(SSTableFiles.unpublish(storage, _))
-          CommitIntegrity.verifyAndEnd(storage, path, marker)
-          History.record(storage, path, "delete", removed = gone,
+        if (storage.exists(path))
+          History.record(storage, path, "delete", removed = wipe(storage, "delete"),
             detail = "unconditional")
-        }
       case Some(Some(keys)) if keys.nonEmpty =>
-        val spark = org.apache.spark.sql.SparkSession.active
-        val gens = if (storage.exists(path)) storage.listDataFiles(path) else Nil
-        // the mark must shadow every cell currently present; the max
-        // sidecar timestamp + 1 does, deterministically. Stats-less
-        // (foreign/v0) generations make that unprovable — fail loudly
-        // rather than delete incompletely.
-        val mark = props.get(SSTableSource.DeleteMarkMicrosOption) match {
-          case Some(v) => v.toLong
-          case None =>
-            val stats = gens.map(f => new SSTableReader(f, storage).statistics)
-            require(stats.forall(_.isDefined),
-              "DELETE needs -Statistics.db on every generation to choose a " +
-                s"shadowing mark; set ${SSTableSource.DeleteMarkMicrosOption} " +
-                "explicitly for stats-less directories")
-            stats.flatten.map(_.maxTimestamp).foldLeft(0L)(math.max) + 1
-        }
+        val mark = FilesetCommit.deleteMark(props, storage, path, "DELETE", "mark")
         val ldtSecs = (System.currentTimeMillis() / 1000).toInt
         val deduped = keys
           .distinctBy(new String(_, java.nio.charset.StandardCharsets.ISO_8859_1))
@@ -595,16 +571,13 @@ final class SSTableTable(props: Map[String, String])
         val tag = "delete-" + java.util.UUID.randomUUID().toString.take(8)
         val stagingDir = s"$path/_staging-$tag"
         storage.mkdirs(stagingDir)
-        val staged = TombstoneStaging.stage(storage, stagingDir, tag,
-          deduped, ldtSecs, mark, writeBuckets)
+        val staged = TombstoneStaging.stage(storage, WriterTuning.of(props),
+          stagingDir, tag, deduped, ldtSecs, mark, writeBuckets)
         // the metadata-delete path is a lease-free publisher like any
         // other commit: the integrity marker turns a racing table swap
         // into a loud failure instead of an acknowledged lost delete
-        val marker = CommitIntegrity.begin(storage, path, tag)
-        staged.foreach(SSTableFiles.publish(storage, _, path))
-        storage.deleteRecursive(stagingDir)
-        CommitIntegrity.verifyAndEnd(storage, path, marker)
-        History.record(storage, path, "delete", added = staged,
+        val published = FilesetCommit(storage, path, tag, staged, staging = stagingDir)
+        History.record(storage, path, "delete", added = published.added,
           detail = s"keys=${deduped.length}")
       case _ => // empty IN-list: nothing to delete
     }
@@ -1138,13 +1111,9 @@ final class SSTableScan(path: String, requiredSchema: StructType,
     with org.apache.spark.sql.connector.read.SupportsReportOrdering {
   /** Hadoop conf rides to executors only when the path needs the Hadoop
     * adapter (scheme present); plain local paths stay dependency-free. */
-  private val serConf: Option[SerializableHadoopConf] =
-    if (Storage.hasScheme(path))
-      Some(new SerializableHadoopConf(
-        org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()))
-    else None
-  private def storage: Storage =
-    serConf.map(c => new HadoopStorage(c.value): Storage).getOrElse(LocalStorage)
+  private val handle = StorageHandle(path,
+    org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
+  private def storage: Storage = handle.get
 
   /** The probe-join contract ([[SSTableLookupJoinStrategy]]): Some(spec)
     * when this scan is exactly the plain row view whose per-key emission
@@ -1165,7 +1134,7 @@ final class SSTableScan(path: String, requiredSchema: StructType,
         !requiredSchema.fieldNames.contains(SSTableSource.GenerationColumn) &&
         !requiredSchema.fieldNames.contains(SSTableSource.ChangeTypeColumn))
       Some(LookupProbeSpec(path, requiredSchema, applyDeletes, maxDeleteKeys,
-        serConf, catalogManaged = catalogManaged))
+        handle, catalogManaged = catalogManaged))
     else None
 
   /** Point-lookup key (`key = X` pushed down): both bounds present,
@@ -1271,7 +1240,7 @@ final class SSTableScan(path: String, requiredSchema: StructType,
         val (dataGens, shadow) = splitDeletes(listed)
         val files = if (shadow.exists(_.nonEmpty)) asOfFilePrune(dataGens)
           else limitFilePrefix(asOfFilePrune(dataGens))
-        val parts = SSTableScan.planPartitions(files, serConf,
+        val parts = SSTableScan.planPartitions(files, handle,
           distributedPlanningThreshold, targetSplitBytes,
           keyLo.map(_._1), keyHi.map(_._1), eqKey, runtimeKeys,
           hostsFromIndex = false)
@@ -1292,7 +1261,7 @@ final class SSTableScan(path: String, requiredSchema: StructType,
       }
       override def planInputPartitions(): Array[InputPartition] = snap._1
       override def createReaderFactory(): PartitionReaderFactory =
-        new SSTableReaderFactory(requiredSchema, ttlAsOfMs, serConf, cellsView,
+        new SSTableReaderFactory(requiredSchema, ttlAsOfMs, handle, cellsView,
           rowLimit = limit, asOfMicros = asOfMicros,
           nameLo = nameLo, nameHi = nameHi, shadowBc = snap._2)
     }
@@ -1319,7 +1288,7 @@ final class SSTableScan(path: String, requiredSchema: StructType,
     // would make every GraftCatalog table (which carries it as a table
     // property) unreadable via readStream for no semantic gain.
     new SSTableMicroBatchStream(path, requiredSchema, targetSplitBytes,
-      ttlAsOfMs, serConf, maxFilesPerTrigger, maxBytesPerTrigger,
+      ttlAsOfMs, handle, maxFilesPerTrigger, maxBytesPerTrigger,
       sinceDir = sinceDir, catalogManaged = catalogManaged)
   }
   override def description(): String = {
@@ -1355,7 +1324,7 @@ final class SSTableScan(path: String, requiredSchema: StructType,
       val listed = listedFiles
       val planned = limitFilePrefix(asOfFilePrune(listed))
       val parts = SSTableScan.planPartitions(planned,
-        serConf, distributedPlanningThreshold, targetSplitBytes,
+        handle, distributedPlanningThreshold, targetSplitBytes,
         keyLo.map(_._1), keyHi.map(_._1), eqKey, runtimeKeys,
         hostsFromIndex = false)
       recordPlanning(listed.length, planned.length, parts.length, shadowEntries = 0)
@@ -1538,7 +1507,7 @@ final class SSTableScan(path: String, requiredSchema: StructType,
       val gens = asOfFilePrune(byBucket.getOrElse(b, Nil))
       plannedGens += gens.length
       val splits = SSTableScan.planPartitions(
-        gens, serConf, distributedPlanningThreshold,
+        gens, handle, distributedPlanningThreshold,
         targetSplitBytes, keyLo.map(_._1), keyHi.map(_._1), eqKey, keys = None,
         hostsFromIndex = false)
       SSTableBucketPartition(b, splits.map(_.asInstanceOf[SSTablePartition]))
@@ -1611,7 +1580,7 @@ final class SSTableScan(path: String, requiredSchema: StructType,
   override def createReaderFactory(): PartitionReaderFactory =
     // the delete-aware path never reaches here: its toBatch returns the
     // snapshot Batch, whose factory carries the paired shadow
-    new SSTableReaderFactory(requiredSchema, ttlAsOfMs, serConf, cellsView,
+    new SSTableReaderFactory(requiredSchema, ttlAsOfMs, handle, cellsView,
       rowLimit = limit, asOfMicros = asOfMicros,
       nameLo = nameLo, nameHi = nameHi)
 }
@@ -1730,30 +1699,24 @@ object SSTableScan {
     * reason). Shared by the data and index sources (VERDICT r4 #5 —
     * the index source previously planned sequentially on the driver). */
   private[spark] def planPartitions(files: Seq[String],
-                                    serConf: Option[SerializableHadoopConf],
+                                    handle: StorageHandle,
                                     threshold: Int, targetSplitBytes: Long,
                                     lo: Option[Array[Byte]],
                                     hi: Option[Array[Byte]],
                                     eqk: Option[Array[Byte]],
                                     keys: Option[Array[Array[Byte]]],
                                     hostsFromIndex: Boolean): Array[InputPartition] = {
-    def storageOf: Storage =
-      serConf.map(c => new HadoopStorage(c.value): Storage).getOrElse(LocalStorage)
     if (files.length <= threshold) {
       import scala.collection.parallel.CollectionConverters._
-      val st = storageOf
+      val st = handle.get
       files.par.flatMap(
         planFile(st, targetSplitBytes, lo, hi, eqk, keys, hostsFromIndex)).toArray
     } else {
       val sc = org.apache.spark.sql.SparkSession.active.sparkContext
       val slices = math.min(files.length, math.max(sc.defaultParallelism, 1) * 4)
-      val conf = serConf // closure captures only the serializable carrier
       sc.parallelize(files, slices)
-        .flatMap { f =>
-          val st: Storage =
-            conf.map(c => new HadoopStorage(c.value): Storage).getOrElse(LocalStorage)
-          planFile(st, targetSplitBytes, lo, hi, eqk, keys, hostsFromIndex)(f)
-        }
+        .flatMap(f => planFile(handle.get, targetSplitBytes, lo, hi, eqk, keys,
+          hostsFromIndex)(f))
         .collect().toArray
     }
   }
@@ -1761,7 +1724,7 @@ object SSTableScan {
 
 final class SSTableReaderFactory(requiredSchema: StructType,
                                  ttlAsOfMs: Option[Long],
-                                 serConf: Option[SerializableHadoopConf] = None,
+                                 handle: StorageHandle,
                                  cellsView: Boolean = false,
                                  rowLimit: Option[Int] = None,
                                  asOfMicros: Option[Long] = None,
@@ -1771,8 +1734,7 @@ final class SSTableReaderFactory(requiredSchema: StructType,
                                    .Broadcast[DeleteShadow]] = None)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val storage = serConf.map(c => new HadoopStorage(c.value): Storage)
-      .getOrElse(LocalStorage)
+    val storage = handle.get
     // executor-side resolution: all tasks on an executor share ONE map
     val shadow = shadowBc.map(_.value)
     val inner = partition match {

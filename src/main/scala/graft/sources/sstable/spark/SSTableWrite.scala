@@ -1,6 +1,5 @@
 package graft.sources.sstable.spark
 
-import java.util.UUID
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
@@ -128,104 +127,16 @@ final class SSTableWrite(path: String, schema: StructType,
 /** Staged 4-file set of one committed task attempt. */
 final case class SSTableCommit(stagedDataPaths: Seq[String]) extends WriterCommitMessage
 
-/** Detects a table directory being REPLACED (atomic CTAS swap, CALL
-  * rebucket) while a write commit is publishing into it — the one
-  * window where a SUCCESSFUL commit's data could silently ride the old
-  * directory into the trash (writers are lease-free by design, so the
-  * maintenance lease cannot refuse them). A marker file is planted
-  * before the first publish and checked after the last: the swap takes
-  * the marker with the old directory, so a vanished marker means the
-  * data landed in a replaced directory and the commit must FAIL LOUDLY
-  * instead of acknowledging lost data. (Concurrent compaction never
-  * explains a missing marker — maintainers touch only generation
-  * filesets, never `_` files.) Crash litter is a zero-byte `_commit-`
-  * file, swept by vacuumStaging's horizon. */
-private[graft] object CommitIntegrity {
-  def begin(storage: Storage, path: String, tag: String): String = {
-    // pointer-state gate (VERDICT r11 #3): a DROP/undrop now commits by
-    // flipping `_table` rather than renaming the tree away, so the
-    // directory a doomed write would publish into still EXISTS — refuse
-    // at commit start instead of letting the publish race the residue
-    // destroy. ORDER MATTERS (r12 review): the marker goes down FIRST,
-    // the state check second — a check-then-create would leave an
-    // instant where the check passed pre-flip but the marker landed
-    // after the swap's marker sweep, making the verify succeed for
-    // files the residue destroy removes (silent loss). Marker-first is
-    // airtight: a marker that exists before the sweep is swept (verify
-    // fails, consults the state); a check that reads the post-flip
-    // state refuses here and removes its own marker. (Redirect is fine:
-    // the table is live; files land beside the migration and follow
-    // the identity.)
-    val marker = s"$path/_commit-$tag"
-    storage.create(marker).close()
-    def refuse(why: String): Nothing = {
-      storage.delete(marker)
-      throw new IllegalStateException(why)
-    }
-    TableState.of(GraftCatalog.readTableProps(storage, path)) match {
-      case TableState.Dropped(_, _) => refuse(
-        s"table directory $path was DROPPED while this write ran — " +
-          "nothing to publish into; rerun against a live table")
-      case TableState.Restoring(_, _) => refuse(
-        s"table directory $path is mid-restore (undrop/publish copying " +
-          "content in) — rerun the write once it settles")
-      case _ => ()
-    }
-    marker
-  }
-  def verifyAndEnd(storage: Storage, path: String, marker: String): Unit = {
-    if (!storage.exists(marker))
-      throw new IllegalStateException(
-        s"table directory $path was REPLACED while this write was " +
-          "committing (atomic CTAS / CALL rebucket swap): the commit's " +
-          "data rode the old directory into the trash — rerun the write " +
-          "against the new table (quiesce writers around re-layouts)")
-    storage.delete(marker)
-  }
-}
-
-/** The physical-writer knobs every write path (batch, streaming, delta)
-  * parses from the same options — one parser, so the paths can never
-  * drift on defaults. */
-final case class WriterTuning(compress: Boolean, chunkLength: Int,
-                              summaryInterval: Int, bloomBitsPerKey: Int,
-                              algorithm: String)
-object WriterTuning {
-  def of(properties: Map[String, String]): WriterTuning = WriterTuning(
-    compress = properties.getOrElse(SSTableSource.CompressOption, "true").toBoolean,
-    chunkLength = properties.getOrElse(SSTableSource.ChunkLengthOption,
-      CompressionInfo.DefaultChunkLength.toString).toInt,
-    summaryInterval = properties.getOrElse(SSTableSource.SummaryIntervalOption,
-      IndexFile.DefaultSummaryInterval.toString).toInt,
-    bloomBitsPerKey = properties.getOrElse(SSTableSource.BloomBitsPerKeyOption,
-      FilterFile.DefaultBitsPerKey.toString).toInt,
-    algorithm = CompressionInfo.algorithmFor(properties.getOrElse(
-      SSTableSource.CompressionAlgorithmOption, CompressionInfo.SnappyAlgorithm)))
-}
-
 final class SSTableBatchWrite(path: String, schema: StructType,
                               properties: Map[String, String], truncate: Boolean)
     extends BatchWrite {
-  private val serConf: Option[SerializableHadoopConf] =
-    if (Storage.hasScheme(path))
-      Some(new SerializableHadoopConf(
-        SparkSession.active.sessionState.newHadoopConf()))
-    else None
-  private def storage: Storage =
-    serConf.map(c => new HadoopStorage(c.value): Storage).getOrElse(LocalStorage)
+  private val storageHandle =
+    StorageHandle(path, SparkSession.active.sessionState.newHadoopConf())
+  private def storage: Storage = storageHandle.get
 
-  /** Job-unique token: part of the staging dir AND the published file
-    * names, so two applications' writes into one directory can never
-    * collide (Spark task IDs restart at 0 per application — a bare
-    * `part-P-taskId` name recurs across runs and a colliding rename
-    * must never overwrite a live generation). */
-  private val jobTag = {
-    val t = properties.getOrElse(SSTableSource.JobTagOption,
-      UUID.randomUUID().toString.take(8))
-    require(t.nonEmpty && !t.contains('/') && !t.contains('\\'),
-      s"illegal jobTag: '$t'")
-    t
-  }
+  private val jobTag = FilesetCommit.jobTag(properties)
+  private val writeBuckets =
+    SSTableSource.bucketsOf(properties.get(SSTableSource.WriteBucketsOption))
 
   /** Swap-resilient commit (catalog tables only — see
     * [[SSTableSource.CommitRetryOption]]): stage OUTSIDE the table
@@ -292,61 +203,33 @@ final class SSTableBatchWrite(path: String, schema: StructType,
     // create it here or the FIRST write into a fresh directory fails at
     // the commit marker's create (NOTES.md item 72)
     if (retryable) st.mkdirs(path)
-    val t = WriterTuning.of(properties)
-    SSTableSource.bucketsOf(properties.get(SSTableSource.WriteBucketsOption)) match {
-      case Some(n) =>
-        new SSTableBucketedWriterFactory(stagingDir, schema, t, serConf, jobTag, n)
-      case None =>
-        new SSTableWriterFactory(stagingDir, schema, t.compress, t.chunkLength,
-          t.summaryInterval, t.bloomBitsPerKey, t.algorithm, serConf, jobTag)
-    }
+    new SSTableTaskWriterFactory(stagingDir, schema, WriterTuning.of(properties),
+      storageHandle, jobTag, writeBuckets)
   }
 
   /** Test seam for the one unreachable-from-outside race window: the
     * instant between the last publish and the integrity check. */
   @volatile private[spark] var testBetweenPublishAndVerify: () => Unit = () => ()
 
-  /** Publish the winning attempts' staged files into the target dir —
-    * siblings first, Data.db LAST, so a concurrent reader that lists a
-    * Data.db always finds its complete fileset (ADVICE r2 medium).
-    * Rename-moves for the plain path; hardlinks (staged copies kept
-    * until the integrity check passes) for the swap-resilient catalog
-    * path — see [[republishAfterSwap]]. */
+  /** Publish the winning attempts' staged filesets through
+    * [[FilesetCommit]]: rename-moves for the plain path; hardlinks
+    * (staged copies kept until the integrity check passes) for the
+    * swap-resilient catalog path — see [[republishAfterSwap]]. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val st = storage
-    val marker = CommitIntegrity.begin(st, path, jobTag)
-    val published = Seq.newBuilder[String]
-    messages.foreach {
-      case SSTableCommit(staged) =>
-        staged.foreach { p =>
-          if (retryable) SSTableFiles.publishLinked(st, p, path, tolerateExisting = false)
-          else SSTableFiles.publish(st, p, path)
-        }
-        published ++= staged
-      case _ =>
+    val staged = messages.toSeq.flatMap {
+      case SSTableCommit(paths) => paths
+      case _ => Nil
     }
-    if (!retryable) removeStaging(st)
-    testBetweenPublishAndVerify()
-    // verify BEFORE the history event: a detected replacement must not
-    // append a phantom event (for files that never existed there) to
-    // the NEW table's audit log
-    try CommitIntegrity.verifyAndEnd(st, path, marker)
-    catch {
-      case e: IllegalStateException if retryable =>
-        republishAfterSwap(st, published.result(), e)
-    }
-    removeStaging(st)
+    val published =
+      try FilesetCommit(st, path, jobTag, staged, staging = stagingDir,
+        linked = retryable, beforeVerify = testBetweenPublishAndVerify)
+      catch {
+        case e: CommitIntegrity.Swapped if retryable => republishAfterSwap(st, staged, e)
+      } finally removeStaging(st)
     History.record(st, path, if (truncate) "overwrite" else "insert",
-      added = published.result(), removed = overwritten)
-    // write-triggered bounded maintenance (driver-side, post-publish):
-    // the committing job IS the single maintainer for the fold's
-    // duration — see SSTableOps.autoCompact
-    SSTableSource.autoCompactOf(properties.get(SSTableSource.AutoCompactOption))
-      .foreach { n =>
-        graft.operators.SSTableOps.autoCompact(SparkSession.active, path, n,
-          SSTableSource.bucketsOf(properties.get(SSTableSource.WriteBucketsOption)))
-        ()
-      }
+      added = published.added, removed = overwritten)
+    FilesetCommit.autoCompact(properties, path, writeBuckets)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -375,7 +258,7 @@ final class SSTableBatchWrite(path: String, schema: StructType,
     *    swaps are rare operator actions; twice within one commit is a
     *    fight the writer should not referee. */
   private def republishAfterSwap(st: Storage, staged: Seq[String],
-                                 original: IllegalStateException): Unit = {
+                                 original: IllegalStateException): FilesetCommit.Committed = {
     def give(reason: String): Nothing =
       throw new IllegalStateException(
         s"table directory $path was REPLACED while this write was " +
@@ -394,18 +277,14 @@ final class SSTableBatchWrite(path: String, schema: StructType,
         give("the name is mid-restore (undrop/publish copying content in)")
       case _ => () // Live or Redirect: publish; files follow the identity
     }
-    val ourBuckets = SSTableSource.bucketsOf(
-      properties.get(SSTableSource.WriteBucketsOption))
     val newBuckets = newProps.get(GraftCatalog.BucketsProp).map(_.toInt)
-    if (ourBuckets != newBuckets)
+    if (writeBuckets != newBuckets)
       give(s"the replacement changed the bucket layout " +
-        s"(wrote ${ourBuckets.fold("plain")(b => s"buckets=$b")}, table now " +
+        s"(wrote ${writeBuckets.fold("plain")(b => s"buckets=$b")}, table now " +
         s"${newBuckets.fold("plain")(b => s"buckets=$b")})")
-    val marker = CommitIntegrity.begin(st, path, s"$jobTag-retry")
-    staged.foreach(SSTableFiles.publishLinked(st, _, path, tolerateExisting = true))
-    try CommitIntegrity.verifyAndEnd(st, path, marker)
+    try FilesetCommit(st, path, s"$jobTag-retry", staged, linked = true, relink = true)
     catch {
-      case _: IllegalStateException =>
+      case _: CommitIntegrity.Swapped =>
         give("the directory was replaced AGAIN during the republish")
     }
   }
@@ -430,73 +309,46 @@ final class SSTableStreamingWrite(path: String, schema: StructType,
     extends StreamingWrite {
   import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
 
-  private val serConf: Option[SerializableHadoopConf] =
-    if (Storage.hasScheme(path))
-      Some(new SerializableHadoopConf(
-        SparkSession.active.sessionState.newHadoopConf()))
-    else None
-  private def storage: Storage =
-    serConf.map(c => new HadoopStorage(c.value): Storage).getOrElse(LocalStorage)
+  private val storageHandle =
+    StorageHandle(path, SparkSession.active.sessionState.newHadoopConf())
+  private def storage: Storage = storageHandle.get
 
   private val stagingDir = s"$path/_streaming-staging"
 
+  /** Bucketed streaming ingest: Spark honors the same bucket-clustered +
+    * (bucket, key)-sorted requirement per micro-batch, so each epoch
+    * appends at most n generations, every stem `bucket-NNNNN-epoch-E` —
+    * the layout (and its zero-exchange merges, SPJ joins, per-bucket
+    * maintenance) survives continuous ingestion; compact_bucketed
+    * periodically folds the chains. Streaming stems come from the epoch,
+    * so the factory gets no job tag. */
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory = {
     storage.mkdirs(stagingDir)
-    val t = WriterTuning.of(properties)
-    writeBuckets match {
-      case Some(n) =>
-        // bucketed streaming ingest: Spark honors the same
-        // bucket-clustered + (bucket, key)-sorted requirement per
-        // micro-batch, so each epoch appends at most n generations, every
-        // stem `bucket-NNNNN-epoch-E` — the layout (and its zero-exchange
-        // merges, SPJ joins, per-bucket maintenance) survives continuous
-        // ingestion; compact_bucketed periodically folds the chains
-        new SSTableBucketedStreamingWriterFactory(stagingDir, schema,
-          t, serConf, n)
-      case None =>
-        new SSTableStreamingWriterFactory(stagingDir, schema, t.compress,
-          t.chunkLength, t.summaryInterval, t.bloomBitsPerKey, t.algorithm,
-          serConf)
-    }
+    new SSTableTaskWriterFactory(stagingDir, schema, WriterTuning.of(properties),
+      storageHandle, jobTag = null, writeBuckets)
   }
 
+  /** Epoch replay unpublishes the prior copy of every published name
+    * first (Data.db first). Every existing sibling goes, whether or not
+    * this replay staged a counterpart — a replay with different write
+    * options (e.g. compression off, so no CompressionInfo.db staged)
+    * must not leave a stale sibling next to the new Data.db. With
+    * autocompact, the committing epoch folds each chain back to the
+    * bound before the next micro-batch plans. */
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val st = storage
-    val marker = CommitIntegrity.begin(st, path, s"epoch-$epochId")
-    val published = Seq.newBuilder[String]
-    messages.foreach {
-      case SSTableCommit(staged) => staged.foreach { data =>
-        val stagedName = data.substring(data.lastIndexOf('/') + 1)
-        val dstData = s"$path/${SSTableStreamingWrite.publishedName(stagedName)}"
-        published += dstData
-        // epoch replay: unpublish the prior copy (Data.db first). Every
-        // existing sibling goes, whether or not this replay staged a
-        // counterpart — a replay with different write options (e.g.
-        // compression off, so no CompressionInfo.db staged) must not
-        // leave a stale sibling next to the new Data.db (ADVICE r3).
-        SSTableFiles.unpublish(st, dstData)
-        SSTableFiles.PublishOrderSuffixes.foreach { suf =>
-          val src = SSTableFiles.sibling(data, suf)
-          if (st.exists(src)) st.rename(src, SSTableFiles.sibling(dstData, suf))
-        }
-      }
-      case _ =>
+    val staged = messages.toSeq.flatMap {
+      case SSTableCommit(paths) => paths
+      case _ => Nil
     }
-    // verify before recording: no phantom event in a replacement's log
-    CommitIntegrity.verifyAndEnd(st, path, marker)
-    History.record(st, path, "stream-epoch", added = published.result(),
+    val published = FilesetCommit(st, path, s"epoch-$epochId", staged,
+      unpublish = staged.map(p =>
+        s"$path/${FilesetCommit.publishedName(p.substring(p.lastIndexOf('/') + 1))}"),
+      stripAttempt = true)
+    History.record(st, path, "stream-epoch", added = published.added,
       detail = s"epoch=$epochId")
-    // every epoch appends one generation (per bucket); with autocompact
-    // the committing epoch folds the chain back to the bound before the
-    // next micro-batch plans — continuous ingestion stays read-efficient
-    // without a scheduled CALL compact
-    SSTableSource.autoCompactOf(properties.get(SSTableSource.AutoCompactOption))
-      .foreach { n =>
-        graft.operators.SSTableOps.autoCompact(SparkSession.active, path, n,
-          writeBuckets)
-        ()
-      }
+    FilesetCommit.autoCompact(properties, path, writeBuckets)
   }
 
   /** Delete the aborted epoch's staged files (matched by the epoch stem). */
@@ -509,71 +361,6 @@ final class SSTableStreamingWrite(path: String, schema: StructType,
   }
 }
 
-final class SSTableStreamingWriterFactory(stagingDir: String, schema: StructType,
-                                          compress: Boolean, chunkLength: Int,
-                                          summaryInterval: Int, bloomBitsPerKey: Int,
-                                          algorithm: String,
-                                          serConf: Option[SerializableHadoopConf])
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-                            epochId: Long): DataWriter[InternalRow] = {
-    val storage = serConf.map(c => new HadoopStorage(c.value): Storage)
-      .getOrElse(LocalStorage)
-    // attempt-unique stem: concurrent attempts of the same (partition,
-    // epoch) each get their own staged files; commit strips the
-    // `-attempt-T` part to publish the deterministic replay-stable name
-    new SSTablePartitionWriter(stagingDir, schema, partitionId, taskId, compress,
-      chunkLength, summaryInterval, bloomBitsPerKey, storage,
-      fileStem = f"part-$partitionId%05d-epoch-$epochId-attempt-$taskId",
-      algorithm = algorithm)
-  }
-}
-
-object SSTableStreamingWrite {
-  private val AttemptPart = "-attempt-\\d+".r
-  /** `part-P-epoch-E-attempt-T-Data.db` → `part-P-epoch-E-Data.db` (and
-    * identically `bucket-NNNNN-epoch-E-attempt-T-…` for bucketed epochs):
-    * the published name is (partition-or-bucket, epoch)-deterministic, so
-    * a replayed epoch renames ONTO its prior output instead of
-    * duplicating it. */
-  def publishedName(stagedName: String): String =
-    AttemptPart.replaceAllIn(stagedName, "")
-}
-
-/** Bucketed streaming writer factory: the rolling per-bucket writer with
-  * `bucket-NNNNN-epoch-E-attempt-T` staged stems — canonical bucket
-  * layout + epoch determinism + attempt uniqueness. The epoch id in the
-  * stem is what makes replay idempotent per bucket (see
-  * [[SSTableStreamingWrite.publishedName]]). */
-final class SSTableBucketedStreamingWriterFactory(
-    stagingDir: String, schema: StructType, tuning: WriterTuning,
-    serConf: Option[SerializableHadoopConf], buckets: Int)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-                            epochId: Long): DataWriter[InternalRow] = {
-    val storage = serConf.map(c => new HadoopStorage(c.value): Storage)
-      .getOrElse(LocalStorage)
-    new SSTableBucketedRollingWriter(stagingDir, schema, tuning, storage,
-      b => s"${SSTableSource.bucketStem(b)}epoch-$epochId-attempt-$taskId",
-      taskId, buckets)
-  }
-}
-
-/** Bucketed-table write factory: each task gets a ROLLING writer that
-  * streams one staged generation per bucket it holds. */
-final class SSTableBucketedWriterFactory(stagingDir: String, schema: StructType,
-                                         tuning: WriterTuning,
-                                         serConf: Option[SerializableHadoopConf],
-                                         jobTag: String, buckets: Int)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
-    val storage = serConf.map(c => new HadoopStorage(c.value): Storage)
-      .getOrElse(LocalStorage)
-    new SSTableBucketedRollingWriter(stagingDir, schema, tuning, storage,
-      b => s"${SSTableSource.bucketStem(b)}$jobTag-$taskId", taskId, buckets)
-  }
-}
-
 /** Streams one task's rows — Spark-sorted by `(bucket(n, key), key)` per
   * [[SSTableWrite.requiredOrdering]] — into one staged 4-file set PER
   * BUCKET, rolling to a fresh [[SSTablePartitionWriter]] whenever the
@@ -583,13 +370,12 @@ final class SSTableBucketedWriterFactory(stagingDir: String, schema: StructType,
   * declared distribution/ordering was not honored, and silently
   * splitting a bucket across generations in one task would corrupt
   * nothing but waste names — the invariant is cheap to enforce, so it
-  * is. Staged stems are `bucket-NNNNN-<jobTag>-<taskId>`: canonical
-  * bucket layout plus attempt uniqueness (taskId differs per attempt;
-  * the commit coordinator publishes exactly one attempt's files). */
+  * is. `stemFor` names each bucket's staged fileset
+  * ([[SSTableTaskWriterFactory]]: canonical bucket layout plus attempt
+  * uniqueness). */
 final class SSTableBucketedRollingWriter(stagingDir: String, schema: StructType,
                                          tuning: WriterTuning, storage: Storage,
-                                         stemFor: Int => String, taskId: Long,
-                                         buckets: Int,
+                                         stemFor: Int => String, buckets: Int,
                                          stampMicros: Option[Long] = None)
     extends DataWriter[InternalRow] {
   private val keyIdx = schema.fieldIndex("key")
@@ -599,11 +385,8 @@ final class SSTableBucketedRollingWriter(stagingDir: String, schema: StructType,
 
   private def roll(b: Int): Unit = {
     closeCurrent()
-    current = new SSTablePartitionWriter(stagingDir, schema, b, taskId,
-      tuning.compress, tuning.chunkLength, tuning.summaryInterval,
-      tuning.bloomBitsPerKey, storage,
-      fileStem = stemFor(b),
-      algorithm = tuning.algorithm, stampMicros = stampMicros)
+    current = new SSTablePartitionWriter(stagingDir, schema, tuning, storage,
+      stemFor(b), stampMicros)
     currentBucket = b
   }
   private def closeCurrent(): Unit = if (current != null) {
@@ -635,43 +418,19 @@ final class SSTableBucketedRollingWriter(stagingDir: String, schema: StructType,
   override def close(): Unit = ()
 }
 
-final class SSTableWriterFactory(stagingDir: String, schema: StructType,
-                                 compress: Boolean, chunkLength: Int,
-                                 summaryInterval: Int, bloomBitsPerKey: Int,
-                                 algorithm: String,
-                                 serConf: Option[SerializableHadoopConf],
-                                 jobTag: String)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
-    val storage = serConf.map(c => new HadoopStorage(c.value): Storage)
-      .getOrElse(LocalStorage)
-    // job-tagged stem: published names stay unique across applications
-    new SSTablePartitionWriter(stagingDir, schema, partitionId, taskId, compress,
-      chunkLength, summaryInterval, bloomBitsPerKey, storage,
-      fileStem = f"part-$partitionId%05d-$taskId-$jobTag", algorithm = algorithm)
-  }
-}
-
-/** Streams one partition's rows (already key-sorted by Spark) into a
-  * 4-file SSTable set under the job staging dir. Accepts either the full
+/** Streams one partition's rows (already key-sorted by Spark) into the
+  * staged SSTable set `stagingDir/<fileStem>-*`. Accepts either the full
   * nested schema or a bare `key` plus nested `columns` in any field
   * order. `stampMicros` (row-level operations only) overrides every
   * written cell's timestamp with the operation's write timestamp —
   * the Cassandra server-side-timestamp contract of UPDATE/MERGE. */
 final class SSTablePartitionWriter(stagingDir: String, schema: StructType,
-                                   partitionId: Int, taskId: Long, compress: Boolean,
-                                   chunkLength: Int, summaryInterval: Int,
-                                   bloomBitsPerKey: Int, storage: Storage,
-                                   fileStem: String = null,
-                                   algorithm: String = CompressionInfo.SnappyAlgorithm,
+                                   tuning: WriterTuning, storage: Storage,
+                                   fileStem: String,
                                    stampMicros: Option[Long] = None)
     extends DataWriter[InternalRow] {
-  private val dataPath =
-    if (fileStem != null) s"$stagingDir/$fileStem-Data.db"
-    else f"$stagingDir/part-$partitionId%05d-$taskId-Data.db"
-  private val writer = new SSTableWriter(dataPath, compress, chunkLength,
-    summaryInterval, bloomBitsPerKey = bloomBitsPerKey, algorithm = algorithm,
-    storage = storage)
+  private val dataPath = s"$stagingDir/$fileStem${SSTableFiles.DataSuffix}"
+  private val writer = tuning.open(dataPath, storage)
   private val keyIdx = schema.fieldIndex("key")
   private val colsIdx = if (schema.fieldNames.contains("columns")) schema.fieldIndex("columns") else -1
   private val colStruct = SSTableSchema.columnStruct

@@ -1,13 +1,14 @@
 package graft.sources.sstable.spark
 
-import graft.sources.sstable.{RowTombstone, SSTableFiles, SSTableRow, SSTableWriter, Storage}
+import graft.sources.sstable.{RowTombstone, SSTableFiles, SSTableRow, Storage}
 
 /** Single home of the per-statement tombstone staging choreography
   * (review r8: SQL DELETE's metadata path and the delta commit each
   * carried their own copy of this loop, and a drift between them would
   * silently break DELETE-vs-MERGE parity).
   *
-  * Writes the statement's row tombstones into `stagingDir` driver-side
+  * Writes the statement's row tombstones into `stagingDir` driver-side,
+  * under the table's writer `tuning`
   * (the key list is metadata-sized by the `maxdeletekeys` contract):
   * ONE key-sorted fileset per AFFECTED hash bucket under its bucket
   * stem when `writeBuckets` is set (the layout survives), else ONE
@@ -16,11 +17,11 @@ import graft.sources.sstable.{RowTombstone, SSTableFiles, SSTableRow, SSTableWri
   * stage-all-then-publish rule that keeps a mid-statement failure from
   * half-applying the operation. */
 private[spark] object TombstoneStaging {
-  def stage(storage: Storage, stagingDir: String, nameTag: String,
+  def stage(storage: Storage, tuning: WriterTuning, stagingDir: String, nameTag: String,
             keys: Seq[Array[Byte]], ldtSecs: Int, markMicros: Long,
             writeBuckets: Option[Int]): Seq[String] = {
     def write(p: String, ks: Seq[Array[Byte]]): String = {
-      val w = new SSTableWriter(p, storage = storage)
+      val w = tuning.open(p, storage)
       try ks.sortWith(SSTableFiles.compareKeys(_, _) < 0).foreach(k =>
         w.append(SSTableRow(k, Nil, Some(RowTombstone(ldtSecs, markMicros)))))
       finally w.close()

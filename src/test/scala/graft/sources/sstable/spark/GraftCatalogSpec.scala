@@ -930,7 +930,25 @@ class GraftCatalogSpec extends AnyFunSuite {
       assert(files.exists(_.contains("fold-")), s"$table: no fold ran: $files")
       assert(keysOf(spark.table(s"graft.tun.$table")) ==
         (1 to 4).flatMap(e => (0 until 3).map(i => s"k$e$i")).sorted)
-      files.map(new SSTableReader(_, LocalStorage))
+      // readers load their sidecars now: a later commit may fold these away
+      val folded = files.map(new SSTableReader(_, LocalStorage))
+      // a key DELETE and a MERGE ... THEN DELETE append tombstone
+      // generations, which a plain table's autocompact never folds: they
+      // must carry the table's tuning too (a bucketed MERGE commit folds
+      // its chains, its tombstones included, right away)
+      def tombstones(marker: String): Seq[SSTableReader] =
+        LocalStorage.listDataFiles(s"$warehouse/tun/$table").filter(_.contains(marker))
+          .map(new SSTableReader(_, LocalStorage))
+      spark.sql(s"DELETE FROM graft.tun.$table WHERE key = CAST('k10' AS BINARY)")
+      val deleted = tombstones("-delete-")
+      assert(deleted.nonEmpty, s"$table: DELETE appended no tombstone generation")
+      spark.sql(s"MERGE INTO graft.tun.$table t USING (SELECT CAST('k20' AS BINARY) mk) s " +
+        "ON t.key = s.mk WHEN MATCHED THEN DELETE")
+      val merged = tombstones("-tomb-")
+      assert(merged.nonEmpty || props.contains("buckets"),
+        s"$table: MERGE appended no tombstone generation")
+      assert(!keysOf(spark.table(s"graft.tun.$table")).exists(Set("k10", "k20")))
+      folded ++ deleted ++ merged
     }
     foldedGens("deflate", "'compressionalgorithm'='deflate'").foreach(r =>
       assert(r.compressionInfo.exists(_.algorithm == "DeflateCompressor"),

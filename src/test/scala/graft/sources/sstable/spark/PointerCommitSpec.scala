@@ -832,6 +832,31 @@ class PointerCommitSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("dropped"), e2.getMessage)
   }
 
+  test("writeBucketed refuses a dropped or mid-restore directory: nothing " +
+    "published, no staging or commit marker left behind") {
+    import graft.sources.sstable.{Column, SSTableRow, SSTableWriter}
+    val src = tmp()
+    val w = new SSTableWriter(s"$src/g-Data.db")
+    (0 until 8).foreach(i => w.append(SSTableRow(s"k$i".getBytes,
+      Seq(Column.Normal("c".getBytes, s"v$i".getBytes, i.toLong)))))
+    w.close()
+    val df = spark.read.format("sstable").load(src)
+    for (state <- Seq(TableState.Dropped(None, "deadbeef"),
+        TableState.Restoring("_dropped-t-11111111", "11111111"))) {
+      val dir = tmp()
+      GraftCatalog.writeTableProps(LocalStorage, dir,
+        Map(TableState.Key -> TableState.encode(state).get))
+      val e = intercept[IllegalStateException](
+        graft.operators.SSTableOps.writeBucketed(df, dir, buckets = 4))
+      assert(e.getMessage.contains("DROPPED") || e.getMessage.contains("mid-restore"),
+        e.getMessage)
+      assert(LocalStorage.listDataFiles(dir).isEmpty, s"$state: published into $dir")
+      val litter = new java.io.File(dir).list().filter(n =>
+        n.startsWith("_staging-bucketed-") || n.startsWith("_commit-"))
+      assert(litter.isEmpty, s"$state: left behind ${litter.mkString(", ")}")
+    }
+  }
+
   // ---- ADVICE r12 closures ----
 
   test("absorbRacers copies each racer fileset in PUBLISH order — " +

@@ -234,10 +234,11 @@ class SSTableSourceSpec extends AnyFunSuite {
   test("aborted task attempts leave no readable output (staging commit protocol)") {
     val dir = freshDir()
     val schema = SSTableSchema.schema
-    val factory = new SSTableWriterFactory(s"$dir/_staging-test", schema,
-      compress = true, chunkLength = 512, summaryInterval = 8,
-      bloomBitsPerKey = 10, algorithm = CompressionInfo.SnappyAlgorithm,
-      serConf = None, jobTag = "testjob")
+    val factory = new SSTableTaskWriterFactory(s"$dir/_staging-test", schema,
+      WriterTuning(compress = true, chunkLength = 512, summaryInterval = 8,
+        bloomBitsPerKey = 10, algorithm = CompressionInfo.SnappyAlgorithm),
+      graft.sources.sstable.StorageHandle(dir, new org.apache.hadoop.conf.Configuration()),
+      jobTag = "testjob", buckets = None)
     new java.io.File(s"$dir/_staging-test").mkdirs()
 
     // attempt 0 writes some rows then aborts (simulated task failure)

@@ -63,7 +63,7 @@ class StreamingSinkSpec extends AnyFunSuite {
         assert(new java.io.File(sib).exists(), s"missing sibling $sib")
       }
     }
-    assert(SSTableStreamingWrite.publishedName("part-00003-epoch-7-attempt-42-Data.db")
+    assert(FilesetCommit.publishedName("part-00003-epoch-7-attempt-42-Data.db")
       == "part-00003-epoch-7-Data.db")
 
     val all = spark.read.format("sstable").load(dir)
