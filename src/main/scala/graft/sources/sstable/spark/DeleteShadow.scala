@@ -10,12 +10,13 @@ import graft.sources.sstable._
   * never applies across files — SSTableData.scala keeps tombstones as
   * data): a `DELETE` appends one tiny generation of row tombstones
   * (O(deleted keys) IO, nothing rewritten), and readers shadow cells
-  * with `timestamp <= markedAt` at decode. A delete-only generation is
-  * PROVABLE from its v2+ `-Statistics.db` alone — rows but zero cells,
-  * every row a tombstone — so detection costs one cached sidecar read,
-  * no naming convention. Because the whole generation is representable
-  * as this map, hoisting it driver-side and excluding it from split
-  * planning is pure optimization of the same merge semantics
+  * with `timestamp <= markedAt` at decode ([[Visibility]]). A
+  * delete-only generation is PROVABLE from its v2+ `-Statistics.db`
+  * alone — rows but zero cells, every row a tombstone — so detection
+  * costs one cached sidecar read, no naming convention. Because the
+  * whole generation is representable as this map, hoisting it
+  * driver-side ([[ReadSnapshot]]) and excluding it from split planning
+  * is pure optimization of the same merge semantics
   * [[graft.operators.SSTableOps.compactRows]] applies; compaction later
   * folds the tombstones into the data (and GCs them when isolated),
   * shrinking the map back to nothing.
@@ -49,28 +50,6 @@ final class DeleteShadow(keys: Array[Array[Byte]], marked: Array[Long])
 
 object DeleteShadow {
   val Empty = new DeleteShadow(Array.empty, Array.empty)
-
-  /** Pending-delete shadowing of ONE decoded row (`applydeletes`): drop
-    * cells at/before the key's delete mark — Cassandra's reconcile rule,
-    * applied at decode — and the whole row when nothing survives (a
-    * later re-insert does: its cells outdate the mark). The row's own
-    * tombstone is likewise superseded when the mark is newer. The single
-    * source of the rule: [[SSTableRowReader]] (the scan) and the SQL
-    * probe-join exec both call here, so their delete-aware views can
-    * never drift apart. */
-  def shadowRow(row: graft.sources.sstable.SSTableRow,
-                sh: DeleteShadow): Option[graft.sources.sstable.SSTableRow] = {
-    val m = sh.markedAt(row.key)
-    if (m == Long.MinValue) Some(row)
-    else {
-      val cols = row.columns.filter(_.timestamp > m)
-      val tomb = row.tombstone.filter(_.markedForDeleteAtMicros > m)
-      if (cols.nonEmpty ||
-          tomb.exists(_.markedForDeleteAtMicros != Long.MinValue))
-        Some(row.copy(columns = cols, tombstone = tomb))
-      else None
-    }
-  }
 
   /** Is this generation delete-only? Provable from the v2+ sidecar:
     * rows but zero cells, every row a (non-LIVE) tombstone. Stats-less

@@ -20,19 +20,20 @@ import graft.sources.sstable._
   * metadata-sized (a row per file, not per data row).
   *
   * Composes with `snapshot` (the pinned fileset's metadata) and
-  * `sincesnapshot` (only the epoch's new generations). Read-only,
-  * batch-only. */
-final class GenerationsScanBuilder(path: String, sinceDir: Option[String])
+  * `sincesnapshot` (only the epoch's new generations), and lists through
+  * a [[ReadSnapshot]] like every data read. Read-only, batch-only. */
+final class GenerationsScanBuilder(path: String, sinceDir: Option[String],
+                                   catalogManaged: Boolean)
     extends ScanBuilder with SupportsPushDownRequiredColumns {
   private var required: StructType = SSTableSchema.generationsSchema
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = StructType(SSTableSchema.generationsSchema.fields
       .filter(f => requiredSchema.fieldNames.contains(f.name)))
-  override def build(): Scan = new GenerationsScan(path, required, sinceDir)
+  override def build(): Scan = new GenerationsScan(path, required, sinceDir, catalogManaged)
 }
 
 final class GenerationsScan(path: String, required: StructType,
-                            sinceDir: Option[String])
+                            sinceDir: Option[String], catalogManaged: Boolean)
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -43,8 +44,7 @@ final class GenerationsScan(path: String, required: StructType,
   override def planInputPartitions(): Array[InputPartition] = {
     val storage = Storage.forPath(path,
       org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
-    val files = SSTableScan.sinceFilePrune(
-      storage.listDataFiles(path), sinceDir, storage)
+    val files = ReadSnapshot(storage, path, "planning", sinceDir, catalogManaged).listed
     import scala.collection.parallel.CollectionConverters._
     val rows: Array[Array[Any]] = files.par.map { f =>
       val r = new SSTableReader(f, storage)

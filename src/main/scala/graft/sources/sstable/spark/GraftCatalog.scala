@@ -233,13 +233,15 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     ident.name.toLowerCase(java.util.Locale.ROOT) match {
       case "generations" => Some(new SSTableTable(Map(
         SSTableSource.PathOption -> owner,
-        SSTableSource.ViewOption -> "generations")))
+        SSTableSource.ViewOption -> "generations",
+        SSTableSource.CatalogManagedOption -> "true")))
       case "snapshots" => Some(new SnapshotsTable(owner))
       case "history" => Some(new HistoryTable(owner))
       case "cells" => Some(new SSTableTable(Map(
         SSTableSource.PathOption -> owner,
         SSTableSource.ViewOption -> "cells",
-        SSTableSource.ApplyDeletesOption -> "true")))
+        SSTableSource.ApplyDeletesOption -> "true",
+        SSTableSource.CatalogManagedOption -> "true")))
       case _ => None
     }
   }

@@ -20,7 +20,7 @@ import graft.sources.sstable.{SSTableReader, Storage, StorageHandle}
   * directory (snapshot pins already applied), the PRUNED read schema,
   * and the delete-awareness pair. Produced by
   * [[SSTableScan.lookupProbeSpec]] — only for scan shapes whose row
-  * semantics `DirectoryProber.getRaw` + `DeleteShadow.shadowRow` match
+  * semantics `DirectoryProber.getRaw` + [[Visibility.row]] match
   * exactly. */
 final case class LookupProbeSpec(path: String, schema: StructType,
                                  applyDeletes: Boolean, maxDeleteKeys: Int,
@@ -30,7 +30,7 @@ final case class LookupProbeSpec(path: String, schema: StructType,
 }
 
 /** The SQL route to the index-nested-loop probe path for RELATION-sized
-  * probe sets (VERDICT r10 #1) — `CALL graft.system.lookup` covers
+  * probe sets — `CALL graft.system.lookup` covers
   * literal key lists; this covers the natural SQL formulation:
   *
   * {{{
@@ -126,7 +126,7 @@ object SSTableLookupJoinStrategy extends SparkStrategy
     }
 
   /** Re-name an inlined expression under the ORIGINAL exprId. The id
-    * check matters (review r11): when an upper Project passes through a
+    * check matters: when an upper Project passes through a
     * lower pure-rename alias (`b` over `val AS b`), inlining reduces
     * `b#2` to the bare attribute `val#5` — itself a NamedExpression, but
     * returning it verbatim would desync the exec's output from the
@@ -246,10 +246,10 @@ object SSTableLookupJoinStrategy extends SparkStrategy
   * broadcast), and each partition probes its rows' keys through
   * [[SSTableReader.DirectoryProber.getRaw]] — per-generation row
   * versions, delete-shadowed with the scan's own rule
-  * ([[DeleteShadow.shadowRow]]), so the output row multiset is exactly
+  * ([[Visibility.row]]), so the output row multiset is exactly
   * `probe ⋈ scan` for the supported join types. The (listing, shadow)
-  * pair is snapshotted ONCE at execute, the same consistency contract as
-  * [[SSTableScan.toBatch]].
+  * pair is one [[ReadSnapshot]] taken at execute, the same consistency
+  * contract as [[SSTableScan.toBatch]].
   *
   * 100 TB shape: IO ∝ probe rows × candidate generations (bloom-pruned;
   * absent keys open zero Data.db files), never table size; the only
@@ -298,23 +298,14 @@ final case class SSTableLookupJoinExec(child: SparkPlan,
   override protected def doExecute(): RDD[InternalRow] = {
     val numOutputRows = longMetric("numOutputRows")
     val probedKeys = longMetric("probedKeys")
-    val st0 = SSTableLookupJoin.testStorage.getOrElse(spec.storage)
     // one (listing, shadow) snapshot for every partition — the same
-    // freshness + consistency contract as the scan's Batch, including
-    // the post-list pointer re-check (r12): a DROP/REPLACE committing
-    // between resolution and this snapshot could leave a half-destroyed
-    // residue listing — loud beats a silently partial probe set
-    val listed = st0.listDataFiles(spec.path)
-    // one-read form (r13): existence and state from the same view
-    GraftCatalog.requirePostListState(st0, spec.path, listed.isEmpty,
-      catalogManaged = spec.catalogManaged, at = "the probe snapshot")
-    val (dataFiles, shadow) =
-      if (spec.applyDeletes) {
-        val (del, data) = listed.partition(f =>
-          DeleteShadow.isDeleteOnly(new SSTableReader(f, st0).statistics))
-        (data, Some(DeleteShadow.load(del, st0, None, spec.maxDeleteKeys)))
-      } else (listed, None)
-    val shadowBc = shadow.map(sparkContext.broadcast(_))
+    // freshness and consistency contract as the scan's Batch: a
+    // half-destroyed residue would be a silently partial probe set
+    val snap = ReadSnapshot(SSTableLookupJoin.testStorage.getOrElse(spec.storage),
+      spec.path, "the probe snapshot", catalogManaged = spec.catalogManaged,
+      splitDeletes = spec.applyDeletes)
+    val dataFiles = snap.data
+    val shadowBc = snap.pendingDeletes(None, spec.maxDeleteKeys)
     val specLocal = spec
     val childOutput = child.output
     val rawAttrs = relOutput
@@ -330,7 +321,7 @@ final case class SSTableLookupJoinExec(child: SparkPlan,
       val st = SSTableLookupJoin.testStorage.getOrElse(specLocal.storage)
       // one prober (cached metadata) per partition, not per key
       val prober = new SSTableReader.DirectoryProber(dataFiles, st)
-      val sh = shadowBc.map(_.value)
+      val vis = new Visibility(None, None, shadowBc.map(_.value))
       val joined = new JoinedRow
       // the scan-side Filter + Project chain, re-executed per probed row
       val predOnRaw = scanPred.map(BindReferences.bindReference(_, rawAttrs))
@@ -347,19 +338,14 @@ final case class SSTableLookupJoinExec(child: SparkPlan,
         // SQL equi-join semantics: a NULL probe key matches nothing
         val k = keyExpr.eval(row).asInstanceOf[Array[Byte]]
         // LAZY surviving-match pipeline: generations decode only as the
-        // consumer advances (review r11 — semi/anti need one surviving
-        // match, not every row version of a 16-generation hot key). The
+        // consumer advances (semi/anti need one surviving match, not
+        // every row version of a 16-generation hot key). The
         // projOnRaw buffer is reused: at most one element is alive at a
         // time here; consumers that hold several matches copy below.
         def survivors(): Iterator[InternalRow] =
           if (k == null) Iterator.empty
           else {
-            val raw = prober.getRawIter(k)
-            val visible = sh match {
-              case Some(s) => raw.flatMap(DeleteShadow.shadowRow(_, s))
-              case None => raw
-            }
-            val rows = visible
+            val rows = prober.getRawIter(k).flatMap(vis.row)
               .map(SSTableSchema.rowToInternal(_, specLocal.schema))
               .filter(r => predOnRaw.forall(p =>
                 java.lang.Boolean.TRUE == p.eval(r)))

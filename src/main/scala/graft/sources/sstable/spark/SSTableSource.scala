@@ -201,9 +201,8 @@ object SSTableSource {
     * reinsert row carries both the tombstone and newer live cells; its
     * reconciled state is live, so labeling it a delete would make a
     * feed consumer drop a live key). The explicit change feed for
-    * `sincesnapshot` epoch-diff consumers (VERDICT r7 #7), who
-    * previously had to infer the change type from the row shape.
-    * Metadata column, so `q_sstable_since`-style diff schemas stay
+    * `sincesnapshot` epoch-diff consumers, who would otherwise have to
+    * infer the change type from the row shape. Metadata column, so `q_sstable_since`-style diff schemas stay
     * stable: `SELECT *, _change_type` opts in. Forces Data.db decode on
     * key-only projections (Index.db doesn't know tombstones). */
   val ChangeTypeColumn = "_change_type"
@@ -269,17 +268,16 @@ object SSTableSource {
     * table identity, so silently following a swap would be wrong. */
   private[spark] val CommitRetryOption = "commitretry"
 
-  /** Set by [[GraftCatalog.loadTable]] only: every catalog-created
-    * table carries a `_table` file (r12 — even propless CREATEs write
-    * one, it is the lifecycle pointer), so a catalog read whose listing
-    * is EMPTY and whose `_table` is GONE is either a DROP's finalize
-    * caught between its last two deletes or a hand-made directory that
-    * holds nothing yet — refusing both keeps a dropped table from
-    * flashing as "empty" for the removal's final instant (found by the
-    * chaos stress: a reader in that window read zero rows from a table
-    * that was never empty). Path-API reads keep the old
-    * empty-dir-reads-empty behavior (streams legitimately point at
-    * sink directories before their first commit). */
+  /** Set by [[GraftCatalog]] on its tables and their metadata views:
+    * every catalog-created table carries a `_table` file (even propless
+    * CREATEs write one, it is the lifecycle pointer), so a catalog read
+    * whose listing is EMPTY and whose `_table` is GONE is either a
+    * DROP's finalize caught between its last two deletes or a hand-made
+    * directory that holds nothing yet — refusing both keeps a dropped
+    * table from reading as "empty" for the removal's final instant.
+    * Path-API reads keep the empty-dir-reads-empty behavior (streams
+    * legitimately point at sink directories before their first
+    * commit). */
   private[spark] val CatalogManagedOption = "catalogmanaged"
 
   private[spark] def autoCompactOf(v: Option[String]): Option[Int] = v.map { s =>
@@ -338,7 +336,7 @@ object SSTableSource {
     * as exactly five digits and [[BucketNameRe]] parses exactly five, so
     * a count past 99999 would publish stems no guard or parser
     * recognizes — generic compaction would then fold across buckets and
-    * destroy the layout (ADVICE r8 medium). 99999 buckets × one task
+    * destroy the layout. 99999 buckets × one task
     * each is already beyond any sane layout, so a cap beats widening
     * the name format under data written by every earlier version. */
   private[graft] val MaxBuckets = 99999
@@ -470,7 +468,7 @@ final class SSTableTable(props: Map[String, String])
       new GenerationsScanBuilder(path,
         Option(merged.get(SSTableSource.SinceSnapshotOption)).map { tag =>
           s"$basePath/${SSTableSource.SnapshotDirPrefix}${validTag(tag)}"
-        })
+        }, catalogManaged = merged.containsKey(SSTableSource.CatalogManagedOption))
     } else new SSTableScanBuilder(path, new CaseInsensitiveStringMap(merged))
   }
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
@@ -562,8 +560,8 @@ final class SSTableTable(props: Map[String, String])
         // one tiny delete-only generation (per affected bucket when the
         // table is bucketed — the layout survives), written driver-side:
         // the key list is a SQL literal set, metadata-sized by
-        // construction. Staged wholly before the first publish (review
-        // r8): a mid-statement failure leaves the DELETE un-applied, not
+        // construction. Staged wholly before the first publish: a
+        // mid-statement failure leaves the DELETE un-applied, not
         // half-applied. Compaction later GCs the debt; delete-aware
         // reads shadow it like any delete-only generation. The staging
         // loop itself is [[TombstoneStaging]] — shared with the delta
@@ -648,8 +646,13 @@ final class KeyBounds(field: String = "key") {
     case _ => false
   }
 
+  def eqKey: Option[Array[Byte]] = KeyBounds.eqKey(lo, hi)
+}
+
+object KeyBounds {
   /** Point-lookup key: both bounds present, inclusive, byte-equal. */
-  def eqKey: Option[Array[Byte]] = (lo, hi) match {
+  def eqKey(lo: Option[(Array[Byte], Boolean)],
+            hi: Option[(Array[Byte], Boolean)]): Option[Array[Byte]] = (lo, hi) match {
     case (Some((l, true)), Some((h, true))) if java.util.Arrays.equals(l, h) => Some(l)
     case _ => None
   }
@@ -716,17 +719,10 @@ final class SSTableScanBuilder(path: String, options: CaseInsensitiveStringMap)
     * non-key orders, and bucketed scans (a bucket partition chains
     * multiple generations — not sorted as a whole). */
   override def pushTopN(orders: Array[
-      org.apache.spark.sql.connector.expressions.SortOrder], n: Int): Boolean = {
-    import org.apache.spark.sql.connector.expressions.{NamedReference, SortDirection}
-    val keyAsc = orders.length == 1 &&
-      orders(0).direction == SortDirection.ASCENDING &&
-      (orders(0).expression match {
-        case r: NamedReference => r.fieldNames.toSeq == Seq("key")
-        case _ => false
-      })
-    if (!keyAsc || bucketsOpt.isDefined || aggResult.isDefined || n < 0) false
+      org.apache.spark.sql.connector.expressions.SortOrder], n: Int): Boolean =
+    if (!ReadPath.keyAscending(orders) || bucketsOpt.isDefined || aggResult.isDefined ||
+        n < 0) false
     else { limit = Some(n); topN = true; true }
-  }
 
   /** Partial on both paths: Spark keeps the global limit / final sort. */
   override def isPartiallyPushed(): Boolean = true
@@ -768,7 +764,7 @@ final class SSTableScanBuilder(path: String, options: CaseInsensitiveStringMap)
     *    residual, so Spark already withholds aggregates behind a Filter
     *    node — the bounds check is defense in depth);
     *  - default view: every aggregate is COUNT(*), MIN(key) or MAX(key);
-    *  - cells view (VERDICT r5 #7): COUNT(*), MIN(timestamp) or
+    *  - cells view: COUNT(*), MIN(timestamp) or
     *    MAX(timestamp) — cellCount and the cell-timestamp bounds are
     *    v2 statistics; `ttlAsOfMs` must be unset (TTL filtering changes
     *    cell multiplicity in ways no static sidecar can know);
@@ -834,9 +830,9 @@ final class SSTableScanBuilder(path: String, options: CaseInsensitiveStringMap)
     if (mapped.isEmpty || mapped.exists(_.isEmpty)) return false
     // acceptance (not the values) is decided here: every generation must
     // carry recognized statistics RIGHT NOW or the normal scan runs. The
-    // VALUES are computed later, per batch planning (ADVICE r5: a
-    // retained DataFrame re-executed after a flush/compaction must see
-    // current state, like the non-pushed scan re-planning partitions) —
+    // VALUES are computed later, per batch planning (a retained
+    // DataFrame re-executed after a flush/compaction must see current
+    // state, like the non-pushed scan re-planning partitions) —
     // a generation that arrives stats-less after this check is handled
     // there by a metadata-walk fallback, never a wrong answer.
     val storage = Storage.forPath(path,
@@ -907,7 +903,7 @@ final class SSTableScanBuilder(path: String, options: CaseInsensitiveStringMap)
 /** Completely-pushed-down aggregate scan: one partition, one row — the
   * COUNT(*)/MIN(key)/MAX(key) values computed from every generation's
   * `-Statistics.db` when the BATCH IS PLANNED, not when the aggregate
-  * was pushed (ADVICE r5): a retained DataFrame re-executed after the
+  * was pushed: a retained DataFrame re-executed after the
   * directory changed (new flush, compaction pass) re-reads the sidecars
   * and returns current values, matching the non-pushed scan's
   * re-planning behavior. A generation that lost/never had statistics by
@@ -946,7 +942,7 @@ object SSTableAggScan {
   case object CountStarKind extends AggKind
   case object MinKeyKind extends AggKind
   case object MaxKeyKind extends AggKind
-  // cells view (VERDICT r5 #7): COUNT(*) over cells, MIN/MAX(timestamp)
+  // cells view: COUNT(*) over cells, MIN/MAX(timestamp)
   case object CellCountKind extends AggKind
   case object MinCellTsKind extends AggKind
   case object MaxCellTsKind extends AggKind
@@ -964,21 +960,18 @@ object SSTableAggScan {
         (s.rowCount, if (s.rowCount > 0) s.minKey else null,
           if (s.rowCount > 0) s.maxKey else null)
       case None =>
-        val in = storage.open(SSTableFiles.sibling(dataPath, SSTableFiles.IndexSuffix))
+        val ir = ReadPath.openIndex(storage, dataPath, IndexFile.HeaderLen, r.indexLength)
         try {
-          in.seek(IndexFile.HeaderLen)
-          val ir = new IndexReader(in, r.indexLength)
           var n = 0L
           var first: Array[Byte] = null
           var last: Array[Byte] = null
-          while (ir.hasNext) {
-            val e = ir.next()
+          ir.foreach { e =>
             if (first == null) first = e.key
             last = e.key
             n += 1
           }
           (n, first, last)
-        } finally in.close()
+        } finally ir.close()
     }
   }
 
@@ -1007,15 +1000,10 @@ object SSTableAggScan {
                              catalogManaged: Boolean = false): Array[Any] = {
     val storage = Storage.forPath(path,
       org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
-    val files = SSTableScan.sinceFilePrune(
-      storage.listDataFiles(path), sinceDir, storage)
-    // post-list pointer re-check, stats-only flavor (r12; one-read form
-    // r13): a DROP or REPLACE committing between resolution and this
-    // sidecar sweep could make a COUNT(*) silently sum a half-destroyed
-    // residue's subset — or, with the vanished-pointer window, report 0
-    // for a table that was never empty
-    GraftCatalog.requirePostListState(storage, path, files.isEmpty,
-      catalogManaged, at = "the stats sweep")
+    // a COUNT(*) over a half-destroyed residue, or over a table whose
+    // pointer vanished, would be silently wrong: the snapshot refuses both
+    val files = ReadSnapshot(storage, path, "the stats sweep", sinceDir,
+      catalogManaged).listed
     lazy val per = files.map(generationBounds(_, storage))
     lazy val nonEmpty = per.filter(_._1 > 0)
     lazy val minKey = if (nonEmpty.isEmpty) null
@@ -1105,7 +1093,7 @@ final class SSTableScan(path: String, requiredSchema: StructType,
                         maxDeleteKeys: Int = SSTableSource.DefaultMaxDeleteKeys,
                         spjBuckets: Option[Int] = None,
                         catalogManaged: Boolean = false)
-    extends Scan with Batch with SupportsRuntimeFiltering
+    extends Scan with SupportsRuntimeFiltering
     with SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning
     with org.apache.spark.sql.connector.read.SupportsReportOrdering {
@@ -1117,7 +1105,7 @@ final class SSTableScan(path: String, requiredSchema: StructType,
 
   /** The probe-join contract ([[SSTableLookupJoinStrategy]]): Some(spec)
     * when this scan is exactly the plain row view whose per-key emission
-    * `DirectoryProber.getRaw` + `DeleteShadow.shadowRow` reproduce —
+    * `DirectoryProber.getRaw` + [[Visibility.row]] reproduce —
     * default view, no TTL/as-of/CDC/streaming admission, no bucketed
     * read layout, no pushed limit/top-n, and no metadata columns (the
     * prober loses the generation stem). Pushed KEY BOUNDS do NOT
@@ -1137,16 +1125,12 @@ final class SSTableScan(path: String, requiredSchema: StructType,
         handle, catalogManaged = catalogManaged))
     else None
 
-  /** Point-lookup key (`key = X` pushed down): both bounds present,
-    * inclusive, and byte-equal. Files whose bloom filter excludes it are
-    * skipped wholesale — Cassandra's negative-lookup elimination, now at
-    * plan time (false positives only cost IO; Spark re-filters rows). */
-  private val eqKey: Option[Array[Byte]] = (keyLo, keyHi) match {
-    case (Some((lo, true)), Some((hi, true))) if java.util.Arrays.equals(lo, hi) => Some(lo)
-    case _ => None
-  }
+  /** Point-lookup key: files whose bloom filter excludes it are skipped
+    * wholesale — Cassandra's negative-lookup elimination, at plan time
+    * (false positives only cost IO; Spark re-filters rows). */
+  private val eqKey: Option[Array[Byte]] = KeyBounds.eqKey(keyLo, keyHi)
 
-  /** Runtime (join-driven) split pruning, VERDICT r4 #2: a plain SQL join
+  /** Runtime (join-driven) split pruning: a plain SQL join
     * `dim JOIN sstable ON key = …` lets Spark's dynamic-pruning machinery
     * collect the dim side's key set at runtime and hand it here as an
     * `In("key", …)` filter BEFORE partitions are planned — so small-dim
@@ -1184,6 +1168,14 @@ final class SSTableScan(path: String, requiredSchema: StructType,
     case _ => // unsupported runtime filter shape: plan unpruned
   }
 
+  /** This scan's [[ReadSnapshot]]: `sincesnapshot` applies at listing,
+    * before every other pruning surface (as-of, limit prefix, key
+    * bounds, stats), and delete-aware reads split off their delete-only
+    * generations. */
+  private def snapshot(): ReadSnapshot =
+    ReadSnapshot(storage, path, "planning", sinceDir, catalogManaged,
+      splitDeletes = applyDeletes)
+
   /** Table statistics for Catalyst's cost decisions — most importantly
     * the broadcast-join threshold: a small SSTable directory joined
     * against a big fact now auto-broadcasts without a hint. Sizes are
@@ -1199,12 +1191,7 @@ final class SSTableScan(path: String, requiredSchema: StructType,
     var bytes = 0L
     var rows = 0L
     var allRowsKnown = true
-    val listed0 = SSTableScan.sinceFilePrune(st.listDataFiles(path), sinceDir, st)
-    val listed =
-      if (applyDeletes) listed0.filterNot(f =>
-        DeleteShadow.isDeleteOnly(new SSTableReader(f, st).statistics))
-      else listed0
-    listed.foreach { f =>
+    snapshot().data.foreach { f =>
       val r = new SSTableReader(f, st)
       bytes += r.dataLength
       // cells view: logical rows are cells (v2 stats), not SSTable rows
@@ -1224,47 +1211,56 @@ final class SSTableScan(path: String, requiredSchema: StructType,
   }
 
   override def readSchema(): StructType = requiredSchema
-  /** Delete-aware executions get a dedicated Batch that snapshots the
-    * (file listing, shadow map) pair ONCE — partitions and readers are
-    * guaranteed to describe the same directory state even when the same
-    * Scan instance executes concurrently (a re-used exec subtree); the
-    * mutable-stash alternative could pair one execution's partitions
-    * with another's shadow and resurrect deleted rows. Freshness is per
-    * toBatch call, the same contract as the listing itself. */
-  override def toBatch: Batch =
-    if (!applyDeletes) this
-    else new Batch {
-      private lazy val snap: (Array[InputPartition],
-          Option[org.apache.spark.broadcast.Broadcast[DeleteShadow]]) = {
-        val listed = listedFiles
-        val (dataGens, shadow) = splitDeletes(listed)
-        val files = if (shadow.exists(_.nonEmpty)) asOfFilePrune(dataGens)
-          else limitFilePrefix(asOfFilePrune(dataGens))
+  /** Every execution plans through one Batch that takes ONE
+    * [[ReadSnapshot]] and plans partitions and the pending-delete shadow
+    * from it, so they describe the same directory state even when the
+    * same Scan instance executes concurrently (a re-used exec subtree):
+    * pairing one execution's partitions with another's shadow could
+    * resurrect deleted rows. Freshness is per toBatch call. */
+  override def toBatch: Batch = new SnapshotBatch
+
+  /** Without delete awareness every Batch of this scan plans the same
+    * read, so they compare equal and Spark may reuse an exchange over
+    * one scan; a delete-aware Batch is equal only to itself. */
+  private final class SnapshotBatch extends Batch {
+    private lazy val planned = plan()
+    private def scan: SSTableScan = SSTableScan.this
+    override def planInputPartitions(): Array[InputPartition] = planned._1
+    override def createReaderFactory(): PartitionReaderFactory =
+      new SSTableReaderFactory(requiredSchema, ttlAsOfMs, handle, cellsView,
+        rowLimit = limit, asOfMicros = asOfMicros,
+        nameLo = nameLo, nameHi = nameHi, shadowBc = planned._2)
+    override def equals(o: Any): Boolean = o match {
+      case b: SSTableScan#SnapshotBatch => (b eq this) || (!applyDeletes && (b.scan eq scan))
+      case _ => false
+    }
+    override def hashCode(): Int =
+      if (applyDeletes) System.identityHashCode(this) else System.identityHashCode(scan)
+  }
+
+  /** Per-file planning is independent metadata work (Summary walk +
+    * O(#splits) index point reads), parallelized by
+    * [[SSTableScan.planPartitions]]. Pending deletes void the LIMIT
+    * prefix guarantee (sidecar counts include shadowed rows). */
+  private def plan(): (Array[InputPartition],
+      Option[org.apache.spark.broadcast.Broadcast[DeleteShadow]]) = {
+    val snap = snapshot()
+    val shadow = snap.pendingDeletes(asOfMicros, maxDeleteKeys)
+    val (parts, plannedGens, splits) = buckets match {
+      case None =>
+        val pruned = asOfFilePrune(snap.data)
+        val files = if (shadow.isDefined) pruned else limitFilePrefix(pruned)
         val parts = SSTableScan.planPartitions(files, handle,
           distributedPlanningThreshold, targetSplitBytes,
           keyLo.map(_._1), keyHi.map(_._1), eqKey, runtimeKeys,
           hostsFromIndex = false)
-        recordPlanning(listed.length, files.length, parts.length,
-          shadow.map(_.size.toLong).getOrElse(0L))
-        val keyed = withPartitionKeys(parts)
-        // the shadow ships as a BROADCAST variable, not a factory field
-        // (VERDICT r7 Missing #3): torrent-distributed once per executor
-        // and — the real win — `.value` hands every concurrent task on an
-        // executor the SAME map instance, instead of each task
-        // deserializing its own multi-MB copy out of the task binary
-        // (32 concurrent tasks × a 4M-key map is GBs of duplicate heap).
-        // Not range-sliced per split: slicing would reintroduce per-task
-        // copies, and the shared sorted array already serves any split
-        // with one O(log n) binary search per row.
-        (keyed, shadow.filter(_.nonEmpty).map(
-          org.apache.spark.sql.SparkSession.active.sparkContext.broadcast(_)))
-      }
-      override def planInputPartitions(): Array[InputPartition] = snap._1
-      override def createReaderFactory(): PartitionReaderFactory =
-        new SSTableReaderFactory(requiredSchema, ttlAsOfMs, handle, cellsView,
-          rowLimit = limit, asOfMicros = asOfMicros,
-          nameLo = nameLo, nameHi = nameHi, shadowBc = snap._2)
+        (withPartitionKeys(parts), files.length, parts.length)
+      case Some(n) => bucketPartitions(snap.data, n)
     }
+    planMetrics.record(snap.listed.length, plannedGens, splits,
+      shadow.map(_.value.size.toLong).getOrElse(0L))
+    (parts, shadow)
+  }
 
   /** Streaming read: new SSTable generations become micro-batches (the
     * Cassandra flush-ingestion model — see [[SSTableMicroBatchStream]]). */
@@ -1294,9 +1290,7 @@ final class SSTableScan(path: String, requiredSchema: StructType,
   override def description(): String = {
     val prune = if (keyLo.isDefined || keyHi.isDefined) " keyRangePruned" else ""
     val keyOnly =
-      if (!cellsView && asOfMicros.isEmpty && !applyDeletes &&
-          !requiredSchema.fieldNames.exists(n => n == "columns" ||
-            n == "rowTombstone" || n == SSTableSource.ChangeTypeColumn))
+      if (ReadPath.indexOnly(requiredSchema, cellsView, asOfMicros.isDefined, applyDeletes))
         " indexOnly" else ""
     val view = if (cellsView) " view=cells" else ""
     val bkt = buckets.map(n => s" buckets=$n keyGrouped").getOrElse("")
@@ -1311,97 +1305,17 @@ final class SSTableScan(path: String, requiredSchema: StructType,
     s"sstable $path$prune$keyOnly$view$bkt$ttl$asOf$slice$lim$since$del$spj"
   }
 
-  /** Per-file planning is independent metadata work (Summary walk +
-    * O(#splits) index point reads) — parallelized two ways by file count:
-    * below [[SSTableSource.DefaultDistributedPlanningThreshold]] a driver
-    * parallel collection (no job overhead); above it the planning closure
-    * ships through `spark.parallelize(files).flatMap` so ten-thousand-file
-    * directories don't bottleneck on one machine's metadata round-trips
-    * (SURVEY §3-E3; the reference ran planning as offline MR jobs for the
-    * same reason). */
-  override def planInputPartitions(): Array[InputPartition] = buckets match {
-    case None =>
-      val listed = listedFiles
-      val planned = limitFilePrefix(asOfFilePrune(listed))
-      val parts = SSTableScan.planPartitions(planned,
-        handle, distributedPlanningThreshold, targetSplitBytes,
-        keyLo.map(_._1), keyHi.map(_._1), eqKey, runtimeKeys,
-        hostsFromIndex = false)
-      recordPlanning(listed.length, planned.length, parts.length, shadowEntries = 0)
-      withPartitionKeys(parts)
-    case Some(_) => bucketPartitions.toArray[InputPartition]
-  }
-
-  /** Plan-time observability (`SupportsReportStatistics`'s sibling for
-    * the UI): how many generations the listing held, how many survived
+  /** Plan-time observability, surfaced on the BatchScan node in the SQL
+    * UI: how many generations the listing held, how many survived
     * file-level pruning (limit prefix, as-of, delete-only exclusion),
     * how many splits were planned, and how many pending-delete keys the
     * shadow carries — the numbers that explain a scan's IO before a
-    * single task runs. Driver metrics, surfaced on the BatchScan node
-    * in the SQL UI. API caveat: `reportDriverMetrics` lives on the
-    * SCAN, so when one Scan instance backs several concurrent
-    * executions (a re-used exec subtree) the stash is last-writer-wins
-    * — the numbers describe the scan's MOST RECENT planning. Telemetry
-    * only; result correctness is untouched (the delete-aware path
-    * pairs partitions and shadow inside its snapshot Batch). */
-  @volatile private var planMetrics: Array[Long] = Array(0L, 0L, 0L, 0L)
-  private def recordPlanning(listed: Long, planned: Long, splits: Long,
-                             shadowEntries: Long): Unit =
-    planMetrics = Array(listed, planned, splits, shadowEntries)
+    * single task runs. */
+  private val planMetrics = new PlanMetrics(4)
   override def supportedCustomMetrics():
-      Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    // top-level classes: Spark re-instantiates CustomMetric by
-    // reflection for the UI, which needs a zero-arg constructor
-    Array(new GenerationsListedMetric, new GenerationsPlannedMetric,
-      new SplitsPlannedMetric, new PendingDeleteKeysMetric)
+      Array[org.apache.spark.sql.connector.metric.CustomMetric] = planMetrics.supported
   override def reportDriverMetrics():
-      Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
-    val vals = planMetrics
-    SSTableScan.PlanMetricNames.zipWithIndex.map { case (n, i) =>
-      PlanMetricValue(n, vals(i)):
-        org.apache.spark.sql.connector.metric.CustomTaskMetric
-    }
-  }
-
-  /** Delete-aware listing split: delete-only generations (provable from
-    * their sidecars — [[DeleteShadow.isDeleteOnly]]) become the driver-
-    * side shadow map; the rest plan as data. Pending deletes also void
-    * the LIMIT prefix guarantee (sidecar counts include shadowed rows),
-    * handled by the snapshot Batch in [[toBatch]]. */
-  private def splitDeletes(files: Seq[String])
-      : (Seq[String], Option[DeleteShadow]) = {
-    val st = storage
-    val (del, data) = files.partition(f =>
-      DeleteShadow.isDeleteOnly(new SSTableReader(f, st).statistics))
-    (data, Some(DeleteShadow.load(del, st, asOfMicros, maxDeleteKeys)))
-  }
-
-  /** The scan's file listing with the `sincesnapshot` floor applied —
-    * the exclusion happens HERE, before every other pruning surface
-    * (as-of, limit prefix, key bounds, stats), so the whole planning
-    * pipeline sees only the epoch's new generations. */
-  private def listedFiles: Seq[String] = {
-    val listed =
-      SSTableScan.sinceFilePrune(storage.listDataFiles(path), sinceDir, storage)
-    // POST-list pointer re-check (r12): resolution read the table state
-    // BEFORE this listing, and a DROP/REPLACE committing in between
-    // leaves residue this listing may have caught half-destroyed — a
-    // silent SUBSET of the table. Loud beats partial: the rename-based
-    // swap failed these stragglers loudly too (the dir vanished under
-    // them mid-plan), so this keeps that contract under pointer commits.
-    // Costs one exists + one small read per planning snapshot.
-    if (listed.isEmpty && !storage.exists(path))
-      throw new IllegalStateException(
-        s"$path vanished between resolution and planning (a completed " +
-          "swap or migration removed it) — rerun the query")
-    // pointer existence + state judged from ONE read (r13 chaos find:
-    // an exists()+read pair had a vanish window in which a finalize's
-    // just-deleted tombstone read as "no props" = Live, and the empty
-    // listing served a successful EMPTY result)
-    GraftCatalog.requirePostListState(storage, path, listed.isEmpty,
-      catalogManaged, at = "planning")
-    listed
-  }
+      Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = planMetrics.report()
 
   /** As-of generation pruning: a generation whose `-Statistics.db`
     * minTimestamp is after the cut contains ONLY post-cut writes (the
@@ -1463,35 +1377,23 @@ final class SSTableScan(path: String, requiredSchema: StructType,
     * nothing. */
   override def outputOrdering():
       Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-    if (buckets.isEmpty && requiredSchema.fieldNames.contains("key"))
-      Array(org.apache.spark.sql.connector.expressions.Expressions.sort(
-        org.apache.spark.sql.connector.expressions.Expressions.column("key"),
-        org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
-    else Array.empty
+    if (buckets.isEmpty) ReadPath.keyOrdering(requiredSchema) else Array.empty
 
   /** Bucketed planning: ONE partition per bucket, each holding every
     * split of that bucket's generations, carrying the bucket id as its
     * partition key ([[HasPartitionKey]]) so Spark's key-grouped
-    * machinery sees storage-aligned clustering. Computed once — the
-    * declared [[outputPartitioning]] and the planned partitions must
-    * agree on the partition count. Key-range pruning still applies
-    * inside a bucket (an empty bucket still plans, preserving the
-    * count); runtime join filters are deliberately NOT applied here —
-    * they could drop whole buckets and break the declared partitioning.
-    * Every file must carry the `bucket-NNNNN-` stem with id < the
-    * declared count. */
-  private lazy val bucketPartitions: Seq[SSTableBucketPartition] = {
-    val n = buckets.get
-    // sincesnapshot composes (VERDICT r7 Missing #4): the epoch-diff
-    // floor drops PINNED generations from every bucket's chain, and the
-    // bucket structure itself is untouched — still exactly `n`
-    // partitions (a fully-pinned bucket plans empty, preserving the
-    // declared count), keys still hash to the same bucket — so the
-    // KeyGroupedPartitioning contract holds and a bucketed 100 TB
-    // directory runs the incremental loop with zero-exchange merges
-    // over just its delta.
-    val byBucket = SSTableScan.sinceFilePrune(
-        storage.listDataFiles(path), sinceDir, storage).groupBy { f =>
+    * machinery sees storage-aligned clustering. Exactly `n` partitions,
+    * as [[outputPartitioning]] declares: an empty bucket (a fully pinned
+    * one under `sincesnapshot` too) still plans, and keys still hash to
+    * the same bucket, so an incremental read keeps zero-exchange merges.
+    * Key-range pruning still applies inside a bucket; runtime join
+    * filters are deliberately NOT applied here — they could drop whole
+    * buckets and break the declared partitioning. Every file must carry
+    * the `bucket-NNNNN-` stem with id < the declared count. Returns the
+    * partitions, the generations planned and the splits planned. */
+  private def bucketPartitions(files: Seq[String], n: Int)
+      : (Array[InputPartition], Int, Int) = {
+    val byBucket = files.groupBy { f =>
       val name = f.substring(f.lastIndexOf('/') + 1)
       name match {
         case SSTableSource.BucketNameRe(b) =>
@@ -1512,9 +1414,7 @@ final class SSTableScan(path: String, requiredSchema: StructType,
         hostsFromIndex = false)
       SSTableBucketPartition(b, splits.map(_.asInstanceOf[SSTablePartition]))
     }
-    recordPlanning(byBucket.valuesIterator.map(_.length).sum, plannedGens,
-      parts.map(_.splits.length).sum, shadowEntries = 0)
-    parts
+    (parts.toArray, plannedGens, parts.map(_.splits.length).sum)
   }
 
   /** Key-grouped output for bucketed directories: partitions are
@@ -1548,11 +1448,9 @@ final class SSTableScan(path: String, requiredSchema: StructType,
     }
 
   /** The ONE condition under which this scan reports SPJ clustering —
-    * shared by [[outputPartitioning]] and [[withPartitionKeys]] (review
-    * r8: the two sites each carried their own copy, and the key-wrapping
-    * half had dropped the `key`-in-schema term — inert, but a drift
-    * between declaration and physical keys is exactly the mis-grouping
-    * hazard SPJ must never have). */
+    * shared by [[outputPartitioning]] and [[withPartitionKeys]]: a drift
+    * between the declaration and the physical keys is exactly the
+    * mis-grouping hazard SPJ must never have. */
   private def spjReported: Boolean =
     requiredSchema.fieldNames.contains("key") &&
       !cellsView && !topN && limit.isEmpty
@@ -1576,13 +1474,6 @@ final class SSTableScan(path: String, requiredSchema: StructType,
         }
       case _ => parts
     }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    // the delete-aware path never reaches here: its toBatch returns the
-    // snapshot Batch, whose factory carries the paired shadow
-    new SSTableReaderFactory(requiredSchema, ttlAsOfMs, handle, cellsView,
-      rowLimit = limit, asOfMicros = asOfMicros,
-      nameLo = nameLo, nameHi = nameHi)
 }
 
 /** One split of a bucketed TABLE carrying its bucket id as a partition
@@ -1614,29 +1505,6 @@ object SSTableScan {
     * time; larger sets fall back to range/split membership pruning only
     * (a huge probe set is a scan anyway). */
   private val MaxBloomProbeKeys = 16 * 1024
-
-  /** Driver plan metrics (SQL-UI names); order matches the scan's
-    * `planMetrics` slots. */
-  private[spark] val PlanMetricNames: Array[String] = Array(
-    "generationsListed", "generationsPlanned", "splitsPlanned",
-    "pendingDeleteKeys")
-
-  /** `sincesnapshot` floor: drop generations whose fileset is hardlink-
-    * pinned in the floor snapshot. Filesets are immutable and generation
-    * names are unique within a directory, so basename identity IS
-    * generation identity — the pin holds links to the very same files.
-    * Metadata-only (two listings); shared by the data scan and the
-    * stats-only aggregate scan. */
-  private[spark] def sinceFilePrune(files: Seq[String],
-                                    sinceDir: Option[String],
-                                    storage: Storage): Seq[String] =
-    sinceDir match {
-      case None => files
-      case Some(d) =>
-        val pinned = storage.listDataFiles(d)
-          .map(f => f.substring(f.lastIndexOf('/') + 1)).toSet
-        files.filterNot(f => pinned(f.substring(f.lastIndexOf('/') + 1)))
-    }
 
   /** Is some sorted key within [lo, hi]? (hi None = unbounded tail split;
     * bounds inclusive — a duplicate-key run can equal a split's bound.) */
@@ -1696,8 +1564,7 @@ object SSTableScan {
     * `spark.parallelize(files).flatMap` so ten-thousand-file directories
     * don't bottleneck on one machine's metadata round-trips (SURVEY
     * §3-E3; the reference ran planning as offline MR jobs for the same
-    * reason). Shared by the data and index sources (VERDICT r4 #5 —
-    * the index source previously planned sequentially on the driver). */
+    * reason). Shared by the data and index sources. */
   private[spark] def planPartitions(files: Seq[String],
                                     handle: StorageHandle,
                                     threshold: Int, targetSplitBytes: Long,
@@ -1737,9 +1604,10 @@ final class SSTableReaderFactory(requiredSchema: StructType,
     val storage = handle.get
     // executor-side resolution: all tasks on an executor share ONE map
     val shadow = shadowBc.map(_.value)
+    val vis = new Visibility(ttlAsOfMs, asOfMicros, shadow)
     val inner = partition match {
       case bp: SSTableBucketPartition =>
-        new SSTableBucketReader(bp, requiredSchema, ttlAsOfMs, storage, asOfMicros)
+        new SSTableBucketReader(bp, requiredSchema, storage, vis)
       case _ =>
         val p = partition match {
           // SPJ-keyed split: the key only matters to planning; read the
@@ -1747,24 +1615,12 @@ final class SSTableReaderFactory(requiredSchema: StructType,
           case k: SSTableKeyedSplit => k.p
           case other => other.asInstanceOf[SSTablePartition]
         }
-        // cells view always decodes Data.db: even a key-only projection has
-        // per-CELL multiplicity only the row bodies know
         if (cellsView)
-          new SSTableCellReader(p, requiredSchema, ttlAsOfMs, storage, asOfMicros,
-            nameLo, nameHi, shadow)
-        // rowTombstone also lives in Data.db, so its presence forces the row
-        // reader; only pure-key projections may take the Index.db-only path.
-        // asOf also forces row decode: Index.db cannot know which keys
-        // existed at the cut. Pending deletes force it too: whether a key
-        // survives its shadow depends on cell timestamps only Data.db has.
-        // _change_type likewise (delete = a row tombstone only Data.db has)
-        else if (asOfMicros.isDefined || shadow.isDefined ||
-            requiredSchema.fieldNames.exists(n => n == "columns" ||
-              n == "rowTombstone" || n == SSTableSource.ChangeTypeColumn))
-          new SSTableRowReader(p, requiredSchema, ttlAsOfMs, storage, asOfMicros,
-            shadow)
-        else
-          new SSTableKeyOnlyReader(p, requiredSchema, storage)
+          new SSTableCellReader(p, requiredSchema, storage, vis, nameLo, nameHi)
+        else if (ReadPath.indexOnly(requiredSchema, cellsView = false,
+            asOfCut = asOfMicros.isDefined, deletes = shadow.isDefined))
+          new IndexWindowReader(p, requiredSchema, storage)
+        else new SSTableRowReader(p, requiredSchema, storage, vis)
     }
     rowLimit.map(new CappedReader(inner, _)).getOrElse(inner)
   }
@@ -1789,9 +1645,8 @@ private final class CappedReader(inner: PartitionReader[InternalRow], cap: Int)
   * projection kept it. */
 final class SSTableBucketReader(bp: SSTableBucketPartition,
                                 requiredSchema: StructType,
-                                ttlAsOfMs: Option[Long],
                                 storage: Storage,
-                                asOfMicros: Option[Long] = None)
+                                vis: Visibility)
     extends PartitionReader[InternalRow] {
   private val withBucket = requiredSchema.fieldNames.headOption.contains("_bucket")
   private val innerSchema =
@@ -1805,8 +1660,7 @@ final class SSTableBucketReader(bp: SSTableBucketPartition,
     if (current != null) { current.close(); current = null }
     if (idx >= bp.splits.length) false
     else {
-      current = new SSTableRowReader(bp.splits(idx), innerSchema, ttlAsOfMs,
-        storage, asOfMicros)
+      current = new SSTableRowReader(bp.splits(idx), innerSchema, storage, vis)
       idx += 1
       true
     }
@@ -1823,34 +1677,21 @@ final class SSTableBucketReader(bp: SSTableBucketPartition,
   override def close(): Unit = if (current != null) current.close()
 }
 
-/** Cells-view reader: one output row per column cell (the source-side
-  * explode — SURVEY §2.3-P2 at the scan). Row tombstones are not cells
-  * and are not emitted; `ttlAsOfMs` drops expired EXPIRING cells like
-  * the row reader. */
+/** Cells-view reader: one output row per visible column cell (the
+  * source-side explode — SURVEY §2.3-P2 at the scan). Row tombstones are
+  * not cells and are not emitted. */
 final class SSTableCellReader(p: SSTablePartition, requiredSchema: StructType,
-                              ttlAsOfMs: Option[Long] = None,
-                              storage: Storage = LocalStorage,
-                              asOfMicros: Option[Long] = None,
+                              storage: Storage, vis: Visibility,
                               nameLo: Option[(Array[Byte], Boolean)] = None,
-                              nameHi: Option[(Array[Byte], Boolean)] = None,
-                              shadow: Option[DeleteShadow] = None)
+                              nameHi: Option[(Array[Byte], Boolean)] = None)
     extends PartitionReader[InternalRow] {
-  private val table = new SSTableReader(p.dataPath, storage)
-  private val reader = table.rows(p.start, p.end, nameLo, nameHi)
+  private val reader = new SSTableReader(p.dataPath, storage).rows(p.start, p.end, nameLo, nameHi)
   private val genStem = org.apache.spark.unsafe.types.UTF8String.fromString(
     SSTableFiles.generationStem(p.dataPath))
   private var key: Array[Byte] = _
-  private var shadowMark: Long = Long.MinValue // current row's delete mark
+  private var mark: Long = Long.MinValue // the current row's delete mark
   private var cells: Iterator[Column] = Iterator.empty
   private var current: InternalRow = _
-  private def live(c: Column): Boolean = (ttlAsOfMs match {
-    case None => true
-    case Some(asOf) => c match {
-      case Column.Expiring(_, _, _, exp, _) => exp > asOf
-      case _ => true
-    }
-  }) && asOfMicros.forall(c.timestamp <= _) && // post-cut cells invisible
-    c.timestamp > shadowMark // pending-delete shadowing (applydeletes)
   @annotation.tailrec
   override final def next(): Boolean =
     if (cells.hasNext) {
@@ -1860,95 +1701,30 @@ final class SSTableCellReader(p: SSTablePartition, requiredSchema: StructType,
     } else if (reader.hasNext) {
       val row = reader.next()
       key = row.key
-      shadowMark = shadow.map(_.markedAt(key)).getOrElse(Long.MinValue)
-      cells = row.columns.iterator.filter(live)
+      mark = vis.markOf(key)
+      cells = row.columns.iterator.filter(vis.cell(_, mark))
       next()
     } else false
   override def get(): InternalRow = current
   override def close(): Unit = reader.close()
 }
 
-/** Full-row reader over the partition's Data.db byte range. With
-  * `ttlAsOfMs` set, expired EXPIRING columns are dropped during decode
-  * (the opt-in P8 semantics). */
+/** Full-row reader over the partition's Data.db byte range; each decoded
+  * row passes through the read's [[Visibility]]. */
 final class SSTableRowReader(p: SSTablePartition, requiredSchema: StructType,
-                             ttlAsOfMs: Option[Long] = None,
-                             storage: Storage = LocalStorage,
-                             asOfMicros: Option[Long] = None,
-                             shadow: Option[DeleteShadow] = None)
+                             storage: Storage, vis: Visibility)
     extends PartitionReader[InternalRow] {
-  private val table = new SSTableReader(p.dataPath, storage)
-  private val reader = table.rows(p.start, p.end)
+  private val reader = new SSTableReader(p.dataPath, storage).rows(p.start, p.end)
   private val genStem = org.apache.spark.unsafe.types.UTF8String.fromString(
     SSTableFiles.generationStem(p.dataPath))
   private var current: InternalRow = _
-  /** Pending-delete shadowing (`applydeletes`) — the shared rule lives
-    * in [[DeleteShadow.shadowRow]] so the scan and the SQL probe-join
-    * exec can never drift apart. */
-  private def applyShadow(row: SSTableRow): Option[SSTableRow] = shadow match {
-    case None => Some(row)
-    case Some(sh) => DeleteShadow.shadowRow(row, sh)
-  }
-  private def applyTtl(row: SSTableRow): SSTableRow = ttlAsOfMs match {
-    case None => row
-    case Some(asOf) => row.copy(columns = row.columns.filter {
-      case Column.Expiring(_, _, _, exp, _) => exp > asOf
-      case _ => true
-    })
-  }
-  /** As-of cut: drop cells written after `t` (uniform on the timestamp
-    * every cell kind carries — a range tombstone's ts IS its mfda), hide
-    * row tombstones marked after `t`, and drop the ROW when nothing
-    * anchors its existence at `t` (no surviving cell, no real surviving
-    * tombstone — half-LIVE mfda=MIN pairs shadow nothing and are carried
-    * for fidelity but don't anchor). */
-  private def applyAsOf(row: SSTableRow): Option[SSTableRow] = asOfMicros match {
-    case None => Some(row)
-    case Some(t) =>
-      val cols = row.columns.filter(_.timestamp <= t)
-      val tomb = row.tombstone.filter(_.markedForDeleteAtMicros <= t)
-      if (cols.nonEmpty ||
-          tomb.exists(_.markedForDeleteAtMicros != Long.MinValue))
-        Some(row.copy(columns = cols, tombstone = tomb))
-      else None
-  }
   @annotation.tailrec
   override final def next(): Boolean =
-    if (reader.hasNext) {
-      applyAsOf(applyTtl(reader.next())).flatMap(applyShadow) match {
-        case Some(row) =>
-          current = SSTableSchema.rowToInternal(row, requiredSchema, genStem)
-          true
-        case None => next()
-      }
-    } else false
-  override def get(): InternalRow = current
-  override def close(): Unit = reader.close()
-}
-
-/** Key-only reader: never opens Data.db — scans the Index.db range
-  * instead (column pruning changing the physical access path). */
-final class SSTableKeyOnlyReader(p: SSTablePartition, requiredSchema: StructType,
-                                 storage: Storage = LocalStorage)
-    extends PartitionReader[InternalRow] {
-  private val in = storage.open(
-    SSTableFiles.sibling(p.dataPath, SSTableFiles.IndexSuffix))
-  in.seek(p.idxStart)
-  private val reader = new IndexReader(in, p.idxEnd)
-  private val genStem = org.apache.spark.unsafe.types.UTF8String.fromString(
-    SSTableFiles.generationStem(p.dataPath))
-  private var current: InternalRow = _
-  override def next(): Boolean =
-    if (reader.hasNext) {
-      val e = reader.next()
-      current = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        requiredSchema.fields.map[Any] {
-          case f if f.name == "key" => e.key
-          // `_generation` is path metadata — served without Data.db
-          case f if f.name == SSTableSource.GenerationColumn => genStem
-          case _ => throw new IllegalStateException("key-only reader got non-key field")
-        })
-      true
+    if (reader.hasNext) vis.row(reader.next()) match {
+      case Some(row) =>
+        current = SSTableSchema.rowToInternal(row, requiredSchema, genStem)
+        true
+      case None => next()
     } else false
   override def get(): InternalRow = current
   override def close(): Unit = reader.close()

@@ -9,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * mains the driver contract names; demos and dev probes live in test
   * sources (`sbt "Test/runMain graft.SSTableDemo"`, `graft.DevProbes`),
   * so a new dev entry point in `src/main` fails here instead of
-  * shipping unnoticed. */
+  * shipping unnoticed. Likewise every reader of a directory lists it
+  * through `ReadSnapshot`, so a reader hand-rolling its own listing
+  * policy fails here. */
 class SourceLayoutSpec extends AnyFunSuite {
 
   private val main = Paths.get("src", "main")
@@ -34,5 +36,14 @@ class SourceLayoutSpec extends AnyFunSuite {
       case (p, text) if text.contains("PerfProbe") => p.toString
     }
     assert(mentions.isEmpty, s"dev probes belong in test sources: $mentions")
+  }
+
+  test("only ReadPath.scala re-checks the pointer after a listing or loads a delete shadow") {
+    val call = """(?<!def )\brequirePostListState\(|\bDeleteShadow\.load\(""".r
+    val callers = mainSources.collect {
+      case (p, text) if call.findFirstIn(text).isDefined => p.getFileName.toString
+    }
+    assert(callers == Seq("ReadPath.scala"),
+      s"list a directory through ReadSnapshot instead: $callers")
   }
 }

@@ -196,7 +196,7 @@ class SSTableSourceSpec extends AnyFunSuite {
     assert(df.select(col("key").cast("string")).distinct().count() == 500)
     // partitions carry block-location hints (local FS reports localhost)
     val scan = new SSTableScan(uri, SSTableSchema.schema, None, None, 2000L)
-    val parts = scan.planInputPartitions().map(_.asInstanceOf[SSTablePartition])
+    val parts = scan.toBatch.planInputPartitions().map(_.asInstanceOf[SSTablePartition])
     assert(parts.length > 3)
     assert(parts.forall(_.hosts.nonEmpty), "expected preferredLocations hints from HadoopStorage")
     // index source through the same adapter
@@ -278,7 +278,7 @@ class SSTableSourceSpec extends AnyFunSuite {
       new SSTableScanBuilder(dir, new CaseInsensitiveStringMap(opts))
         .build().asInstanceOf[SSTableScan]
     }
-    val unfiltered = scan().planInputPartitions().length
+    val unfiltered = scan().toBatch.planInputPartitions().length
     assert(unfiltered > 4, s"fixture should plan several splits, got $unfiltered")
 
     // two keys from one generation: the zzz file drops wholesale (key
@@ -286,7 +286,7 @@ class SSTableSourceSpec extends AnyFunSuite {
     val s1 = scan()
     s1.filter(Array[org.apache.spark.sql.sources.Filter](org.apache.spark.sql.sources.In("key",
       Array[Any]("key00007".getBytes, "key00008".getBytes))))
-    val pruned = s1.planInputPartitions()
+    val pruned = s1.toBatch.planInputPartitions()
     assert(pruned.length < unfiltered && pruned.nonEmpty,
       s"pruned=${pruned.length} all=$unfiltered")
     assert(pruned.forall(_.asInstanceOf[SSTablePartition].dataPath.contains("fix")),
@@ -296,12 +296,12 @@ class SSTableSourceSpec extends AnyFunSuite {
     val s2 = scan()
     s2.filter(Array[org.apache.spark.sql.sources.Filter](org.apache.spark.sql.sources.In("key",
       Array[Any]("key00007x".getBytes))))
-    assert(s2.planInputPartitions().isEmpty, "bloom must drop all files for an absent key")
+    assert(s2.toBatch.planInputPartitions().isEmpty, "bloom must drop all files for an absent key")
 
     // unsupported value shape: no pruning, full plan (never wrong results)
     val s3 = scan()
     s3.filter(Array[org.apache.spark.sql.sources.Filter](org.apache.spark.sql.sources.In("key", Array[Any]("key00007", 7))))
-    assert(s3.planInputPartitions().length == unfiltered)
+    assert(s3.toBatch.planInputPartitions().length == unfiltered)
   }
 
   test("broadcast join against a small dim prunes the scan at runtime (DPP)") {
