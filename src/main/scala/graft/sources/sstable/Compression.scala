@@ -113,9 +113,19 @@ private[sstable] object ChunkCodec {
 
   object SnappyCodec extends ChunkCodec {
     def compress(raw: Array[Byte]): Array[Byte] = Snappy.compress(raw)
+    /** A damaged chunk fails as a [[CorruptSSTableException]]: the
+      * codec's own error, or a claimed length past the chunk length
+      * (never allocated). */
     def uncompress(comp: Array[Byte], compLen: Int, maxRawLen: Int): Array[Byte] = {
-      val raw = new Array[Byte](Snappy.uncompressedLength(comp, 0, compLen))
-      Snappy.uncompress(comp, 0, compLen, raw, 0)
+      val n = try Snappy.uncompressedLength(comp, 0, compLen) catch {
+        case e: java.io.IOException => throw new CorruptSSTableException("snappy chunk corrupt", e)
+      }
+      if (n < 0 || n > maxRawLen)
+        throw new CorruptSSTableException(s"snappy chunk claims $n bytes, past the chunk length")
+      val raw = new Array[Byte](n)
+      try Snappy.uncompress(comp, 0, compLen, raw, 0) catch {
+        case e: java.io.IOException => throw new CorruptSSTableException("snappy chunk corrupt", e)
+      }
       raw
     }
   }

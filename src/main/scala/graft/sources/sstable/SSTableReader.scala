@@ -162,27 +162,11 @@ final class SSTableReader(val dataPath: String,
   def getAll(key: Array[Byte]): Seq[SSTableRow] = {
     if (!mightContainKey(key)) return Nil
     val (_, sum) = summary()
-    if (sum.isEmpty) return Nil
-    // last summary entry with entry.key <= key (unsigned order)
-    var lo = 0
-    var hi = sum.length - 1
-    // duplicates of the first key may precede summary entry 0's row only
-    // if they ARE entry 0's key; a key strictly below it is absent
-    if (compareKeys(sum(0).key, key) > 0) return Nil
-    while (lo < hi) {
-      val mid = (lo + hi + 1) >>> 1
-      if (compareKeys(sum(mid).key, key) <= 0) lo = mid else hi = mid - 1
-    }
-    // a duplicate run can straddle summary window starts: walk back past
-    // every window whose first key EQUALS the probe (a long run can span
-    // several), so the index scan starts before the run's first row
-    while (lo > 0 && compareKeys(sum(lo).key, key) == 0) lo -= 1
-    val idxStart = sum(lo).indexOffset
-    val idxEnd = indexLength // run may span windows; length is cache-served
+    // a key strictly below the first sampled key is absent
+    if (sum.isEmpty || compareKeys(sum(0).key, key) > 0) return Nil
     val idxIn = storage.open(sibling(dataPath, IndexSuffix))
     try {
-      idxIn.seek(idxStart)
-      val ir = new IndexReader(idxIn, idxEnd)
+      val ir = indexWindow(idxIn, key)
       var firstOffset = -1L
       var n = 0
       var done = false
@@ -205,6 +189,54 @@ final class SSTableReader(val dataPath: String,
       }
     } finally idxIn.close()
   }
+
+  /** The one key seek of this fileset: an Index.db reader over `idx`,
+    * positioned at the Summary window whose forward scan first meets a
+    * key >= `key` — the last sampled key strictly below it (Summary
+    * binary search), or the file start when none is. Strictly below,
+    * because a duplicate run can straddle window starts: a window that
+    * starts with `key` itself may follow rows of the same run. Reads to
+    * the end of Index.db, so the caller stops the scan. Shared by the
+    * point read ([[getAll]]) and key-range planning ([[ceilings]]). */
+  private def indexWindow(idx: SeekableInput, key: Array[Byte]): IndexReader = {
+    val (_, sum) = summary()
+    var lo = -1
+    var hi = sum.length - 1
+    while (lo < hi) { // last entry with entry.key < key (unsigned order)
+      val mid = (lo + hi + 1) >>> 1
+      if (compareKeys(sum(mid).key, key) < 0) lo = mid else hi = mid - 1
+    }
+    idx.seek(if (lo < 0) IndexFile.HeaderLen else sum(lo).indexOffset)
+    new IndexReader(idx, indexLength)
+  }
+
+  /** Where the rows with key >= each of `keys` (ascending) start: the
+    * (Data.db, Index.db) offsets of the first such row, or (dataLength,
+    * indexLength) when every row is below the key. One Index.db open; each
+    * seek is [[indexWindow]]. A file whose seeks go backwards is not
+    * key-sorted, and fails naming the file. */
+  def ceilings(keys: Seq[Array[Byte]]): Vector[(Long, Long)] =
+    if (keys.isEmpty) Vector.empty
+    else {
+      val idxIn = storage.open(sibling(dataPath, IndexSuffix))
+      try {
+        val out = keys.iterator.map { k =>
+          val ir = indexWindow(idxIn, k)
+          var found = (dataLength, indexLength)
+          var done = false
+          while (!done && ir.hasNext) {
+            val at = ir.position
+            val e = ir.next()
+            if (compareKeys(e.key, k) >= 0) { found = (e.dataOffset, at); done = true }
+          }
+          found
+        }.toVector
+        if (out.iterator.zip(out.iterator.drop(1)).exists { case (a, b) => a._1 > b._1 })
+          throw new CorruptSSTableException(s"$dataPath: row keys go backwards " +
+            "(key-range seeks land out of order); the merge needs key-sorted inputs")
+        out
+      } finally idxIn.close()
+    }
 
   /** Plan row-aligned splits of ~targetBytes uncompressed data using only
     * Summary.db + O(#splits) point reads of Index.db. Covers every row
@@ -463,47 +495,68 @@ object SSTableReader {
     if (live.isEmpty) None else Some(SSTableRow(merged.key, live, None))
   }
 
-  /** Compaction's merge as one streaming k-way pass (Cassandra's
-    * compaction shape): one [[DataReader]] per input generation, merged
-    * in unsigned key order by a priority queue; every version of a key
-    * (a file's adjacent duplicates included) is reconciled with
-    * [[reconcile]] — the rules `compactRows` implements as DataFrame
-    * algebra — and with `gc` the row passes through [[liveView]], so
-    * keys with nothing live left are elided. Yields one row per
-    * surviving key in strictly increasing key order, ready for an
-    * [[SSTableWriter]].
+  /** The one merge loop, for compaction and for reconciled reads: a
+    * streaming k-way pass (Cassandra's compaction shape) with one
+    * [[DataReader]] per input slice, merged in unsigned key order by a
+    * priority queue. Every version of a key (a file's adjacent duplicates
+    * included) first passes `keep`, the per-version pre-merge filter (a
+    * reader's visibility rule; the identity for compaction), and the
+    * survivors are reconciled with [[reconcile]] — the rules
+    * `compactRows` implements as DataFrame algebra. With `gc` the row
+    * passes through [[liveView]], so keys with nothing live left are
+    * elided. Yields one row per surviving key in strictly increasing key
+    * order, ready for an [[SSTableWriter]].
     *
     * Memory is one decoded row per input plus the versions of the key
     * being merged. Inputs are opened eagerly and closed by [[close]].
     * Damage fails loudly and names the file: a [[CorruptSSTableException]]
-    * from decoding is re-raised with the input's path, and so is an
-    * input whose keys go backwards (a merge over it would emit the same
-    * key twice, out of order). */
-  final class Fold(files: Seq[String], storage: Storage, gc: Boolean)
+    * or truncation from decoding is re-raised with the input's path, and
+    * so is an input whose keys go backwards or leave the slices' key
+    * range `[lo, hi)` (a merge over it would emit a key twice, or out of
+    * order). */
+  final class Fold(slices: Seq[Fold.Slice], storage: Storage, gc: Boolean,
+                   keep: SSTableRow => Option[SSTableRow] = Some(_),
+                   lo: Option[Array[Byte]] = None, hi: Option[Array[Byte]] = None)
       extends Iterator[SSTableRow] with AutoCloseable {
     private final class Input(val path: String, val rows: DataReader) {
       var head: SSTableRow = _
-      /** Load the next row into `head` (null at the end). */
+      private var last: Array[Byte] = _
+      /** Load the next kept row into `head` (null at the end). */
       def advance(): Unit = {
-        val prev = head
-        head = named(path)(if (rows.hasNext) rows.next() else null)
-        if (head != null && prev != null && compareKeys(prev.key, head.key) > 0)
-          throw new CorruptSSTableException(s"$path: row keys go backwards " +
-            s"(${hex(prev.key)} then ${hex(head.key)}); the merge needs key-sorted inputs")
+        head = null
+        while (head == null && named(path)(rows.hasNext)) {
+          val r = named(path)(rows.next())
+          versionsRead += 1
+          if (last != null && compareKeys(last, r.key) > 0)
+            throw new CorruptSSTableException(s"$path: row keys go backwards " +
+              s"(${hex(last)} then ${hex(r.key)}); the merge needs key-sorted inputs")
+          if (lo.exists(compareKeys(r.key, _) < 0) || hi.exists(compareKeys(r.key, _) >= 0))
+            throw new CorruptSSTableException(s"$path: row key ${hex(r.key)} lies " +
+              "outside its planned key range; row keys go backwards")
+          last = r.key
+          head = keep(r).orNull
+        }
       }
     }
     private def named[T](path: String)(body: => T): T =
       try body catch {
         case e: CorruptSSTableException =>
           throw new CorruptSSTableException(s"$path: ${e.getMessage}", e)
+        case e: java.io.EOFException =>
+          throw new CorruptSSTableException(s"$path: truncated: ${e.getMessage}", e)
       }
     private def hex(k: Array[Byte]): String = k.take(32).map(b => f"${b & 0xff}%02x").mkString
 
+    /** Row versions decoded from the inputs so far, and merged rows
+      * yielded so far: the merge's fan-in. */
+    var versionsRead = 0L
+    var rowsEmitted = 0L
+
     private val inputs = scala.collection.mutable.ArrayBuffer.empty[Input]
-    private val queue = new java.util.PriorityQueue[Input](math.max(1, files.length),
+    private val queue = new java.util.PriorityQueue[Input](math.max(1, slices.length),
       (a: Input, b: Input) => compareKeys(a.head.key, b.head.key))
-    try files.foreach { f =>
-      val in = new Input(f, named(f)(new SSTableReader(f, storage).rows()))
+    try slices.foreach { s =>
+      val in = new Input(s.path, named(s.path)(new SSTableReader(s.path, storage).rows(s.start, s.end)))
       inputs += in
       in.advance()
       if (in.head != null) queue.add(in)
@@ -530,9 +583,19 @@ object SSTableReader {
       if (!hasNext) throw new NoSuchElementException
       val r = pending
       pending = null
+      rowsEmitted += 1
       r
     }
     def close(): Unit = inputs.foreach(_.rows.close())
+  }
+
+  object Fold {
+    /** The rows of `path` whose start offsets lie in `[start, end)` of
+      * its uncompressed Data.db. */
+    final case class Slice(path: String, start: Long, end: Long)
+    object Slice {
+      def whole(path: String): Slice = Slice(path, DataFile.HeaderLen, Long.MaxValue)
+    }
   }
 
   /** Merge one key's row versions from N generations (the Scala twin of

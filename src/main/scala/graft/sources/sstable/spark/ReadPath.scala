@@ -6,7 +6,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
-import org.apache.spark.sql.connector.read.PartitionReader
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
+import org.apache.spark.sql.sources.{AlwaysFalse, AlwaysTrue, And, EqualNullSafe, EqualTo, Filter,
+  GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Not, Or}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 import graft.sources.sstable._
@@ -156,12 +158,148 @@ object ReadPath {
       })
 
   /** The per-partition ordering of a partition that is one key-sorted
-    * window of one generation: ascending `key`, when projected. */
+    * window of one generation, or one merged key range: ascending `key`,
+    * when projected. */
   def keyOrdering(schema: StructType): Array[SortOrder] =
     if (schema.fieldNames.contains("key"))
       Array(Expressions.sort(Expressions.column("key"), SortDirection.ASCENDING))
     else Array.empty
+
+  /** The key-range layout of a reconciled read over `files`, shared by
+    * every generation: range i holds the keys in [b(i-1), b(i)) of every
+    * file, so each task merges all versions of its keys and no merge
+    * shuffle is needed. The boundary keys are drawn from the union of the
+    * files' Summary samples; a range closes before its estimated Data.db
+    * bytes, summed across generations (each sample standing for one
+    * Summary window of its file), pass `targetBytes`. Each file's slice
+    * starts at its first row with key >= the boundary
+    * ([[SSTableReader.ceilings]]), so a duplicate-key run never straddles
+    * two tasks. Ranges that cannot meet the pushed key bounds `[lo, hi]`,
+    * the point key `eq` or the sorted runtime join keys are pruned whole,
+    * as are generations that cannot hold `eq` or the runtime keys. */
+  def planRanges(files: Seq[String], storage: Storage, targetBytes: Long,
+                 lo: Option[Array[Byte]], hi: Option[Array[Byte]],
+                 eq: Option[Array[Byte]],
+                 keys: Option[Array[Array[Byte]]]): Array[InputPartition] = {
+    val readers = files.map(new SSTableReader(_, storage))
+      .filter(SSTableScan.mayHoldKeys(_, eq, keys))
+    val samples = readers.flatMap { r =>
+      val sum = r.summary()._2
+      val window = r.dataLength / math.max(1, sum.length)
+      sum.map(e => (e.key, window))
+    }.sortWith((a, b) => SSTableFiles.compareKeys(a._1, b._1) < 0)
+    val bounds = Vector.newBuilder[Array[Byte]]
+    var last: Array[Byte] = null
+    var bytes = 0L
+    samples.foreach { case (k, w) =>
+      if (bytes > 0 && bytes + w > targetBytes &&
+          (last == null || SSTableFiles.compareKeys(last, k) < 0)) {
+        bounds += k
+        last = k
+        bytes = 0L
+      }
+      bytes += w
+    }
+    val bs = bounds.result()
+    val seeks = readers.map(_.ceilings(bs))
+    (0 to bs.length).iterator.flatMap { i =>
+      val rLo = if (i == 0) None else Some(bs(i - 1))
+      val rHi = if (i == bs.length) None else Some(bs(i))
+      val wanted =
+        hi.forall(h => rLo.forall(SSTableFiles.compareKeys(_, h) <= 0)) &&
+          lo.forall(l => rHi.forall(SSTableFiles.compareKeys(l, _) < 0)) &&
+          keys.forall(SSTableScan.anyKeyInRange(_, rLo.getOrElse(Array.emptyByteArray), rHi))
+      val slices = if (!wanted) Nil else readers.zip(seeks).flatMap { case (r, at) =>
+        val (start, idxStart) = if (i == 0) (DataFile.HeaderLen, IndexFile.HeaderLen) else at(i - 1)
+        val (end, idxEnd) = if (i == bs.length) (r.dataLength, r.indexLength) else at(i)
+        if (start >= end) None
+        else Some(SSTablePartition(r.dataPath, start, end, idxStart, idxEnd,
+          storage.blockHosts(r.dataPath, r.physicalOffset(start), r.physicalOffset(end))))
+      }
+      if (slices.isEmpty) None else Some(SSTableRangePartition(slices.toArray, rLo, rHi))
+    }.toArray
+  }
+
+  /** An exact test of `key` for a pushed filter that references `key`
+    * alone, or None for any other filter. Keys are never null. */
+  def keyTest(f: Filter): Option[Array[Byte] => Boolean] = {
+    def cmp(v: Any)(ok: Int => Boolean): Option[Array[Byte] => Boolean] = v match {
+      case b: Array[Byte] => Some(k => ok(SSTableFiles.compareKeys(k, b)))
+      case _ => None
+    }
+    f match {
+      case EqualTo("key", v) => cmp(v)(_ == 0)
+      case EqualNullSafe("key", v) => cmp(v)(_ == 0)
+      case GreaterThan("key", v) => cmp(v)(_ > 0)
+      case GreaterThanOrEqual("key", v) => cmp(v)(_ >= 0)
+      case LessThan("key", v) => cmp(v)(_ < 0)
+      case LessThanOrEqual("key", v) => cmp(v)(_ <= 0)
+      case In("key", vs) if vs.forall(_.isInstanceOf[Array[Byte]]) =>
+        val set = vs.map(v => scala.collection.immutable.ArraySeq.unsafeWrapArray(
+          v.asInstanceOf[Array[Byte]])).toSet
+        Some(k => set(scala.collection.immutable.ArraySeq.unsafeWrapArray(k)))
+      case IsNotNull("key") | AlwaysTrue() => Some(_ => true)
+      case IsNull("key") | AlwaysFalse() => Some(_ => false)
+      case Not(c) => keyTest(c).map(t => k => !t(k))
+      case And(l, r) => for (a <- keyTest(l); b <- keyTest(r)) yield (k: Array[Byte]) => a(k) && b(k)
+      case Or(l, r) => for (a <- keyTest(l); b <- keyTest(r)) yield (k: Array[Byte]) => a(k) || b(k)
+      case _ => None
+    }
+  }
+
+  /** The reconciled reader's task metrics: the merge's fan-in. */
+  def mergeMetrics: Array[CustomMetric] =
+    Array(new RowVersionsReadMetric, new ReconciledRowsMetric)
 }
+
+/** One key range of a reconciled read: the slice of every generation
+  * holding the keys in `[lo, hi)` (None: unbounded), merged by one task. */
+final case class SSTableRangePartition(slices: Array[SSTablePartition],
+                                       lo: Option[Array[Byte]], hi: Option[Array[Byte]])
+    extends InputPartition {
+  override def preferredLocations(): Array[String] =
+    slices.flatMap(_.preferredLocations()).distinct
+}
+
+/** The reconciled read's task: merges its key range's slices with
+  * [[SSTableReader.Fold]], each row version passing the read's key
+  * filters and [[Visibility]] before [[SSTableReader.reconcile]], and
+  * emits one reconciled row per key in ascending key order — the rows
+  * `compactRows` computes from a raw read of the same snapshot. */
+final class SSTableReconciledReader(p: SSTableRangePartition, schema: StructType,
+                                    storage: Storage, vis: Visibility,
+                                    keyFilters: Array[Filter])
+    extends PartitionReader[InternalRow] {
+  private val keyOk = keyFilters.map(f => ReadPath.keyTest(f).get)
+  private val fold = new SSTableReader.Fold(
+    p.slices.toSeq.map(s => SSTableReader.Fold.Slice(s.dataPath, s.start, s.end)),
+    storage, gc = false, keep = r => if (keyOk.forall(_(r.key))) vis.row(r) else None,
+    lo = p.lo, hi = p.hi)
+  private var current: InternalRow = _
+  override def next(): Boolean = fold.hasNext && {
+    current = SSTableSchema.rowToInternal(fold.next(), schema)
+    true
+  }
+  override def get(): InternalRow = current
+  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
+    PlanMetricValue(RowVersionsReadMetric.Name, fold.versionsRead),
+    PlanMetricValue(ReconciledRowsMetric.Name, fold.rowsEmitted))
+  override def close(): Unit = fold.close()
+}
+
+final class RowVersionsReadMetric
+    extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = RowVersionsReadMetric.Name
+  override def description(): String = "row versions read by the merge"
+}
+object RowVersionsReadMetric { val Name = "rowVersionsRead" }
+
+final class ReconciledRowsMetric
+    extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = ReconciledRowsMetric.Name
+  override def description(): String = "reconciled rows emitted"
+}
+object ReconciledRowsMetric { val Name = "reconciledRows" }
 
 /** The one Index.db window reader: streams one planned window's entries
   * as rows of `schema` — `key`, `position` (the entry's Data.db offset)

@@ -38,9 +38,11 @@ import graft.sources.sstable._
 class SSTableSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "sstable"
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val cells = SSTableSource.isCellsView(Option(options.get(SSTableSource.ViewOption)))
+    val view = SSTableSource.viewOf(Option(options.get(SSTableSource.ViewOption)))
+    val cells = view == "cells"
     val buckets = SSTableSource.bucketsOf(Option(options.get(SSTableSource.BucketsOption)))
     require(!(cells && buckets.isDefined), "view=cells and buckets are exclusive")
+    require(!(view == "reconciled" && buckets.isDefined), SSTableSource.ReconciledBucketsRefusal)
     if (cells) SSTableSchema.cellsSchema
     else if (buckets.isDefined) SSTableSchema.bucketedSchema
     else SSTableSchema.schema
@@ -137,8 +139,12 @@ object SSTableSource {
     * column cell, flattened; the source-side explode), or "generations"
     * ([[SSTableSchema.generationsSchema]] — one row per published
     * fileset with its sidecar metadata: the ops/observability view, the
-    * `DESCRIBE DETAIL` of this format; zero Data.db IO). Batch read
-    * only. */
+    * `DESCRIBE DETAIL` of this format; zero Data.db IO), or
+    * "reconciled" (the rows schema, one merged row per key: every
+    * generation's versions of a key reconciled in the reader — see
+    * [[SSTableScan]] — with no merge shuffle; what
+    * [[graft.operators.SSTableOps.compactRows]] plans over a bare read).
+    * Batch read only. */
   val ViewOption = "view"
   /** Read a NAMED SNAPSHOT of the directory: `option("snapshot", tag)`
     * resolves the load path to the `_snapshot-<tag>/` hardlink pin that
@@ -316,11 +322,13 @@ object SSTableSource {
     case Some(s) if s.equalsIgnoreCase("rows") => "rows"
     case Some(s) if s.equalsIgnoreCase("cells") => "cells"
     case Some(s) if s.equalsIgnoreCase("generations") => "generations"
-    case Some(other) => throw new IllegalArgumentException(
-      s"sstable option '$ViewOption' must be 'rows', 'cells' or 'generations', got '$other'")
+    case Some(s) if s.equalsIgnoreCase("reconciled") => "reconciled"
+    case Some(other) => throw new IllegalArgumentException(s"sstable option '$ViewOption' " +
+      s"must be 'rows', 'cells', 'generations' or 'reconciled', got '$other'")
   }
-  private[spark] def isCellsView(v: Option[String]): Boolean =
-    viewOf(v) == "cells"
+  private[spark] val ReconciledBucketsRefusal =
+    "view=reconciled merges a directory's generations per key range; a bucketed " +
+      "layout ('buckets') merges per bucket with compactRows over the buckets read"
 
   /** Read option for directories laid out by
     * [[graft.operators.SSTableOps.writeBucketed]]: declares the bucket
@@ -381,6 +389,7 @@ final class SSTableTable(props: Map[String, String])
     SSTableSource.viewOf(props.get(SSTableSource.ViewOption))
   private def cellsView: Boolean = view == "cells"
   private def generationsView: Boolean = view == "generations"
+  private def reconciledView: Boolean = view == "reconciled"
   private def buckets: Option[Int] =
     SSTableSource.bucketsOf(props.get(SSTableSource.BucketsOption))
   /** Table-level bucketed WRITE layout ([[SSTableSource
@@ -427,7 +436,9 @@ final class SSTableTable(props: Map[String, String])
       }
     val gen = metaCol(SSTableSource.GenerationColumn,
       "publishing fileset stem (file name minus -Data.db)")
-    if (generationsView) Array.empty
+    // a reconciled row merges versions of several filesets: it has no
+    // one stem and no one change type
+    if (generationsView || reconciledView) Array.empty
     else if (cellsView) Array(gen)
     else Array(gen, metaCol(SSTableSource.ChangeTypeColumn,
       "CDC change type of this row version: delete when a row tombstone " +
@@ -471,8 +482,17 @@ final class SSTableTable(props: Map[String, String])
         }, catalogManaged = merged.containsKey(SSTableSource.CatalogManagedOption))
     } else new SSTableScanBuilder(path, new CaseInsensitiveStringMap(merged))
   }
+  /** The `view=reconciled` twin of this table — same directory, pins and
+    * read options — when this is a rows-view read of a non-bucketed
+    * layout; None otherwise. [[graft.operators.SSTableOps.compactRows]]
+    * swaps a bare read of this table for its twin. */
+  private[graft] def reconciledTwin: Option[SSTableTable] =
+    if (view == "rows" && buckets.isEmpty && writeBuckets.isEmpty)
+      Some(new SSTableTable(props + (SSTableSource.ViewOption -> "reconciled")))
+    else None
+
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    require(!cellsView && !generationsView,
+    require(!cellsView && !generationsView && !reconciledView,
       "this view is read-only: write the default view")
     require(buckets.isEmpty,
       "bucketed layouts are written by SSTableOps.writeBucketed, not the generic sink")
@@ -662,16 +682,18 @@ final class SSTableScanBuilder(path: String, options: CaseInsensitiveStringMap)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates with SupportsPushDownLimit with SupportsPushDownTopN {
 
-  private val cellsView =
-    SSTableSource.isCellsView(Option(options.get(SSTableSource.ViewOption)))
+  private val view = SSTableSource.viewOf(Option(options.get(SSTableSource.ViewOption)))
+  private val cellsView = view == "cells"
+  private val reconciled = view == "reconciled"
   private val bucketsOpt =
     SSTableSource.bucketsOf(Option(options.get(SSTableSource.BucketsOption)))
   require(!(cellsView && bucketsOpt.isDefined), "view=cells and buckets are exclusive")
+  require(!(reconciled && bucketsOpt.isDefined), SSTableSource.ReconciledBucketsRefusal)
   /** Bucketed-table layout ([[SSTableSource.WriteBucketsOption]], a
     * catalog table property): rows-view scans report storage-partitioned
     * clustering on `bucket(n, key)` — see [[SSTableScan.outputPartitioning]]. */
   private val spjBuckets =
-    if (cellsView) None
+    if (cellsView || reconciled) None
     else SSTableSource.bucketsOf(Option(options.get(SSTableSource.WriteBucketsOption)))
   private val applyDeletes = Option(options.get(SSTableSource.ApplyDeletesOption))
     .exists { v =>
@@ -730,8 +752,18 @@ final class SSTableScanBuilder(path: String, options: CaseInsensitiveStringMap)
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushed = filters.filter(f =>
       bounds.accept(f) | (cellsView && nameBounds.accept(f)))
-    filters // all residual: pruning only skips IO, Spark re-verifies rows
+    if (!reconciled) filters // all residual: pruning only skips IO, Spark re-verifies rows
+    else {
+      // a reconciled read tests its key filters itself, exactly: a key
+      // predicate commutes with the per-key merge, and tested in the
+      // scan it guards every predicate Spark pushes down and evaluates
+      // above it (Spark puts untranslatable predicates first)
+      keyFilters = filters.filter(ReadPath.keyTest(_).isDefined)
+      pushed = (pushed ++ keyFilters).distinct
+      filters.filterNot(keyFilters.contains)
+    }
   }
+  private var keyFilters: Array[Filter] = Array.empty
   override def pushedFilters(): Array[Filter] = pushed
 
   override def pruneColumns(required: StructType): Unit = {
@@ -808,6 +840,8 @@ final class SSTableScanBuilder(path: String, options: CaseInsensitiveStringMap)
     // bucketed reads never push aggregates: a stats-only answer would
     // bypass the loud bucket-layout validation the scan performs
     if (bucketsOpt.isDefined) return false
+    // sidecar totals count row versions, not reconciled rows
+    if (reconciled) return false
     // (schema field, value kind) per aggregate, or None = unsupported
     val mapped: Seq[Option[(StructField, SSTableAggScan.AggKind)]] =
       agg.aggregateExpressions.toSeq.map {
@@ -896,7 +930,9 @@ final class SSTableScanBuilder(path: String, options: CaseInsensitiveStringMap)
         require(v > 0 && v <= Int.MaxValue, s"maxdeletekeys must be a positive int: $v")
         v.toInt
       }.getOrElse(SSTableSource.DefaultMaxDeleteKeys),
-      spjBuckets = spjBuckets)
+      spjBuckets = spjBuckets,
+      reconciled = reconciled,
+      keyFilters = keyFilters)
   }
 }
 
@@ -1051,7 +1087,8 @@ final class PendingDeleteKeysMetric
   override def name(): String = "pendingDeleteKeys"
   override def description(): String = "pending-delete keys in the shadow map"
 }
-/** Driver-metric value carrier for [[SSTableScan.reportDriverMetrics]]. */
+/** Metric value carrier for [[SSTableScan.reportDriverMetrics]] and the
+  * reconciled reader's task metrics. */
 final case class PlanMetricValue(metricName: String, metricValue: Long)
     extends org.apache.spark.sql.connector.metric.CustomTaskMetric {
   override def name(): String = metricName
@@ -1092,7 +1129,9 @@ final class SSTableScan(path: String, requiredSchema: StructType,
                         applyDeletes: Boolean = false,
                         maxDeleteKeys: Int = SSTableSource.DefaultMaxDeleteKeys,
                         spjBuckets: Option[Int] = None,
-                        catalogManaged: Boolean = false)
+                        catalogManaged: Boolean = false,
+                        reconciled: Boolean = false,
+                        keyFilters: Array[Filter] = Array.empty)
     extends Scan with SupportsRuntimeFiltering
     with SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning
@@ -1114,9 +1153,10 @@ final class SSTableScan(path: String, requiredSchema: StructType,
     * residual), so Spark re-applies the predicate above the scan and the
     * probe path honors it through the join's residual filter instead.
     * `spjBuckets` is partitioning REPORTING only and is likewise
-    * irrelevant once the join is planned as probes. */
+    * irrelevant once the join is planned as probes. The reconciled view
+    * emits merged rows, which the raw probes do not reproduce. */
   private[spark] def lookupProbeSpec: Option[LookupProbeSpec] =
-    if (ttlAsOfMs.isEmpty && !cellsView && buckets.isEmpty && limit.isEmpty &&
+    if (ttlAsOfMs.isEmpty && !cellsView && !reconciled && buckets.isEmpty && limit.isEmpty &&
         !topN && asOfMicros.isEmpty && maxFilesPerTrigger.isEmpty &&
         maxBytesPerTrigger.isEmpty && sinceDir.isEmpty &&
         !requiredSchema.fieldNames.contains(SSTableSource.GenerationColumn) &&
@@ -1211,55 +1251,64 @@ final class SSTableScan(path: String, requiredSchema: StructType,
   }
 
   override def readSchema(): StructType = requiredSchema
-  /** Every execution plans through one Batch that takes ONE
-    * [[ReadSnapshot]] and plans partitions and the pending-delete shadow
-    * from it, so they describe the same directory state even when the
-    * same Scan instance executes concurrently (a re-used exec subtree):
-    * pairing one execution's partitions with another's shadow could
-    * resurrect deleted rows. Freshness is per toBatch call. */
+  /** This scan's one [[ReadSnapshot]] and the pending-delete shadow
+    * loaded from it, taken when the first Batch plans. Every Batch of
+    * the scan plans from it, so the partitions and the shadow describe
+    * one directory state: a runtime (DPP) filter makes Spark re-plan the
+    * partitions through a second Batch after `filter`, while the readers
+    * keep the first Batch's factory, and partitions listed after a
+    * concurrent commit read with an older shadow would mix two states. */
+  private lazy val snapshotted: (ReadSnapshot,
+      Option[org.apache.spark.broadcast.Broadcast[DeleteShadow]]) = {
+    val snap = snapshot()
+    (snap, snap.pendingDeletes(asOfMicros, maxDeleteKeys))
+  }
+
   override def toBatch: Batch = new SnapshotBatch
 
-  /** Without delete awareness every Batch of this scan plans the same
-    * read, so they compare equal and Spark may reuse an exchange over
-    * one scan; a delete-aware Batch is equal only to itself. */
+  /** Every Batch of this scan reads one snapshot, so they compare equal
+    * and Spark may reuse an exchange over one scan. Partitions are
+    * planned per Batch: the runtime filter can narrow them. */
   private final class SnapshotBatch extends Batch {
     private lazy val planned = plan()
     private def scan: SSTableScan = SSTableScan.this
-    override def planInputPartitions(): Array[InputPartition] = planned._1
+    override def planInputPartitions(): Array[InputPartition] = planned
     override def createReaderFactory(): PartitionReaderFactory =
       new SSTableReaderFactory(requiredSchema, ttlAsOfMs, handle, cellsView,
         rowLimit = limit, asOfMicros = asOfMicros,
-        nameLo = nameLo, nameHi = nameHi, shadowBc = planned._2)
+        nameLo = nameLo, nameHi = nameHi, shadowBc = snapshotted._2, keyFilters = keyFilters)
     override def equals(o: Any): Boolean = o match {
-      case b: SSTableScan#SnapshotBatch => (b eq this) || (!applyDeletes && (b.scan eq scan))
+      case b: SSTableScan#SnapshotBatch => b.scan eq scan
       case _ => false
     }
-    override def hashCode(): Int =
-      if (applyDeletes) System.identityHashCode(this) else System.identityHashCode(scan)
+    override def hashCode(): Int = System.identityHashCode(scan)
   }
 
   /** Per-file planning is independent metadata work (Summary walk +
     * O(#splits) index point reads), parallelized by
-    * [[SSTableScan.planPartitions]]. Pending deletes void the LIMIT
-    * prefix guarantee (sidecar counts include shadowed rows). */
-  private def plan(): (Array[InputPartition],
-      Option[org.apache.spark.broadcast.Broadcast[DeleteShadow]]) = {
-    val snap = snapshot()
-    val shadow = snap.pendingDeletes(asOfMicros, maxDeleteKeys)
+    * [[SSTableScan.planPartitions]]; a reconciled read plans one key-range
+    * layout over every generation ([[ReadPath.planRanges]]). Pending
+    * deletes void the LIMIT prefix guarantee (sidecar counts include
+    * shadowed rows), and so does merging (they count row versions). */
+  private def plan(): Array[InputPartition] = {
+    val (snap, shadow) = snapshotted
     val (parts, plannedGens, splits) = buckets match {
       case None =>
         val pruned = asOfFilePrune(snap.data)
-        val files = if (shadow.isDefined) pruned else limitFilePrefix(pruned)
-        val parts = SSTableScan.planPartitions(files, handle,
-          distributedPlanningThreshold, targetSplitBytes,
-          keyLo.map(_._1), keyHi.map(_._1), eqKey, runtimeKeys,
-          hostsFromIndex = false)
-        (withPartitionKeys(parts), files.length, parts.length)
+        val files = if (shadow.isDefined || reconciled) pruned else limitFilePrefix(pruned)
+        val parts =
+          if (reconciled) ReadPath.planRanges(files, storage, targetSplitBytes,
+            keyLo.map(_._1), keyHi.map(_._1), eqKey, runtimeKeys)
+          else withPartitionKeys(SSTableScan.planPartitions(files, handle,
+            distributedPlanningThreshold, targetSplitBytes,
+            keyLo.map(_._1), keyHi.map(_._1), eqKey, runtimeKeys,
+            hostsFromIndex = false))
+        (parts, files.length, parts.length)
       case Some(n) => bucketPartitions(snap.data, n)
     }
     planMetrics.record(snap.listed.length, plannedGens, splits,
       shadow.map(_.value.size.toLong).getOrElse(0L))
-    (parts, shadow)
+    parts
   }
 
   /** Streaming read: new SSTable generations become micro-batches (the
@@ -1272,6 +1321,8 @@ final class SSTableScan(path: String, requiredSchema: StructType,
       "asofmicros is batch-only: a stream tails NEW generations, which an as-of cut excludes by definition")
     require(!snapshotRead,
       "snapshot reads are batch-only: a snapshot is immutable, nothing ever arrives to stream")
+    require(!reconciled,
+      "view=reconciled is batch-only: a stream tails new generations, which merge later")
     // sincesnapshot composes: the pin becomes the stream's STARTING
     // FLOOR (Delta's startingVersion) — a fresh checkpoint begins
     // tailing at the snapshot instead of replaying the whole directory;
@@ -1289,10 +1340,12 @@ final class SSTableScan(path: String, requiredSchema: StructType,
   }
   override def description(): String = {
     val prune = if (keyLo.isDefined || keyHi.isDefined) " keyRangePruned" else ""
+    // bucketed and reconciled reads always decode Data.db
     val keyOnly =
-      if (ReadPath.indexOnly(requiredSchema, cellsView, asOfMicros.isDefined, applyDeletes))
+      if (buckets.isEmpty && !reconciled &&
+          ReadPath.indexOnly(requiredSchema, cellsView, asOfMicros.isDefined, applyDeletes))
         " indexOnly" else ""
-    val view = if (cellsView) " view=cells" else ""
+    val view = if (cellsView) " view=cells" else if (reconciled) " view=reconciled" else ""
     val bkt = buckets.map(n => s" buckets=$n keyGrouped").getOrElse("")
     val ttl = ttlAsOfMs.map(ms => s" ttlAsOf=$ms").getOrElse("")
     val asOf = asOfMicros.map(t => s" asOf=$t").getOrElse("")
@@ -1313,7 +1366,8 @@ final class SSTableScan(path: String, requiredSchema: StructType,
     * single task runs. */
   private val planMetrics = new PlanMetrics(4)
   override def supportedCustomMetrics():
-      Array[org.apache.spark.sql.connector.metric.CustomMetric] = planMetrics.supported
+      Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+    if (reconciled) planMetrics.supported ++ ReadPath.mergeMetrics else planMetrics.supported
   override def reportDriverMetrics():
       Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = planMetrics.report()
 
@@ -1369,7 +1423,8 @@ final class SSTableScan(path: String, requiredSchema: StructType,
   /** Per-partition output ordering (`SupportsReportOrdering`): every
     * non-bucketed partition is one split of one key-sorted generation
     * (Index.db order for key-only reads, Data.db order otherwise, cells
-    * grouped under ascending keys on the cells view), and SSTable key
+    * grouped under ascending keys on the cells view) or, reconciled, one
+    * key range merged in ascending key order, and SSTable key
     * order is exactly Spark's BinaryType sort (unsigned lexicographic,
     * shorter prefix first) — so `sortWithinPartitions("key")` and other
     * partition-local key sorts are free. Bucketed partitions chain
@@ -1508,8 +1563,8 @@ object SSTableScan {
 
   /** Is some sorted key within [lo, hi]? (hi None = unbounded tail split;
     * bounds inclusive — a duplicate-key run can equal a split's bound.) */
-  private def anyKeyInRange(keys: Array[Array[Byte]], lo: Array[Byte],
-                            hi: Option[Array[Byte]]): Boolean = {
+  private[spark] def anyKeyInRange(keys: Array[Array[Byte]], lo: Array[Byte],
+                                   hi: Option[Array[Byte]]): Boolean = {
     var l = 0
     var h = keys.length
     while (l < h) { // first key >= lo
@@ -1518,6 +1573,18 @@ object SSTableScan {
     }
     l < keys.length && hi.forall(ub => SSTableFiles.compareKeys(keys(l), ub) <= 0)
   }
+
+  /** Can generation `r` hold the point key `eq` or one of the sorted
+    * runtime join keys `keys`? The bloom filter decides first, so a
+    * definitive miss skips the Summary walk and index point reads, not
+    * just the data scan; runtime keys also meet the Statistics key
+    * bounds. */
+  private[spark] def mayHoldKeys(r: SSTableReader, eq: Option[Array[Byte]],
+                                 keys: Option[Array[Array[Byte]]]): Boolean =
+    !eq.exists(k => !r.mightContainKey(k)) && keys.forall { ks =>
+      r.statistics.forall(s => s.rowCount > 0 && anyKeyInRange(ks, s.minKey, Some(s.maxKey))) &&
+        (ks.length > MaxBloomProbeKeys || ks.exists(r.mightContainKey))
+    }
 
   /** Plan one file's splits (Summary walk + index point reads + block
     * hosts). Standalone function so the distributed-planning closure
@@ -1534,17 +1601,7 @@ object SSTableScan {
                               hostsFromIndex: Boolean = false)
                              (f: String): Seq[SSTablePartition] = {
     val r = new SSTableReader(f, st)
-    // bloom check first: a definitive miss skips the Summary walk and
-    // index point reads entirely, not just the data scan
-    if (eq.exists(k => !r.mightContainKey(k))) return Nil
-    keys.foreach { ks =>
-      r.statistics.foreach { s => // key-bounds: no runtime key in [minKey, maxKey]
-        if (s.rowCount == 0 || !anyKeyInRange(ks, s.minKey, Some(s.maxKey)))
-          return Nil
-      }
-      if (ks.length <= MaxBloomProbeKeys && !ks.exists(r.mightContainKey))
-        return Nil
-    }
+    if (!mayHoldKeys(r, eq, keys)) return Nil
     val splits = r.planSplits(targetSplitBytes)
     r.pruneSplits(splits, lo, hi)
       .filter(s => keys.forall(ks => anyKeyInRange(ks, s.firstKey, s.lastKeyBound)))
@@ -1598,7 +1655,8 @@ final class SSTableReaderFactory(requiredSchema: StructType,
                                  nameLo: Option[(Array[Byte], Boolean)] = None,
                                  nameHi: Option[(Array[Byte], Boolean)] = None,
                                  shadowBc: Option[org.apache.spark.broadcast
-                                   .Broadcast[DeleteShadow]] = None)
+                                   .Broadcast[DeleteShadow]] = None,
+                                 keyFilters: Array[Filter] = Array.empty)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val storage = handle.get
@@ -1608,6 +1666,8 @@ final class SSTableReaderFactory(requiredSchema: StructType,
     val inner = partition match {
       case bp: SSTableBucketPartition =>
         new SSTableBucketReader(bp, requiredSchema, storage, vis)
+      case rp: SSTableRangePartition =>
+        new SSTableReconciledReader(rp, requiredSchema, storage, vis, keyFilters)
       case _ =>
         val p = partition match {
           // SPJ-keyed split: the key only matters to planning; read the

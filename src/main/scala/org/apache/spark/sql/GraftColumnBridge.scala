@@ -19,6 +19,13 @@ object GraftColumnBridge {
                                 org.apache.spark.sql.catalyst.InternalRow],
                               schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
+
+  /** DataFrame over a logical plan (`Dataset.ofRows` is `private[sql]`) —
+    * backs `SSTableOps.compactRows`' swap of a bare read for its
+    * reconciled twin. */
+  def ofRows(spark: SparkSession,
+             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 }
 
 /** Live-session function registration (the `sessionState` accessor is

@@ -452,9 +452,13 @@ class SSTableOpsSpec extends AnyFunSuite {
   test("property: multi-generation get(dir,key) == compactRows on random generations") {
     // The point-read reconcile (Scala, SSTableReader.reconcile) and the
     // compaction merge (DataFrame, compactRows) implement the same
-    // semantics twice — this pin stops them drifting. Timestamps are
-    // globally unique so every per-cell winner is well-defined (the
-    // deterministic tie rules have their own unit cases above).
+    // semantics twice — this pin stops them drifting. Four legs meet the
+    // algebra: the point read, the compaction fold, and the reconciled
+    // scan compactRows plans over a bare read (under asofmicros,
+    // ttlasofms, applydeletes and a split target small enough to force
+    // many key ranges). Timestamps are globally unique so every per-cell
+    // winner is well-defined (the deterministic tie rules have their own
+    // unit cases above).
     import graft.sources.sstable.{Column, RowTombstone, SSTableRow, SSTableWriter}
     val rnd = new scala.util.Random(20260812)
     var tsCounter = 1000L
@@ -468,7 +472,10 @@ class SSTableOpsSpec extends AnyFunSuite {
         keyUniverse.filter(_ => rnd.nextDouble() < 0.7).flatMap { k =>
           def mkRow() = {
             val cols = names.filter(_ => rnd.nextDouble() < 0.6).map { n =>
-              if (rnd.nextDouble() < 0.25) Column.Deleted(n.getBytes, nextTs())
+              val u = rnd.nextDouble()
+              if (u < 0.25) Column.Deleted(n.getBytes, nextTs())
+              else if (u < 0.4) Column.Expiring(n.getBytes, s"$k$n$g".getBytes, 60L,
+                1000L * (1 + rnd.nextInt(3)), nextTs())
               else Column.Normal(n.getBytes, s"$k$n$g".getBytes, nextTs())
             } ++ (if (rnd.nextDouble() < 0.2) {
               // slice delete over a random name interval, mfda inside the
@@ -490,19 +497,45 @@ class SSTableOpsSpec extends AnyFunSuite {
             SSTableRow(k.getBytes, cols, tomb)
           }
           // occasional duplicate key within one generation (writer
-          // permits non-decreasing keys; versions land adjacently)
-          if (rnd.nextDouble() < 0.15) Seq(mkRow(), mkRow()) else Seq(mkRow())
+          // permits non-decreasing keys; versions land adjacently); k05's
+          // run of six crosses a Summary window (interval 4) in gen 0
+          if (g == 0 && k == "k05") Seq.fill(6)(mkRow())
+          else if (rnd.nextDouble() < 0.15) Seq(mkRow(), mkRow()) else Seq(mkRow())
         }
       }
-      gens.zipWithIndex.foreach { case (rows, g) =>
+      // a delete-only generation (row tombstones alone, provable from its
+      // sidecar) for applydeletes, and an empty generation
+      val deletes = keyUniverse.filter(_ => rnd.nextDouble() < 0.3).map(k =>
+        SSTableRow(k.getBytes, Nil, Some(RowTombstone(1700000009, tsCounter - rnd.nextInt(300)))))
+      (gens :+ deletes :+ Nil).zipWithIndex.foreach { case (rows, g) =>
         val w = new SSTableWriter(s"$dir/gen$g-Data.db", compress = g % 2 == 0,
           chunkLength = 256, summaryInterval = 4)
         try rows.sortBy(r => new String(r.key)).foreach(w.append) finally w.close()
       }
 
-      val expected = SSTableOps.compactRows(spark.read.format("sstable").load(dir))
-        .select(col("key").cast("string"), to_json(struct(col("columns"), col("rowTombstone"))))
-        .as[(String, String)].collect().toMap
+      def canon(df: org.apache.spark.sql.DataFrame): Map[String, String] =
+        df.select(col("key").cast("string"), to_json(struct(col("columns"), col("rowTombstone"))))
+          .as[(String, String)].collect().toMap
+      def raw(opts: (String, String)*) =
+        spark.read.format("sstable").options(opts.toMap).load(dir)
+      val expected = canon(SSTableOps.compactRowsAlgebra(raw()))
+      // the reconciled scan: compactRows' route over a bare read, checked
+      // to plan the reconciled view, against the algebra over the same read
+      val cut = (1000L + tsCounter) / 2
+      Seq(Seq(), Seq("targetsplitbytes" -> "64"), Seq("asofmicros" -> cut.toString),
+        Seq("ttlasofms" -> "2000"), Seq("applydeletes" -> "true"),
+        Seq("targetsplitbytes" -> "64", "applydeletes" -> "true",
+          "asofmicros" -> cut.toString, "ttlasofms" -> "2000")).foreach { opts =>
+        val routed = SSTableOps.compactRows(raw(opts: _*))
+        assert(routed.queryExecution.executedPlan.toString.contains("view=reconciled"),
+          s"trial $trial $opts: compactRows did not plan the reconciled read")
+        assert(canon(routed) == canon(SSTableOps.compactRowsAlgebra(raw(opts: _*))),
+          s"trial $trial $opts: reconciled scan != compactRows algebra")
+      }
+      val inRange = col("key") >= lit("k03".getBytes) && col("key") < lit("k07".getBytes)
+      assert(canon(SSTableOps.compactRows(raw("targetsplitbytes" -> "64").filter(inRange))) ==
+        canon(SSTableOps.compactRowsAlgebra(raw()).filter(inRange)),
+        s"trial $trial: filtered reconciled scan != filtered algebra")
       // the compaction fold over the same generations publishes exactly
       // compactRows (gc = false) and suppressTombstones (gc = true)
       val inputs = graft.sources.sstable.SSTableReader.listDataFiles(dir)

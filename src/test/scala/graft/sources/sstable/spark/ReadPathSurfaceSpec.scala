@@ -328,7 +328,7 @@ object ReadPathSurfaceSpec {
   val BucketedReads = """
     |buckets: rows=40 #2c9bdc83fbc3 | sstable <root>/bucketed buckets=4 keyGrouped parts=4 [generationsListed=4,generationsPlanned=4,splitsPlanned=4,pendingDeleteKeys=0]
     |buckets key range: rows=20 #ebbb6a7b5580 | sstable <root>/bucketed keyRangePruned buckets=4 keyGrouped parts=4 [generationsListed=4,generationsPlanned=4,splitsPlanned=4,pendingDeleteKeys=0]
-    |buckets group by: rows=4 #7bb7eed39305 | sstable <root>/bucketed indexOnly buckets=4 keyGrouped parts=4 [generationsListed=4,generationsPlanned=4,splitsPlanned=4,pendingDeleteKeys=0]
+    |buckets group by: rows=4 #7bb7eed39305 | sstable <root>/bucketed buckets=4 keyGrouped parts=4 [generationsListed=4,generationsPlanned=4,splitsPlanned=4,pendingDeleteKeys=0]
     |bucketed table: rows=24 #d49c323bd1aa | sstable <root>/wh/c/b deleteAware spjBuckets=4 parts=4 [generationsListed=4,generationsPlanned=4,splitsPlanned=4,pendingDeleteKeys=0]
     |bucketed table group by: rows=24 #1286ddf04d4d | sstable <root>/wh/c/b deleteAware spjBuckets=4 parts=4 [generationsListed=4,generationsPlanned=4,splitsPlanned=4,pendingDeleteKeys=0]
   """

@@ -1,9 +1,29 @@
 package graft.sources.sstable.spark
 
 import java.nio.file.Files
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.sstable.{Column, LocalStorage, RowTombstone, SSTableFiles, SSTableRow}
+import graft.sources.sstable.{Column, LocalStorage, ObjSimFileSystem, RowTombstone,
+  SSTableFiles, SSTableRow, SSTableWriter}
+
+/** A local-disk Hadoop file system (`listhook://`) that calls
+  * [[ListHookFileSystem.onList]] after each directory listing: the
+  * storage hook a spec uses to commit between two planning passes. */
+class ListHookFileSystem extends ObjSimFileSystem {
+  override def getScheme: String = "listhook"
+  override def getUri: java.net.URI = java.net.URI.create("listhook:///")
+  override def listStatus(f: Path): Array[FileStatus] = {
+    val out = super.listStatus(f)
+    ListHookFileSystem.onList(f.toUri.getPath)
+    out
+  }
+}
+
+object ListHookFileSystem {
+  @volatile var onList: String => Unit = _ => ()
+}
 
 /** The read path's shared rules: the catalog metadata views list through
   * the same [[ReadSnapshot]] as the table itself, and [[Visibility]]
@@ -45,6 +65,48 @@ class ReadSnapshotSpec extends AnyFunSuite {
     views.foreach { case (v, df) =>
       val e = intercept[Exception](df.collect())
       assert(chain(e).exists(_.contains("no data and no _table pointer")), s"$v: ${chain(e)}")
+    }
+  }
+
+  test("a runtime-filtered (DPP) read plans every Batch from one listing: a DELETE and an " +
+    "INSERT committed after it stay invisible together") {
+    val dir = Files.createTempDirectory("graft-rs-dpp").toString
+    def gen(stem: String, rows: Seq[SSTableRow]): Unit = {
+      val w = new SSTableWriter(s"$dir/$stem-Data.db", chunkLength = 256, summaryInterval = 4)
+      try rows.foreach(w.append) finally w.close()
+    }
+    def key(i: Int): Array[Byte] = f"k$i%02d".getBytes
+    gen("g1", (0 until 10).map(i => SSTableRow(key(i), Seq(cell(10L + i)))))
+    spark.sparkContext.hadoopConfiguration.set("fs.listhook.impl",
+      classOf[ListHookFileSystem].getName)
+    // planning listings are the ones a scan Batch makes; estimateStatistics
+    // lists on its own during optimization
+    val plannings = new java.util.concurrent.atomic.AtomicInteger
+    ListHookFileSystem.onList = p =>
+      if (p == dir && Thread.currentThread.getStackTrace.exists(_.getClassName.contains("SnapshotBatch")) &&
+          plannings.incrementAndGet() == 1) {
+        // a concurrent writer: DELETE k03, then INSERT k20
+        gen("tombstones-del", Seq(SSTableRow(key(3), Nil, Some(RowTombstone(1700000000, 1000L)))))
+        gen("g2", Seq(SSTableRow(key(20), Seq(cell(2000L)))))
+      }
+    val keys = Seq("spark.sql.adaptive.enabled" -> "false", SSTableLookupJoin.EnabledKey -> "false")
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val fact = spark.read.format("sstable").option("applydeletes", "true")
+        .option("targetsplitbytes", "128").load(s"listhook://$dir")
+      val dim = spark.range(0, 100).filter(col("id").isin(3, 20))
+        .select(format_string("k%02d", col("id")).cast("binary").as("k"))
+      val joined = fact.join(broadcast(dim), col("key") === col("k"))
+        .select(col("key").cast("string"))
+      assert(joined.queryExecution.executedPlan.toString.contains("dynamicpruningexpression(key"),
+        joined.queryExecution.executedPlan)
+      val got = joined.collect().map(_.getString(0)).sorted.toSeq
+      // the directory as of the one listing: k03 live, k20 not yet written
+      assert(got == Seq("k03"), s"the read does not match its one listing: $got")
+      assert(plannings.get == 1, s"${plannings.get} planning listings for one execution")
+    } finally {
+      ListHookFileSystem.onList = _ => ()
+      keys.foreach { case (k, _) => spark.conf.unset(k) }
     }
   }
 
