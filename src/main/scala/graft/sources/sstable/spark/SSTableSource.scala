@@ -756,8 +756,10 @@ final class SSTableScanBuilder(path: String, options: CaseInsensitiveStringMap)
     else {
       // a reconciled read tests its key filters itself, exactly: a key
       // predicate commutes with the per-key merge, and tested in the
-      // scan it guards every predicate Spark pushes down and evaluates
-      // above it (Spark puts untranslatable predicates first)
+      // scan it guards the predicates Spark pushes down beside it (a
+      // key guard and a repeated cast of `key` in one Filter: outside
+      // whole-stage codegen, subexpression elimination evaluates the
+      // cast first)
       keyFilters = filters.filter(ReadPath.keyTest(_).isDefined)
       pushed = (pushed ++ keyFilters).distinct
       filters.filterNot(keyFilters.contains)
