@@ -12,12 +12,11 @@ import graft.functions.MsgPack
   *
   * A merge over a bare `sstable` read runs inside the scan: each task
   * reconciles one key range of every generation, with no shuffle (see
-  * [[compactRows]]). Every other merge is hash-aggregations on
-  * (key[, name]) — partial+final with map-side combine, strictly better
-  * than the reference's combiner-less MR shuffles of raw columns
-  * (SURVEY.md §4 "Partial aggregation").
-  * Tie-breaks are made deterministic via (timestamp, name, state) ordering
-  * (the reference's strict `>` kept first-seen — iteration-order dependent,
+  * [[compactRows]]). Every other merge is one aggregation on key —
+  * partial+final with map-side combine, strictly better than the
+  * reference's combiner-less MR shuffles of raw columns (SURVEY.md §4
+  * "Partial aggregation"). Tie-breaks are deterministic (the
+  * reference's strict `>` kept first-seen — iteration-order dependent,
   * SSTableData.scala:52,93; documented divergence SURVEY.md §7 risk 2).
   */
 object SSTableOps {
@@ -35,34 +34,25 @@ object SSTableOps {
       .agg(max_by(col("c"), struct(col("c.timestamp"), col("c.name"), col("c.state")))
         .as("c"))
 
-  private val RowTombstoneSql = "struct<localDeletionTime:int,markedForDeleteAt:long>"
-  /** Live sentinel for the merged markedForDeleteAt fold (Cassandra's
-    * `DeletionTime.LIVE.markedForDeleteAt`). */
-  private val LiveMfda = Long.MinValue
-
   /** A2 — full-row compaction: latest version of each column, re-nested
-    * (`MsgPackSSTableDataReducer`, mapred/SSTableData.scala:79-119).
-    * DELETED/EXPIRING cell states are preserved (no tombstone GC),
-    * matching the reference. Equal-timestamp tie: the tombstone wins
-    * (Cassandra's reconcile rule — a delete at ts T shadows a write at
-    * ts T), then state string for NORMAL/EXPIRING determinism.
+    * (`MsgPackSSTableDataReducer`, mapred/SSTableData.scala:79-119), by
+    * Cassandra's rules ([[graft.sources.sstable.SSTableReader.Reconciler]]):
+    * the newest version of each cell wins, a tombstone wins an
+    * equal-timestamp tie, and the rest of the tie order makes the winner
+    * independent of input order. DELETED/EXPIRING cell states are
+    * preserved (no tombstone GC), matching the reference.
     *
     * Row-level tombstones (the `rowTombstone` scan field, absent in the
-    * reference's model) are honored across generations: the per-key
-    * superseding tombstone is max by `markedForDeleteAt` (Cassandra's
-    * `DeletionInfo` ordering), every same-key column with
-    * `timestamp <= markedForDeleteAt` is shadowed out — including older
-    * cell tombstones — and the merged tombstone is carried on the output
-    * so a written compaction result still shadows yet-older generations.
-    * Pure-tombstone rows (zero columns) survive via `explode_outer`.
-    * Inputs without the `rowTombstone` column behave as before.
-    *
-    * Range tombstones (state RANGE_TOMBSTONE, Cassandra 1.2 slice
-    * deletes) shadow same-key cells with `name ∈ [min, max]` and
-    * `timestamp <= mfda` — including older cell tombstones — and are
-    * carried on the output; ranges never suppress other ranges
-    * (union-of-predicates). Ranges older than the row tombstone die
-    * with everything they could have shadowed.
+    * reference's model) are honored across generations: the newest wins,
+    * every same-key column with `timestamp <= markedForDeleteAt` is
+    * shadowed out — including older cell tombstones — and the merged
+    * tombstone is carried on the output so a written compaction result
+    * still shadows yet-older generations. Range tombstones (Cassandra
+    * 1.2 slice deletes) shadow same-key cells with `name ∈ [min, max]`
+    * and `timestamp <= mfda`, never other ranges, and are carried too.
+    * Pure-tombstone rows (zero columns) survive. Inputs without the
+    * `rowTombstone` column merge as if every row were live. Counter
+    * columns fail the merge: it has no LWW semantics for them.
     *
     * Route: when `df` is a bare rows-view read of a non-bucketed
     * `sstable` directory — its analyzed plan is the relation with exactly
@@ -73,38 +63,28 @@ object SSTableOps {
     * (the compaction fold's loop, the read's TTL, as-of and delete-shadow
     * rule applied per version first), so the plan has no exchange. A key
     * predicate commutes with a per-key merge, so the filters are
-    * re-applied above the reconciled relation. Same rows, byte for byte.
+    * re-applied above the reconciled relation.
     *
     * Every other input — bucketed reads, metadata columns, projections,
-    * non-sstable relations — takes the DataFrame algebra below: one
-    * (key, name[, rangeMax]) hash-agg + one per-key fold — partial+final
-    * with map-side combine; the range shadowing is a per-key array HOF,
-    * no extra shuffle.
-    *
-    * Skew bound: the final per-key fold materializes every surviving
-    * column of a key in ONE aggregation buffer (`sort_array(collect_list)`)
-    * — inherent to the re-nested output schema (the output row itself is
-    * O(columns)), but a pathologically wide hot key (millions of columns)
-    * pays the per-cell buffer growth and the whole-row sort on a single
-    * executor core. [[compactRowsSalted]] trades one extra shuffle for
-    * bucketed intermediate buffers when that's the workload. */
+    * non-sstable relations — is one aggregation on `key` ([[ReconcileRows]]):
+    * a map-side partial merges each task's versions of a key, and one
+    * exchange ships one reconciled row per key and task to the final
+    * merge. A bucketed read's `_bucket` rides through the grouping, so
+    * its merge needs no exchange at all. Columns are matched by name, so
+    * any field order works. */
   def compactRows(df: DataFrame): DataFrame =
-    reconciledRead(df).getOrElse(compactRowsAlgebra(df))
-
-  /** [[compactRows]]' DataFrame algebra, for any input. */
-  private[operators] def compactRowsAlgebra(df: DataFrame): DataFrame = {
-    val perCell = latestVersionPerCell(explodeWithTombstone(df))
-    val grouped = perCell
-      .groupBy(bucketCols(perCell) :+ col("key"): _*)
-      // collect_list drops the null `c` of pure-tombstone rows; ranges
-      // are ALSO collected separately — see applyTombstoneShadowing's
-      // quadratic-inlining note (the when() yields null for non-ranges,
-      // which collect_list drops)
-      .agg(sort_array(collect_list(col("c"))).as("_cols"),
-        collect_list(when(col("c.state") === "RANGE_TOMBSTONE", col("c"))).as("_art"),
-        max(col("_t")).as("_t"))
-    applyTombstoneShadowing(grouped)
-  }
+    reconciledRead(df).getOrElse {
+      import org.apache.spark.sql.GraftColumnBridge
+      val tomb = if (df.columns.contains("rowTombstone")) col("rowTombstone")
+        else lit(null).cast(graft.sources.sstable.spark.SSTableSchema.rowTombstoneStruct)
+      val row = struct(col("key"), col("columns"), tomb.as("rowTombstone"))
+      val merged = GraftColumnBridge.column(
+        ReconcileRows(GraftColumnBridge.expression(row)).toAggregateExpression())
+      df.groupBy(bucketCols(df) :+ col("key"): _*)
+        .agg(merged.as("_r"))
+        .select(bucketCols(df) ++ Seq(col("key"), col("_r.columns").as("columns"),
+          col("_r.rowTombstone").as("rowTombstone")): _*)
+    }
 
   /** The reconciled twin of a bare rows-view read ([[compactRows]]'
     * route), or None when `df` is anything else. */
@@ -147,114 +127,13 @@ object SSTableOps {
   private def bucketCols(df: DataFrame): Seq[SCol] =
     if (df.columns.contains("_bucket")) Seq(col("_bucket")) else Nil
 
-  /** Skew-safe [[compactRows]] algebra twin: identical output,
-    * one extra shuffle. The per-key column assembly is split in two —
-    * cells first aggregate per `(key, hash(name) % buckets)` salt (each
-    * buffer holds ≤ ~1/buckets of a hot key's columns, spread across
-    * executors), then the per-key fold concatenates `buckets` pre-built
-    * arrays instead of inserting millions of individual cells into one
-    * buffer. The final sorted row is still materialized once — that is
-    * the output schema's own cost, paid by any writer of the row — but
-    * the element-at-a-time aggregation hotspot is gone.
-    *
-    * Use when a wide-row workload has hot keys (Cassandra wide rows can
-    * hold millions of columns); the unsalted path is one shuffle cheaper
-    * and right for uniformly sized rows. */
+  /** [[compactRows]] under its earlier name. It once split a hot key's
+    * assembly over `buckets` name-hash salts; a key's merge buffer is now
+    * one reconciled row, so there is nothing left to salt. */
   def compactRowsSalted(df: DataFrame, buckets: Int = 64): DataFrame = {
     require(buckets > 0, s"buckets must be positive: $buckets")
-    val perCell = latestVersionPerCell(explodeWithTombstone(df))
-    val grouped = perCell
-      // salt by name hash: every version of one cell lands in one bucket,
-      // so bucket sub-merges are independent; null name (pure-tombstone
-      // rows) buckets together and is dropped by collect_list below
-      .groupBy(bucketCols(perCell) ++ Seq(col("key"),
-        pmod(xxhash64(col("c.name")), lit(buckets.toLong)).as("_b")): _*)
-      .agg(collect_list(col("c")).as("_sub"),
-        collect_list(when(col("c.state") === "RANGE_TOMBSTONE", col("c"))).as("_subrt"),
-        max(col("_t")).as("_t"))
-    val perKey = grouped
-      .groupBy(bucketCols(grouped) :+ col("key"): _*)
-      .agg(sort_array(flatten(collect_list(col("_sub")))).as("_cols"),
-        flatten(collect_list(col("_subrt"))).as("_art"),
-        max(col("_t")).as("_t"))
-    applyTombstoneShadowing(perKey)
+    compactRows(df)
   }
-
-  /** Phase 0 of the merge: one record per (key, column version), with the
-    * row-level deletion clock alongside (`_mfda`/`_ldt`; LIVE sentinels
-    * when absent). Inputs without a `rowTombstone` column get the LIVE
-    * default. Counter states fail LOUDLY here — a timestamp merge over
-    * counter replication contexts silently loses increments, so the
-    * whole merge family (compactRows / compactRowsSalted /
-    * suppressTombstones / compact*) refuses them; scan/export paths that
-    * never merge surface them raw. */
-  private def explodeWithTombstone(df: DataFrame): DataFrame = {
-    val withT =
-      if (df.columns.contains("rowTombstone")) df
-      else df.withColumn("rowTombstone", lit(null).cast(RowTombstoneSql))
-    withT.select(bucketCols(withT) ++ Seq(col("key"),
-        explode_outer(col("columns")).as("_c0"),
-        coalesce(col("rowTombstone.markedForDeleteAt"), lit(LiveMfda)).as("_mfda"),
-        coalesce(col("rowTombstone.localDeletionTime"), lit(Int.MaxValue)).as("_ldt")): _*)
-      .withColumn("c", when(
-        col("_c0.state").isin("COUNTER", "COUNTER_UPDATE"),
-        raise_error(concat(lit("counter columns have no LWW merge semantics " +
-          "(partitioned replication contexts); key="), base64(col("key")))))
-        .otherwise(col("_c0")))
-      .drop("_c0")
-  }
-
-  /** Phase 1: newest version per cell — hash-agg on (key, name[, range
-    * max]) with map-side partial combine. Ranges group by (min, max) so
-    * distinct ranges sharing a min bound both survive; cells group by
-    * name (_rmax null). The ordering's (value, ttlSecs, expiresMillis)
-    * tail makes exact (timestamp, state) collisions deterministic —
-    * without it max_by keeps the first-encountered on a full tie
-    * (shuffle-order-dependent) while the probe-path reconcile kept file
-    * order; binary comparison is unsigned, same as compareKeys. */
-  private def latestVersionPerCell(exploded: DataFrame): DataFrame =
-    exploded
-      .groupBy(bucketCols(exploded) ++ Seq(col("key"), col("c.name").as("_n"),
-        when(col("c.state") === "RANGE_TOMBSTONE", col("c.value")).as("_rmax")): _*)
-      .agg(max_by(col("c"), struct(col("c.timestamp"),
-        when(col("c.state") === "DELETED", 1).otherwise(0),
-        col("c.state"), col("c.value"), col("c.ttlSecs"),
-        col("c.expiresMillis"))).as("c"),
-        max(struct(col("_mfda"), col("_ldt"))).as("_t"))
-
-  /** Final phase: row- and range-tombstone shadowing over the assembled
-    * per-key column array (`_cols` sorted, `_art` the key's range
-    * tombstones only, `_t` the merged deletion clock) — per-key array
-    * HOFs, no extra shuffle. Live range tombstones (not superseded by
-    * the row tombstone) shadow cells in [min, max] with ts <= range
-    * mfda; a row-shadowed range only covers cells the row tombstone
-    * already shadows.
-    *
-    * Why `_rts` must derive from `_art` and NOT from `_cols`: Catalyst's
-    * CollapseProject inlines a once-referenced projection into its use
-    * site, so `_rts` ends up INSIDE the outer filter's per-element
-    * lambda — recomputed for every element of `_cols`. Deriving it from
-    * `_cols` made the merge O(width²) interpreted-HOF work per row
-    * (measured: a 200k-column hot key pinned one core for >10 min in
-    * the skew probe, vs seconds expected); over `_art` the recomputation
-    * scans only the key's range tombstones, restoring
-    * O(width × #ranges). */
-  private def applyTombstoneShadowing(perKey: DataFrame): DataFrame =
-    perKey
-      .withColumn("_rts", filter(col("_art"), r =>
-        r.getField("timestamp") > col("_t._mfda")))
-      .select(bucketCols(perKey) ++ Seq(col("key"),
-        filter(col("_cols"), c =>
-          c.getField("timestamp") > col("_t._mfda") &&
-            (c.getField("state") === "RANGE_TOMBSTONE" ||
-              !exists(col("_rts"), r =>
-                c.getField("name") >= r.getField("name") &&
-                  c.getField("name") <= r.getField("value") &&
-                  c.getField("timestamp") <= r.getField("timestamp"))))
-          .as("columns"),
-        when(col("_t._mfda") =!= lit(LiveMfda),
-          struct(col("_t._ldt").as("localDeletionTime"),
-            col("_t._mfda").as("markedForDeleteAt"))).as("rowTombstone")): _*)
 
   /** P7 — drop DELETED columns, any NORMAL/EXPIRING column shadowed by a
     * same-name tombstone with a newer-or-equal timestamp, and (via
@@ -279,7 +158,7 @@ object SSTableOps {
      cols: Seq[org.apache.spark.sql.Row]) =>
       MsgPack.encodeRow(key, cols.map { r =>
         // DELETED exports ts=0 (MsgPackSSTableDataReducer only sets ts on
-        // puts, mapred/SSTableData.scala:85-95 — byte parity, ADVICE r1)
+        // puts, mapred/SSTableData.scala:85-95 — byte parity)
         val ts = if (r.getAs[String]("state") == "DELETED") 0L
                  else r.getAs[Long]("timestamp")
         (r.getAs[Array[Byte]]("name"), r.getAs[Array[Byte]]("value"),
@@ -328,8 +207,8 @@ object SSTableOps {
     * each file's `-Statistics.db`; files without stats count 0/0), so a
     * bounded maintenance budget folds the generations whose merge
     * reclaims the most shadowed data first — Cassandra's droppable-
-    * tombstone prioritization, VERDICT r4 #1(c). Ties (the common
-    * all-zero case) keep the smallest-first size order. Pure metadata —
+    * tombstone prioritization. Ties (the common all-zero case) keep
+    * the smallest-first size order. Pure metadata —
     * one stat + one tiny cache-served Statistics.db read per file. */
   def planCompaction(dir: String, minThreshold: Int = 4, maxThreshold: Int = 32,
                      bucketHigh: Double = 1.5, minSize: Long = 50L * 1024 * 1024,
@@ -1058,8 +937,9 @@ object SSTableOps {
     * metadata is opened once (and served from [[graft.sources.sstable
     * .SSTableMetadataCache]] across partitions/queries); each probe is
     * bloom → Summary search → one bounded Index.db window → one Data.db
-    * seek per generation that might contain the key, reconciled across
-    * generations with [[compactRows]]' exact rules.
+    * seek per generation that might contain the key, merged across
+    * generations by [[graft.sources.sstable.SSTableReader.reconcile]],
+    * the rules every merge shares.
     *
     * Inner-join semantics: one output row per probe key that exists
     * (after reconcile — with `gcTombstones` the live view, so wholesale-

@@ -169,9 +169,9 @@ object WideRowOps {
       .drop("_cb", "_new", "_base")
   }
 
-  /** Which full-row merge implementation a query drives
-    * ([[SSTableOps.compactRows]] vs the skew-safe salted twin) — lets the
-    * oracle harness exercise both against one SQL twin. */
+  /** Which full-row merge entry point a query drives
+    * ([[SSTableOps.compactRows]] or its `compactRowsSalted` alias) — lets
+    * the oracle harness pin both against one SQL twin. */
   sealed trait CompactVariant
   case object CompactPlain extends CompactVariant
   final case class CompactSalted(buckets: Int) extends CompactVariant

@@ -39,7 +39,7 @@ object WideRowQueries {
     // run, not a relational twin.
     "q_compact_rows" -> ((s, d) =>
       compactedEvents(s, d, WideRowOps.CompactPlain)),
-    // the skew-safe salted variant must be indistinguishable end-to-end
+    // the salted alias must be indistinguishable end-to-end
     "q_compact_salted" -> ((s, d) =>
       compactedEvents(s, d, WideRowOps.CompactSalted(8))),
     // P7 — tombstone suppression (DELETED state dispatch).
@@ -910,7 +910,7 @@ object WideRowQueries {
     * merge variant, and explode back to a comparable relation. Each event
     * becomes a one-column row VERSION (multiple rows per key are exactly
     * what compaction merges) — no pre-nesting shuffle; the merge's own
-    * hash-aggs do all the grouping. */
+    * aggregation does all the grouping. */
   private def compactedEvents(s: SparkSession, d: String,
                               variant: WideRowOps.CompactVariant): DataFrame = {
     val e = Tables.events(s, d).select("user_id", "event_type", "ts_ms", "value")

@@ -101,8 +101,7 @@ final class SSTableReader(val dataPath: String,
     * (sound under the cache's validity key — the fileset is immutable once
     * published): [[getAll]] needs it per probe, and an uncached stat would
     * be one metadata RPC per probe per generation on object stores,
-    * counter to lookupJoin's one-metadata-load-per-partition shape
-    * (ADVICE r4). */
+    * counter to lookupJoin's one-metadata-load-per-partition shape. */
   def indexLength: Long =
     meta.indexLength.getOrCompute(storage.length(sibling(dataPath, IndexSuffix)))
 
@@ -351,10 +350,10 @@ object SSTableReader {
     * whole table directory (the reference's scan-everything model,
     * SSTableDataInputFormat.scala:15-17, never had one): probe every
     * generation's bloom→summary→index chain (a miss costs O(1) in-memory
-    * probes per file), then reconcile the hits with the SAME rules as
-    * [[graft.operators.SSTableOps.compactRows]] — latest version per
-    * column (delete-wins on timestamp tie), newest row tombstone wins,
-    * every column with `timestamp <= markedForDeleteAt` shadowed.
+    * probes per file), then merge the hits with [[reconcile]], the rules
+    * every merge shares — latest version per column (delete-wins on
+    * timestamp tie), newest row tombstone wins, every column with
+    * `timestamp <= markedForDeleteAt` shadowed.
     *
     * `gcTombstones = false` returns the merged storage view (cell
     * tombstones and the row tombstone preserved); `true` returns the
@@ -444,8 +443,8 @@ object SSTableReader {
       }
 
     /** Same semantics as the directory-level `SSTableReader.get`, with
-      * two statistics-driven prunes (VERDICT r4 #1), both sound because
-      * they only skip generations that cannot change the merged result:
+      * two statistics-driven prunes, both sound because they only skip
+      * generations that cannot change the merged result:
       *  - key bounds: `key ∉ [minKey, maxKey]` ⇒ the sorted file cannot
       *    contain it — skips even the bloom probe;
       *  - tombstone early-out: once a probed row tombstone has
@@ -457,28 +456,19 @@ object SSTableReader {
       *    matters: at `maxTimestamp == mfda` an equal-mfda tombstone
       *    with a larger ldt could still win the merged tombstone. */
     def get(key: Array[Byte], gcTombstones: Boolean = false): Option[SSTableRow] = {
-      var bestMfda = Long.MinValue // strongest row tombstone probed so far
-      val hits = Vector.newBuilder[SSTableRow]
-      var nHits = 0
+      val merged = new Reconciler(key) // its tombstone: the strongest probed so far
+      var hits = 0
       readers.foreach { r =>
-        val skip = r.statistics.exists(s =>
-          !s.mightContainKey(key) || s.maxTimestamp < bestMfda)
-        if (!skip) {
+        if (!r.statistics.exists(s =>
+            !s.mightContainKey(key) || s.maxTimestamp < merged.markedForDeleteAt)) {
           val rs = r.getAll(key)
-          rs.foreach { row =>
-            row.tombstone.foreach { t =>
-              if (t.markedForDeleteAtMicros != Long.MinValue && // LIVE sentinel
-                  t.markedForDeleteAtMicros > bestMfda)
-                bestMfda = t.markedForDeleteAtMicros
-            }
-          }
-          hits ++= rs
-          nHits += rs.size
+          rs.foreach(merged.add)
+          hits += rs.size
         }
       }
-      if (nHits == 0) return None
-      val merged = reconcile(key, hits.result())
-      if (!gcTombstones) Some(merged) else liveView(merged)
+      if (hits == 0) None
+      else if (!gcTombstones) Some(merged.result())
+      else liveView(merged.result())
     }
   }
 
@@ -501,14 +491,14 @@ object SSTableReader {
     * priority queue. Every version of a key (a file's adjacent duplicates
     * included) first passes `keep`, the per-version pre-merge filter (a
     * reader's visibility rule; the identity for compaction), and the
-    * survivors are reconciled with [[reconcile]] — the rules
-    * `compactRows` implements as DataFrame algebra. With `gc` the row
+    * survivors are merged by one [[Reconciler]] per key. With `gc` the row
     * passes through [[liveView]], so keys with nothing live left are
     * elided. Yields one row per surviving key in strictly increasing key
     * order, ready for an [[SSTableWriter]].
     *
-    * Memory is one decoded row per input plus the versions of the key
-    * being merged. Inputs are opened eagerly and closed by [[close]].
+    * Memory is one decoded row per input plus the merge state of the key
+    * being merged (one winner per column). Inputs are opened eagerly and
+    * closed by [[close]].
     * Damage fails loudly and names the file: a [[CorruptSSTableException]]
     * or truncation from decoding is re-raised with the input's path, and
     * so is an input whose keys go backwards or leave the slices' key
@@ -565,16 +555,16 @@ object SSTableReader {
     private var pending: SSTableRow = _
     private def fill(): Unit = while (pending == null && !queue.isEmpty) {
       val key = queue.peek().head.key
-      val versions = Vector.newBuilder[SSTableRow]
+      val versions = new Reconciler(key)
       while (!queue.isEmpty && compareKeys(queue.peek().head.key, key) == 0) {
         val in = queue.poll()
         while (in.head != null && compareKeys(in.head.key, key) == 0) {
-          versions += in.head
+          versions.add(in.head)
           in.advance()
         }
         if (in.head != null) queue.add(in)
       }
-      val merged = reconcile(key, versions.result())
+      val merged = versions.result()
       pending = if (gc) liveView(merged).orNull else merged
     }
 
@@ -598,115 +588,139 @@ object SSTableReader {
     }
   }
 
-  /** Merge one key's row versions from N generations (the Scala twin of
-    * `compactRows`' DataFrame algebra — same winner per column, same
-    * tie-breaks, same row-tombstone shadowing, name-sorted output). */
-  private[sstable] def reconcile(key: Array[Byte], rows: Seq[SSTableRow]): SSTableRow = {
-    // same refusal as compactRows' merge family: counter replication
-    // contexts have no LWW semantics — merging by timestamp would
-    // silently lose increments (raw scans still surface them)
-    if (rows.exists(_.columns.exists(c => c.isInstanceOf[Column.Counter] ||
-        c.isInstanceOf[Column.CounterUpdate])))
-      throw new IllegalArgumentException(
-        "counter columns have no LWW merge semantics (partitioned " +
-          s"replication contexts); key=${java.util.Base64.getEncoder.encodeToString(key)}")
-    // newest row tombstone: max by (markedForDeleteAt, localDeletionTime).
-    // The pathological half-LIVE pair (mfda=Long.MinValue, ldt≠MAX) the
-    // codec round-trips is normalized away on MERGE — it shadows nothing,
-    // and compactRows' sentinel fold can't represent it; both merge paths
-    // therefore agree (raw single-file reads still surface it verbatim).
-    val tomb = rows.flatMap(_.tombstone)
-      .filter(_.markedForDeleteAtMicros != Long.MinValue)
-      .sortBy(t => (t.markedForDeleteAtMicros, t.localDeletionTimeSecs))
-      .lastOption
-    val mfda = tomb.map(_.markedForDeleteAtMicros).getOrElse(Long.MinValue)
-    // latest per column name; tie on timestamp → tombstone wins, then
-    // state string (mirrors compactRows' max_by struct ordering).
-    // Range tombstones key by (min, max) so distinct ranges sharing a
-    // min bound both survive — exactly compactRows' group key.
-    def stateOf(c: Column): String = c match {
-      case _: Column.Deleted => "DELETED"
-      case _: Column.Normal => "NORMAL"
-      case _: Column.Expiring => "EXPIRING"
-      case _: Column.RangeTombstone => "RANGE_TOMBSTONE"
-      case _: Column.Counter | _: Column.CounterUpdate =>
-        throw new IllegalStateException("unreachable: counters rejected on entry")
-    }
-    def valueOf(c: Column): Array[Byte] = c match {
-      case Column.Normal(_, v, _) => v
-      case Column.Expiring(_, v, _, _, _) => v
-      case r: Column.RangeTombstone => r.maxName
-      case _ => null // Deleted; counters rejected on entry
-    }
-    def ttlOf(c: Column): Long = c match {
-      case e: Column.Expiring => e.ttlSecs
-      case r: Column.RangeTombstone => r.localDeletionTimeSecs.toLong
-      case _ => 0L
-    }
-    def expOf(c: Column): Long = c match {
-      case e: Column.Expiring => e.expiresMillis
-      case _ => 0L
-    }
-    /** Strictly-greater under compactRows' max_by struct ordering
-      * `(timestamp, deleted, state, value, ttlSecs, expiresMillis)` —
-      * the (value, ttl, exp) tail resolves exact (timestamp, state)
-      * collisions identically on both merge paths (ADVICE r4; max_by's
-      * bare tie kept the shuffle-order first-encountered while this path
-      * kept file order). Null value sorts below any bytes, mirroring
-      * Spark's nulls-first struct-field comparison. */
-    def rankGt(a: Column, b: Column): Boolean = {
-      if (a.timestamp != b.timestamp) return a.timestamp > b.timestamp
-      val d = (if (a.isInstanceOf[Column.Deleted]) 1 else 0) -
-        (if (b.isInstanceOf[Column.Deleted]) 1 else 0)
-      if (d != 0) return d > 0
-      val s = stateOf(a).compareTo(stateOf(b))
-      if (s != 0) return s > 0
-      val (va, vb) = (valueOf(a), valueOf(b))
-      val v = if (va == null && vb == null) 0
-        else if (va == null) -1 else if (vb == null) 1
-        else compareKeys(va, vb)
-      if (v != 0) return v > 0
-      if (ttlOf(a) != ttlOf(b)) return ttlOf(a) > ttlOf(b)
-      expOf(a) > expOf(b)
-    }
-    def wrap(a: Array[Byte]) = scala.collection.immutable.ArraySeq.unsafeWrapArray(a)
-    val byName = scala.collection.mutable.HashMap.empty[(Seq[Byte], Option[Seq[Byte]]), Column]
-    rows.iterator.flatMap(_.columns).foreach { c =>
-      val k = (wrap(c.name), c match {
-        case r: Column.RangeTombstone => Some(wrap(r.maxName))
-        case _ => None
-      })
-      byName.updateWith(k) {
-        case Some(prev) => Some(if (rankGt(c, prev)) c else prev)
-        case None => Some(c)
+  /** Merge one key's row versions from N generations: the one-shot form
+    * of [[Reconciler]]. */
+  private[graft] def reconcile(key: Array[Byte], rows: Seq[SSTableRow]): SSTableRow =
+    rows.foldLeft(new Reconciler(key))(_ add _).result()
+
+  /** One key's running merge under Cassandra's rules, the single
+    * statement of them: [[get]], [[Fold]], the reconciled scan and
+    * `compactRows`' aggregate all reconcile through it.
+    *
+    *  - Per column the winner is the greatest version under
+    *    `(timestamp, deleted, state, value, ttlSecs, expiresMillis)`:
+    *    the newest version wins, a tombstone wins a timestamp tie, and
+    *    the tail makes an exact `(timestamp, state)` collision pick the
+    *    same version whatever the input order. A null value sorts below
+    *    any bytes. Range tombstones key by `(min, max)`, so distinct
+    *    ranges sharing a min bound both survive.
+    *  - The row tombstone is the greatest by `(markedForDeleteAt,
+    *    localDeletionTime)`. The half-LIVE pair (`markedForDeleteAt =
+    *    Long.MinValue` with any other `localDeletionTime`), which the
+    *    codec round-trips, shadows nothing and is dropped on merge.
+    *  - [[result]] drops every column with `timestamp <=
+    *    markedForDeleteAt`, then every cell a surviving range shadows
+    *    (ranges never suppress ranges), and sorts the rest by `(name,
+    *    state, value, timestamp)`.
+    *
+    * [[add]] takes versions in any order and costs O(row width); the key
+    * is the first version's when not given. Adding a [[result]] equals
+    * adding the versions it merged — what a partial aggregation needs.
+    * Counter columns have no LWW semantics (merging replication contexts
+    * by timestamp silently loses increments), so [[add]] refuses them;
+    * raw scans still surface them. */
+  private[graft] final class Reconciler(private var key: Array[Byte] = null) {
+    private val winners =
+      scala.collection.mutable.HashMap.empty[(Seq[Byte], Option[Seq[Byte]]), Column]
+    private var tomb: Option[RowTombstone] = None
+
+    def add(row: SSTableRow): this.type = {
+      if (key == null) key = row.key
+      row.tombstone.foreach { t =>
+        if (t.markedForDeleteAtMicros != Long.MinValue && tomb.forall(tombOrder.gt(t, _)))
+          tomb = Some(t)
       }
-    }
-    // row-tombstone shadowing (ts <= mfda dies), then live ranges shadow
-    // cells in [min, max] with ts <= range mfda — cells only, ranges
-    // never suppress other ranges (union-of-predicates semantics)
-    val alive = byName.values.filter(_.timestamp > mfda).toSeq
-    val ranges = alive.collect { case r: Column.RangeTombstone => r }
-    val cols = alive
-      .filter {
-        case _: Column.RangeTombstone => true
-        case c => !ranges.exists(_.shadows(c.name, c.timestamp))
-      }
-      // mirror sort_array's struct order: (name, state, value, timestamp)
-      .sortWith { (a, b) =>
-        val n = compareKeys(a.name, b.name)
-        if (n != 0) n < 0
-        else {
-          val s = stateOf(a).compareTo(stateOf(b))
-          if (s != 0) s < 0
-          else {
-            val (va, vb) = (valueOf(a), valueOf(b))
-            val v = if (va == null && vb == null) 0
-              else if (va == null) -1 else if (vb == null) 1
-              else compareKeys(va, vb)
-            if (v != 0) v < 0 else a.timestamp < b.timestamp
-          }
+      row.columns.foreach { c =>
+        val k = c match {
+          case r: Column.RangeTombstone => (wrap(c.name), Some(wrap(r.maxName)))
+          case _: Column.Counter | _: Column.CounterUpdate =>
+            throw new IllegalArgumentException(
+              "counter columns have no LWW merge semantics (partitioned " +
+                s"replication contexts); key=${java.util.Base64.getEncoder.encodeToString(key)}")
+          case _ => (wrap(c.name), None)
+        }
+        winners.updateWith(k) {
+          case Some(prev) => Some(if (rankGt(c, prev)) c else prev)
+          case None => Some(c)
         }
       }
-    SSTableRow(key, cols, tomb)
+      this
+    }
+
+    /** The merged row tombstone's clock; `Long.MinValue` when live. */
+    def markedForDeleteAt: Long = tomb.fold(Long.MinValue)(_.markedForDeleteAtMicros)
+
+    def result(): SSTableRow = {
+      val mfda = markedForDeleteAt
+      val alive = winners.values.filter(_.timestamp > mfda).toSeq
+      val ranges = alive.collect { case r: Column.RangeTombstone => r }
+      val cols = alive
+        .filter {
+          case _: Column.RangeTombstone => true
+          case c => !ranges.exists(_.shadows(c.name, c.timestamp))
+        }
+        .sortWith { (a, b) =>
+          val n = compareKeys(a.name, b.name)
+          if (n != 0) n < 0
+          else {
+            val s = stateOf(a).compareTo(stateOf(b))
+            if (s != 0) s < 0
+            else {
+              val v = compareValues(valueOf(a), valueOf(b))
+              if (v != 0) v < 0 else a.timestamp < b.timestamp
+            }
+          }
+        }
+      SSTableRow(key, cols, tomb)
+    }
+  }
+
+  private val tombOrder: Ordering[RowTombstone] =
+    Ordering.by(t => (t.markedForDeleteAtMicros, t.localDeletionTimeSecs))
+  private def wrap(a: Array[Byte]) = scala.collection.immutable.ArraySeq.unsafeWrapArray(a)
+
+  /** A column's fields as the scan surface spells them
+    * (`SSTableSchema.columnToInternal`); counters never reach a merge. */
+  private def stateOf(c: Column): String = c match {
+    case _: Column.Deleted => "DELETED"
+    case _: Column.Normal => "NORMAL"
+    case _: Column.Expiring => "EXPIRING"
+    case _: Column.RangeTombstone => "RANGE_TOMBSTONE"
+    case _ => throw new IllegalStateException("unreachable: counters rejected on entry")
+  }
+  private def valueOf(c: Column): Array[Byte] = c match {
+    case Column.Normal(_, v, _) => v
+    case Column.Expiring(_, v, _, _, _) => v
+    case r: Column.RangeTombstone => r.maxName
+    case _ => null
+  }
+  private def ttlOf(c: Column): Long = c match {
+    case e: Column.Expiring => e.ttlSecs
+    case r: Column.RangeTombstone => r.localDeletionTimeSecs.toLong
+    case _ => 0L
+  }
+  private def expOf(c: Column): Long = c match {
+    case e: Column.Expiring => e.expiresMillis
+    case _ => 0L
+  }
+  /** Unsigned byte order with null below any bytes. */
+  private def compareValues(a: Array[Byte], b: Array[Byte]): Int =
+    if (a == null && b == null) 0
+    else if (a == null) -1 else if (b == null) 1
+    else compareKeys(a, b)
+
+  /** Strictly greater under the winner order
+    * `(timestamp, deleted, state, value, ttlSecs, expiresMillis)`. */
+  private def rankGt(a: Column, b: Column): Boolean = {
+    if (a.timestamp != b.timestamp) return a.timestamp > b.timestamp
+    val d = (if (a.isInstanceOf[Column.Deleted]) 1 else 0) -
+      (if (b.isInstanceOf[Column.Deleted]) 1 else 0)
+    if (d != 0) return d > 0
+    val s = stateOf(a).compareTo(stateOf(b))
+    if (s != 0) return s > 0
+    val v = compareValues(valueOf(a), valueOf(b))
+    if (v != 0) return v > 0
+    if (ttlOf(a) != ttlOf(b)) return ttlOf(a) > ttlOf(b)
+    expOf(a) > expOf(b)
   }
 }

@@ -263,7 +263,7 @@ final case class SSTableRangePartition(slices: Array[SSTablePartition],
 
 /** The reconciled read's task: merges its key range's slices with
   * [[SSTableReader.Fold]], each row version passing the read's key
-  * filters and [[Visibility]] before [[SSTableReader.reconcile]], and
+  * filters and [[Visibility]] before [[SSTableReader.Reconciler]], and
   * emits one reconciled row per key in ascending key order — the rows
   * `compactRows` computes from a raw read of the same snapshot. */
 final class SSTableReconciledReader(p: SSTableRangePartition, schema: StructType,

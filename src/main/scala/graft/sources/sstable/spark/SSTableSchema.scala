@@ -172,4 +172,64 @@ object SSTableSchema {
   }
   private val ChangeTypeUpsert = UTF8String.fromString("upsert")
   private val ChangeTypeDelete = UTF8String.fromString("delete")
+
+  /** The inverse of [[rowToInternal]] over rows of `schema`: `key`, plus
+    * `columns` and `rowTombstone` when present, found by name in any
+    * order, and so are the fields of a cell and of a tombstone (types as
+    * in [[schema]]). It reads back the surface encoding: a range tombstone's
+    * `value` is its max bound and `ttlSecs` its localDeletionTime; a
+    * counter's `expiresMillis` is its last-delete time. `stampMicros`
+    * overrides every cell's timestamp (the server-side write timestamp
+    * of row-level operations). An unknown `state` raises. */
+  final class RowDecoder(schema: StructType, stampMicros: Option[Long] = None) {
+    private val keyIdx = schema.fieldIndex("key")
+    private val colsIdx =
+      if (schema.fieldNames.contains("columns")) schema.fieldIndex("columns") else -1
+    private val tombIdx =
+      if (schema.fieldNames.contains("rowTombstone")) schema.fieldIndex("rowTombstone") else -1
+    private val (tombLdtIdx, tombMfdaIdx) =
+      if (tombIdx >= 0) {
+        val st = schema(tombIdx).dataType.asInstanceOf[StructType]
+        (st.fieldIndex("localDeletionTime"), st.fieldIndex("markedForDeleteAt"))
+      } else (-1, -1)
+    private val cell = if (colsIdx < 0) columnStruct
+      else schema(colsIdx).dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+    private val Array(nameI, stateI, valueI, tsI, ttlI, expI) =
+      columnStruct.fieldNames.map(cell.fieldIndex)
+
+    def apply(record: InternalRow): SSTableRow = {
+      val key = record.getBinary(keyIdx)
+      val cols: Seq[Column] =
+        if (colsIdx < 0 || record.isNullAt(colsIdx)) Nil
+        else {
+          val arr = record.getArray(colsIdx)
+          (0 until arr.numElements()).map { i =>
+            val c = arr.getStruct(i, cell.length)
+            val name = c.getBinary(nameI)
+            val ts = stampMicros.getOrElse(c.getLong(tsI))
+            c.getUTF8String(stateI).toString match {
+              case "NORMAL" => Column.Normal(name, c.getBinary(valueI), ts)
+              case "DELETED" => Column.Deleted(name, ts)
+              case "EXPIRING" =>
+                Column.Expiring(name, c.getBinary(valueI), c.getLong(ttlI), c.getLong(expI), ts)
+              case "RANGE_TOMBSTONE" =>
+                val ldt = c.getLong(ttlI)
+                require(ldt >= 0 && ldt <= Int.MaxValue,
+                  s"range tombstone localDeletionTime out of u32-seconds range: $ldt")
+                Column.RangeTombstone(name, c.getBinary(valueI), ldt.toInt, ts)
+              case "COUNTER" => Column.Counter(name, c.getBinary(valueI), c.getLong(expI), ts)
+              case "COUNTER_UPDATE" => Column.CounterUpdate(name, c.getBinary(valueI), ts)
+              case other => throw new IllegalArgumentException(s"unknown column state $other")
+            }
+          }
+        }
+      val tombstone =
+        if (tombIdx < 0 || record.isNullAt(tombIdx)) None
+        else {
+          val t = record.getStruct(tombIdx, 2)
+          Some(RowTombstone(t.getInt(tombLdtIdx), t.getLong(tombMfdaIdx)))
+        }
+      SSTableRow(key, cols, tombstone)
+    }
+  }
 }

@@ -421,7 +421,7 @@ final class SSTableBucketedRollingWriter(stagingDir: String, schema: StructType,
 /** Streams one partition's rows (already key-sorted by Spark) into the
   * staged SSTable set `stagingDir/<fileStem>-*`. Accepts either the full
   * nested schema or a bare `key` plus nested `columns` in any field
-  * order. `stampMicros` (row-level operations only) overrides every
+  * order ([[SSTableSchema.RowDecoder]]). `stampMicros` (row-level operations only) overrides every
   * written cell's timestamp with the operation's write timestamp —
   * the Cassandra server-side-timestamp contract of UPDATE/MERGE. */
 final class SSTablePartitionWriter(stagingDir: String, schema: StructType,
@@ -431,56 +431,9 @@ final class SSTablePartitionWriter(stagingDir: String, schema: StructType,
     extends DataWriter[InternalRow] {
   private val dataPath = s"$stagingDir/$fileStem${SSTableFiles.DataSuffix}"
   private val writer = tuning.open(dataPath, storage)
-  private val keyIdx = schema.fieldIndex("key")
-  private val colsIdx = if (schema.fieldNames.contains("columns")) schema.fieldIndex("columns") else -1
-  private val colStruct = SSTableSchema.columnStruct
-  // optional row-level deletion info; inner field positions resolved from
-  // the incoming schema so any struct field order round-trips
-  private val tombIdx =
-    if (schema.fieldNames.contains("rowTombstone")) schema.fieldIndex("rowTombstone") else -1
-  private val (tombLdtIdx, tombMfdaIdx) =
-    if (tombIdx >= 0) {
-      val st = schema(tombIdx).dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
-      (st.fieldIndex("localDeletionTime"), st.fieldIndex("markedForDeleteAt"))
-    } else (-1, -1)
+  private val decode = new SSTableSchema.RowDecoder(schema, stampMicros)
 
-  override def write(record: InternalRow): Unit = {
-    val key = record.getBinary(keyIdx)
-    val cols: Seq[Column] =
-      if (colsIdx < 0 || record.isNullAt(colsIdx)) Nil
-      else {
-        val arr = record.getArray(colsIdx)
-        (0 until arr.numElements()).map { i =>
-          val c = arr.getStruct(i, colStruct.length)
-          val name = c.getBinary(0)
-          val state = c.getUTF8String(1).toString
-          val ts = stampMicros.getOrElse(c.getLong(3))
-          state match {
-            case "NORMAL" => Column.Normal(name, c.getBinary(2), ts)
-            case "DELETED" => Column.Deleted(name, ts)
-            case "EXPIRING" => Column.Expiring(name, c.getBinary(2), c.getLong(4), c.getLong(5), ts)
-            case "RANGE_TOMBSTONE" =>
-              // value = max bound, timestamp = mfda, ttlSecs = ldt (the
-              // SSTableSchema surface encoding)
-              val ldt = c.getLong(4)
-              require(ldt >= 0 && ldt <= Int.MaxValue,
-                s"range tombstone localDeletionTime out of u32-seconds range: $ldt")
-              Column.RangeTombstone(name, c.getBinary(2), ldt.toInt, ts)
-            case "COUNTER" => // expiresMillis = timestampOfLastDelete µs
-              Column.Counter(name, c.getBinary(2), c.getLong(5), ts)
-            case "COUNTER_UPDATE" => Column.CounterUpdate(name, c.getBinary(2), ts)
-            case other => throw new IllegalArgumentException(s"unknown column state $other")
-          }
-        }
-      }
-    val tombstone =
-      if (tombIdx < 0 || record.isNullAt(tombIdx)) None
-      else {
-        val t = record.getStruct(tombIdx, 2)
-        Some(RowTombstone(t.getInt(tombLdtIdx), t.getLong(tombMfdaIdx)))
-      }
-    writer.append(SSTableRow(key, cols, tombstone))
-  }
+  override def write(record: InternalRow): Unit = writer.append(decode(record))
 
   override def commit(): WriterCommitMessage = {
     writer.close()

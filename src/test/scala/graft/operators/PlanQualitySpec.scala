@@ -79,15 +79,15 @@ class PlanQualitySpec extends AnyFunSuite {
     val plan = finalPlan("q_compact_rows")
     val hash = "Exchange hashpartitioning".r.findAllIn(plan).size
     val range = "Exchange rangepartitioning".r.findAllIn(plan).size
-    assert(hash == 2 && range <= 1,
-      s"expected the (key,name,rangeMax) + (key) agg shuffles + order-by, got hash=$hash range=$range:\n$plan")
+    assert(hash == 1 && range <= 1,
+      s"expected the (key) agg shuffle + order-by, got hash=$hash range=$range:\n$plan")
     assert(!plan.contains("Join"), s"compaction must not join:\n$plan")
   }
 
-  test("q_compact_salted: exactly one extra salt shuffle over the plain shape") {
+  test("q_compact_salted: the plain shape, no salt shuffle") {
     val plan = finalPlan("q_compact_salted")
     val hash = "Exchange hashpartitioning".r.findAllIn(plan).size
-    assert(hash == 3, s"expected plain's 2 agg shuffles + the (key,bucket) salt, got $hash:\n$plan")
+    assert(hash == 1, s"expected plain's one (key) agg shuffle, got $hash:\n$plan")
     assert(!plan.contains("Join"), s"salting must not introduce a join:\n$plan")
   }
 

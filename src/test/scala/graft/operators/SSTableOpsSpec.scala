@@ -441,24 +441,47 @@ class SSTableOpsSpec extends AnyFunSuite {
     assert(rts == Set("c", "d"))
   }
 
-  test("compactRows plan: two agg shuffles, no join — range shadowing is a per-key HOF") {
+  test("compactRows plan: one agg shuffle, no join") {
     val df = tombrows(("r", Some((1, 10L)), Seq(col3("a", "NORMAL", "v", 10))))
     val plan = SSTableOps.compactRows(df).queryExecution.executedPlan.toString
     val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-    assert(exchanges == 2, s"want the (key,name,rangeMax) + (key) agg shuffles only:\n$plan")
+    assert(exchanges == 1, s"want the one (key) agg shuffle only:\n$plan")
     assert(!plan.contains("Join"), s"range shadowing must not introduce a join:\n$plan")
   }
 
+  test("compactRows matches cell fields by name; an input without rowTombstone merges as live") {
+    val df = widerows(
+      "r1" -> Seq(col3("a", "NORMAL", "old", 10), col3("b", "EXPIRING", "e", 20, 60L, 5000L)),
+      "r1" -> Seq(col3("a", "DELETED", null, 30), col3("c", "NORMAL", "c", 5)),
+      "r2" -> Seq(col3("x", "NORMAL", "only", 5)))
+    val reordered = df.select(
+      transform(col("columns"), c => struct(c("expiresMillis"), c("ttlSecs"), c("timestamp"),
+        c("value"), c("state"), c("name"))).as("columns"), col("key"))
+    // the merge emits the scan layout, name-sorted; the reference keeps
+    // its input's layout and sorts by that layout's first field
+    def canon(d: org.apache.spark.sql.DataFrame) =
+      d.select(col("key").cast("string"), to_json(sort_array(transform(col("columns"), c =>
+        struct(c("name"), c("state"), c("value"), c("timestamp"), c("ttlSecs"),
+          c("expiresMillis"))))))
+        .as[(String, String)].collect().sorted.toSeq
+    val got = SSTableOps.compactRows(reordered)
+    assert(got.schema("columns") == SSTableOps.compactRows(df).schema("columns"))
+    assert(got.columns.toSeq == Seq("key", "columns", "rowTombstone"))
+    assert(got.where(col("rowTombstone").isNotNull).count() == 0)
+    assert(canon(got) == canon(CompactRowsReference.compactRowsAlgebra(reordered)))
+    assert(canon(got) == canon(SSTableOps.compactRows(df)))
+  }
+
   test("property: multi-generation get(dir,key) == compactRows on random generations") {
-    // The point-read reconcile (Scala, SSTableReader.reconcile) and the
-    // compaction merge (DataFrame, compactRows) implement the same
-    // semantics twice — this pin stops them drifting. Four legs meet the
-    // algebra: the point read, the compaction fold, and the reconciled
-    // scan compactRows plans over a bare read (under asofmicros,
-    // ttlasofms, applydeletes and a split target small enough to force
-    // many key ranges). Timestamps are globally unique so every per-cell
-    // winner is well-defined (the deterministic tie rules have their own
-    // unit cases above).
+    // Every merge reconciles through SSTableReader.Reconciler; the
+    // DataFrame algebra in CompactRowsReference states the same rules
+    // independently, and each leg meets it: the point read, the
+    // compaction fold, compactRows' aggregate over a non-routed input,
+    // and the reconciled scan compactRows plans over a bare read (under
+    // asofmicros, ttlasofms, applydeletes and a split target small
+    // enough to force many key ranges). Timestamps are globally unique
+    // so every per-cell winner is well-defined (the deterministic tie
+    // rules have their own unit cases above).
     import graft.sources.sstable.{Column, RowTombstone, SSTableRow, SSTableWriter}
     val rnd = new scala.util.Random(20260812)
     var tsCounter = 1000L
@@ -518,7 +541,15 @@ class SSTableOpsSpec extends AnyFunSuite {
           .as[(String, String)].collect().toMap
       def raw(opts: (String, String)*) =
         spark.read.format("sstable").options(opts.toMap).load(dir)
-      val expected = canon(SSTableOps.compactRowsAlgebra(raw()))
+      val expected = canon(CompactRowsReference.compactRowsAlgebra(raw()))
+      // compactRows' aggregate: a projection and a self-union (every
+      // version twice) are not bare reads, so neither routes to the scan
+      Seq(raw().select("columns", "rowTombstone", "key"), raw().union(raw())).foreach { in =>
+        val merged = SSTableOps.compactRows(in)
+        assert(!merged.queryExecution.executedPlan.toString.contains("view=reconciled"),
+          s"trial $trial: a non-bare input planned the reconciled read")
+        assert(canon(merged) == expected, s"trial $trial: compactRows aggregate != algebra")
+      }
       // the reconciled scan: compactRows' route over a bare read, checked
       // to plan the reconciled view, against the algebra over the same read
       val cut = (1000L + tsCounter) / 2
@@ -529,12 +560,12 @@ class SSTableOpsSpec extends AnyFunSuite {
         val routed = SSTableOps.compactRows(raw(opts: _*))
         assert(routed.queryExecution.executedPlan.toString.contains("view=reconciled"),
           s"trial $trial $opts: compactRows did not plan the reconciled read")
-        assert(canon(routed) == canon(SSTableOps.compactRowsAlgebra(raw(opts: _*))),
+        assert(canon(routed) == canon(CompactRowsReference.compactRowsAlgebra(raw(opts: _*))),
           s"trial $trial $opts: reconciled scan != compactRows algebra")
       }
       val inRange = col("key") >= lit("k03".getBytes) && col("key") < lit("k07".getBytes)
       assert(canon(SSTableOps.compactRows(raw("targetsplitbytes" -> "64").filter(inRange))) ==
-        canon(SSTableOps.compactRowsAlgebra(raw()).filter(inRange)),
+        canon(CompactRowsReference.compactRowsAlgebra(raw()).filter(inRange)),
         s"trial $trial: filtered reconciled scan != filtered algebra")
       // the compaction fold over the same generations publishes exactly
       // compactRows (gc = false) and suppressTombstones (gc = true)
@@ -621,12 +652,11 @@ class SSTableOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("compactRowsSalted plan: three agg shuffles, no join") {
+  test("compactRowsSalted plan: one agg shuffle, no join") {
     val df = tombrows(("r", Some((1, 10L)), Seq(col3("a", "NORMAL", "v", 10))))
     val plan = SSTableOps.compactRowsSalted(df).queryExecution.executedPlan.toString
     val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-    assert(exchanges == 3,
-      s"want (key,name,rangeMax) + (key,bucket) + (key) agg shuffles only:\n$plan")
+    assert(exchanges == 1, s"want the one (key) agg shuffle only:\n$plan")
     assert(!plan.contains("Join"), s"salting must not introduce a join:\n$plan")
   }
 

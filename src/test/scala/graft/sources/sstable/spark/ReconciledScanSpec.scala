@@ -88,9 +88,9 @@ class ReconciledScanSpec extends AnyFunSuite {
     val filtered = SSTableOps.compactRows(read(fixture).filter(inRange))
     assert(plan(filtered).contains("keyRangePruned view=reconciled"), plan(filtered))
     assert(!plan(filtered).contains("Exchange hashpartitioning"), plan(filtered))
-    // a projection is not a bare read: the algebra, two agg shuffles
+    // a projection is not a bare read: the aggregate, one agg shuffle
     val projected = SSTableOps.compactRows(read(fixture).select("key", "columns", "rowTombstone"))
-    assert("Exchange hashpartitioning".r.findAllIn(plan(projected)).length == 2,
+    assert("Exchange hashpartitioning".r.findAllIn(plan(projected)).length == 1,
       plan(projected))
     assert(canon(bare) == canon(projected))
     assert(canon(filtered) == canon(projected.filter(inRange)))
